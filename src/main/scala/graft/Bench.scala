@@ -17,9 +17,9 @@ import org.apache.spark.sql.SparkSession
   * Each query reports the MEDIAN of `Passes` (3) timed runs — single-pass
   * timings on a busy box swing enough (~±30% observed round-over-round on
   * unchanged code) to drown real regressions; the total is the sum of the
-  * medians. Failures are NOT swallowed: a failing query is reported with
-  * value -1 and its error message in the `errors` map, and the process
-  * exits non-zero.
+  * printed 3-decimal medians. Failures are NOT swallowed: a failing query
+  * is reported with value -1 and its error message in the `errors` map,
+  * and the process exits non-zero.
   */
 object Bench {
   /** Timed passes per query (median reported). SPARK_GRAFT_PASSES
@@ -152,8 +152,7 @@ object Bench {
     val qs = out.map { case (k, v) => s"\"" + k + "\":" + sec3(v) }.mkString("{", ",", "}")
     val errJson = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }
       .mkString("{", ",", "}")
-    val total = out.values.filter(_ >= 0).sum
-    println(s"""{"metric":"total","value":${sec3(total)},"unit":"sec","mode":"forked","queries":$qs,"errors":$errJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${total3(out.values)},"unit":"sec","mode":"forked","queries":$qs,"errors":$errJson,"sf":"$sfDir"}""")
     if (errors.nonEmpty) sys.exit(1)
   }
 
@@ -167,6 +166,11 @@ object Bench {
   private def sec3(v: Double): String =
     if (v < 0) "-1"
     else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** The summary total: the exact sum of the printed per-query values
+    * (failed queries excluded), so the JSON agrees with itself. */
+  private[graft] def total3(vs: Iterable[Double]): String =
+    sec3(vs.filter(_ >= 0).map(v => BigDecimal(sec3(v))).sum.toDouble)
 
   /** Parse a fork-mode reference artifact's `queries` map, keeping only
     * entries at the sweep's own scale factor. Whitespace-tolerant on
@@ -372,13 +376,15 @@ object Bench {
           val t0 = System.nanoTime()
           try {
             materialize(fn(spark, sfDir))
+            val elapsed = (System.nanoTime() - t0) / 1e9
             passesRun += 1
+            // the block-manager query stays outside the timed window
             if (storageMetrics) {
               val cur = spark.sparkContext.getRDDStorageInfo
                 .map(i => i.memSize + i.diskSize).sum
               storageBytes(name) = math.max(storageBytes.getOrElse(name, 0L), cur)
             }
-            Some((System.nanoTime() - t0) / 1e9)
+            Some(elapsed)
           } catch {
             case scala.util.control.NonFatal(t) =>
               System.err.println(s"[bench] FAILED $name: ${t.getMessage}")
@@ -468,7 +474,6 @@ object Bench {
       "," + rechecks.map { case (k, (a, b)) =>
         "\"" + k + "\":{\"in_sweep\":" + sec3(a) + ",\"recheck\":" + sec3(b) + "}"
       }.mkString("\"rechecks\":{", ",", "}")
-    val total = finalResults.map(_._2).filter(_ >= 0).sum
     val shufJson = if (!shuffleMetrics) "" else {
       def m(mm: scala.collection.Map[String, Long]) =
         mm.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -477,7 +482,7 @@ object Bench {
     val storJson = if (!storageMetrics) "" else
       storageBytes.map { case (k, v) => s"\"" + k + "\":" + v }
         .mkString(""","storage_bytes":{""", ",", "}")
-    println(s"""{"metric":"total","value":${sec3(total)},"unit":"sec","queries":$qs,"errors":$errJson$recheckJson$shufJson$storJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${total3(finalResults.map(_._2))},"unit":"sec","queries":$qs,"errors":$errJson$recheckJson$shufJson$storJson,"sf":"$sfDir"}""")
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, If, IsNull, Literal, XxHash64, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -116,11 +116,6 @@ object BloomFilter {
 
   def bloom_might_contain(sketch: Column, value: Column): Column =
     org.apache.spark.sql.functions.call_function("bloom_might_contain", sketch, value)
-
-  def register(spark: SparkSession): Unit = {
-    DistinctSketch.createIfAbsent(spark, "bloom_agg", buildAgg)
-    DistinctSketch.createIfAbsent(spark, "bloom_might_contain", buildContains)
-  }
 }
 
 case class BloomAgg(

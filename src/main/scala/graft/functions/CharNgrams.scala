@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -77,14 +77,11 @@ object CharNgrams {
   private def toStringExpr(e: Expression): Expression =
     if (e.dataType == StringType) e else Cast(e, StringType)
 
-  /** Column API — requires `register(spark)` (or GraftExtensions) first. */
+  private[graft] def build(exprs: Seq[Expression]): Expression =
+    CharNgrams(toStringExpr(exprs.head), DistinctSketch.litIntArg(exprs, 1, 3, "char_ngrams"))
+
+  /** Column API — requires `GraftExtensions.install(spark)` first. */
   def char_ngrams(c: Column, n: Int): Column =
     org.apache.spark.sql.functions.call_function(
       "char_ngrams", c, org.apache.spark.sql.functions.lit(n))
-
-  /** SQL registration: `SELECT char_ngrams(text, 3) FROM docs`. */
-  def register(spark: SparkSession): Unit =
-    DistinctSketch.createIfAbsent(spark, "char_ngrams",
-      exprs => CharNgrams(toStringExpr(exprs.head),
-        DistinctSketch.litIntArg(exprs, 1, 3, "char_ngrams")))
 }

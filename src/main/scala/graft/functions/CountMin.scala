@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, If, IsNull, Literal, XxHash64, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -110,11 +110,6 @@ object CountMin {
 
   def cms_estimate(sketch: Column, value: Column): Column =
     org.apache.spark.sql.functions.call_function("cms_estimate", sketch, value)
-
-  def register(spark: SparkSession): Unit = {
-    DistinctSketch.createIfAbsent(spark, "cms_agg", buildAgg)
-    DistinctSketch.createIfAbsent(spark, "cms_estimate", buildEstimate)
-  }
 }
 
 case class CountMinAgg(

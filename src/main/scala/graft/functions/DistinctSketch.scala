@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -31,7 +31,7 @@ import org.apache.spark.sql.types._
   * Merging never loses information: sparse∪sparse (spilling to dense on
   * overflow), sparse folded into dense, dense register-max dense.
   *
-  * Usage: `DistinctSketch.register(spark)` then
+  * Usage: `GraftExtensions.install(spark)` then
   * `SELECT hll_distinct(col[, precision[, sparseLimit]])`, or the Column
   * API `DistinctSketch.hll_distinct(col, precision, sparseLimit)`.
   */
@@ -284,17 +284,6 @@ object DistinctSketch {
       throw new IllegalArgumentException(
         s"$fn expects $min to $max arguments, got ${exprs.size}")
 
-  /** Idempotent temp-function registration: `createOrReplaceTempFunction`
-    * logs a replacement WARN every time a pipeline re-installs (Bench
-    * installs per query) — register only when absent instead. Shared by
-    * every graft function object. */
-  private[graft] def createIfAbsent(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit = {
-    val r = spark.sessionState.functionRegistry
-    if (!r.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-      r.createOrReplaceTempFunction(name, builder, "built-in")
-  }
-
   /** Self-describing STORABLE form for `hll_sketch`/`hll_merge`/
     * `hll_estimate`: precision(1) | sparseLimit(4) | tag(1: 0 sparse,
     * 1 dense) | payload. The agg's own in-flight wire format omits the
@@ -348,7 +337,7 @@ object DistinctSketch {
     HllEstimate(exprs.head)
   }
 
-  /** Column API — requires `register(spark)` (or GraftExtensions) first. */
+  /** Column API — requires `GraftExtensions.install(spark)` first. */
   def hll_sketch(c: Column, precision: Int = 14, sparseLimit: Int = 4096): Column =
     org.apache.spark.sql.functions.call_function(
       "hll_sketch", c,
@@ -366,18 +355,12 @@ object DistinctSketch {
       litIntArg(exprs, 2, 4096, "hll_distinct")).toAggregateExpression()
   }
 
-  /** Column API — requires `register(spark)` (or GraftExtensions) first. */
+  /** Column API — requires `GraftExtensions.install(spark)` first. */
   def hll_distinct(c: Column, precision: Int = 14, sparseLimit: Int = 4096): Column =
     org.apache.spark.sql.functions.call_function(
       "hll_distinct", c,
       org.apache.spark.sql.functions.lit(precision),
       org.apache.spark.sql.functions.lit(sparseLimit))
-
-  def register(spark: SparkSession): Unit = {
-    createIfAbsent(spark, "hll_distinct", build)
-    createIfAbsent(spark, "hll_sketch", buildSketch)
-    createIfAbsent(spark, "hll_estimate", buildEstimate)
-  }
 }
 
 /** `hll_estimate(sketch)` — distinct-count estimate read off the stored

@@ -2,7 +2,7 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -20,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Output: array<struct<item string, min_count long>> sorted by
   * (min_count desc, item asc) — deterministic.
   *
-  * Usage: `FrequentItems.register(spark)` then
+  * Usage: `GraftExtensions.install(spark)` then
   * `SELECT frequent_items(token, 100) FROM ...` or the Column API
   * `FrequentItems.frequent_items(col, 100)`.
   */
@@ -125,11 +125,8 @@ object FrequentItems {
     FrequentItemsAgg(exprs.head,
       DistinctSketch.litIntArg(exprs, 1, 100, "frequent_items")).toAggregateExpression()
 
-  /** Column API — requires `register(spark)` (or GraftExtensions) first. */
+  /** Column API — requires `GraftExtensions.install(spark)` first. */
   def frequent_items(c: Column, capacity: Int): Column =
     org.apache.spark.sql.functions.call_function(
       "frequent_items", c, org.apache.spark.sql.functions.lit(capacity))
-
-  def register(spark: SparkSession): Unit =
-    DistinctSketch.createIfAbsent(spark, "frequent_items", build)
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -184,12 +184,6 @@ object QuantileSketch {
 
   def kll_n(sketch: Column): Column =
     org.apache.spark.sql.functions.call_function("kll_n", sketch)
-
-  def register(spark: SparkSession): Unit = {
-    DistinctSketch.createIfAbsent(spark, "kll_agg", buildAgg)
-    DistinctSketch.createIfAbsent(spark, "kll_quantile", buildQuantile)
-    DistinctSketch.createIfAbsent(spark, "kll_n", buildN)
-  }
 }
 
 case class KllAgg(

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
@@ -59,14 +59,13 @@ object RollingHash {
   private def toStringExpr(e: Expression): Expression =
     if (e.dataType == StringType) e else Cast(e, StringType)
 
-  /** Column API — requires `register(spark)` once per session (the classic
-    * Column↔Expression bridge is private[sql] in Spark 4, so the public
-    * path is the function registry + call_function). */
+  private[graft] def build(exprs: Seq[Expression]): Expression =
+    RollingHash(toStringExpr(exprs.head))
+
+  /** Column API — requires `GraftExtensions.install(spark)` once per
+    * session (the classic Column↔Expression bridge is private[sql] in
+    * Spark 4, so the public path is the function registry +
+    * call_function). */
   def rolling_hash(c: Column): Column =
     org.apache.spark.sql.functions.call_function("rolling_hash", c)
-
-  /** SQL registration: `SELECT rolling_hash(text) FROM docs`. */
-  def register(spark: SparkSession): Unit =
-    DistinctSketch.createIfAbsent(spark, "rolling_hash",
-      exprs => RollingHash(toStringExpr(exprs.head)))
 }

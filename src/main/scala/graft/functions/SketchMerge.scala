@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -86,11 +86,6 @@ object SketchMerge {
 
   private[graft] def builders: Seq[(String, Seq[Expression] => Expression)] =
     Kinds.toSeq.sorted.map(k => s"${k}_merge" -> build(k) _)
-
-  def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, b) =>
-      DistinctSketch.createIfAbsent(spark, name, b)
-    }
 }
 
 case class SketchMergeAgg(

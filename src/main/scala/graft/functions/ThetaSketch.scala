@@ -2,7 +2,7 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -128,15 +128,6 @@ object ThetaSketch {
     org.apache.spark.sql.functions.call_function("theta_intersect_estimate", a, b)
   def theta_union_estimate(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("theta_union_estimate", a, b)
-
-  def register(spark: SparkSession): Unit = {
-    DistinctSketch.createIfAbsent(spark, "theta_sketch", buildAgg)
-    DistinctSketch.createIfAbsent(spark, "theta_estimate", buildEstimate)
-    DistinctSketch.createIfAbsent(spark, "theta_intersect_estimate",
-      buildSetEstimate(_, intersect = true))
-    DistinctSketch.createIfAbsent(spark, "theta_union_estimate",
-      buildSetEstimate(_, intersect = false))
-  }
 }
 
 case class ThetaSketchAgg(

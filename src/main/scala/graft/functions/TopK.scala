@@ -2,7 +2,7 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -24,7 +24,7 @@ import org.apache.spark.sql.types._
   * best-first — fully deterministic given distinct ids. NaN scores are
   * rejected up front (a NaN would poison heap ordering silently).
   *
-  * Usage: `TopK.register(spark)` then `SELECT topk_by(score, id, 5)` or
+  * Usage: `GraftExtensions.install(spark)` then `SELECT topk_by(score, id, 5)` or
   * the Column API `TopK.topk_by(score, id, 5)`; explode the result to get
   * back to rows (q152 shows the full shape against a window-form oracle).
   */
@@ -123,11 +123,8 @@ object TopK {
     TopKAgg(exprs.head, exprs(1),
       DistinctSketch.litIntArg(exprs, 2, 10, "topk_by")).toAggregateExpression()
 
-  /** Column API — requires `register(spark)` (or GraftExtensions) first. */
+  /** Column API — requires `GraftExtensions.install(spark)` first. */
   def topk_by(score: Column, id: Column, k: Int): Column =
     org.apache.spark.sql.functions.call_function(
       "topk_by", score, id, org.apache.spark.sql.functions.lit(k))
-
-  def register(spark: SparkSession): Unit =
-    DistinctSketch.createIfAbsent(spark, "topk_by", build)
 }

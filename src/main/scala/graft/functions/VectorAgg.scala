@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -21,7 +21,7 @@ import org.apache.spark.sql.types._
   * Null rows are skipped; a dimension mismatch inside a group is a hard
   * error (silent zip-truncation would corrupt centroids).
   *
-  * Usage: `VectorAgg.register(spark)` then `SELECT vec_avg(embedding)` /
+  * Usage: `GraftExtensions.install(spark)` then `SELECT vec_avg(embedding)` /
   * `vec_sum(embedding)`, or the Column API below.
   */
 final class VecBuffer {
@@ -140,7 +140,7 @@ case class VecSumAvgAgg(
 }
 
 object VectorAgg {
-  /** Column API — requires `register(spark)` (or GraftExtensions) first. */
+  /** Column API — requires `GraftExtensions.install(spark)` first. */
   def vec_avg(c: Column): Column =
     org.apache.spark.sql.functions.call_function("vec_avg", c)
   def vec_sum(c: Column): Column =
@@ -149,10 +149,5 @@ object VectorAgg {
   private[graft] def build(exprs: Seq[Expression], isAvg: Boolean): Expression = {
     DistinctSketch.arity(exprs, if (isAvg) "vec_avg" else "vec_sum", 1, 1)
     VecSumAvgAgg(exprs.head, isAvg).toAggregateExpression()
-  }
-
-  def register(spark: SparkSession): Unit = {
-    DistinctSketch.createIfAbsent(spark, "vec_avg", build(_, isAvg = true))
-    DistinctSketch.createIfAbsent(spark, "vec_sum", build(_, isAvg = false))
   }
 }

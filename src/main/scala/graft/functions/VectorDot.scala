@@ -50,16 +50,9 @@ object VectorDot {
     acc
   }
 
-  /** Column API — requires `register(spark)` (or GraftExtensions) first. */
+  /** Column API — requires `GraftExtensions.install(spark)` first. */
   def vec_dot(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("vec_dot", a, b)
-
-  def register(spark: SparkSession): Unit = {
-    DistinctSketch.createIfAbsent(spark, "vec_dot",
-      exprs => VectorDot(exprs(0), exprs(1)))
-    DistinctSketch.createIfAbsent(spark, "vec_norm",
-      exprs => VectorNorm(exprs.head))
-  }
 }
 
 /** L2 norm of an array<double> column as a native codegen'd expression —
@@ -163,8 +156,8 @@ object VectorArgminCell {
 
   /** Column API. The centroid matrix is expression STATE, not a child
     * column, so the registry entry is created per matrix (named by k +
-    * content hash; the builder closure captures the arrays) — same
-    * createIfAbsent idempotence as every other graft function. ‖c‖² is
+    * content hash; the builder closure captures the arrays), registered
+    * only when absent like every other graft function. ‖c‖² is
     * folded HERE, host-side, left-to-right — the single shared fold
     * every argmin form uses. */
   def vec_argmin_cell(spark: SparkSession, nv: Column,
@@ -173,8 +166,10 @@ object VectorArgminCell {
     val name = "vec_argmin_cell_" + cents.length + "_" +
       java.lang.Integer.toHexString(
         java.util.Arrays.deepHashCode(cents.asInstanceOf[Array[AnyRef]]))
-    DistinctSketch.createIfAbsent(spark, name,
-      exprs => VectorArgminCell(exprs.head, cents, c2))
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(name,
+        exprs => VectorArgminCell(exprs.head, cents, c2), "built-in")
     org.apache.spark.sql.functions.call_function(name, nv)
   }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -72,7 +72,4 @@ object ZOrder {
     DistinctSketch.arity(exprs, "z_value", 2, 2)
     ZValue(toLongExpr(exprs.head), toLongExpr(exprs(1)))
   }
-
-  def register(spark: SparkSession): Unit =
-    DistinctSketch.createIfAbsent(spark, "z_value", build)
 }

@@ -194,7 +194,7 @@ object Core {
     require(ft == dt,
       s"bloomReducedJoin: key '$key' types differ (fact $ft vs dim $dt) — " +
         "hashes would disagree and drop true matches; cast one side first")
-    graft.functions.BloomFilter.register(fact.sparkSession)
+    graft.plans.GraftExtensions.install(fact.sparkSession)
     // The sketch is a SCALAR: collect the one row and embed the bytes as
     // a literal (the IVF-centroids pattern — a bounded driver value, not
     // a data collect). A crossJoin(broadcast(sketch)) instead would copy

@@ -261,7 +261,23 @@ object Corpus {
       require(ck.nonEmpty && ck.size == pk.size,
         s"auditConstraints: referential '$n' key lists must be non-empty and same-length")
     }
+    val names = rowChecks.map(_._1) ++ uniqueKeys.map(_._1) ++ referential.map(_._1)
+    // case-insensitive, as Spark resolves the aggregate's aliases
+    val dup = names.groupBy(_.toLowerCase).values.filter(_.size > 1).map(_.head)
+    require(dup.isEmpty,
+      s"auditConstraints: check names must be distinct, repeated: ${dup.mkString(", ")}")
+    // names are spliced into the stack(...) SQL as 'name' and `name`, and
+    // `__n` is the aggregate's row-count column
+    val unsafe = names.filter(n =>
+      n.isEmpty || n.equalsIgnoreCase("__n") || n.exists("'`\\".contains(_)))
+    require(unsafe.isEmpty,
+      "auditConstraints: check names must be non-empty, not __n, and free of quotes, " +
+        s"backticks and backslashes: ${unsafe.mkString(", ")}")
     val hits = referential.indices.map(i => s"__hit_$i")
+    val clash = df.columns.filter(c => hits.exists(_.equalsIgnoreCase(c)))
+    require(clash.isEmpty,
+      s"auditConstraints: input columns ${clash.mkString(", ")} collide with the " +
+        "referential marker columns (__hit_*); rename them first")
     val parts =
       (if (rowChecks.isEmpty && referential.isEmpty) Nil else {
         val joined = referential.zip(hits).foldLeft(df) {

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{RollingHash, VectorDot}
-
 /** SparkSessionExtensions entry point: makes graft's native expressions
   * available in any session via
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions`
@@ -14,165 +12,58 @@ import graft.functions.{RollingHash, VectorDot}
   * the only injection is the function registry).
   *
   * For an already-running session (tests, notebooks) use `install(spark)`.
+  * Both paths read the one `functions` table.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction(GraftExtensions.rollingHashDescriptor)
-    e.injectFunction(GraftExtensions.vectorDotDescriptor)
-    e.injectFunction(GraftExtensions.vectorNormDescriptor)
-    e.injectFunction(GraftExtensions.frequentItemsDescriptor)
-    e.injectFunction(GraftExtensions.hllDistinctDescriptor)
-    GraftExtensions.hllStoredDescriptors.foreach(e.injectFunction)
-    GraftExtensions.thetaDescriptors.foreach(e.injectFunction)
-    GraftExtensions.vectorAggDescriptors.foreach(e.injectFunction)
-    GraftExtensions.bloomDescriptors.foreach(e.injectFunction)
-    GraftExtensions.cmsDescriptors.foreach(e.injectFunction)
-    GraftExtensions.kllDescriptors.foreach(e.injectFunction)
-    GraftExtensions.sketchMergeDescriptors.foreach(e.injectFunction)
-    e.injectFunction(GraftExtensions.zValueDescriptor)
-    e.injectFunction(GraftExtensions.topkDescriptor)
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(e.injectFunction)
 }
 
 object GraftExtensions {
-  private[plans] val rollingHashDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("rolling_hash"),
-    new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),
-    (exprs: Seq[Expression]) => RollingHash(exprs.head))
+  type Descriptor = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  private[plans] val vectorDotDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("vec_dot"),
-    new ExpressionInfo(classOf[graft.functions.VectorDot].getName, "vec_dot"),
-    (exprs: Seq[Expression]) => graft.functions.VectorDot(exprs.head, exprs(1)))
+  private def fn(name: String, cls: Class[_])(build: Seq[Expression] => Expression): Descriptor =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
 
-  private[plans] val vectorNormDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("vec_norm"),
-    new ExpressionInfo(classOf[graft.functions.VectorNorm].getName, "vec_norm"),
-    (exprs: Seq[Expression]) => graft.functions.VectorNorm(exprs.head))
-
-  private[plans] val frequentItemsDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("frequent_items"),
-    new ExpressionInfo(classOf[graft.functions.FrequentItemsAgg].getName, "frequent_items"),
-    (exprs: Seq[Expression]) => graft.functions.FrequentItems.build(exprs))
-
-  private[plans] val hllDistinctDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("hll_distinct"),
-    new ExpressionInfo(classOf[graft.functions.HllDistinctAgg].getName, "hll_distinct"),
-    (exprs: Seq[Expression]) => graft.functions.DistinctSketch.build(exprs))
-
-  private[plans] val hllStoredDescriptors
-      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("hll_sketch"),
-      new ExpressionInfo(classOf[graft.functions.HllDistinctAgg].getName, "hll_sketch"),
-      (es: Seq[Expression]) => graft.functions.DistinctSketch.buildSketch(es)),
-    (FunctionIdentifier("hll_estimate"),
-      new ExpressionInfo(classOf[graft.functions.HllEstimate].getName, "hll_estimate"),
-      (es: Seq[Expression]) => graft.functions.DistinctSketch.buildEstimate(es)))
-
-  private[plans] val thetaDescriptors
-      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = {
-    import graft.functions.{ThetaSketch => T}
-    def info(n: String) = new ExpressionInfo(T.getClass.getName, n)
+  /** Every graft SQL function, once. */
+  val functions: Seq[Descriptor] = {
+    import graft.functions._
     Seq(
-      (FunctionIdentifier("theta_sketch"), info("theta_sketch"),
-        (es: Seq[Expression]) => T.buildAgg(es)),
-      (FunctionIdentifier("theta_estimate"), info("theta_estimate"),
-        (es: Seq[Expression]) => T.buildEstimate(es)),
-      (FunctionIdentifier("theta_intersect_estimate"), info("theta_intersect_estimate"),
-        (es: Seq[Expression]) => T.buildSetEstimate(es, intersect = true)),
-      (FunctionIdentifier("theta_union_estimate"), info("theta_union_estimate"),
-        (es: Seq[Expression]) => T.buildSetEstimate(es, intersect = false)))
+      fn("rolling_hash", classOf[RollingHash])(RollingHash.build),
+      fn("char_ngrams", classOf[CharNgrams])(CharNgrams.build),
+      fn("vec_dot", classOf[VectorDot])(es => VectorDot(es.head, es(1))),
+      fn("vec_norm", classOf[VectorNorm])(es => VectorNorm(es.head)),
+      fn("frequent_items", classOf[FrequentItemsAgg])(FrequentItems.build),
+      fn("hll_distinct", classOf[HllDistinctAgg])(DistinctSketch.build),
+      fn("hll_sketch", classOf[HllDistinctAgg])(DistinctSketch.buildSketch),
+      fn("hll_estimate", classOf[HllEstimate])(DistinctSketch.buildEstimate),
+      fn("theta_sketch", ThetaSketch.getClass)(ThetaSketch.buildAgg),
+      fn("theta_estimate", ThetaSketch.getClass)(ThetaSketch.buildEstimate),
+      fn("theta_intersect_estimate", ThetaSketch.getClass)(
+        ThetaSketch.buildSetEstimate(_, intersect = true)),
+      fn("theta_union_estimate", ThetaSketch.getClass)(
+        ThetaSketch.buildSetEstimate(_, intersect = false)),
+      fn("vec_avg", classOf[VecSumAvgAgg])(VectorAgg.build(_, isAvg = true)),
+      fn("vec_sum", classOf[VecSumAvgAgg])(VectorAgg.build(_, isAvg = false)),
+      fn("bloom_agg", classOf[BloomAgg])(BloomFilter.buildAgg),
+      fn("bloom_might_contain", classOf[BloomMightContain])(BloomFilter.buildContains),
+      fn("cms_agg", classOf[CountMinAgg])(CountMin.buildAgg),
+      fn("cms_estimate", classOf[CountMinEstimate])(CountMin.buildEstimate),
+      fn("kll_agg", classOf[KllAgg])(QuantileSketch.buildAgg),
+      fn("kll_quantile", classOf[KllQuantile])(QuantileSketch.buildQuantile),
+      fn("kll_n", classOf[KllN])(QuantileSketch.buildN),
+      fn("z_value", classOf[ZValue])(ZOrder.build),
+      fn("topk_by", classOf[TopKAgg])(TopK.build)
+    ) ++ SketchMerge.builders.map { case (name, b) => fn(name, classOf[SketchMergeAgg])(b) }
   }
 
-  private[plans] val vectorAggDescriptors
-      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = {
-    import graft.functions.{VectorAgg => V}
-    def info(n: String) = new ExpressionInfo(classOf[graft.functions.VecSumAvgAgg].getName, n)
-    Seq(
-      (FunctionIdentifier("vec_avg"), info("vec_avg"),
-        (es: Seq[Expression]) => V.build(es, isAvg = true)),
-      (FunctionIdentifier("vec_sum"), info("vec_sum"),
-        (es: Seq[Expression]) => V.build(es, isAvg = false)))
-  }
-
-  private[plans] val bloomDescriptors
-      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = {
-    import graft.functions.{BloomFilter => B}
-    Seq(
-      (FunctionIdentifier("bloom_agg"),
-        new ExpressionInfo(classOf[graft.functions.BloomAgg].getName, "bloom_agg"),
-        (es: Seq[Expression]) => B.buildAgg(es)),
-      (FunctionIdentifier("bloom_might_contain"),
-        new ExpressionInfo(classOf[graft.functions.BloomMightContain].getName, "bloom_might_contain"),
-        (es: Seq[Expression]) => B.buildContains(es)))
-  }
-
-  private[plans] val cmsDescriptors
-      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = {
-    import graft.functions.{CountMin => C}
-    Seq(
-      (FunctionIdentifier("cms_agg"),
-        new ExpressionInfo(classOf[graft.functions.CountMinAgg].getName, "cms_agg"),
-        (es: Seq[Expression]) => C.buildAgg(es)),
-      (FunctionIdentifier("cms_estimate"),
-        new ExpressionInfo(classOf[graft.functions.CountMinEstimate].getName, "cms_estimate"),
-        (es: Seq[Expression]) => C.buildEstimate(es)))
-  }
-
-  private[plans] val kllDescriptors
-      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = {
-    import graft.functions.{QuantileSketch => K}
-    Seq(
-      (FunctionIdentifier("kll_agg"),
-        new ExpressionInfo(classOf[graft.functions.KllAgg].getName, "kll_agg"),
-        (es: Seq[Expression]) => K.buildAgg(es)),
-      (FunctionIdentifier("kll_quantile"),
-        new ExpressionInfo(classOf[graft.functions.KllQuantile].getName, "kll_quantile"),
-        (es: Seq[Expression]) => K.buildQuantile(es)),
-      (FunctionIdentifier("kll_n"),
-        new ExpressionInfo(classOf[graft.functions.KllN].getName, "kll_n"),
-        (es: Seq[Expression]) => K.buildN(es)))
-  }
-
-  private[plans] val sketchMergeDescriptors
-      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
-    graft.functions.SketchMerge.builders.map { case (name, b) =>
-      (FunctionIdentifier(name),
-        new ExpressionInfo(classOf[graft.functions.SketchMergeAgg].getName, name),
-        b)
-    }
-
-  private[plans] val zValueDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("z_value"),
-    new ExpressionInfo(classOf[graft.functions.ZValue].getName, "z_value"),
-    (exprs: Seq[Expression]) => graft.functions.ZOrder.build(exprs))
-
-  private[plans] val topkDescriptor
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("topk_by"),
-    new ExpressionInfo(classOf[graft.functions.TopKAgg].getName, "topk_by"),
-    (exprs: Seq[Expression]) => graft.functions.TopK.build(exprs))
-
-  /** Register everything on a live session (idempotent). */
+  /** Register everything on a live session. Idempotent, and registers
+    * only absent names: replacing a temp function logs a WARN every time
+    * a pipeline re-installs (Bench installs per query). */
   def install(spark: SparkSession): Unit = {
-    RollingHash.register(spark)
-    VectorDot.register(spark)
-    graft.functions.FrequentItems.register(spark)
-    graft.functions.DistinctSketch.register(spark)
-    graft.functions.ThetaSketch.register(spark)
-    graft.functions.VectorAgg.register(spark)
-    graft.functions.BloomFilter.register(spark)
-    graft.functions.CountMin.register(spark)
-    graft.functions.QuantileSketch.register(spark)
-    graft.functions.SketchMerge.register(spark)
-    graft.functions.ZOrder.register(spark)
-    graft.functions.TopK.register(spark)
-    graft.functions.CharNgrams.register(spark)
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach { case (id, info, build) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, build)
+    }
   }
 }

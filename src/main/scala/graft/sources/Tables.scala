@@ -1,7 +1,11 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Readers for the driver-generated test tables (`/root/repo/TESTDATA.md`).
   *
@@ -11,8 +15,45 @@ import org.apache.spark.sql.functions._
   * the scan (verified by plan-shape tests in `PlanShapeSpec`).
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Session confs that change what a parquet footer infers to. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  /** One file version read under one inference posture. */
+  private case class SchemaKey(path: String, mtime: Long, length: Long, confs: Seq[String])
+
+  /** Inferred schema per table file version, process-wide. Inference
+    * (`spark.read.parquet` without a schema) launches a one-task footer
+    * job before the query's plan exists; a hit hands the schema to the
+    * reader instead, so the read runs no job. Only the `StructType` is
+    * kept: every read still builds its own relation and lists the path,
+    * so files added to a table directory are seen, and a file rewritten
+    * in place changes mtime/length and is inferred again. */
+  private val schemas = new ConcurrentHashMap[SchemaKey, StructType]()
+
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val file = s"$dir/$name.parquet"
+    val path = new Path(file)
+    val status =
+      try Some(path.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(path))
+      catch { case _: java.io.FileNotFoundException => None }
+    status match {
+      case None => spark.read.parquet(file) // Spark reports the missing path
+      case Some(st) =>
+        val key = SchemaKey(st.getPath.toString, st.getModificationTime, st.getLen,
+          InferenceConfs.map(k => spark.conf.get(k)))
+        Option(schemas.get(key)) match {
+          case Some(schema) => spark.read.schema(schema).parquet(file)
+          case None =>
+            val df = spark.read.parquet(file)
+            schemas.put(key, df.schema)
+            df
+        }
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

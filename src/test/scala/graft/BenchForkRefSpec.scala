@@ -46,4 +46,11 @@ class BenchForkRefSpec extends AnyFunSuite {
     val m = Bench.parseForkRef(compact, "/root/testdata/sf0.1")
     assert(!m.contains("q99_failed"))
   }
+
+  test("summary total is the exact sum of the printed per-query values") {
+    // each rounds down by ~0.4 ms; the full-precision sum would print 1.502
+    val vs = Seq(0.5004, 0.5004, 0.5004, 0.0004, -1.0)
+    assert(Bench.total3(vs) == "1.500")
+    assert(Bench.total3(Nil) == "0.000")
+  }
 }

@@ -11,7 +11,7 @@ class BloomFilterSpec extends SparkSpec {
   import spark.implicits._
 
   test("no false negatives: every inserted value probes true, distributed build") {
-    BloomFilter.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val vals = (1 to 2000).map(i => s"doc-$i")
     val sketch = vals.toDF("v").repartition(32)
       .agg(BloomFilter.bloom_agg(col("v"), 1 << 16, 5).as("bf"))
@@ -23,7 +23,7 @@ class BloomFilterSpec extends SparkSpec {
   }
 
   test("false-positive rate stays near the design point") {
-    BloomFilter.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     // n=2000, m=2^16 bits, k=5 -> theoretical fp ~ (1-e^(-kn/m))^k ~ 0.22%
     val sketch = (1 to 2000).map(i => s"doc-$i").toDF("v")
       .agg(BloomFilter.bloom_agg(col("v"), 1 << 16, 5).as("bf"))
@@ -35,7 +35,7 @@ class BloomFilterSpec extends SparkSpec {
   }
 
   test("merge is order-independent: any partitioning yields byte-identical sketches") {
-    BloomFilter.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val df = (1 to 5000).map(i => i.toLong).toDF("v")
     def bytes(parts: Int): Seq[Byte] =
       df.repartition(parts)
@@ -46,7 +46,7 @@ class BloomFilterSpec extends SparkSpec {
   }
 
   test("broadcast-bloom incremental dedup: supersets true dups, never drops new content wrongly beyond FP") {
-    BloomFilter.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val prior = (1 to 300).map(i => (i.toLong, s"content-${i % 200}")).toDF("doc_id", "text")
     val incoming = (1000 to 1400).map(i => (i.toLong, s"content-${i % 400}")).toDF("doc_id", "text")
     // exact survivors: incoming whose text is NOT in prior (text key 200..399)
@@ -73,7 +73,7 @@ class BloomFilterSpec extends SparkSpec {
   }
 
   test("bloomReducedJoin equals the plain join and genuinely reduces the pre-join fact") {
-    BloomFilter.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val fact = (1 to 5000).map(i => (i.toLong % 1000, i.toLong)).toDF("k", "payload")
     val dim = (1 to 50).map(i => (i.toLong, s"d$i")).toDF("k", "attr") // 5% selective
     def canon(df: org.apache.spark.sql.DataFrame) =
@@ -100,8 +100,7 @@ class BloomFilterSpec extends SparkSpec {
   }
 
   test("probing NULL yields NULL, matching the aggregate's null-skip") {
-    BloomFilter.register(spark)
-    graft.functions.CountMin.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val sk = Seq("a", "b").toDF("t").agg(
       BloomFilter.bloom_agg(col("t"), 1 << 10, 5).as("bf"),
       graft.functions.CountMin.cms_agg(col("t"), 64, 4).as("cm"))
@@ -116,7 +115,7 @@ class BloomFilterSpec extends SparkSpec {
   }
 
   test("bloom_agg rejects bad shapes with clear errors; mismatched merges refuse") {
-    BloomFilter.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val ex = intercept[Exception] {
       Seq(1).toDF("v").agg(BloomFilter.bloom_agg(col("v"), 16, 5)).collect()
     }

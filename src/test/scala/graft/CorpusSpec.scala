@@ -217,7 +217,7 @@ class CorpusSpec extends SparkSpec {
   test("z_value interleaves correctly and clusters aligned quadrants") {
     import org.apache.spark.sql.functions._
     import graft.functions.ZOrder
-    ZOrder.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     // exact interleave vs a naive bit model
     def naive(a: Long, b: Long): Long =
       (0 until 31).foldLeft(0L)((z, i) =>
@@ -535,6 +535,32 @@ class CorpusSpec extends SparkSpec {
     val empty = Corpus.auditReferential("fk",
       t.filter(lit(false)), Seq("id"), parent, Seq("pid")).collect().head
     assert(empty.getLong(1) == 0L && empty.getLong(2) == 0L)
+  }
+
+  test("auditConstraints: repeated check names are refused at plan time") {
+    val t = Seq((1L, 5.0)).toDF("id", "v")
+    val e = intercept[IllegalArgumentException](Corpus.auditConstraints(t,
+      rowChecks = Seq("id_ok" -> col("id").isNotNull),
+      uniqueKeys = Seq("ID_OK" -> Seq("id"))))
+    assert(e.getMessage.contains("check names must be distinct, repeated: id_ok"))
+  }
+
+  test("auditConstraints: a check name that would break the stack() SQL is refused") {
+    val t = Seq((1L, 5.0)).toDF("id", "v")
+    for (bad <- Seq("it's", "a`b", "__n", "")) {
+      val e = intercept[IllegalArgumentException](Corpus.auditConstraints(t,
+        rowChecks = Seq(bad -> col("id").isNotNull)))
+      assert(e.getMessage.contains("check names must be non-empty, not __n, and free of quotes"),
+        s"name '$bad': ${e.getMessage}")
+    }
+  }
+
+  test("auditConstraints: an input column named like a referential marker is refused") {
+    val t = Seq((1L, 5.0)).toDF("id", "__hit_0")
+    val parent = Seq(1L).toDF("pid")
+    val e = intercept[IllegalArgumentException](Corpus.auditConstraints(t,
+      rowChecks = Nil, referential = Seq(("fk", Seq("id"), parent, Seq("pid")))))
+    assert(e.getMessage.contains("input columns __hit_0 collide with the referential marker"))
   }
 
   test("dupNgramFraction and topTokenStats on known documents") {

@@ -11,7 +11,7 @@ class CountMinSpec extends SparkSpec {
   import spark.implicits._
 
   test("estimates never undercount and are exact when width dwarfs cardinality") {
-    CountMin.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     // zipf-ish: token i appears i times, 1..50 -> 1275 rows, 50 distinct
     val rows = (1 to 50).flatMap(i => Seq.fill(i)(s"tok$i"))
     val sketch = rows.toDF("t").repartition(16)
@@ -27,7 +27,7 @@ class CountMinSpec extends SparkSpec {
   }
 
   test("overcount stays within the epsilon*N bound under heavy collision pressure") {
-    CountMin.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val n = 20000
     val rows = (1 to n).map(i => s"k${i % 5000}") // 5000 distinct >> width 256
     val sketch = rows.toDF("t").agg(CountMin.cms_agg(col("t"), 256, 4).as("sk"))
@@ -41,7 +41,7 @@ class CountMinSpec extends SparkSpec {
   }
 
   test("merge is lossless: any partitioning yields byte-identical sketches") {
-    CountMin.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val df = (1 to 5000).map(i => i % 700).toDF("v")
     def bytes(parts: Int): Seq[Byte] =
       df.repartition(parts).agg(CountMin.cms_agg(col("v"), 512, 4)).head()
@@ -51,7 +51,7 @@ class CountMinSpec extends SparkSpec {
   }
 
   test("sketch frequencies match exact counts on the documents corpus tokens") {
-    CountMin.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val toks = graft.sources.Tables.documents(spark, sf())
       .select(explode(graft.ops.Text.tokens(col("text"))).as("tok"))
     val exact = toks.groupBy("tok").count().collect()

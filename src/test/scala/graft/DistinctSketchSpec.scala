@@ -10,7 +10,7 @@ class DistinctSketchSpec extends SparkSpec {
   import spark.implicits._
 
   test("sparse regime is exact and survives the partial/final merge path") {
-    DistinctSketch.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     // 32 partitions force partial aggregates + cross-partition merges,
     // including sparse∪sparse merges of disjoint and overlapping sets
     val df = (1 to 20000).map(i => i % 3000).toDF("v").repartition(32)
@@ -19,7 +19,7 @@ class DistinctSketchSpec extends SparkSpec {
   }
 
   test("dense estimate within 3% at 100k distinct (p=14, rse ~0.8%)") {
-    DistinctSketch.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val n = 100000
     val df = (1 to n).toDF("v").repartition(16)
     // sparseLimit 64 forces dense conversion early, so the merge path
@@ -29,7 +29,7 @@ class DistinctSketchSpec extends SparkSpec {
   }
 
   test("dense estimate unbiased in the classic HLL transition band (2.5m-5m)") {
-    DistinctSketch.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     // p=14 => m=16384; classic HLL's raw/linear-counting switch carries a
     // bias spike for true cardinality in [2.5m, 5m] = [40960, 81920].
     // Ertl's estimator has no switch; assert tight accuracy mid-band.

@@ -15,14 +15,14 @@ class FrequentItemsSpec extends SparkSpec {
     rows.head.getSeq[Row](0).map(r => (r.getString(0), r.getLong(1)))
 
   test("exact counts when distinct items <= capacity") {
-    FrequentItems.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val df = (Seq.fill(5)("a") ++ Seq.fill(3)("b") ++ Seq("c")).toDF("tok")
     val got = items(df.agg(FrequentItems.frequent_items($"tok", 10)).collect())
     assert(got == Seq(("a", 5L), ("b", 3L), ("c", 1L)))
   }
 
   test("heavy hitter survives over-capacity streams with a lower-bound count") {
-    FrequentItems.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     // 400 "hot" + 2000 distinct cold tokens, capacity 50:
     // freq(hot)=400 > N/capacity=48 -> guaranteed present
     val rows = Seq.fill(400)("hot") ++ (0 until 2000).map(i => s"cold$i")
@@ -35,14 +35,14 @@ class FrequentItemsSpec extends SparkSpec {
   }
 
   test("deterministic output ordering (count desc, item asc)") {
-    FrequentItems.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val df = (Seq.fill(2)("b") ++ Seq.fill(2)("a") ++ Seq.fill(3)("z")).toDF("tok")
     val got = items(df.agg(FrequentItems.frequent_items($"tok", 10)).collect())
     assert(got == Seq(("z", 3L), ("a", 2L), ("b", 2L)))
   }
 
   test("SQL registration and grouped aggregation") {
-    FrequentItems.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     Seq(("en", "the"), ("en", "the"), ("en", "dog"), ("fr", "le"))
       .toDF("lang", "tok").createOrReplaceTempView("fi_in")
     val got = spark.sql(
@@ -53,7 +53,7 @@ class FrequentItemsSpec extends SparkSpec {
   }
 
   test("real corpus: top tokens match exact groupBy counts") {
-    FrequentItems.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val toks = graft.sources.Tables.documents(spark, sf())
       .select(explode(split($"text", " ")).as("tok")).filter($"tok" =!= "")
     // vocab (~31 tokens) fits capacity 64 -> sketch must be exact

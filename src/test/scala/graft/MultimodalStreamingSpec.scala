@@ -615,7 +615,7 @@ class MultimodalStreamingSpec extends SparkSpec {
   test("streaming incremental dedup: a stream filters map-side against a broadcast Bloom of prior content") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    graft.functions.BloomFilter.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     // prior corpus folded into one small binary, shipped as a literal —
     // the streaming twin of the batch broadcast-bloom dedup (stateless,
     // no stream-side shuffle, no join state)

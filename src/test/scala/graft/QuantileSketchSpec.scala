@@ -14,7 +14,7 @@ class QuantileSketchSpec extends SparkSpec {
     sorted(math.max(1L, math.ceil(q * sorted.length).toLong).toInt - 1)
 
   test("exact while n <= k, through the 32-partition merge path") {
-    QuantileSketch.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val n = 5000
     // deterministic shuffled-ish order: values hit partitions by hash
     val df = (1 to n).map(i => ((i * 2654435761L) % n).toDouble).toDF("v")
@@ -38,7 +38,7 @@ class QuantileSketchSpec extends SparkSpec {
   }
 
   test("compacted regime: count stays exact, rank error bounded") {
-    QuantileSketch.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val n = 100000
     val k = 128 // tiny capacity => many compactions at every level
     val df = (1 to n).map(i => ((i * 2654435761L) % n).toDouble).toDF("v")
@@ -92,7 +92,6 @@ class QuantileSketchSpec extends SparkSpec {
     // emission's median covers BOTH batches' values exactly (exact regime)
     implicit val sqlCtx = spark.sqlContext
     graft.plans.GraftExtensions.install(spark)
-    QuantileSketch.register(spark)
     val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(java.sql.Timestamp, Double)]
     val q = stream.toDF().toDF("ts", "v")
       .withWatermark("ts", "10 minutes")
@@ -112,7 +111,7 @@ class QuantileSketchSpec extends SparkSpec {
   }
 
   test("nulls are skipped; guards reject bad q, k, and empty sketches") {
-    QuantileSketch.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val df = Seq(Some(1.0), None, Some(3.0)).toDF("v")
     val row = df.agg(QuantileSketch.kll_agg(col("v"), 64).as("sk"))
       .select(

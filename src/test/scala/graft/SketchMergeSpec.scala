@@ -17,7 +17,6 @@ class SketchMergeSpec extends SparkSpec {
     .toDF("day", "key", "v")
 
   test("cms/bloom: merged daily sketches are byte-identical to the single pass") {
-    SketchMerge.register(spark)
     graft.plans.GraftExtensions.install(spark)
     val perDay = daily.groupBy("day").agg(
       CountMin.cms_agg(col("key"), 256, 4).as("cms"),
@@ -38,7 +37,7 @@ class SketchMergeSpec extends SparkSpec {
   }
 
   test("kll: merged daily sketches keep the exact count and exact-regime quantiles") {
-    SketchMerge.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val perDay = daily.groupBy("day").agg(
       QuantileSketch.kll_agg(col("v"), 8192).as("sk"))
     val merged = perDay.agg(SketchMerge.kll_merge(col("sk")).as("sk"))
@@ -52,7 +51,7 @@ class SketchMergeSpec extends SparkSpec {
   }
 
   test("theta: merged daily sketches estimate exactly below k") {
-    SketchMerge.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val perDay = daily.groupBy("day").agg(
       ThetaSketch.theta_sketch(col("key")).as("sk"))
     val est = perDay.agg(
@@ -61,8 +60,7 @@ class SketchMergeSpec extends SparkSpec {
   }
 
   test("hll: stored sketches are self-describing; merge is exact in the sparse regime") {
-    SketchMerge.register(spark)
-    DistinctSketch.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val perDay = daily.groupBy("day").agg(
       DistinctSketch.hll_sketch(col("key"), 14, 4096).as("sk"))
     val dir = java.nio.file.Files.createTempDirectory("hllsketches").toString
@@ -97,7 +95,7 @@ class SketchMergeSpec extends SparkSpec {
   }
 
   test("guards: shape mismatches raise; empty input yields null") {
-    SketchMerge.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val mixed = Seq(0, 1).toDF("g")
       .withColumn("cms",
         when(col("g") === 0, lit(CountMin.serialize(new CountMin.Buffer(256, 4))))

@@ -10,7 +10,7 @@ class ThetaSketchSpec extends SparkSpec {
   import spark.implicits._
 
   test("exact regime survives the partial/final merge path") {
-    ThetaSketch.register(spark)
+    graft.plans.GraftExtensions.install(spark)
     val df = (1 to 20000).map(i => i % 2500).toDF("v").repartition(32)
     val est = df.agg(ThetaSketch.theta_estimate(
       ThetaSketch.theta_sketch(col("v"), 4096))).head().getDouble(0)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: one JSON line with per-query seconds over
   * SPARK_GRAFT_SF_DIR. An untimed warmup action per table loads file
   * indexes/footers and JIT-warms the parquet reader so the first timed
@@ -14,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   * bench as a row-count over the scan), and a `collect()` would add
   * driver transfer that a cluster sink never pays.
   *
-  * Each query reports the MEDIAN of `Passes` (3) timed runs — single-pass
+  * Each query reports the MEDIAN of SPARK_GRAFT_PASSES (3) timed runs — single-pass
   * timings on a busy box swing enough (~±30% observed round-over-round on
   * unchanged code) to drown real regressions; the total is the sum of the
   * printed 3-decimal medians. Failures are NOT swallowed: a failing query
@@ -22,24 +20,6 @@ import org.apache.spark.sql.SparkSession
   * and the process exits non-zero.
   */
 object Bench {
-  /** Timed passes per query (median reported). SPARK_GRAFT_PASSES
-    * overrides the default 3 — the sf10 decade probe uses 1: at 30–200 s
-    * per query the jitter a median absorbs is proportionally small, and
-    * the untimed warm-up pass still runs first, so a single timed pass
-    * halves a multi-hour sweep without changing the methodology class.
-    * Both wrong-input classes fail loudly and name the env var: a
-    * silently-defaulted 0 and an uncontextualized NumberFormatException
-    * are equally misleading at the top of a multi-hour sweep. */
-  private val Passes = sys.env.get("SPARK_GRAFT_PASSES") match {
-    case None => 3
-    case Some(raw) =>
-      val n = raw.toIntOption.getOrElse(sys.error(
-        s"SPARK_GRAFT_PASSES must be a positive integer, got '$raw'"))
-      if (n < 1) sys.error(
-        s"SPARK_GRAFT_PASSES must be >= 1, got $n")
-      n
-  }
-
   private def materialize(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
@@ -198,52 +178,17 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // local iteration aid: SPARK_GRAFT_ONLY=q55_repeated_spans,q56_span_cutlist
-    // times just those queries; unset (the driver's mode) runs everything
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // SPARK_GRAFT_SKIP: exclusions for scale sweeps — e.g. q153 at sf3,
-    // whose Θ(output) growth on the degenerate fixture vocab is already
+    val cfg = RunConfig.fromEnv()
+    val sfDir = cfg.sfDir
+    // SPARK_GRAFT_SKIP exists for scale sweeps — e.g. q153 at sf3, whose
+    // Θ(output) growth on the degenerate fixture vocab is already
     // documented (BASELINE.md) and would add hours without information.
     // Exclusions MUST be named in the committed artifact's write-up.
-    val skip = sys.env.get("SPARK_GRAFT_SKIP")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    def selected = (only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None        => SparkEntry.queries
-    }).filter { case (n, _) => !skip(n) }
-    if (sys.env.get("SPARK_GRAFT_FORK").contains("true")) {
+    val selected = cfg.selected
+    if (cfg.fork) {
       forkedSweep(selected.keys.toSeq.sorted, sfDir)
       return
     }
-    // SPARK_GRAFT_SHUFFLE_PARTITIONS decouples shuffle-partition count
-    // from core count (default: = cpus, the standing convention every
-    // committed artifact used). Exists for partition-SIZING probes: the
-    // round-12 movement audit's only nonzero spill (q61 at sf10, ~2 GB in
-    // post-regime-switch SMJ sorts) has "more shuffle partitions" as its
-    // asserted fix, and demonstrating that must not also change query
-    // parallelism or the local[n] master the methodology is quoted under.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    // SPARK_GRAFT_CONF: semicolon-separated key=value Spark confs for
-    // sizing probes. Exists because the q61 spill probe DISPROVED the
-    // bare shuffle-partition knob: with AQE coalescing on (the default,
-    // and the production posture), raising spark.sql.shuffle.partitions
-    // 32→128 left both the ~2 GB spill and the post-coalesce partition
-    // count unchanged — the knob that actually sizes reduce partitions
-    // under AQE is spark.sql.adaptive.advisoryPartitionSizeInBytes.
-    // Probes must be able to set THAT (and peers) without growing a
-    // bespoke env var per conf.
-    val extraConf = sys.env.get("SPARK_GRAFT_CONF").iterator
-      .flatMap(_.split(";")).map(_.trim).filter(_.nonEmpty)
-      .map { kv =>
-        val i = kv.indexOf('=')
-        require(i > 0, s"SPARK_GRAFT_CONF entries must be key=value, got '$kv'")
-        kv.substring(0, i) -> kv.substring(i + 1)
-      }.toSeq
     // Codegen class cache sized to the catalog (round-13). The default
     // 100-entry cache can't hold 234 distinct plans' codegen units, so a
     // full sweep recompiled EVERY whole-stage source on EVERY timed pass
@@ -253,24 +198,20 @@ object Bench {
     // Not a local[32] trick: any long-lived driver cycling a catalog of
     // plans (scheduled batches, a query service) hits the same cliff;
     // 5000 entries bounds metaspace at a few hundred MB worst-case.
-    // Set BEFORE extraConf so SPARK_GRAFT_CONF probes can override it.
-    val spark = extraConf.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.shuffle.partitions", shufflePartitions))(
-      (b, kv) => b.config(kv._1, kv._2))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Passed BEFORE SPARK_GRAFT_CONF, so a sizing probe can override it
+    // like any other conf: the round-12 q61 spill probe found that under
+    // AQE the knob that sizes reduce partitions is
+    // spark.sql.adaptive.advisoryPartitionSizeInBytes, not the shuffle
+    // partition count, so probes set confs by name, not via a knob each.
+    val spark = GraftSession.local(cfg.cpus,
+      ("spark.sql.codegen.cache.maxEntries" -> "5000") +: cfg.conf: _*)
     // The driver fixtures are one parquet file per table (one input
     // partition): let map-heavy queries (q20/q21/q46) spread the scan.
     // Default-off everywhere else so the production plan stays shuffle-free.
     // SPARK_GRAFT_SINGLE_FILE=false for multi-row-group fixtures (the sf1
     // scale probe), where the scan parallelizes natively and the spread
     // would inject a shuffle the production plan doesn't have.
-    spark.conf.set("graft.bench.singleFileFixture",
-      sys.env.getOrElse("SPARK_GRAFT_SINGLE_FILE", "true"))
+    spark.conf.set("graft.bench.singleFileFixture", cfg.singleFile.toString)
     // Table warm-up is guarded per table: round 5 lost the ENTIRE bench
     // (rc=1, zero timings) to one unguarded count when a fixture's physical
     // schema drifted. A broken table must degrade to per-query errors in
@@ -306,8 +247,7 @@ object Bench {
     // 0.9 s queries reporting 7 s purely from inherited heap pressure).
     // Off by default — the per-round sf0.1 driver bench favors wall
     // speed and its queries are small enough not to interact.
-    val gcSettle = sys.env.get("SPARK_GRAFT_GC_SETTLE").contains("true")
-    def settle(): Unit = if (gcSettle) { System.gc(); Thread.sleep(300) }
+    def settle(): Unit = if (cfg.gcSettle) { System.gc(); Thread.sleep(300) }
 
     // SPARK_GRAFT_SHUFFLE_METRICS=true: record per-query shuffle-write and
     // spill BYTES from task metrics alongside the timings ("shuffle_bytes"/
@@ -318,10 +258,9 @@ object Bench {
     // unchanged plan shape. Off by default: listener-bus drain costs a
     // bounded poll per query, and the driver's per-round artifact contract
     // is timings.
-    val shuffleMetrics = sys.env.get("SPARK_GRAFT_SHUFFLE_METRICS").contains("true")
     val accShuffle = new java.util.concurrent.atomic.AtomicLong
     val accSpill = new java.util.concurrent.atomic.AtomicLong
-    if (shuffleMetrics) spark.sparkContext.addSparkListener(
+    if (cfg.shuffleMetrics) spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onTaskEnd(
             e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
@@ -336,7 +275,7 @@ object Bench {
     // counters until two consecutive 50 ms reads agree (bounded at 1 s).
     // Shuffle bytes per pass are deterministic, so a straggler event past
     // the bound only perturbs the per-run average, never the timings.
-    def drainListeners(): Unit = if (shuffleMetrics) {
+    def drainListeners(): Unit = if (cfg.shuffleMetrics) {
       var prev = -1L
       var spins = 0
       while (spins < 20 && (accShuffle.get + accSpill.get) != prev) {
@@ -356,7 +295,6 @@ object Bench {
     // still references its checkpointed RDDs; a System.gc() between
     // queries (this mode only) lets ContextCleaner drop the previous
     // query's blocks so readings don't accumulate across queries.
-    val storageMetrics = sys.env.get("SPARK_GRAFT_STORAGE_METRICS").contains("true")
     val storageBytes = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val shuffleBytes = scala.collection.mutable.LinkedHashMap.empty[String, Long]
@@ -365,8 +303,8 @@ object Bench {
       drainListeners()
       val sh0 = accShuffle.get; val sp0 = accSpill.get
       var passesRun = 0
-      if (storageMetrics) { System.gc(); Thread.sleep(200) }
-      val times = (1 to Passes).flatMap { _ =>
+      if (cfg.storageMetrics) { System.gc(); Thread.sleep(200) }
+      val times = (1 to cfg.passes).flatMap { _ =>
         if (errors.contains(name)) None // first failure wins, skip reruns
         else {
           settle()
@@ -379,7 +317,7 @@ object Bench {
             val elapsed = (System.nanoTime() - t0) / 1e9
             passesRun += 1
             // the block-manager query stays outside the timed window
-            if (storageMetrics) {
+            if (cfg.storageMetrics) {
               val cur = spark.sparkContext.getRDDStorageInfo
                 .map(i => i.memSize + i.diskSize).sum
               storageBytes(name) = math.max(storageBytes.getOrElse(name, 0L), cur)
@@ -400,7 +338,7 @@ object Bench {
       // residual: a straggler listener event past the 1 s drain bound is
       // attributed to the NEXT query's window — bytes per pass are
       // deterministic, so this perturbs only the opt-in averages.)
-      if (shuffleMetrics && passesRun > 0 && !errors.contains(name)) {
+      if (cfg.shuffleMetrics && passesRun > 0 && !errors.contains(name)) {
         drainListeners()
         shuffleBytes(name) = (accShuffle.get - sh0) / passesRun
         spillBytes(name) = (accSpill.get - sp0) / passesRun
@@ -420,12 +358,11 @@ object Bench {
     // honest isolated-median number) and `rechecks` records both, so a
     // phantom regression is self-labeling instead of contradicting the
     // committed record. A real regression rechecks high and stays high.
-    // Scoped to full sweeps at the reference's own SF; SPARK_GRAFT_RECHECK
-    // =false disables.
+    // Scoped to full sweeps (no SPARK_GRAFT_ONLY, two or more passes) at
+    // the reference's own SF.
     // ------------------------------------------------------------------
     val rechecks = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    val recheckOn = !sys.env.get("SPARK_GRAFT_RECHECK").contains("false") &&
-      only.isEmpty && Passes >= 2
+    val recheckOn = cfg.only.isEmpty && cfg.passes >= 2
     lazy val forkRef: Map[String, Double] = {
       val cwd = new java.io.File(".")
       val refFile = Option(cwd.listFiles()).getOrElse(Array.empty)
@@ -447,7 +384,7 @@ object Bench {
             spark.catalog.clearCache()
             System.gc(); Thread.sleep(300)
             val fn = selected(name)
-            val again = (1 to Passes).flatMap { _ =>
+            val again = (1 to cfg.passes).flatMap { _ =>
               val t0 = System.nanoTime()
               try { materialize(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
               catch { case scala.util.control.NonFatal(_) => None }
@@ -474,12 +411,12 @@ object Bench {
       "," + rechecks.map { case (k, (a, b)) =>
         "\"" + k + "\":{\"in_sweep\":" + sec3(a) + ",\"recheck\":" + sec3(b) + "}"
       }.mkString("\"rechecks\":{", ",", "}")
-    val shufJson = if (!shuffleMetrics) "" else {
+    val shufJson = if (!cfg.shuffleMetrics) "" else {
       def m(mm: scala.collection.Map[String, Long]) =
         mm.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
       s""","shuffle_bytes":${m(shuffleBytes)},"spill_bytes":${m(spillBytes)}"""
     }
-    val storJson = if (!storageMetrics) "" else
+    val storJson = if (!cfg.storageMetrics) "" else
       storageBytes.map { case (k, v) => s"\"" + k + "\":" + v }
         .mkString(""","storage_bytes":{""", ",", "}")
     println(s"""{"metric":"total","value":${total3(finalResults.map(_._2))},"unit":"sec","queries":$qs,"errors":$errJson$recheckJson$shufJson$storJson,"sf":"$sfDir"}""")

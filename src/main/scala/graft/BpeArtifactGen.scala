@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** One-off provenance tool for `graft.ops.BpeMergesArtifact`: runs the
@@ -32,13 +32,8 @@ object BpeArtifactGen {
     val sfDir = args(0)
     val outFile = args(1)
     val rounds = if (args.length > 2) args(2).toInt else 16
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // fixed 8 cores so a regeneration reproduces the committed artifact
+    val spark = GraftSession.local(8)
 
     def toks(sc: org.apache.spark.sql.Column) =
       split(regexp_replace(sc, "^\\||\\|$", ""), "\\|\\|")

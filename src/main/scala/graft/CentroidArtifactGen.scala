@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off provenance tool for `graft.ops.CentroidArtifact` (and its
   * scaled variants): trains the seeded full-dimension k-means centroids
   * SemDeDup assigns cells with and renders them as Scala source. Like
@@ -27,13 +25,8 @@ object CentroidArtifactGen {
     val outFile = args(1)
     val k = if (args.length > 2) args(2).toInt else 8
     val objName = if (args.length > 3) args(3) else "CentroidArtifact"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // fixed 8 cores so a regeneration reproduces the committed artifact
+    val spark = GraftSession.local(8)
     val centers = graft.ops.Similarity.trainCentroids(
       graft.sources.Tables.embeddings(spark, sfDir), k = k)
     val sb = new StringBuilder

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Round-13 measurement aid: dump `.explain("formatted")` for catalog
@@ -21,19 +20,12 @@ object PlanDump {
     val outDir = args(1)
     val suffix = if (args.length > 2) args(2) else ""
     val only = if (args.length > 3)
-      args(3).split(",").map(_.trim).filter(_.nonEmpty).toSet
+      RunConfig.queryNames(args(3), "PlanDump's name list").toSet
     else Set.empty[String]
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cfg = RunConfig.fromEnv()
+    val spark = GraftSession.local(cfg.cpus)
     // same fixture-layout conf as Bench so the dumped plan is the timed one
-    spark.conf.set("graft.bench.singleFileFixture",
-      sys.env.getOrElse("SPARK_GRAFT_SINGLE_FILE", "true"))
+    spark.conf.set("graft.bench.singleFileFixture", cfg.singleFile.toString)
     Files.createDirectories(Paths.get(outDir))
     val mode = ExplainMode.fromString("formatted")
     SparkEntry.queries.toSeq.sortBy(_._1)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off provenance tool for `graft.ops.PqCodebookArtifact`: trains the
   * seeded PQ codebooks on a fixture's embeddings and renders them as Scala
   * source. The artifact is TRAIN-ONCE — production PQ serving never
@@ -18,13 +16,8 @@ import org.apache.spark.sql.SparkSession
 object PqArtifactGen {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outFile) = args
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // fixed 8 cores so a regeneration reproduces the committed artifact
+    val spark = GraftSession.local(8)
     val books = graft.ops.Similarity.pqTrainCodebooks(
       graft.sources.Tables.embeddings(spark, sfDir), m = 8, kCent = 16, dim = 64)
     val sb = new StringBuilder

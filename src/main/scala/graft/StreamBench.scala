@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 
@@ -30,21 +29,8 @@ import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
   */
 object StreamBench {
   /** Landing-chunk count (= micro-batch count under maxFilesPerTrigger=1).
-    * SPARK_GRAFT_CHUNKS overrides the default 20 for batch-SIZE probes:
-    * the round-12 state-store finding (4 partitions beat 32 at 100 k-row
-    * batches, a per-store commit floor) predicts a crossover once
-    * per-batch state volume amortizes that floor — measuring it needs the
-    * same fixture replayed as a few multi-million-row batches. Minimum 2:
-    * the recovery probes split the chunk list in half and each half must
-    * be non-empty. */
-  private val Chunks = sys.env.get("SPARK_GRAFT_CHUNKS") match {
-    case None => 20
-    case Some(raw) =>
-      val n = raw.toIntOption.getOrElse(sys.error(
-        s"SPARK_GRAFT_CHUNKS must be an integer >= 2, got '$raw'"))
-      if (n < 2) sys.error(s"SPARK_GRAFT_CHUNKS must be >= 2, got $n")
-      n
-  }
+    * Even, so the recovery probes' two halves are equal and non-empty. */
+  private val Chunks = 20
 
   /** Progress entries are keyed by QUERY ID and filtered to the active
     * query in run(): the listener bus is async, so with one shared tap a
@@ -68,24 +54,14 @@ object StreamBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cfg = RunConfig.fromEnv()
+    val sfDir = cfg.sfDir
     val work = java.nio.file.Files.createTempDirectory("streambench").toFile
-    // Decoupled shuffle-partition knob (default: = cpus, the committed
-    // CPUS=4 artifact convention). The state-store partition count IS
-    // spark.sql.shuffle.partitions; varying it at a FIXED local[n]
-    // master isolates the per-store commit floor from thread-count
-    // effects — the clean form of the crossover experiment the coupled
-    // CPUS=4-vs-32 comparison could only imply.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // The state-store partition count IS spark.sql.shuffle.partitions
+    // (default: = cpus); SPARK_GRAFT_CONF=spark.sql.shuffle.partitions=N
+    // varies it at a fixed local[n] master.
+    val spark = GraftSession.local(cfg.cpus, cfg.conf: _*)
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
     import spark.implicits._
 
     // Landing directory: the events table as Chunks time-ordered files
@@ -279,16 +255,7 @@ object StreamBench {
       reexecFrom
     }
 
-    // SPARK_GRAFT_STREAM_RECOVERY=false skips both kill-and-restart
-    // probes. They are correctness probes, invariant to partition/batch
-    // sizing (dup/loss and mismatch_vs_clean are 0 by design, measured at
-    // three SFs) — a sizing-crossover run re-executing them would add
-    // many minutes of wall for numbers the committed artifact already
-    // carries at this fixture scale. Default on: the per-round artifact
-    // contract keeps them.
-    val runRecovery =
-      !sys.env.get("SPARK_GRAFT_STREAM_RECOVERY").contains("false")
-    val recovery = if (!runRecovery) None else Some {
+    val recovery = {
       val src = new java.io.File(work, "rec_landing"); src.mkdirs()
       val out = new java.io.File(work, "rec_out").getPath
       val ckpt = new java.io.File(work, "rec_ckpt")
@@ -324,7 +291,7 @@ object StreamBench {
         s""""rows_out":$rowsOut,"dup":${rowsOut - distinctOut},"loss":${expect - distinctOut},""" +
         s""""wall_s":${math.round(wall * 1000) / 1000.0}}"""
     }
-    recovery.foreach(r => System.err.println(s"[streambench] recovery: $r"))
+    System.err.println(s"[streambench] recovery: $recovery")
 
     // ------------------------------------------------------------------
     // Sessionize recovery probe (round 12): the same kill-and-restart
@@ -340,7 +307,7 @@ object StreamBench {
     // differing in either direction (exceptAll both ways — distributed,
     // no driver collect) and must be 0.
     // ------------------------------------------------------------------
-    val recoverySessionize = if (!runRecovery) None else Some {
+    val recoverySessionize = {
       val src = new java.io.File(work, "recs_landing"); src.mkdirs()
       val out = new java.io.File(work, "recs_out").getPath
       val ckpt = new java.io.File(work, "recs_ckpt")
@@ -381,13 +348,12 @@ object StreamBench {
         s""""mismatch_vs_clean":$mismatch,""" +
         s""""wall_s":${math.round(wall * 1000) / 1000.0}}"""
     }
-    recoverySessionize.foreach(r =>
-      System.err.println(s"[streambench] recovery_sessionize: $r"))
+    System.err.println(s"[streambench] recovery_sessionize: $recoverySessionize")
 
     spark.streams.removeListener(tap)
     val body = (results
-      ++ recovery.map("recovery" -> _)
-      ++ recoverySessionize.map("recovery_sessionize" -> _))
+      :+ ("recovery" -> recovery)
+      :+ ("recovery_sessionize" -> recoverySessionize))
       .map { case (k, v) => s"\"$k\":$v" }.mkString(",")
     println(s"""{"metric":"stream","unit":"rows_per_s","input_rows":$nRows,"chunks":$Chunks,"shuffle_partitions":$shufflePartitions,$body,"sf":"$sfDir"}""")
     spark.stop()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,16 +9,9 @@ object Verify {
     // verifies in minutes instead of a full-catalog pass.
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, Set.empty[String])
-      case Array(s, o, f) => (s, o, f.split(",").map(_.trim).toSet)
+      case Array(s, o, f) => (s, o, RunConfig.queryNames(f, "Verify's name list").toSet)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(RunConfig.fromEnv().cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -1,7 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 
@@ -27,14 +25,7 @@ class GraftExtensionsSpec extends SparkSpec {
     val installed = GraftExtensionsSpec.graftNames(s)
     assert(installed == tableNames)
 
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.filterNot(_.startsWith("-Xmx"))
-    val cmd = Seq(java.nio.file.Paths.get(sys.props("java.home"), "bin", "java").toString) ++
-      jvmArgs ++ Seq("-Xmx512m", "-cp", sys.props("java.class.path"),
-        "graft.GraftExtensionsSpec")
-    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-    val lines = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toList
-    assert(proc.waitFor() == 0, lines.takeRight(20).mkString("\n"))
+    val lines = SparkSpec.childJvm("graft.GraftExtensionsSpec")
     val injected = lines.collect { case l if l.startsWith("fn ") => l.drop(3) }.toSet
     assert(injected == installed, s"extensions path: $injected")
     assert(lines.contains("char_ngrams abc,bcd"), lines.takeRight(20).mkString("\n"))

@@ -197,7 +197,7 @@ class PlanAuditSpec extends SparkSpec {
       assert(stale.isEmpty,
         s"stale global-window allowlist entries: ${stale.mkString(", ")}")
 
-      // frozen Exchange budget (ShuffleBudgetGen): a refactor that
+      // frozen Exchange budget (PlanAudit): a refactor that
       // silently ADDS a shuffle or broadcast to any catalog query fails
       // here by name — invisible to correctness gates and sub-second
       // sf0.1 timings, ruinous at 100 TB. Regenerate the budget only for
@@ -207,7 +207,8 @@ class PlanAuditSpec extends SparkSpec {
       }
       assert(unbudgeted.isEmpty,
         "queries missing from the frozen shuffle budget (run " +
-          "`sbt \"runMain graft.ShuffleBudgetGen\"` and commit): " +
+          "`sbt \"runMain graft.PlanAudit <sf0.001 dir> src/test/scala/graft/ShuffleBudget.scala\"` " +
+          "and commit): " +
           unbudgeted.mkString(", "))
       val overBudget = results.collect {
         case (n, c) if c.error.isEmpty && ShuffleBudget.budget.contains(n) &&

@@ -47,11 +47,4 @@ class SchemasSpec extends SparkSpec {
     assert(r.anchor_growth.isEmpty) // no anchor rows in this batch
     assert(r.trend_score_current_interest == 20)
   }
-
-  test("GraftSession registers native functions") {
-    val s = GraftSession.local(2)
-    assert(s.sql("SELECT rolling_hash('abc')").head().getLong(0) ==
-      graft.functions.RollingHash.hashString("abc"))
-    assert(s.sql("SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))").head().getDouble(0) == 11.0)
-  }
 }

@@ -31,6 +31,21 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** Runs `mainClass` in a child JVM with this JVM's flags and classpath
+    * (512 MB heap) and returns its merged stdout/stderr lines; fails
+    * unless it exits 0. For checks that need a fresh SparkContext. */
+  def childJvm(mainClass: String): List[String] = {
+    import scala.jdk.CollectionConverters._
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filterNot(_.startsWith("-Xmx"))
+    val cmd = Seq(java.nio.file.Paths.get(sys.props("java.home"), "bin", "java").toString) ++
+      jvmArgs ++ Seq("-Xmx512m", "-cp", sys.props("java.class.path"), mainClass)
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val lines = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toList
+    assert(proc.waitFor() == 0, lines.takeRight(20).mkString("\n"))
+    lines
+  }
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

@@ -1,5 +1,14 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import scala.collection.concurrent.TrieMap
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.storage.RDDInfo
+
 /** Driver-run benchmark: one JSON line with per-query seconds over
   * SPARK_GRAFT_SF_DIR. An untimed warmup action per table loads file
   * indexes/footers and JIT-warms the parquet reader so the first timed
@@ -18,8 +27,68 @@ package graft
   * printed 3-decimal medians. Failures are NOT swallowed: a failing query
   * is reported with value -1 and its error message in the `errors` map,
   * and the process exits non-zero.
+  *
+  * Every run also prints one stderr line, `[bench-bytes] {...}`: per
+  * query, the per-pass average shuffle-write and spill bytes and the peak
+  * block-store bytes of the timed passes (failed queries left out), with
+  * `"complete":false` if the listener bus did not drain. In fork mode
+  * each child prints its own.
   */
 object Bench {
+  /** Shuffle-write and spill bytes of every task, summed per
+    * `spark.job.description` of the job that submitted the task's stage
+    * (`StageSubmitted` carries that job's properties). Timed passes run
+    * under the query's name, warm-ups under `warmup <name>` and rechecks
+    * under none, so a query's sums are its timed passes' alone. Read the
+    * sums after `drain`. */
+  private[graft] final class BytesListener extends SparkListener {
+    private val stageDesc = TrieMap.empty[Int, String]
+    private val shuffleBytes = TrieMap.empty[String, Long]
+    private val spillBytes = TrieMap.empty[String, Long]
+    private val sentinel = s"bench-bytes drain ${java.util.UUID.randomUUID()}"
+    private var sentinelJob = -1 // written and read on the listener thread only
+    private val drained = new CountDownLatch(1)
+
+    private val descKey = "spark.job.description" // SparkContext's own key is private
+
+    private def desc(p: java.util.Properties): Option[String] =
+      Option(p).flatMap(p => Option(p.getProperty(descKey)))
+
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      desc(e.properties).foreach(stageDesc(e.stageInfo.stageId) = _)
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      for (d <- stageDesc.get(e.stageId); m <- Option(e.taskMetrics)) {
+        shuffleBytes(d) = shuffle(d) + m.shuffleWriteMetrics.bytesWritten
+        spillBytes(d) = spill(d) + m.memoryBytesSpilled + m.diskBytesSpilled
+      }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (desc(e.properties).contains(sentinel)) sentinelJob = e.jobId
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      if (e.jobId == sentinelJob) drained.countDown()
+
+    def shuffle(desc: String): Long = shuffleBytes.getOrElse(desc, 0L)
+    def spill(desc: String): Long = spillBytes.getOrElse(desc, 0L)
+
+    /** Runs one sentinel job and waits until this listener sees its end.
+      * The listener bus delivers in order, so by then every earlier
+      * task's bytes are in the sums. False if the wait timed out. */
+    def drain(sc: SparkContext, timeoutSec: Long = 60): Boolean = {
+      val prev = sc.getLocalProperty(descKey)
+      sc.setJobDescription(sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(prev)
+      drained.await(timeoutSec, TimeUnit.SECONDS)
+    }
+  }
+
+  /** The cached RDDs persisted since `before` (a `getPersistentRDDs` key
+    * set) was taken: a pass's own blocks, not an earlier query's
+    * checkpoints still waiting for the ContextCleaner. */
+  private[graft] def storedSince(sc: SparkContext, before: collection.Set[Int]): Seq[RDDInfo] =
+    sc.getRDDStorageInfo.toSeq.filterNot(i => before(i.id))
+
   private def materialize(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
@@ -212,6 +281,7 @@ object Bench {
     // scale probe), where the scan parallelizes natively and the spread
     // would inject a shuffle the production plan doesn't have.
     spark.conf.set("graft.bench.singleFileFixture", cfg.singleFile.toString)
+    val sc = spark.sparkContext
     // Table warm-up is guarded per table: round 5 lost the ENTIRE bench
     // (rc=1, zero timings) to one unguarded count when a fixture's physical
     // schema drifted. A broken table must degrade to per-query errors in
@@ -233,12 +303,12 @@ object Bench {
     // first time; the timed pass below measures steady-state execution
     selected.foreach { case (name, fn) =>
       try {
-        spark.sparkContext.setJobDescription(s"warmup $name")
+        sc.setJobDescription(s"warmup $name")
         materialize(fn(spark, sfDir))
       } catch {
         case scala.util.control.NonFatal(t) =>
           System.err.println(s"[bench] warm-up failed for $name: ${t.getMessage}")
-      } finally spark.sparkContext.setJobDescription(null)
+      } finally sc.setJobDescription(null)
     }
 
     // SPARK_GRAFT_GC_SETTLE=true: full GC + settle pause before each
@@ -249,103 +319,49 @@ object Bench {
     // speed and its queries are small enough not to interact.
     def settle(): Unit = if (cfg.gcSettle) { System.gc(); Thread.sleep(300) }
 
-    // SPARK_GRAFT_SHUFFLE_METRICS=true: record per-query shuffle-write and
-    // spill BYTES from task metrics alongside the timings ("shuffle_bytes"/
-    // "spill_bytes" maps, per single run). Exchange COUNTS are already
-    // frozen by ShuffleBudget; bytes are the scale signal counts can't
-    // give — comparing sf0.1 vs sf1 artifacts shows whether data MOVEMENT
-    // grows linearly or an operator hides a quadratic shuffle behind an
-    // unchanged plan shape. Off by default: listener-bus drain costs a
-    // bounded poll per query, and the driver's per-round artifact contract
-    // is timings.
-    val accShuffle = new java.util.concurrent.atomic.AtomicLong
-    val accSpill = new java.util.concurrent.atomic.AtomicLong
-    if (cfg.shuffleMetrics) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) {
-            accShuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            accSpill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-          }
-        }
-      })
-    // The listener bus is async and its drain API is private: poll the
-    // counters until two consecutive 50 ms reads agree (bounded at 1 s).
-    // Shuffle bytes per pass are deterministic, so a straggler event past
-    // the bound only perturbs the per-run average, never the timings.
-    def drainListeners(): Unit = if (cfg.shuffleMetrics) {
-      var prev = -1L
-      var spins = 0
-      while (spins < 20 && (accShuffle.get + accSpill.get) != prev) {
-        prev = accShuffle.get + accSpill.get
-        Thread.sleep(50)
-        spins += 1
-      }
-    }
-
-    // SPARK_GRAFT_STORAGE_METRICS=true: record per-query PEAK block-store
-    // bytes (memory + disk) across the timed passes ("storage_bytes" map).
-    // Exists for the round-13 verdict's item 3: the localCheckpoint'ed
-    // intermediates materialize into executor-local storage, and whether
-    // the materialize-once trade still wins when those bytes grow 10×
-    // (sf1) is a claim that needs the BYTES, not just the seconds. The
-    // reading is taken right after each pass while the pass's DataFrame
-    // still references its checkpointed RDDs; a System.gc() between
-    // queries (this mode only) lets ContextCleaner drop the previous
-    // query's blocks so readings don't accumulate across queries.
+    // Shuffle-write, spill and storage bytes on every run (stderr
+    // `[bench-bytes]` record, below). Exchange COUNTS are frozen by
+    // ShuffleBudget; bytes are the scale signal counts can't give —
+    // comparing sf0.1 vs sf1 records shows whether data MOVEMENT grows
+    // linearly or an operator hides a quadratic shuffle behind an
+    // unchanged plan shape, and whether the localCheckpoint'ed
+    // intermediates' executor-local storage stays affordable.
+    val bytes = new BytesListener
+    sc.addSparkListener(bytes)
     val storageBytes = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    val passesRun = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val shuffleBytes = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val spillBytes = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      drainListeners()
-      val sh0 = accShuffle.get; val sp0 = accSpill.get
-      var passesRun = 0
-      if (cfg.storageMetrics) { System.gc(); Thread.sleep(200) }
       val times = (1 to cfg.passes).flatMap { _ =>
         if (errors.contains(name)) None // first failure wins, skip reruns
         else {
           settle()
+          val persisted = sc.getPersistentRDDs.keySet
           // guide §1.5: label the timed jobs so the UI/event log maps
-          // stages back to queries (thread-local; cost-free when UI off)
-          spark.sparkContext.setJobDescription(name)
+          // stages back to queries (thread-local; cost-free when UI off);
+          // the label is also what BytesListener sums the pass's bytes by
+          sc.setJobDescription(name)
           val t0 = System.nanoTime()
           try {
             materialize(fn(spark, sfDir))
             val elapsed = (System.nanoTime() - t0) / 1e9
-            passesRun += 1
+            passesRun(name) = passesRun.getOrElse(name, 0) + 1
             // the block-manager query stays outside the timed window
-            if (cfg.storageMetrics) {
-              val cur = spark.sparkContext.getRDDStorageInfo
-                .map(i => i.memSize + i.diskSize).sum
-              storageBytes(name) = math.max(storageBytes.getOrElse(name, 0L), cur)
-            }
+            val stored = storedSince(sc, persisted).map(i => i.memSize + i.diskSize).sum
+            storageBytes(name) = math.max(storageBytes.getOrElse(name, 0L), stored)
             Some(elapsed)
           } catch {
             case scala.util.control.NonFatal(t) =>
               System.err.println(s"[bench] FAILED $name: ${t.getMessage}")
               errors(name) = Option(t.getMessage).getOrElse(t.getClass.getName).take(200)
               None
-          } finally spark.sparkContext.setJobDescription(null)
+          } finally sc.setJobDescription(null)
         }
-      }
-      // Failed queries record NO byte metrics: passesRun counts successes
-      // only, but a pass that dies mid-query still accumulated its partial
-      // shuffle/spill into the window — dividing that contaminated delta
-      // by the success count would inflate the per-pass average. (Known
-      // residual: a straggler listener event past the 1 s drain bound is
-      // attributed to the NEXT query's window — bytes per pass are
-      // deterministic, so this perturbs only the opt-in averages.)
-      if (cfg.shuffleMetrics && passesRun > 0 && !errors.contains(name)) {
-        drainListeners()
-        shuffleBytes(name) = (accShuffle.get - sh0) / passesRun
-        spillBytes(name) = (accSpill.get - sp0) / passesRun
       }
       if (errors.contains(name)) name -> -1.0
       else name -> times.sorted.apply(times.size / 2) // median of the passes
     }
+    val complete = bytes.drain(sc)
     // ------------------------------------------------------------------
     // Self-correcting outlier recheck (round 10): an in-JVM sweep can
     // carry end-of-sweep context stalls — round 9's driver artifact
@@ -411,15 +427,16 @@ object Bench {
       "," + rechecks.map { case (k, (a, b)) =>
         "\"" + k + "\":{\"in_sweep\":" + sec3(a) + ",\"recheck\":" + sec3(b) + "}"
       }.mkString("\"rechecks\":{", ",", "}")
-    val shufJson = if (!cfg.shuffleMetrics) "" else {
-      def m(mm: scala.collection.Map[String, Long]) =
-        mm.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-      s""","shuffle_bytes":${m(shuffleBytes)},"spill_bytes":${m(spillBytes)}"""
-    }
-    val storJson = if (!cfg.storageMetrics) "" else
-      storageBytes.map { case (k, v) => s"\"" + k + "\":" + v }
-        .mkString(""","storage_bytes":{""", ",", "}")
-    println(s"""{"metric":"total","value":${total3(finalResults.map(_._2))},"unit":"sec","queries":$qs,"errors":$errJson$recheckJson$shufJson$storJson,"sf":"$sfDir"}""")
+    // Per-pass averages over the successful timed passes; a failed query
+    // records no bytes (its partial pass would skew the average). The
+    // maps stay off the stdout summary: its consumers read the line's
+    // tail, and a longer line has been truncated before (see `sec3`).
+    val ok = passesRun.keys.filterNot(errors.contains).toSeq
+    def m(f: String => Long) = ok.map(k => "\"" + k + "\":" + f(k)).mkString("{", ",", "}")
+    System.err.println(s"""[bench-bytes] {"shuffle_bytes":${m(k => bytes.shuffle(k) / passesRun(k))},""" +
+      s""""spill_bytes":${m(k => bytes.spill(k) / passesRun(k))},"storage_bytes":${m(storageBytes)},""" +
+      s""""complete":$complete,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${total3(finalResults.map(_._2))},"unit":"sec","queries":$qs,"errors":$errJson$recheckJson,"sf":"$sfDir"}""")
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

@@ -1,7 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.WindowExec
@@ -25,8 +27,13 @@ import org.apache.spark.sql.execution.window.WindowExec
   * shuffle is the same class). Regenerate ONLY when a deliberate plan
   * change moves a count, and say why in the commit.
   *
+  * Given a plan directory too, the sweep writes `<planDir>/<query>.txt`:
+  * the `explain("formatted")` of the very plan it counted (AQE off,
+  * 8 cores), so before/after plan claims are checkable without running
+  * Spark — dump the parent and the change into two directories and diff.
+  *
   *   sbt "runMain graft.PlanAudit /root/testdata/sf0.001"
-  *   sbt "runMain graft.PlanAudit <sfDir> src/test/scala/graft/ShuffleBudget.scala"
+  *   sbt "runMain graft.PlanAudit <sfDir> src/test/scala/graft/ShuffleBudget.scala [planDir]"
   */
 object PlanAudit {
 
@@ -38,11 +45,17 @@ object PlanAudit {
       globalWindows: Int, error: Option[String])
 
   /** Sweep every catalog query's STATIC physical plan (caller must have
-    * AQE disabled — adaptive wrapping hides the pre-runtime shape). */
-  def sweep(spark: SparkSession, sfDir: String): Seq[(String, Counts)] =
+    * AQE disabled — adaptive wrapping hides the pre-runtime shape),
+    * writing each counted plan's formatted explain into `planDir` if
+    * given. */
+  def sweep(spark: SparkSession, sfDir: String,
+      planDir: Option[Path] = None): Seq[(String, Counts)] =
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       name -> (try {
-        val plan = fn(spark, sfDir).queryExecution.executedPlan
+        val qe = fn(spark, sfDir).queryExecution
+        val plan = qe.executedPlan
+        planDir.foreach(d => Files.writeString(d.resolve(s"$name.txt"),
+          qe.explainString(ExplainMode.fromString("formatted"))))
         def count(p: SparkPlan => Boolean): Int = {
           var n = 0
           plan.foreachWithSubqueries(x => if (p(x)) n += 1)
@@ -70,7 +83,8 @@ object PlanAudit {
     // fixed 8 cores so a regeneration reproduces the committed budget;
     // audit the static plan: AQE would hide the pre-runtime shape
     val spark = GraftSession.local(8, "spark.sql.adaptive.enabled" -> "false")
-    val counts = sweep(spark, sfDir)
+    val planDir = args.lift(2).map(d => Files.createDirectories(Paths.get(d)))
+    val counts = sweep(spark, sfDir, planDir)
     println(f"${"query"}%-28s shuf bcast cartesian bnlj gwindow")
     counts.foreach {
       case (name, Counts(_, _, _, _, _, Some(err))) =>
@@ -85,10 +99,11 @@ object PlanAudit {
     args.lift(1).foreach { outFile =>
       val errs = counts.collect { case (n, c) if c.error.isDefined => n }
       require(errs.isEmpty, s"plan build failed for: ${errs.mkString(", ")}")
-      java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
+      Files.write(Paths.get(outFile),
         budgetSource(counts).getBytes(java.nio.charset.StandardCharsets.UTF_8))
       println(s"wrote $outFile (${counts.size} queries)")
     }
+    planDir.foreach(d => println(s"wrote ${counts.size} plans to $d"))
     spark.stop()
   }
 

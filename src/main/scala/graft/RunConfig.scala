@@ -4,7 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Every `SPARK_GRAFT_*` variable the mains read, parsed once at startup.
   * A malformed value fails here with a message naming the variable, never
-  * as a silent default or an opaque error hours into a sweep.
+  * as a silent default or an opaque error hours into a sweep; so does a
+  * `SPARK_GRAFT_*` name outside `Names` (a retired or misspelled knob
+  * would otherwise run the default posture and exit 0).
   *
   *  - `SPARK_GRAFT_SF_DIR`: table directory (Bench, StreamBench);
   *  - `SPARK_GRAFT_CPUS`: `local[N]` cores and shuffle partitions;
@@ -15,11 +17,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - `SPARK_GRAFT_CONF`: `k=v;k=v` Spark confs applied over the session
   *    posture (Bench, StreamBench);
   *  - `SPARK_GRAFT_SINGLE_FILE`: the fixture is one file per table, so
-  *    map-heavy queries spread the scan (Bench, PlanDump);
-  *  - `SPARK_GRAFT_GC_SETTLE`: full GC + pause before each timed pass;
-  *  - `SPARK_GRAFT_SHUFFLE_METRICS` / `SPARK_GRAFT_STORAGE_METRICS`: add
-  *    per-query shuffle/spill bytes / peak block-store bytes to Bench's
-  *    summary line. */
+  *    map-heavy queries spread the scan (Bench);
+  *  - `SPARK_GRAFT_GC_SETTLE`: full GC + pause before each timed pass. */
 final case class RunConfig(
     sfDir: String,
     cpus: Int,
@@ -29,9 +28,7 @@ final case class RunConfig(
     fork: Boolean,
     conf: Seq[(String, String)],
     singleFile: Boolean,
-    gcSettle: Boolean,
-    shuffleMetrics: Boolean,
-    storageMetrics: Boolean) {
+    gcSettle: Boolean) {
 
   /** The catalog queries Bench runs: ONLY's names (all when unset) minus
     * SKIP's. */
@@ -41,9 +38,16 @@ final case class RunConfig(
 
 object RunConfig {
 
+  /** The variables `from` parses; README "Running" lists the same set. */
+  val Names: Seq[String] = Seq("SF_DIR", "CPUS", "PASSES", "ONLY", "SKIP",
+    "FORK", "CONF", "SINGLE_FILE", "GC_SETTLE").map("SPARK_GRAFT_" + _)
+
   def fromEnv(): RunConfig = from(sys.env)
 
   def from(env: Map[String, String]): RunConfig = {
+    val unknown = env.keys.filter(k => k.startsWith("SPARK_GRAFT_") && !Names.contains(k))
+    require(unknown.isEmpty, s"unknown variables ${unknown.toSeq.sorted.mkString(", ")}; " +
+      s"RunConfig reads ${Names.mkString(", ")}")
     def positive(name: String, default: Int): Int = env.get(name).fold(default) { raw =>
       val n = raw.trim.toIntOption
       require(n.exists(_ >= 1), s"$name must be a positive integer, got '$raw'")
@@ -70,9 +74,7 @@ object RunConfig {
           kv.substring(0, i) -> kv.substring(i + 1)
         },
       singleFile = flag("SPARK_GRAFT_SINGLE_FILE", true),
-      gcSettle = flag("SPARK_GRAFT_GC_SETTLE", false),
-      shuffleMetrics = flag("SPARK_GRAFT_SHUFFLE_METRICS", false),
-      storageMetrics = flag("SPARK_GRAFT_STORAGE_METRICS", false))
+      gcSettle = flag("SPARK_GRAFT_GC_SETTLE", false))
   }
 
   /** A comma list of catalog query names; fails listing every name the

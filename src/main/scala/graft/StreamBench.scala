@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming-pillar benchmark (round 9): every streaming operator was
   * spec-green but had NO scale numbers — the only pillar with zero bench
@@ -32,25 +32,40 @@ object StreamBench {
     * Even, so the recovery probes' two halves are equal and non-empty. */
   private val Chunks = 20
 
-  /** Progress entries are keyed by QUERY ID and filtered to the active
-    * query in run(): the listener bus is async, so with one shared tap a
-    * straggler progress event from the PREVIOUS pipeline could arrive
-    * after a naive clear() and inflate the next pipeline's rows/batches/
-    * state_max (round-9 advice). Id-keying makes cross-pipeline
-    * contamination structurally impossible; no clear() is needed. */
-  private class ProgressTap extends StreamingQueryListener {
-    case class P(id: java.util.UUID, rows: Long, stateRows: Long, stateBytes: Long)
-    val batches = new java.util.concurrent.ConcurrentLinkedQueue[P]()
-    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-      val p = e.progress
-      val (sr, sb) = p.stateOperators.foldLeft((0L, 0L)) { (acc, so) =>
-        (acc._1 + so.numRowsTotal, acc._2 + so.memoryUsedBytes)
-      }
-      if (p.numInputRows > 0 || sr > 0)
-        batches.add(P(p.id, p.numInputRows, sr, sb))
+  /** Opens the crash window at the newest DATA batch of checkpoint
+    * `ckpt`: offsets/N survives, commits/N does not — the on-disk state a
+    * process death between the sink commit and the checkpoint commit
+    * leaves, which the engine answers by re-executing exactly batch N on
+    * restart (a deeper gap is a state the engine ignores). AvailableNow's
+    * trailing no-data watermark-advance batch (a mid-run crash never
+    * plans it; its offsets body repeats the previous batch's verbatim) is
+    * removed entirely first. The Hadoop checksum sidecars go too, or the
+    * re-executed batch's commit rename fails as if a concurrent query
+    * owned the log. Returns the re-executed batch id.
+    * StreamRecoverySpec's kill-and-restart cases use it too. */
+  private[graft] def openCrashWindow(ckpt: String): Long = {
+    def numbered(sub: String) = new java.io.File(ckpt, sub).listFiles()
+      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong)
+    def del(f: java.io.File): Unit = {
+      require(f.delete(), s"could not delete ${f.getPath}")
+      new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
+      ()
     }
+    def sourceOffsets(f: java.io.File): String = {
+      val s = scala.io.Source.fromFile(f)
+      try s.getLines().drop(2).mkString("\n") finally s.close()
+    }
+    var offs = numbered("offsets")
+    require(offs.length >= 2, s"need >=2 batches under $ckpt")
+    if (sourceOffsets(offs.last) == sourceOffsets(offs(offs.length - 2))) {
+      del(offs.last); del(numbered("commits").last)
+      offs = numbered("offsets")
+    }
+    val reexecFrom = offs.last.getName.toLong
+    val commit = new java.io.File(ckpt, s"commits/$reexecFrom")
+    require(commit.exists, s"no commit for data batch $reexecFrom")
+    del(commit)
+    reexecFrom
   }
 
   def main(args: Array[String]): Unit = {
@@ -94,9 +109,6 @@ object StreamBench {
       }
     val nRows = spark.read.parquet(landing).count()
 
-    val tap = new ProgressTap
-    spark.streams.addListener(tap)
-
     def stream() = graft.streaming.Events.readEventStream(
       spark, landing, Map("maxFilesPerTrigger" -> "1"))
     def evStream() = stream()
@@ -110,21 +122,19 @@ object StreamBench {
       val q = start(ckpt, target)
       q.awaitTermination()
       val wall = (System.nanoTime() - t0) / 1e9
-      // listener bus is async: poll until the batch count settles
-      var prev = -1; var spins = 0
-      while (spins < 40 && tap.batches.size != prev) {
-        prev = tap.batches.size; Thread.sleep(50); spins += 1
-      }
-      import scala.jdk.CollectionConverters._
-      // only THIS query's events (id-keyed tap): stragglers from a prior
-      // pipeline can't contaminate the window
-      val ps = tap.batches.asScala.toSeq.filter(_.id == q.id)
-      val rows = ps.map(_.rows).sum
+      // the query's own progress buffer, complete once it has terminated
+      // (Chunks + 2 entries at most, under the default limit of 100);
+      // batches that neither read rows nor hold state are left out
+      val ps = q.recentProgress.toSeq.map { p =>
+        (p.numInputRows, p.stateOperators.map(_.numRowsTotal).sum,
+          p.stateOperators.map(_.memoryUsedBytes).sum)
+      }.filter { case (rows, stateRows, _) => rows > 0 || stateRows > 0 }
+      val rows = ps.map(_._1).sum
       val json =
         s"""{"rows":$rows,"wall_s":${math.round(wall * 1000) / 1000.0},""" +
         s""""rows_per_s":${math.round(rows / wall)},"batches":${ps.size},""" +
-        s""""state_rows_max":${(0L +: ps.map(_.stateRows)).max},""" +
-        s""""state_bytes_max":${(0L +: ps.map(_.stateBytes)).max}}"""
+        s""""state_rows_max":${(0L +: ps.map(_._2)).max},""" +
+        s""""state_bytes_max":${(0L +: ps.map(_._3)).max}}"""
       System.err.println(s"[streambench] $name: $json")
       name -> json
     }
@@ -224,37 +234,6 @@ object StreamBench {
     // ends at the last data batch: the frontier a crash leaves.
     val recSession = spark.newSession()
     recSession.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    // Open the crash window at the newest DATA batch (the engine
-    // re-executes exactly the one batch whose offsets entry has no
-    // commit): first remove AvailableNow's trailing no-data
-    // watermark-advance batch entirely (a mid-run crash never plans
-    // it — its offsets body repeats the previous batch's verbatim),
-    // then delete the data batch's commit but keep its offsets. The
-    // Hadoop checksum sidecars go too, or the re-executed batch's
-    // commit rename fails as if a concurrent query owned the log.
-    def openCrashWindow(ckpt: java.io.File): Long = {
-      def numbered(sub: String) = new java.io.File(ckpt, sub).listFiles()
-        .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong)
-      def del(f: java.io.File): Unit = {
-        require(f.delete(), s"could not delete ${f.getPath}")
-        new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
-        ()
-      }
-      def sourceOffsets(f: java.io.File): String = {
-        val s = scala.io.Source.fromFile(f)
-        try s.getLines().drop(2).mkString("\n") finally s.close()
-      }
-      var offs = numbered("offsets")
-      if (offs.length >= 2 &&
-          sourceOffsets(offs.last) == sourceOffsets(offs(offs.length - 2))) {
-        del(offs.last); del(numbered("commits").last)
-        offs = numbered("offsets")
-      }
-      val reexecFrom = offs.last.getName.toLong
-      del(new java.io.File(ckpt, s"commits/$reexecFrom"))
-      reexecFrom
-    }
-
     val recovery = {
       val src = new java.io.File(work, "rec_landing"); src.mkdirs()
       val out = new java.io.File(work, "rec_out").getPath
@@ -272,7 +251,7 @@ object StreamBench {
       stageInto(src, chunkFiles.take(Chunks / 2))
       pass()
       val restored = spark.read.format("statestore").load(ckpt.getPath).count()
-      val reexecFrom = openCrashWindow(ckpt)
+      val reexecFrom = openCrashWindow(ckpt.getPath)
       stageInto(src, chunkFiles.drop(Chunks / 2))
       pass()
       val wall = (System.nanoTime() - t0) / 1e9
@@ -333,7 +312,7 @@ object StreamBench {
       // one state row per user with an interval the watermark hasn't
       // sealed — the open-session payloads the restart must restore
       val restored = spark.read.format("statestore").load(ckpt.getPath).count()
-      val reexecFrom = openCrashWindow(ckpt)
+      val reexecFrom = openCrashWindow(ckpt.getPath)
       stageInto(src, chunkFiles.drop(Chunks / 2))
       pass(src.getPath, out, ckpt.getPath)
       // uninterrupted twin: same chunks, same pacing, fresh checkpoint
@@ -350,7 +329,6 @@ object StreamBench {
     }
     System.err.println(s"[streambench] recovery_sessionize: $recoverySessionize")
 
-    spark.streams.removeListener(tap)
     val body = (results
       :+ ("recovery" -> recovery)
       :+ ("recovery_sessionize" -> recoverySessionize))

@@ -14,7 +14,7 @@ class RunConfigSpec extends AnyFunSuite {
     assert(RunConfig.from(Map.empty) == RunConfig(
       sfDir = "/root/testdata/sf0.1", cpus = 4, passes = 3, only = None,
       skip = Nil, fork = false, conf = Nil, singleFile = true,
-      gcSettle = false, shuffleMetrics = false, storageMetrics = false))
+      gcSettle = false))
   }
 
   test("set values parse") {
@@ -27,14 +27,11 @@ class RunConfigSpec extends AnyFunSuite {
       "SPARK_GRAFT_FORK" -> "true",
       "SPARK_GRAFT_CONF" -> "a.b=1; c=x=y ;",
       "SPARK_GRAFT_SINGLE_FILE" -> "false",
-      "SPARK_GRAFT_GC_SETTLE" -> "true",
-      "SPARK_GRAFT_SHUFFLE_METRICS" -> "true",
-      "SPARK_GRAFT_STORAGE_METRICS" -> "true"))
+      "SPARK_GRAFT_GC_SETTLE" -> "true"))
     assert(c == RunConfig("tools/sf1", 8, 1,
       Some(Seq("q01_pricing_summary", "q02_filter_project")),
       Seq("q02_filter_project"), fork = true, Seq("a.b" -> "1", "c" -> "x=y"),
-      singleFile = false, gcSettle = true, shuffleMetrics = true,
-      storageMetrics = true))
+      singleFile = false, gcSettle = true))
     assert(c.selected.keySet == Set("q01_pricing_summary"))
     assert(RunConfig.from(Map.empty).selected.size == SparkEntry.queries.size)
   }
@@ -51,13 +48,21 @@ class RunConfigSpec extends AnyFunSuite {
     }
   }
 
-  for (name <- Seq("FORK", "SINGLE_FILE", "GC_SETTLE", "SHUFFLE_METRICS",
-      "STORAGE_METRICS")) {
+  for (name <- Seq("FORK", "SINGLE_FILE", "GC_SETTLE")) {
     test(s"$name other than true/false is rejected") {
       val v = s"SPARK_GRAFT_$name"
       assert(rejects(v -> "yes").contains(v))
       assert(rejects(v -> "TRUE").contains(v))
     }
+  }
+
+  test("retired or misspelled SPARK_GRAFT_ names are rejected, listed next to the known ones") {
+    val msg = rejects("SPARK_GRAFT_SHUFFLE_PARTITIONS" -> "64",
+      "SPARK_GRAFT_SHUFFLE_METRICS" -> "true", "SPARK_GRAFT_CPUS" -> "8",
+      "SPARK_DRIVER_MEM" -> "2g")
+    assert(msg.contains("SPARK_GRAFT_SHUFFLE_METRICS, SPARK_GRAFT_SHUFFLE_PARTITIONS;"))
+    assert(RunConfig.Names.forall(msg.contains))
+    assert(RunConfig.Names.size == 9)
   }
 
   test("CONF entry without '=' or with an empty key is rejected") {

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps the session posture and the run knobs in one place each: a
   * hand-built session or an ad-hoc environment read anywhere else in
-  * `src/main` fails here by file name. */
+  * `src/main` fails here by file name, and README's variable table must
+  * list exactly the names `RunConfig` accepts. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val sources: Seq[(String, String)] = {
@@ -35,5 +36,19 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(sources.exists(_._1 == "RunConfig.scala"))
     val bad = offenders(Seq("sys.env", "System.getenv"), "RunConfig.scala")
     assert(bad.isEmpty, s"parse the variable in RunConfig: ${bad.mkString(", ")}")
+  }
+
+  test("README's Running variable table lists exactly RunConfig.Names") {
+    val readme = Files.readString(Paths.get("README.md"))
+    val at = readme.indexOf("\n## Running\n")
+    assert(at >= 0, "README has no \"## Running\" section")
+    val documented = readme.substring(at + 1).linesIterator.drop(1)
+      .takeWhile(!_.startsWith("## "))
+      .filter(_.startsWith("| `SPARK_GRAFT_"))
+      .flatMap(l => "SPARK_GRAFT_[A-Z_]+".r.findAllIn(l.split('|')(1)))
+      .toSet
+    assert(documented == RunConfig.Names.toSet,
+      s"README only: ${(documented -- RunConfig.Names).mkString(", ")}; " +
+        s"RunConfig only: ${(RunConfig.Names.toSet -- documented).mkString(", ")}")
   }
 }

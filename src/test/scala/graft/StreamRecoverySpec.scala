@@ -113,47 +113,14 @@ class StreamRecoverySpec extends SparkSpec {
     try assert(q.awaitTermination(180000), "dedup pass timed out") finally q.stop()
   }
 
-  /** Simulate the crash window at the newest DATA batch: offsets/N
-    * survives, commits/N does not — the on-disk state a process death
-    * between the sink commit and the checkpoint commit leaves, which the
-    * engine answers by re-executing batch N from its offset log on
-    * restart (exactly a 1-batch gap; anything deeper is an impossible
-    * state the engine ignores). A clean AvailableNow pass over a
-    * watermarked pipeline additionally ends with a no-data
-    * watermark-advance batch that a mid-run crash would never have
-    * planned — if present, that batch's offsets AND commit are removed
-    * entirely first, so the re-delivered batch carries real rows.
-    * Returns the re-executed batch id. */
-  private def simulateCrash(ckpt: String): Long = {
-    def numbered(sub: String) = new java.io.File(ckpt, sub).listFiles()
-      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong)
-    // delete through Hadoop's checksum sidecar too: a stale .N.crc makes
-    // the re-executed batch's commit rename fail as if a concurrent
-    // query owned the log
-    def del(f: java.io.File): Unit = {
-      assert(f.delete(), s"could not delete ${f.getPath}")
-      new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
-      ()
-    }
-    // the source-offsets body (everything past the version line and the
-    // batch-metadata line) identifies a no-data batch: it repeats the
-    // previous batch's offsets verbatim
-    def sourceOffsets(f: java.io.File): String = {
-      val src = scala.io.Source.fromFile(f)
-      try src.getLines().drop(2).mkString("\n") finally src.close()
-    }
-    var offsets = numbered("offsets")
-    assert(offsets.length >= 2, s"need >=2 batches under $ckpt")
-    if (sourceOffsets(offsets.last) == sourceOffsets(offsets(offsets.length - 2))) {
-      del(offsets.last)
-      del(numbered("commits").last)
-      offsets = numbered("offsets")
-    }
-    val target = offsets.last.getName.toLong
-    val commit = new java.io.File(ckpt, s"commits/$target")
-    assert(commit.exists, s"no commit for data batch $target")
-    del(commit)
-    target
+  /** `StreamBench.openCrashWindow`, checked to have left the re-executed
+    * batch without its commit marker: the restart assertions below find
+    * that marker again only if the engine re-ran the batch. */
+  private def openCrashWindow(ckpt: String): Long = {
+    val reexec = StreamBench.openCrashWindow(ckpt)
+    assert(!new java.io.File(ckpt, s"commits/$reexec").exists,
+      s"batch $reexec still has its commit marker: no crash window to recover from")
+    reexec
   }
 
   private def outRows(dir: String): Seq[String] =
@@ -188,7 +155,7 @@ class StreamRecoverySpec extends SparkSpec {
     assert(restored < KillAfter.toLong * ChunkRows,
       s"dedup state should be watermark-bounded, held $restored of ${KillAfter * ChunkRows} keys")
 
-    val reexec = simulateCrash(p("ckpt_kill"))
+    val reexec = openCrashWindow(p("ckpt_kill"))
     assert(reexec == KillAfter - 1L,
       s"the re-delivered batch should be the last DATA batch, got $reexec")
     stage(srcB, KillAfter, NChunks)
@@ -289,7 +256,7 @@ class StreamRecoverySpec extends SparkSpec {
     assert(restored == 10L,
       s"expected one open-session state row per user (10), got $restored")
 
-    val reexec = simulateCrash(p("ckpt_kill"))
+    val reexec = openCrashWindow(p("ckpt_kill"))
     assert(reexec == KillAfter - 1L,
       s"the re-delivered batch should be the last DATA batch, got $reexec")
     stage(srcB, KillAfter, NChunks, sessChunkDf)
@@ -345,7 +312,7 @@ class StreamRecoverySpec extends SparkSpec {
     stage(srcB, 0, KillAfter)
     runPass(srcB.getPath, p("tgt_kill"), p("ckpt_kill"))
     val midRows = targetRows(p("tgt_kill"))
-    val reexec = simulateCrash(p("ckpt_kill"))
+    val reexec = openCrashWindow(p("ckpt_kill"))
     assert(reexec == KillAfter - 1L,
       s"the re-delivered batch should be the last DATA batch, got $reexec")
     stage(srcB, KillAfter, NChunks)

@@ -197,11 +197,7 @@ object Bench {
           System.err.println(s"[bench-fork] ${i + 1}/${names.size} $name FAILED: $why")
       }
     }
-    def jstr(s: String) = "\"" + s.replaceAll("[\"\\\\\\p{Cntrl}]", " ") + "\""
-    val qs = out.map { case (k, v) => s"\"" + k + "\":" + sec3(v) }.mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${total3(out.values)},"unit":"sec","mode":"forked","queries":$qs,"errors":$errJson,"sf":"$sfDir"}""")
+    println(summaryLine(out.toSeq, errors, Map.empty, sfDir, forked = true))
     if (errors.nonEmpty) sys.exit(1)
   }
 
@@ -220,6 +216,26 @@ object Bench {
     * (failed queries excluded), so the JSON agrees with itself. */
   private[graft] def total3(vs: Iterable[Double]): String =
     sec3(vs.filter(_ >= 0).map(v => BigDecimal(sec3(v))).sum.toDouble)
+
+  /** The one-line stdout summary of a sweep, in-JVM or forked: the
+    * total, per-query seconds (failed queries -1), failure messages, the
+    * outlier rechecks when there are any, and the scale factor. */
+  private[graft] def summaryLine(results: Seq[(String, Double)],
+      errors: collection.Map[String, String], rechecks: collection.Map[String, (Double, Double)],
+      sfDir: String, forked: Boolean): String = {
+    // \p{Cntrl} (not just \n\r\t): ANY control character in an exception
+    // message would otherwise break the one-line JSON contract
+    def jstr(s: String) = "\"" + s.replaceAll("[\"\\\\\\p{Cntrl}]", " ") + "\""
+    def obj(kvs: Iterable[String]) = kvs.mkString("{", ",", "}")
+    val mode = if (forked) ""","mode":"forked"""" else ""
+    val qs = obj(results.map { case (k, v) => "\"" + k + "\":" + sec3(v) })
+    val errJson = obj(errors.map { case (k, v) => jstr(k) + ":" + jstr(v) })
+    val recheckJson = if (rechecks.isEmpty) "" else ",\"rechecks\":" + obj(rechecks.map {
+      case (k, (a, b)) => "\"" + k + "\":{\"in_sweep\":" + sec3(a) + ",\"recheck\":" + sec3(b) + "}"
+    })
+    s"""{"metric":"total","value":${total3(results.map(_._2))},"unit":"sec"$mode,""" +
+      s""""queries":$qs,"errors":$errJson$recheckJson,"sf":"$sfDir"}"""
+  }
 
   /** Parse a fork-mode reference artifact's `queries` map, keeping only
     * entries at the sweep's own scale factor. Whitespace-tolerant on
@@ -416,17 +432,6 @@ object Bench {
           case _ => name -> t
         }
       }
-    val qs = finalResults.map { case (k, v) => s"\"" + k + "\":" + sec3(v) }
-      .mkString("{", ",", "}")
-    // \p{Cntrl} (not just \n\r\t): ANY control character in an exception
-    // message would otherwise break the one-line JSON contract
-    def jstr(s: String) = "\"" + s.replaceAll("[\"\\\\\\p{Cntrl}]", " ") + "\""
-    val errJson = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }
-      .mkString("{", ",", "}")
-    val recheckJson = if (rechecks.isEmpty) "" else
-      "," + rechecks.map { case (k, (a, b)) =>
-        "\"" + k + "\":{\"in_sweep\":" + sec3(a) + ",\"recheck\":" + sec3(b) + "}"
-      }.mkString("\"rechecks\":{", ",", "}")
     // Per-pass averages over the successful timed passes; a failed query
     // records no bytes (its partial pass would skew the average). The
     // maps stay off the stdout summary: its consumers read the line's
@@ -436,7 +441,7 @@ object Bench {
     System.err.println(s"""[bench-bytes] {"shuffle_bytes":${m(k => bytes.shuffle(k) / passesRun(k))},""" +
       s""""spill_bytes":${m(k => bytes.spill(k) / passesRun(k))},"storage_bytes":${m(storageBytes)},""" +
       s""""complete":$complete,"sf":"$sfDir"}""")
-    println(s"""{"metric":"total","value":${total3(finalResults.map(_._2))},"unit":"sec","queries":$qs,"errors":$errJson$recheckJson,"sf":"$sfDir"}""")
+    println(summaryLine(finalResults, errors, rechecks, sfDir, forked = false))
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

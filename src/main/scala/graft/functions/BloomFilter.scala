@@ -1,13 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, If, IsNull, Literal, XxHash64, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, If, IsNull, Literal, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
-/** Mergeable Bloom filter as a `TypedImperativeAggregate` — the broadcast
+/** Mergeable Bloom filter, a [[SketchAgg]] family — the broadcast
   * membership primitive for 100 TB incremental dedup: build a compact
   * set-membership sketch over the PRIOR corpus's content fingerprints in
   * one distributed pass (partials OR-merge losslessly and
@@ -89,9 +87,9 @@ object BloomFilter {
 
   private[graft] def buildAgg(exprs: Seq[Expression]): Expression = {
     DistinctSketch.arity(exprs, "bloom_agg", 1, 3)
-    BloomAgg(exprs.head,
+    SketchAgg(exprs.head, Bloom(
       DistinctSketch.litIntArg(exprs, 1, 1 << 20, "bloom_agg"),
-      DistinctSketch.litIntArg(exprs, 2, 5, "bloom_agg")).toAggregateExpression()
+      DistinctSketch.litIntArg(exprs, 2, 5, "bloom_agg"))).toAggregateExpression()
   }
 
   private[graft] def buildContains(exprs: Seq[Expression]): Expression = {
@@ -104,7 +102,7 @@ object BloomFilter {
     // would probe a REAL bit), so null is short-circuited explicitly:
     // probing NULL yields NULL, matching the aggregate's null-skip.
     val v = exprs(1)
-    BloomMightContain(exprs.head,
+    BloomMightContain(SketchFamily.storedArg(exprs, 0, "bloom_might_contain"),
       If(IsNull(v), Literal.create(null, LongType), XxHash64(Seq(v), 42L)))
   }
 
@@ -118,53 +116,23 @@ object BloomFilter {
     org.apache.spark.sql.functions.call_function("bloom_might_contain", sketch, value)
 }
 
-case class BloomAgg(
-    child: Expression,
-    numBits: Int = 1 << 20,
-    numHashes: Int = 5,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[BloomFilter.Buffer] {
-
+/** The Bloom family: `numBits` bits probed by `numHashes` indexes per
+  * xxhash64; merge is bitwise OR. */
+case class Bloom(numBits: Int = 1 << 20, numHashes: Int = 5)
+  extends SketchFamily[BloomFilter.Buffer] {
   require(numBits >= 64, "numBits must be >= 64")
   require(numBits <= (1 << 30),
     s"numBits $numBits > 2^30 (128 MB) — (numBits + 63) would overflow Int past that")
   require(numHashes >= 1 && numHashes <= 16, "numHashes must be in [1,16]")
 
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "bloom_agg"
-
-  override def createAggregationBuffer(): BloomFilter.Buffer =
-    new BloomFilter.Buffer(numBits, numHashes)
-
-  override def update(
-      buf: BloomFilter.Buffer, input: InternalRow): BloomFilter.Buffer = {
-    val v = child.eval(input)
-    if (v != null) buf.add(XxHash64Function.hash(v, child.dataType, 42L))
-    buf
-  }
-
-  override def merge(
-      a: BloomFilter.Buffer, b: BloomFilter.Buffer): BloomFilter.Buffer = {
-    a.mergeIn(b); a
-  }
-
-  override def eval(buf: BloomFilter.Buffer): Any = BloomFilter.serialize(buf)
-
-  override def serialize(buf: BloomFilter.Buffer): Array[Byte] =
-    BloomFilter.serialize(buf)
-  override def deserialize(bytes: Array[Byte]): BloomFilter.Buffer =
-    BloomFilter.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): BloomAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BloomAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): BloomAgg =
-    copy(child = newChildren.head)
+  def kind: String = "bloom"
+  def name: String = "bloom_agg"
+  def empty: BloomFilter.Buffer = new BloomFilter.Buffer(numBits, numHashes)
+  def add(buf: BloomFilter.Buffer, value: Any, dataType: DataType): Unit =
+    buf.add(SketchFamily.hash(value, dataType))
+  def mergeIn(buf: BloomFilter.Buffer, other: BloomFilter.Buffer): Unit = buf.mergeIn(other)
+  def toBytes(buf: BloomFilter.Buffer): Array[Byte] = BloomFilter.serialize(buf)
+  def fromBytes(bytes: Array[Byte]): BloomFilter.Buffer = BloomFilter.deserialize(bytes)
 }
 
 /** `bloom_might_contain(sketch, hash)` — probes the serialized filter

@@ -1,14 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, If, IsNull, Literal, XxHash64, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, If, IsNull, Literal, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
-/** Count-Min sketch (Cormode & Muthukrishnan 2005) as a
-  * `TypedImperativeAggregate` — point-frequency estimates over unbounded
+/** Count-Min sketch (Cormode & Muthukrishnan 2005), a [[SketchAgg]]
+  * family — point-frequency estimates over unbounded
   * key cardinality in `depth × width` longs, completing graft's sketch
   * family: Misra-Gries answers "which items are frequent" (top-k set),
   * CMS answers "how often does THIS item occur" for any queried item
@@ -87,9 +85,9 @@ object CountMin {
 
   private[graft] def buildAgg(exprs: Seq[Expression]): Expression = {
     DistinctSketch.arity(exprs, "cms_agg", 1, 3)
-    CountMinAgg(exprs.head,
+    SketchAgg(exprs.head, Cms(
       DistinctSketch.litIntArg(exprs, 1, 2048, "cms_agg"),
-      DistinctSketch.litIntArg(exprs, 2, 4, "cms_agg")).toAggregateExpression()
+      DistinctSketch.litIntArg(exprs, 2, 4, "cms_agg"))).toAggregateExpression()
   }
 
   private[graft] def buildEstimate(exprs: Seq[Expression]): Expression = {
@@ -98,7 +96,7 @@ object CountMin {
     // explicit null short-circuit) as BloomFilter.buildContains: a NULL
     // key must estimate NULL, not the frequency of hash(seed)
     val v = exprs(1)
-    CountMinEstimate(exprs.head,
+    CountMinEstimate(SketchFamily.storedArg(exprs, 0, "cms_estimate"),
       If(IsNull(v), Literal.create(null, LongType), XxHash64(Seq(v), 42L)))
   }
 
@@ -112,14 +110,9 @@ object CountMin {
     org.apache.spark.sql.functions.call_function("cms_estimate", sketch, value)
 }
 
-case class CountMinAgg(
-    child: Expression,
-    width: Int = 2048,
-    depth: Int = 4,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CountMin.Buffer] {
-
+/** The Count-Min family: `depth` rows of `width` counters per
+  * xxhash64; merge is elementwise addition. */
+case class Cms(width: Int = 2048, depth: Int = 4) extends SketchFamily[CountMin.Buffer] {
   require(width >= 16, "width must be >= 16")
   require(depth >= 1 && depth <= 16, "depth must be in [1,16]")
   // cap the buffer BEFORE Int arithmetic can wrap: width*depth longs;
@@ -127,40 +120,14 @@ case class CountMinAgg(
   require(width.toLong * depth <= (1L << 26),
     s"cms sketch too large: width*depth = ${width.toLong * depth} > 2^26")
 
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "cms_agg"
-
-  override def createAggregationBuffer(): CountMin.Buffer =
-    new CountMin.Buffer(width, depth)
-
-  override def update(
-      buf: CountMin.Buffer, input: InternalRow): CountMin.Buffer = {
-    val v = child.eval(input)
-    if (v != null) buf.add(XxHash64Function.hash(v, child.dataType, 42L))
-    buf
-  }
-
-  override def merge(
-      a: CountMin.Buffer, b: CountMin.Buffer): CountMin.Buffer = {
-    a.mergeIn(b); a
-  }
-
-  override def eval(buf: CountMin.Buffer): Any = CountMin.serialize(buf)
-
-  override def serialize(buf: CountMin.Buffer): Array[Byte] =
-    CountMin.serialize(buf)
-  override def deserialize(bytes: Array[Byte]): CountMin.Buffer =
-    CountMin.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CountMinAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CountMinAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): CountMinAgg =
-    copy(child = newChildren.head)
+  def kind: String = "cms"
+  def name: String = "cms_agg"
+  def empty: CountMin.Buffer = new CountMin.Buffer(width, depth)
+  def add(buf: CountMin.Buffer, value: Any, dataType: DataType): Unit =
+    buf.add(SketchFamily.hash(value, dataType))
+  def mergeIn(buf: CountMin.Buffer, other: CountMin.Buffer): Unit = buf.mergeIn(other)
+  def toBytes(buf: CountMin.Buffer): Array[Byte] = CountMin.serialize(buf)
+  def fromBytes(bytes: Array[Byte]): CountMin.Buffer = CountMin.deserialize(bytes)
 }
 
 /** `cms_estimate(sketch, hash)` — min-across-rows point estimate; the

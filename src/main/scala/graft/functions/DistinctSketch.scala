@@ -2,12 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 
-/** Mergeable distinct-count sketch (HLL with an exact sparse phase) as a
-  * `TypedImperativeAggregate` — the 100 TB path for distinct counting:
+/** Mergeable distinct-count sketch (HLL with an exact sparse phase), a
+  * [[SketchAgg]] family — the 100 TB path for distinct counting:
   * one pass, bounded memory (`2^precision` byte registers per group),
   * mergeable partial states, and — unlike `countDistinct` — NO Expand
   * multiplication when several distinct aggregates share a query (q31's
@@ -180,39 +179,42 @@ object HllBuffer {
   }
 }
 
-case class HllDistinctAgg(
-    child: Expression,
-    precision: Int = 14,
-    sparseLimit: Int = 4096,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0,
-    emitBinary: Boolean = false)
-  extends TypedImperativeAggregate[HllBuffer] {
-
+/** The HLL family: `2^precision` registers behind an exact sparse set of
+  * up to `sparseLimit` xxhash64 values. `stored` picks the result:
+  * `hll_sketch`'s self-describing bytes, or `hll_distinct`'s estimate.
+  *
+  * One payload codec serves both byte forms: tag(1: 0 sparse, 1 dense) |
+  * sparse: size(4) + hashes(8 each) / dense: the registers. The stored
+  * form prefixes precision(1) | sparseLimit(4), so a sketch persisted by
+  * one job re-aggregates in another; the partial-aggregate form omits
+  * them (this value carries them), and streaming aggregation keeps that
+  * form in its state store. */
+case class Hll(precision: Int = 14, sparseLimit: Int = 4096, stored: Boolean = true)
+  extends SketchFamily[HllBuffer] {
   require(precision >= 4 && precision <= 18, "precision must be in [4,18]")
 
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = if (emitBinary) BinaryType else LongType
-  override def prettyName: String = if (emitBinary) "hll_sketch" else "hll_distinct"
+  def kind: String = "hll"
+  def name: String = if (stored) "hll_sketch" else "hll_distinct"
+  def empty: HllBuffer = new HllBuffer(precision, sparseLimit)
+  def add(buf: HllBuffer, value: Any, dataType: DataType): Unit =
+    buf.add(SketchFamily.hash(value, dataType))
+  def mergeIn(buf: HllBuffer, other: HllBuffer): Unit = buf.mergeIn(other)
+  def toBytes(buf: HllBuffer): Array[Byte] = Hll.write(buf, withParams = true)
+  def fromBytes(bytes: Array[Byte]): HllBuffer = Hll.read(bytes)
+  override def toWire(buf: HllBuffer): Array[Byte] = Hll.write(buf, withParams = false)
+  override def fromWire(bytes: Array[Byte]): HllBuffer = Hll.readPayload(Hll.input(bytes), empty)
+  override def resultType: DataType = if (stored) BinaryType else LongType
+  override def result(buf: HllBuffer): Any = if (stored) toBytes(buf) else buf.estimate()
+}
 
-  override def createAggregationBuffer(): HllBuffer =
-    new HllBuffer(precision, sparseLimit)
+object Hll {
+  private def input(bytes: Array[Byte]) =
+    new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
 
-  override def update(buf: HllBuffer, input: InternalRow): HllBuffer = {
-    val v = child.eval(input)
-    if (v != null) buf.add(XxHash64Function.hash(v, child.dataType, 42L))
-    buf
-  }
-
-  override def merge(a: HllBuffer, b: HllBuffer): HllBuffer = { a.mergeIn(b); a }
-
-  override def eval(buf: HllBuffer): Any =
-    if (emitBinary) DistinctSketch.serializeStored(buf) else buf.estimate()
-
-  override def serialize(buf: HllBuffer): Array[Byte] = {
+  private def write(buf: HllBuffer, withParams: Boolean): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     val out = new java.io.DataOutputStream(bos)
+    if (withParams) { out.writeByte(buf.precision); out.writeInt(buf.sparseLimit) }
     if (buf.isSparse) {
       out.writeByte(0)
       out.writeInt(buf.sparse.size)
@@ -225,9 +227,7 @@ case class HllDistinctAgg(
     bos.toByteArray
   }
 
-  override def deserialize(bytes: Array[Byte]): HllBuffer = {
-    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    val buf = new HllBuffer(precision, sparseLimit)
+  private def readPayload(in: java.io.DataInputStream, buf: HllBuffer): HllBuffer = {
     if (in.readByte() == 0) {
       val n = in.readInt()
       buf.sparse = new LongSet(n) // size known up front: no grow/rehash churn
@@ -240,13 +240,11 @@ case class HllDistinctAgg(
     buf
   }
 
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllDistinctAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllDistinctAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): HllDistinctAgg =
-    copy(child = newChildren.head)
+  /** A stored sketch: its parameters come from its own bytes. */
+  def read(bytes: Array[Byte]): HllBuffer = {
+    val in = input(bytes)
+    readPayload(in, new HllBuffer(in.readByte().toInt, in.readInt()))
+  }
 }
 
 object DistinctSketch {
@@ -284,57 +282,20 @@ object DistinctSketch {
       throw new IllegalArgumentException(
         s"$fn expects $min to $max arguments, got ${exprs.size}")
 
-  /** Self-describing STORABLE form for `hll_sketch`/`hll_merge`/
-    * `hll_estimate`: precision(1) | sparseLimit(4) | tag(1: 0 sparse,
-    * 1 dense) | payload. The agg's own in-flight wire format omits the
-    * parameters (the operator instance carries them); stored bytes must
-    * stand alone so sketches persisted by different jobs re-aggregate. */
-  def serializeStored(buf: HllBuffer): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val out = new java.io.DataOutputStream(bos)
-    out.writeByte(buf.precision)
-    out.writeInt(buf.sparseLimit)
-    if (buf.isSparse) {
-      out.writeByte(0)
-      out.writeInt(buf.sparse.size)
-      buf.sparse.foreach(out.writeLong)
-    } else {
-      out.writeByte(1)
-      out.write(buf.registers)
-    }
-    out.flush()
-    bos.toByteArray
-  }
+  def estimateStored(bytes: Array[Byte]): Long = Hll.read(bytes).estimate()
 
-  def deserializeStored(bytes: Array[Byte]): HllBuffer = {
-    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    val buf = new HllBuffer(in.readByte().toInt, in.readInt())
-    if (in.readByte() == 0) {
-      val n = in.readInt()
-      buf.sparse = new LongSet(n)
-      (0 until n).foreach(_ => buf.sparse.add(in.readLong()))
-    } else {
-      buf.registers = new Array[Byte](buf.m)
-      in.readFully(buf.registers)
-      buf.sparse = null
-    }
-    buf
-  }
-
-  def estimateStored(bytes: Array[Byte]): Long = deserializeStored(bytes).estimate()
-
-  private[graft] def buildSketch(exprs: Seq[Expression]): Expression = {
-    arity(exprs, "hll_sketch", 1, 3)
-    HllDistinctAgg(
-      exprs.head,
-      litIntArg(exprs, 1, 14, "hll_sketch"),
-      litIntArg(exprs, 2, 4096, "hll_sketch"),
-      emitBinary = true).toAggregateExpression()
+  /** `hll_sketch` (the stored bytes) when `stored`, else `hll_distinct`
+    * (the estimate). */
+  private[graft] def build(stored: Boolean)(exprs: Seq[Expression]): Expression = {
+    val fn = if (stored) "hll_sketch" else "hll_distinct"
+    arity(exprs, fn, 1, 3)
+    SketchAgg(exprs.head, Hll(
+      litIntArg(exprs, 1, 14, fn), litIntArg(exprs, 2, 4096, fn), stored)).toAggregateExpression()
   }
 
   private[graft] def buildEstimate(exprs: Seq[Expression]): Expression = {
     arity(exprs, "hll_estimate", 1, 1)
-    HllEstimate(exprs.head)
+    HllEstimate(SketchFamily.storedArg(exprs, 0, "hll_estimate"))
   }
 
   /** Column API — requires `GraftExtensions.install(spark)` first. */
@@ -346,14 +307,6 @@ object DistinctSketch {
 
   def hll_estimate(sketch: Column): Column =
     org.apache.spark.sql.functions.call_function("hll_estimate", sketch)
-
-  private[graft] def build(exprs: Seq[Expression]): Expression = {
-    arity(exprs, "hll_distinct", 1, 3)
-    HllDistinctAgg(
-      exprs.head,
-      litIntArg(exprs, 1, 14, "hll_distinct"),
-      litIntArg(exprs, 2, 4096, "hll_distinct")).toAggregateExpression()
-  }
 
   /** Column API — requires `GraftExtensions.install(spark)` first. */
   def hll_distinct(c: Column, precision: Int = 14, sparseLimit: Int = 4096): Column =

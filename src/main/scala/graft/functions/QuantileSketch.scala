@@ -3,14 +3,12 @@ package graft.functions
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
-/** KLL-style quantile sketch (Karnin, Lang & Liberty 2016) as a
-  * `TypedImperativeAggregate` — mergeable rank/quantile estimates in one
+/** KLL-style quantile sketch (Karnin, Lang & Liberty 2016), a
+  * [[SketchAgg]] family — mergeable rank/quantile estimates in one
   * pass and bounded memory, completing graft's sketch family: percentiles
   * over a 100 TB column without the full sort that exact
   * `percentile`/window-rank forms pay, and — unlike the built-in
@@ -160,18 +158,18 @@ object QuantileSketch {
 
   private[graft] def buildAgg(exprs: Seq[Expression]): Expression = {
     DistinctSketch.arity(exprs, "kll_agg", 1, 2)
-    KllAgg(Cast(exprs.head, DoubleType),
-      DistinctSketch.litIntArg(exprs, 1, 4096, "kll_agg")).toAggregateExpression()
+    SketchAgg(Cast(exprs.head, DoubleType),
+      Kll(DistinctSketch.litIntArg(exprs, 1, 4096, "kll_agg"))).toAggregateExpression()
   }
 
   private[graft] def buildQuantile(exprs: Seq[Expression]): Expression = {
     DistinctSketch.arity(exprs, "kll_quantile", 2, 2)
-    KllQuantile(exprs.head, Cast(exprs(1), DoubleType))
+    KllQuantile(SketchFamily.storedArg(exprs, 0, "kll_quantile"), Cast(exprs(1), DoubleType))
   }
 
   private[graft] def buildN(exprs: Seq[Expression]): Expression = {
     DistinctSketch.arity(exprs, "kll_n", 1, 1)
-    KllN(exprs.head)
+    KllN(SketchFamily.storedArg(exprs, 0, "kll_n"))
   }
 
   def kll_agg(c: Column, k: Int = 4096): Column =
@@ -186,50 +184,21 @@ object QuantileSketch {
     org.apache.spark.sql.functions.call_function("kll_n", sketch)
 }
 
-case class KllAgg(
-    child: Expression,
-    k: Int = 4096,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[QuantileSketch.Buffer] {
-
+/** The KLL family: capacity `k` per level; a row enters as its double
+  * value; merge concatenates levels and compacts. */
+case class Kll(k: Int = 4096) extends SketchFamily[QuantileSketch.Buffer] {
   require(k >= QuantileSketch.MinK && k <= QuantileSketch.MaxK,
     s"kll_agg: k must be in [${QuantileSketch.MinK}, ${QuantileSketch.MaxK}], got $k")
 
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "kll_agg"
-
-  override def createAggregationBuffer(): QuantileSketch.Buffer =
-    new QuantileSketch.Buffer(k)
-
-  override def update(
-      buf: QuantileSketch.Buffer, input: InternalRow): QuantileSketch.Buffer = {
-    val v = child.eval(input)
-    if (v != null) buf.add(v.asInstanceOf[Double])
-    buf
-  }
-
-  override def merge(
-      a: QuantileSketch.Buffer, b: QuantileSketch.Buffer): QuantileSketch.Buffer = {
-    a.mergeIn(b); a
-  }
-
-  override def eval(buf: QuantileSketch.Buffer): Any = QuantileSketch.serialize(buf)
-
-  override def serialize(buf: QuantileSketch.Buffer): Array[Byte] =
-    QuantileSketch.serialize(buf)
-  override def deserialize(bytes: Array[Byte]): QuantileSketch.Buffer =
-    QuantileSketch.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KllAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KllAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): KllAgg =
-    copy(child = newChildren.head)
+  def kind: String = "kll"
+  def name: String = "kll_agg"
+  def empty: QuantileSketch.Buffer = new QuantileSketch.Buffer(k)
+  def add(buf: QuantileSketch.Buffer, value: Any, dataType: DataType): Unit =
+    buf.add(value.asInstanceOf[Double])
+  def mergeIn(buf: QuantileSketch.Buffer, other: QuantileSketch.Buffer): Unit =
+    buf.mergeIn(other)
+  def toBytes(buf: QuantileSketch.Buffer): Array[Byte] = QuantileSketch.serialize(buf)
+  def fromBytes(bytes: Array[Byte]): QuantileSketch.Buffer = QuantileSketch.deserialize(bytes)
 }
 
 /** `kll_quantile(sketch, q)` — lower-quantile read off the serialized

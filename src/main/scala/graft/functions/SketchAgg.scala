@@ -1,0 +1,190 @@
+package graft.functions
+
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.types._
+
+/** One mergeable sketch family (Bloom, Count-Min, KLL, Theta, HLL) as a
+  * plain value: its parameters, how a row value enters a buffer, how two
+  * buffers merge, and its byte format. Every family is a case class, so
+  * two identical SQL calls build equal aggregates and the planner gives
+  * them one shared buffer. [[SketchAgg]] builds any family's sketch and
+  * [[SketchMergeAgg]] re-aggregates any family's stored sketches; a new
+  * family plugs in as one more value, not one more aggregate class. */
+trait SketchFamily[B] extends Product with Serializable {
+  /** Prefix of the merge aggregate's SQL name, `<kind>_merge`. */
+  def kind: String
+  /** SQL name of the aggregate that builds this family's sketch. */
+  def name: String
+  def empty: B
+  def add(buf: B, value: Any, dataType: DataType): Unit
+  def mergeIn(buf: B, other: B): Unit
+  /** The stored, self-describing byte format every `*_merge` reads. */
+  def toBytes(buf: B): Array[Byte]
+  def fromBytes(bytes: Array[Byte]): B
+  def resultType: DataType = BinaryType
+  def result(buf: B): Any = toBytes(buf)
+  /** Partial-aggregate bytes between stages (and in streaming state);
+    * the stored format unless the family keeps its parameters off them. */
+  def toWire(buf: B): Array[Byte] = toBytes(buf)
+  def fromWire(bytes: Array[Byte]): B = fromBytes(bytes)
+}
+
+object SketchFamily {
+  /** The row hash the hashed families insert: xxhash64, seed 42 — the
+    * same hash `bloom_might_contain` and `cms_estimate` probe with. */
+  def hash(value: Any, dataType: DataType): Long =
+    XxHash64Function.hash(value, dataType, 42L)
+
+  /** The one plan-time check for an argument that must be a stored
+    * sketch: a non-binary column fails here, naming the function and the
+    * type, instead of with a ClassCastException inside a task. An untyped
+    * NULL stays a null sketch. */
+  private[functions] def storedArg(exprs: Seq[Expression], i: Int, fn: String): Expression = {
+    val e = exprs(i)
+    e.dataType match {
+      case BinaryType => e
+      case NullType => Cast(e, BinaryType)
+      case other =>
+        throw new IllegalArgumentException(
+          s"$fn: argument ${i + 1} must be a stored sketch (BINARY), got ${other.sql}: ${e.sql}")
+    }
+  }
+}
+
+/** `bloom_agg`, `cms_agg`, `kll_agg`, `theta_sketch`, `hll_sketch` and
+  * `hll_distinct`: builds one family's sketch over a column, skipping
+  * nulls. */
+case class SketchAgg[B](
+    child: Expression,
+    family: SketchFamily[B],
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+  extends TypedImperativeAggregate[B] {
+
+  override def children: Seq[Expression] = Seq(child)
+  override def nullable: Boolean = false
+  override def dataType: DataType = family.resultType
+  override def prettyName: String = family.name
+  // EXPLAIN lists the family's parameters, the buffer offsets, then its
+  // flags: the argument text the per-family aggregates printed
+  override def stringArgs: Iterator[Any] = {
+    val (flags, params) = family.productIterator.toSeq.partition(_.isInstanceOf[Boolean])
+    Iterator(child) ++ params ++ Iterator(mutableAggBufferOffset, inputAggBufferOffset) ++ flags
+  }
+
+  override def createAggregationBuffer(): B = family.empty
+
+  override def update(buf: B, input: InternalRow): B = {
+    val v = child.eval(input)
+    if (v != null) family.add(buf, v, child.dataType)
+    buf
+  }
+
+  override def merge(a: B, b: B): B = { family.mergeIn(a, b); a }
+  override def eval(buf: B): Any = family.result(buf)
+  override def serialize(buf: B): Array[Byte] = family.toWire(buf)
+  override def deserialize(bytes: Array[Byte]): B = family.fromWire(bytes)
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): SketchAgg[B] =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): SketchAgg[B] =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): SketchAgg[B] =
+    copy(child = newChildren.head)
+}
+
+/** `<kind>_merge(sketch)`: merges a column of STORED sketches of one
+  * family into one sketch in the same format. Empty or all-null input
+  * yields null. */
+case class SketchMergeAgg[B](
+    childExpr: Expression,
+    family: SketchFamily[B],
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+  extends TypedImperativeAggregate[Option[B]] {
+
+  override def children: Seq[Expression] = Seq(childExpr)
+  override def nullable: Boolean = true // empty group has no sketch to return
+  override def dataType: DataType = BinaryType
+  override def prettyName: String = s"${family.kind}_merge"
+  override def stringArgs: Iterator[Any] =
+    Iterator(childExpr, family.kind, mutableAggBufferOffset, inputAggBufferOffset)
+
+  override def createAggregationBuffer(): Option[B] = None
+
+  override def update(buf: Option[B], input: InternalRow): Option[B] = {
+    val v = childExpr.eval(input)
+    if (v == null) buf
+    else merge(buf, Some(family.fromBytes(v.asInstanceOf[Array[Byte]])))
+  }
+
+  override def merge(a: Option[B], b: Option[B]): Option[B] = (a, b) match {
+    case (Some(x), Some(y)) => family.mergeIn(x, y); a
+    case _ => a.orElse(b)
+  }
+
+  override def eval(buf: Option[B]): Any = buf.map(family.toBytes).orNull
+  override def serialize(buf: Option[B]): Array[Byte] =
+    buf.map(family.toBytes).getOrElse(Array.emptyByteArray)
+  override def deserialize(bytes: Array[Byte]): Option[B] =
+    if (bytes.isEmpty) None else Some(family.fromBytes(bytes))
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): SketchMergeAgg[B] =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): SketchMergeAgg[B] =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): SketchMergeAgg[B] =
+    copy(childExpr = newChildren.head)
+}
+
+/** Sketch-of-sketches re-aggregation: `kll_merge` / `cms_merge` /
+  * `bloom_merge` / `theta_merge` / `hll_merge` are aggregate functions
+  * over a column of STORED serialized sketches, returning the merged
+  * sketch in the same binary format. This closes the loop on the "store
+  * per partition/day, re-aggregate later" contract every binary sketch in
+  * graft advertises: build per-day sketches once at ingest (one pass over
+  * the raw data), persist the bytes next to the partition, then answer
+  * any rollup — week, month, arbitrary cohort union — by merging a
+  * handful of stored sketches instead of rescanning the corpus. At the
+  * 100 TB target that is the difference between a metadata-sized query
+  * and a full-table pass.
+  *
+  * Merge semantics are each family's own: CMS elementwise-add and Bloom
+  * OR are lossless and order-independent (merged bytes == single-pass
+  * bytes, PropertySpec-style pinned); KLL and Theta merges are the same
+  * compaction/downsampling the direct aggregates perform, so a merged
+  * sketch is exactly as good as one built in a single pass over the
+  * union. Shape mismatches (different width/depth/k) raise rather than
+  * silently corrupt. Empty input (or all-null) yields null.
+  */
+object SketchMerge {
+
+  /** Each family's merge reads its parameters from the stored bytes, so
+    * the default-parameter value stands for the whole family. */
+  private val families: Seq[SketchFamily[_]] = Seq(Bloom(), Cms(), Hll(), Kll(), Theta())
+
+  def kll_merge(c: Column): Column =
+    org.apache.spark.sql.functions.call_function("kll_merge", c)
+  def cms_merge(c: Column): Column =
+    org.apache.spark.sql.functions.call_function("cms_merge", c)
+  def bloom_merge(c: Column): Column =
+    org.apache.spark.sql.functions.call_function("bloom_merge", c)
+  def theta_merge(c: Column): Column =
+    org.apache.spark.sql.functions.call_function("theta_merge", c)
+  def hll_merge(c: Column): Column =
+    org.apache.spark.sql.functions.call_function("hll_merge", c)
+
+  private[graft] def builders: Seq[(String, Seq[Expression] => Expression)] =
+    families.map { f =>
+      val fn = s"${f.kind}_merge"
+      fn -> { (exprs: Seq[Expression]) =>
+        DistinctSketch.arity(exprs, fn, 1, 1)
+        SketchMergeAgg(SketchFamily.storedArg(exprs, 0, fn), f).toAggregateExpression()
+      }
+    }
+}

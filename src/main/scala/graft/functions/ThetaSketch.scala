@@ -3,9 +3,7 @@ package graft.functions
 import scala.collection.mutable
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 
@@ -103,20 +101,21 @@ object ThetaSketch {
 
   private[graft] def buildAgg(exprs: Seq[Expression]): Expression = {
     DistinctSketch.arity(exprs, "theta_sketch", 1, 2)
-    ThetaSketchAgg(exprs.head,
-      DistinctSketch.litIntArg(exprs, 1, 4096, "theta_sketch")).toAggregateExpression()
+    SketchAgg(exprs.head,
+      Theta(DistinctSketch.litIntArg(exprs, 1, 4096, "theta_sketch"))).toAggregateExpression()
   }
 
   private[graft] def buildEstimate(exprs: Seq[Expression]): Expression = {
     DistinctSketch.arity(exprs, "theta_estimate", 1, 1)
-    ThetaEstimate(exprs.head)
+    ThetaEstimate(SketchFamily.storedArg(exprs, 0, "theta_estimate"))
   }
 
   private[graft] def buildSetEstimate(
       exprs: Seq[Expression], intersect: Boolean): Expression = {
     val fn = if (intersect) "theta_intersect_estimate" else "theta_union_estimate"
     DistinctSketch.arity(exprs, fn, 2, 2)
-    ThetaSetEstimate(exprs.head, exprs(1), intersect)
+    ThetaSetEstimate(SketchFamily.storedArg(exprs, 0, fn), SketchFamily.storedArg(exprs, 1, fn),
+      intersect)
   }
 
   def theta_sketch(c: Column, k: Int = 4096): Column =
@@ -130,49 +129,19 @@ object ThetaSketch {
     org.apache.spark.sql.functions.call_function("theta_union_estimate", a, b)
 }
 
-case class ThetaSketchAgg(
-    child: Expression,
-    k: Int = 4096,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[ThetaSketch.Buffer] {
-
+/** The Theta family: the `k` smallest xxhash64 values below θ; merge
+  * takes the smaller θ and re-inserts. */
+case class Theta(k: Int = 4096) extends SketchFamily[ThetaSketch.Buffer] {
   require(k >= 16, "k must be >= 16")
 
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "theta_sketch"
-
-  override def createAggregationBuffer(): ThetaSketch.Buffer =
-    new ThetaSketch.Buffer(k)
-
-  override def update(
-      buf: ThetaSketch.Buffer, input: InternalRow): ThetaSketch.Buffer = {
-    val v = child.eval(input)
-    if (v != null) buf.add(XxHash64Function.hash(v, child.dataType, 42L))
-    buf
-  }
-
-  override def merge(
-      a: ThetaSketch.Buffer, b: ThetaSketch.Buffer): ThetaSketch.Buffer = {
-    a.mergeIn(b); a
-  }
-
-  override def eval(buf: ThetaSketch.Buffer): Any = ThetaSketch.serialize(buf)
-
-  override def serialize(buf: ThetaSketch.Buffer): Array[Byte] =
-    ThetaSketch.serialize(buf)
-  override def deserialize(bytes: Array[Byte]): ThetaSketch.Buffer =
-    ThetaSketch.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): ThetaSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): ThetaSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): ThetaSketchAgg =
-    copy(child = newChildren.head)
+  def kind: String = "theta"
+  def name: String = "theta_sketch"
+  def empty: ThetaSketch.Buffer = new ThetaSketch.Buffer(k)
+  def add(buf: ThetaSketch.Buffer, value: Any, dataType: DataType): Unit =
+    buf.add(SketchFamily.hash(value, dataType))
+  def mergeIn(buf: ThetaSketch.Buffer, other: ThetaSketch.Buffer): Unit = buf.mergeIn(other)
+  def toBytes(buf: ThetaSketch.Buffer): Array[Byte] = ThetaSketch.serialize(buf)
+  def fromBytes(bytes: Array[Byte]): ThetaSketch.Buffer = ThetaSketch.deserialize(bytes)
 }
 
 /** `theta_estimate(sketch)` — distinct-count estimate from a serialized

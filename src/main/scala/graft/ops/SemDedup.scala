@@ -23,16 +23,11 @@ import org.apache.spark.sql.functions._
   * cos ≥ tau) runs the identical IEEE op sequence in both engines.
   */
 object SemDedup {
+  import Similarity.fastDot
 
-  private def fastDot(a: Column, b: Column): Column =
-    graft.functions.VectorDot.vec_dot(a, b)
-
-  /** Nearest frozen centroid by squared distance: ranking key is
-    * ||c||² − 2·nv·c (the ||nv||² term is constant per row); ties break to
-    * the lowest cell index via the struct sort — same rule as the twin's
-    * first-index-of-min `list_position`. The ||c||² constants are folded
-    * HERE (Scala left-fold sum) and emitted as one literal each, never
-    * recomputed per row or per engine. */
+  /** Nearest frozen centroid by squared distance
+    * ([[Similarity.rankCentroids]]): ties break to the lowest cell index,
+    * the same rule as the twin's first-index-of-min `list_position`. */
   def cellOf(nv: Column): Column = cellOf(nv, CentroidArtifact.centers)
 
   /** [[cellOf]] against an explicit centroid set — the k dial. In
@@ -42,16 +37,8 @@ object SemDedup {
     * `graft.CentroidArtifactGen <dir> <out> [k]` regenerates a larger one
     * from a larger corpus (SemDedupScaleSpec pins the flat-per-cell
     * invariant with a k=64 fit on the 10× fixture). */
-  def cellOf(nv: Column, cents: Array[Array[Double]]): Column = {
-    element_at(
-      array_sort(array(cents.zipWithIndex.map { case (cArr, i) =>
-        struct(
-          (lit(cArr.map(x => x * x).sum) -
-            lit(2.0) * fastDot(nv, array(cArr.map(lit).toIndexedSeq: _*))).as("d"),
-          lit(i).as("cell"))
-      }.toIndexedSeq: _*)),
-      1).getField("cell")
-  }
+  def cellOf(nv: Column, cents: Array[Array[Double]]): Column =
+    element_at(Similarity.rankCentroids(nv, cents), 1).getField("cell")
 
   /** One row per vector: (vec_id, cell, dup_of, kept). `dup_of` is the
     * LOWEST-id same-cell vector with cosine ≥ tau (null ⇔ kept) — the

@@ -28,7 +28,7 @@ object Similarity {
 
   /** Codegen'd dot (graft.functions.VectorDot); callers must have run
     * GraftExtensions.install(spark) — the DataFrame entry points do. */
-  private def fastDot(a: Column, b: Column): Column =
+  private[ops] def fastDot(a: Column, b: Column): Column =
     graft.functions.VectorDot.vec_dot(a, b)
 
   def l2norm(v: Column): Column = sqrt(dot(v, v))
@@ -40,6 +40,35 @@ object Similarity {
     graft.functions.VectorNorm.vec_norm(v)
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
+
+  /** Centroids ranked nearest-first for the vector `v`: a sorted array of
+    * struct(d, cell) with d = ||c||² − 2·v·c. The ||v||² term of the true
+    * squared distance is constant per row, so dropping it changes no
+    * ordering and saves a dot per centroid. Ties break to the lowest cell
+    * index via the struct sort — the first-index-of-min rule of the
+    * DuckDB twins. Each ||c||² is summed here (Scala left fold) and
+    * emitted as one literal, never recomputed per row or per engine. */
+  private[ops] def rankCentroids(v: Column, cents: Array[Array[Double]]): Column =
+    array_sort(array(cents.zipWithIndex.map { case (c, i) =>
+      struct(
+        (lit(c.map(x => x * x).sum) -
+          lit(2.0) * fastDot(v, array(c.map(lit).toIndexedSeq: _*))).as("d"),
+        lit(i).as("cell"))
+    }.toIndexedSeq: _*))
+
+  /** k-means training rows: a seeded `trainFraction` sample of `rows`, or
+    * all of `rows` when the sample holds fewer than `minTrain`. sample()
+    * is probabilistic: on a small corpus it can yield fewer rows than
+    * KMeans needs (degenerate or failing fit). The limit+count gate stops
+    * once it sees `minTrain` rows, so it stays cheap on a 100 TB corpus
+    * while falling back to the full corpus exactly when the corpus is
+    * small enough for that to be free. */
+  private def trainingRows(rows: DataFrame, trainFraction: Double, minTrain: Int): DataFrame =
+    if (trainFraction >= 1.0) rows
+    else {
+      val sampled = rows.sample(withReplacement = false, trainFraction, seed = 42L)
+      if (sampled.limit(minTrain).count() >= minTrain) sampled else rows
+    }
 
   /** Exact top-k cosine neighbors for each query vector.
     * Norms are precomputed once per side; ranking carries a unique
@@ -123,42 +152,21 @@ object Similarity {
     graft.plans.GraftExtensions.install(corpus.sparkSession)
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    val sampled =
-      if (trainFraction >= 1.0) corpus
-      else corpus.sample(withReplacement = false, trainFraction, seed = 42L)
-    // sample() is probabilistic: on a small corpus it can yield fewer rows
-    // than KMeans needs (degenerate or failing fit). The limit+count guard
-    // short-circuits once it sees 4*nCells rows, so it stays cheap on a
-    // 100 TB corpus while falling back to the full corpus exactly when the
-    // corpus is small enough for that to be free. (A corpus itself smaller
-    // than nCells is a caller error — fewer points than cells.)
-    val minTrain = 4L * nCells
-    val train = {
-      val enough = sampled.limit(minTrain.toInt).count() >= minTrain
-      (if (enough) sampled else corpus).select(
-        array_to_vector(transform(col("embedding"), x => x.cast("double"))).as("features"))
-    }
+    // (a corpus itself smaller than nCells is a caller error — fewer
+    // points than cells)
+    val train = trainingRows(corpus, trainFraction, 4 * nCells).select(
+      array_to_vector(transform(col("embedding"), x => x.cast("double"))).as("features"))
     val model = new KMeans().setK(nCells).setSeed(42L).setMaxIter(10).fit(train)
     val centers = model.clusterCenters.map(_.toArray)
-    def centerCol(c: Array[Double]) = array(c.map(lit).toIndexedSeq: _*)
-    // centroid ranks as a sorted struct array, computed per row from
-    // broadcast literals via the codegen'd vec_dot (no UDF). The ranking
-    // key is ||c||^2 - 2 v.c — the ||v||^2 term of the true squared
-    // distance is constant per row, so dropping it changes no ordering
-    // and saves a dot product per centroid.
-    def cellRanks(v: Column): Column =
-      array_sort(array(centers.zipWithIndex.map { case (c, i) =>
-        val d = c.map(x => lit(x * x)).reduce[Column](_ + _) -
-          lit(2.0) * fastDot(v, centerCol(c))
-        struct(d.as("dist"), lit(i).as("cell"))
-      }.toIndexedSeq: _*))
+    // centroid ranks are computed per row from broadcast literals via the
+    // codegen'd vec_dot (no UDF)
     val c0 = corpus.select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("nrm", fastNorm(col("v")))
-      .withColumn("cell", element_at(cellRanks(col("v")), 1).getField("cell"))
+      .withColumn("cell", element_at(rankCentroids(col("v"), centers), 1).getField("cell"))
     val q0 = queries.select(col("vec_id").as("q_id"), asDouble(col("embedding")).as("qv"))
       .withColumn("qn", fastNorm(col("qv")))
       .withColumn("cell", explode(transform(
-        slice(cellRanks(col("qv")), 1, nProbe), s => s.getField("cell"))))
+        slice(rankCentroids(col("qv"), centers), 1, nProbe), s => s.getField("cell"))))
     val (c, q, joinKeys) =
       if (maxCellSize <= 0) (c0, q0, Seq("cell"))
       else {
@@ -334,12 +342,7 @@ object Similarity {
     import org.apache.spark.ml.functions.array_to_vector
     graft.plans.GraftExtensions.install(corpus.sparkSession)
     val unit = corpus.select(unitNorm(asDouble(col("embedding"))).as("nv"))
-    val sampled =
-      if (trainFraction >= 1.0) unit
-      else unit.sample(withReplacement = false, trainFraction, seed = 42L)
-    val minTrain = 4L * k
-    val enough = sampled.limit(minTrain.toInt).count() >= minTrain
-    val train = (if (enough) sampled else unit)
+    val train = trainingRows(unit, trainFraction, 4 * k)
       .select(array_to_vector(col("nv")).as("features"))
     new KMeans().setK(k).setSeed(42L).setMaxIter(10).fit(train)
       .clusterCenters.map(_.toArray)
@@ -362,14 +365,8 @@ object Similarity {
     require(dim % m == 0, s"dim $dim does not split into $m equal subspaces")
     val subLen = dim / m
     val unit = corpus.select(unitNorm(asDouble(col("embedding"))).as("nv"))
-    val sampled =
-      if (trainFraction >= 1.0) unit
-      else unit.sample(withReplacement = false, trainFraction, seed = 42L)
-    // same small-corpus guard as ivfCosineTopK: fall back to the full
-    // corpus exactly when that is free, never fit on a degenerate sample
-    val minTrain = 4L * kCent
-    val enough = sampled.limit(minTrain.toInt).count() >= minTrain
-    val base = (if (enough) sampled else unit).cache() // m sequential fits re-scan it
+    // m sequential fits re-scan it
+    val base = trainingRows(unit, trainFraction, 4 * kCent).cache()
     try {
       (0 until m).map { j =>
         val train = base.select(
@@ -393,14 +390,7 @@ object Similarity {
       element_at(
         // let-bind the subvector so the K centroid dots share one slice
         transform(array(slice(nv, j * subLen + 1, subLen)), sub =>
-          element_at(
-            array_sort(array(book.zipWithIndex.map { case (cArr, ci) =>
-              struct(
-                (lit(cArr.map(x => x * x).sum) -
-                  lit(2.0) * fastDot(sub, array(cArr.map(lit).toIndexedSeq: _*))).as("d"),
-                lit(ci).as("c"))
-            }.toIndexedSeq: _*)),
-            1).getField("c")),
+          element_at(rankCentroids(sub, book), 1).getField("cell")),
         1)
     }.toIndexedSeq: _*)
   }
@@ -489,14 +479,7 @@ object Similarity {
         val minD = element_at(
           // let-bind the subvector so the K centroid dots share one slice
           transform(array(slice(col("nv"), j * subLen + 1, subLen)), sub =>
-            element_at(
-              array_sort(array(books(j).zipWithIndex.map { case (cArr, ci) =>
-                struct(
-                  (lit(cArr.map(x => x * x).sum) -
-                    lit(2.0) * fastDot(sub, array(cArr.map(lit).toIndexedSeq: _*))).as("d"),
-                  lit(ci).as("c"))
-              }.toIndexedSeq: _*)),
-              1).getField("d") + fastDot(sub, sub)),
+            element_at(rankCentroids(sub, books(j)), 1).getField("d") + fastDot(sub, sub)),
           1)
         floor(minD * 1000000 + lit(0.5))
       }.toIndexedSeq: _*)).as(Seq("subspace", "erru")))

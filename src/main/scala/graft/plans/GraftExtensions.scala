@@ -34,10 +34,10 @@ object GraftExtensions {
       fn("vec_dot", classOf[VectorDot])(es => VectorDot(es.head, es(1))),
       fn("vec_norm", classOf[VectorNorm])(es => VectorNorm(es.head)),
       fn("frequent_items", classOf[FrequentItemsAgg])(FrequentItems.build),
-      fn("hll_distinct", classOf[HllDistinctAgg])(DistinctSketch.build),
-      fn("hll_sketch", classOf[HllDistinctAgg])(DistinctSketch.buildSketch),
+      fn("hll_distinct", classOf[SketchAgg[_]])(DistinctSketch.build(stored = false)),
+      fn("hll_sketch", classOf[SketchAgg[_]])(DistinctSketch.build(stored = true)),
       fn("hll_estimate", classOf[HllEstimate])(DistinctSketch.buildEstimate),
-      fn("theta_sketch", ThetaSketch.getClass)(ThetaSketch.buildAgg),
+      fn("theta_sketch", classOf[SketchAgg[_]])(ThetaSketch.buildAgg),
       fn("theta_estimate", ThetaSketch.getClass)(ThetaSketch.buildEstimate),
       fn("theta_intersect_estimate", ThetaSketch.getClass)(
         ThetaSketch.buildSetEstimate(_, intersect = true)),
@@ -45,16 +45,16 @@ object GraftExtensions {
         ThetaSketch.buildSetEstimate(_, intersect = false)),
       fn("vec_avg", classOf[VecSumAvgAgg])(VectorAgg.build(_, isAvg = true)),
       fn("vec_sum", classOf[VecSumAvgAgg])(VectorAgg.build(_, isAvg = false)),
-      fn("bloom_agg", classOf[BloomAgg])(BloomFilter.buildAgg),
+      fn("bloom_agg", classOf[SketchAgg[_]])(BloomFilter.buildAgg),
       fn("bloom_might_contain", classOf[BloomMightContain])(BloomFilter.buildContains),
-      fn("cms_agg", classOf[CountMinAgg])(CountMin.buildAgg),
+      fn("cms_agg", classOf[SketchAgg[_]])(CountMin.buildAgg),
       fn("cms_estimate", classOf[CountMinEstimate])(CountMin.buildEstimate),
-      fn("kll_agg", classOf[KllAgg])(QuantileSketch.buildAgg),
+      fn("kll_agg", classOf[SketchAgg[_]])(QuantileSketch.buildAgg),
       fn("kll_quantile", classOf[KllQuantile])(QuantileSketch.buildQuantile),
       fn("kll_n", classOf[KllN])(QuantileSketch.buildN),
       fn("z_value", classOf[ZValue])(ZOrder.build),
       fn("topk_by", classOf[TopKAgg])(TopK.build)
-    ) ++ SketchMerge.builders.map { case (name, b) => fn(name, classOf[SketchMergeAgg])(b) }
+    ) ++ SketchMerge.builders.map { case (name, b) => fn(name, classOf[SketchMergeAgg[_]])(b) }
   }
 
   /** Register everything on a live session. Idempotent, and registers

@@ -53,4 +53,16 @@ class BenchForkRefSpec extends AnyFunSuite {
     assert(Bench.total3(vs) == "1.500")
     assert(Bench.total3(Nil) == "0.000")
   }
+
+  test("in-JVM and forked sweeps print one summary format; the parser reads it back") {
+    val results = Seq("q01" -> 0.7234, "q99" -> -1.0)
+    val errors = Map("q99" -> "boom \"x\"\n")
+    val inJvm = Bench.summaryLine(results, errors, Map("q01" -> (2.0, 0.7234)), "/d/sf0.1", forked = false)
+    assert(inJvm == """{"metric":"total","value":0.723,"unit":"sec","queries":{"q01":0.723,"q99":-1},""" +
+      """"errors":{"q99":"boom  x  "},"rechecks":{"q01":{"in_sweep":2.000,"recheck":0.723}},"sf":"/d/sf0.1"}""")
+    val forked = Bench.summaryLine(results, errors, Map.empty, "/d/sf0.1", forked = true)
+    assert(forked == """{"metric":"total","value":0.723,"unit":"sec","mode":"forked",""" +
+      """"queries":{"q01":0.723,"q99":-1},"errors":{"q99":"boom  x  "},"sf":"/d/sf0.1"}""")
+    assert(Bench.parseForkRef(forked, "/d/sf0.1") == Map("q01" -> 0.723))
+  }
 }

@@ -6,10 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps the session posture and the run knobs in one place each: a
-  * hand-built session or an ad-hoc environment read anywhere else in
-  * `src/main` fails here by file name, and README's variable table must
-  * list exactly the names `RunConfig` accepts. */
+/** Keeps the session posture, the run knobs and the sketch aggregate in
+  * one place each: a hand-built session, an ad-hoc environment read or a
+  * per-family sketch aggregate anywhere else in `src/main` fails here by
+  * file name, and README's variable table must list exactly the names
+  * `RunConfig` accepts. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val sources: Seq[(String, String)] = {
@@ -21,9 +22,9 @@ class SourceGuardSpec extends AnyFunSuite {
     finally walk.close()
   }
 
-  private def offenders(needles: Seq[String], allowed: String): Seq[String] =
+  private def offenders(needles: Seq[String], allowed: String*): Seq[String] =
     sources.collect {
-      case (file, text) if file != allowed && needles.exists(text.contains) => file
+      case (file, text) if !allowed.contains(file) && needles.exists(text.contains) => file
     }.sorted
 
   test("SparkSession.builder() is called only in GraftSession") {
@@ -36,6 +37,13 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(sources.exists(_._1 == "RunConfig.scala"))
     val bad = offenders(Seq("sys.env", "System.getenv"), "RunConfig.scala")
     assert(bad.isEmpty, s"parse the variable in RunConfig: ${bad.mkString(", ")}")
+  }
+
+  test("TypedImperativeAggregate is extended only by SketchAgg and three non-sketch aggregates") {
+    val allowed = Seq("SketchAgg.scala", "FrequentItems.scala", "TopK.scala", "VectorAgg.scala")
+    allowed.foreach(f => assert(sources.exists(_._1 == f), f))
+    val bad = offenders(Seq("extends TypedImperativeAggregate"), allowed: _*)
+    assert(bad.isEmpty, s"add a sketch family as a SketchFamily value: ${bad.mkString(", ")}")
   }
 
   test("README's Running variable table lists exactly RunConfig.Names") {

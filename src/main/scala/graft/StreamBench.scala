@@ -20,7 +20,11 @@ import org.apache.spark.sql.streaming.Trigger
   *  - state_rows_max / state_bytes_max = max over batches of the state
   *    operator's numRowsTotal / memoryUsedBytes — the executor-memory
   *    number that decides whether a watermark/TTL policy actually bounds
-  *    state at 100 TB (the figures BASELINE.md quotes at two SFs).
+  *    state at 100 TB (the figures BASELINE.md quotes at two SFs);
+  *  - phase_ms = Σ over batches of the `durationMs` phases latestOffset,
+  *    addBatch, walCommit, commitOffsets and triggerExecution;
+  *    state_commit_ms = Σ over batches and state operators of
+  *    `commitTimeMs`.
   *
   * Pipelines: sessionizeEventTime (flatMapGroupsWithState + event-time
   * timeout), dedupDeliveries (dropDuplicatesWithinWatermark),
@@ -31,6 +35,11 @@ object StreamBench {
   /** Landing-chunk count (= micro-batch count under maxFilesPerTrigger=1).
     * Even, so the recovery probes' two halves are equal and non-empty. */
   private val Chunks = 20
+
+  /** The `StreamingQueryProgress.durationMs` phases each pipeline reports,
+    * summed over its batches. */
+  private val PhaseKeys =
+    Seq("latestOffset", "addBatch", "walCommit", "commitOffsets", "triggerExecution")
 
   /** Opens the crash window at the newest DATA batch of checkpoint
     * `ckpt`: offsets/N survives, commits/N does not — the on-disk state a
@@ -124,8 +133,14 @@ object StreamBench {
       val wall = (System.nanoTime() - t0) / 1e9
       // the query's own progress buffer, complete once it has terminated
       // (Chunks + 2 entries at most, under the default limit of 100);
-      // batches that neither read rows nor hold state are left out
-      val ps = q.recentProgress.toSeq.map { p =>
+      // batches that neither read rows nor hold state are left out of
+      // the row and state figures, but not of the summed costs
+      val progress = q.recentProgress.toSeq
+      val phases = PhaseKeys.map { k =>
+        s""""$k":${progress.map(p => Option(p.durationMs.get(k)).fold(0L)(_.longValue)).sum}"""
+      }.mkString(",")
+      val stateCommitMs = progress.flatMap(_.stateOperators).map(_.commitTimeMs).sum
+      val ps = progress.map { p =>
         (p.numInputRows, p.stateOperators.map(_.numRowsTotal).sum,
           p.stateOperators.map(_.memoryUsedBytes).sum)
       }.filter { case (rows, stateRows, _) => rows > 0 || stateRows > 0 }
@@ -134,7 +149,8 @@ object StreamBench {
         s"""{"rows":$rows,"wall_s":${math.round(wall * 1000) / 1000.0},""" +
         s""""rows_per_s":${math.round(rows / wall)},"batches":${ps.size},""" +
         s""""state_rows_max":${(0L +: ps.map(_._2)).max},""" +
-        s""""state_bytes_max":${(0L +: ps.map(_._3)).max}}"""
+        s""""state_bytes_max":${(0L +: ps.map(_._3)).max},""" +
+        s""""phase_ms":{$phases},"state_commit_ms":$stateCommitMs}"""
       System.err.println(s"[streambench] $name: $json")
       name -> json
     }

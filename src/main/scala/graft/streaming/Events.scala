@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
@@ -38,6 +40,7 @@ object Events {
       sourceOptions: Map[String, String] = Map.empty): DataFrame = {
     import org.apache.spark.sql.types._
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    useGraftCheckpoints(spark)
     // A file stream needs an explicit schema; take it from the files
     // already in the directory (one footer read) instead of hard-coding a
     // layout — the fixture's ts column has shipped both as TIMESTAMP(NANOS)
@@ -45,18 +48,24 @@ object Events {
     // and declaring the wrong one silently mis-decodes rows. Same dispatch
     // as `Tables.events`; both vintages land on µs TimestampType.
     // Footer dispatch only works once files exist; the normal
-    // stream-starts-before-producer case (empty landing dir) must still
-    // start an idle stream, so fall back to the known current fixture
-    // layout (ts as TIMESTAMP(NANOS) → long nanos under the legacy flag).
+    // stream-starts-before-producer case (missing or empty landing dir)
+    // must still start an idle stream, so fall back to the known current
+    // fixture layout (ts as TIMESTAMP(NANOS) → long nanos under the legacy
+    // flag). A dir that holds data files but cannot be read is an error.
     val fileSchema =
-      scala.util.Try(spark.read.parquet(dir).schema).getOrElse(
-        StructType(Seq(
-          StructField("event_id", LongType),
-          StructField("ts", LongType), // TIMESTAMP(NANOS) vintage
-          StructField("user_id", LongType),
-          StructField("event_type", StringType),
-          StructField("value", DoubleType),
-          StructField("props", StringType))))
+      try spark.read.parquet(dir).schema
+      catch {
+        case NonFatal(_) if !holdsDataFile(spark, dir) =>
+          StructType(Seq(
+            StructField("event_id", LongType),
+            StructField("ts", LongType), // TIMESTAMP(NANOS) vintage
+            StructField("user_id", LongType),
+            StructField("event_type", StringType),
+            StructField("value", DoubleType),
+            StructField("props", StringType)))
+        case NonFatal(e) => throw new IllegalArgumentException(
+          s"readEventStream: cannot read the parquet schema of $dir: ${e.getMessage}", e)
+      }
     // sourceOptions: file-source knobs (e.g. maxFilesPerTrigger=1 to
     // replay a landing dir one file per micro-batch — StreamBench's
     // throughput/state-size methodology)
@@ -85,7 +94,8 @@ object Events {
       spark: org.apache.spark.sql.SparkSession,
       brokers: String,
       topic: String,
-      valueSchema: org.apache.spark.sql.types.StructType): DataFrame =
+      valueSchema: org.apache.spark.sql.types.StructType): DataFrame = {
+    useGraftCheckpoints(spark)
     spark.readStream
       .format("kafka")
       .option("kafka.bootstrap.servers", brokers)
@@ -94,6 +104,33 @@ object Events {
       .load()
       .select(from_json(col("value").cast("string"), valueSchema).as("e"))
       .select(col("e.*"))
+  }
+
+  /** Every query built on a graft source checkpoints through
+    * [[GraftCheckpointFileManager]], unless the session already names a
+    * manager. */
+  private def useGraftCheckpoints(spark: org.apache.spark.sql.SparkSession): Unit =
+    if (spark.conf.getOption(GraftCheckpointFileManager.ConfKey).isEmpty)
+      spark.conf.set(GraftCheckpointFileManager.ConfKey,
+        classOf[GraftCheckpointFileManager].getName)
+
+  /** Whether `dir` exists and holds a file a parquet scan would read:
+    * one whose path below `dir` has no component starting with `_` or
+    * `.` (Spark's rule for metadata and hidden files). */
+  private def holdsDataFile(spark: org.apache.spark.sql.SparkSession, dir: String): Boolean = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val top = fs.makeQualified(root)
+    def visible(p: org.apache.hadoop.fs.Path): Boolean =
+      p == null || p == top ||
+        (!p.getName.startsWith("_") && !p.getName.startsWith(".") && visible(p.getParent))
+    fs.exists(root) && {
+      val files = fs.listFiles(root, true)
+      var found = false
+      while (!found && files.hasNext) found = visible(files.next().getPath)
+      found
+    }
+  }
 
   /** T5 — tumbling event-time window + watermark: counts and value sums
     * per (window, event_type). Late rows beyond 10 minutes are dropped. */

@@ -230,6 +230,27 @@ class MultimodalStreamingSpec extends SparkSpec {
     assert(streamWindows == batchWindows)
   }
 
+  test("readEventStream raises, naming the dir, when its data files cannot be read") {
+    val src = java.nio.file.Files.createTempDirectory("graft_evstream_src")
+    Seq((1L, 2L)).toDF("event_id", "ts").coalesce(1)
+      .write.mode("overwrite").parquet(src.resolve("t").toString)
+    val whole = src.resolve("t").toFile.listFiles().filter(_.getName.endsWith(".parquet")).head
+    val bytes = java.nio.file.Files.readAllBytes(whole.toPath)
+    val dir = java.nio.file.Files.createTempDirectory("graft_evstream_bad")
+    java.nio.file.Files.write(dir.resolve("part-0.parquet"), bytes.take(bytes.length / 2))
+    val err = intercept[IllegalArgumentException](Events.readEventStream(isolated(), dir.toString))
+    assert(err.getMessage.contains(dir.toString), err.getMessage)
+  }
+
+  test("readEventStream over an empty landing dir starts an idle stream") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_evstream_empty")
+    val q = Events.readEventStream(isolated(), dir.toString).writeStream
+      .format("noop").trigger(Trigger.AvailableNow()).start()
+    try assert(q.awaitTermination(60000), "idle stream did not finish") finally q.stop()
+    assert(q.exception.isEmpty)
+    assert(q.recentProgress.map(_.numInputRows).sum == 0L)
+  }
+
   test("T5 watermark: rows later than the horizon are dropped") {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[(Long, Timestamp, Long, String, Double)]

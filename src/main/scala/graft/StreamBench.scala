@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -24,7 +26,13 @@ import org.apache.spark.sql.streaming.Trigger
   *  - phase_ms = Σ over batches of the `durationMs` phases latestOffset,
   *    addBatch, walCommit, commitOffsets and triggerExecution;
   *    state_commit_ms = Σ over batches and state operators of
-  *    `commitTimeMs`.
+  *    `commitTimeMs`;
+  *  - compiles / compile_ms = the JVM's generated-class compiles and
+  *    their compile time while the pipeline was built and ran
+  *    (`CodegenMetrics`, `CodeGenerator.compileTime`): the classes its
+  *    plan does not share with an earlier pipeline, plus those a batch
+  *    compiles anew (a predicate that embeds the batch's watermark as a
+  *    literal has new source text in every batch).
   *
   * Pipelines: sessionizeEventTime (flatMapGroupsWithState + event-time
   * timeout), dedupDeliveries (dropDuplicatesWithinWatermark),
@@ -127,10 +135,14 @@ object StreamBench {
     def run(name: String)(start: (String, String) => org.apache.spark.sql.streaming.StreamingQuery): (String, String) = {
       val ckpt = new java.io.File(work, s"ckpt_$name").getPath
       val target = new java.io.File(work, s"target_$name").getPath
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       val q = start(ckpt, target)
       q.awaitTermination()
       val wall = (System.nanoTime() - t0) / 1e9
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileMs = (CodeGenerator.compileTime - compileNs0) / 1000000L
       // the query's own progress buffer, complete once it has terminated
       // (Chunks + 2 entries at most, under the default limit of 100);
       // batches that neither read rows nor hold state are left out of
@@ -150,7 +162,8 @@ object StreamBench {
         s""""rows_per_s":${math.round(rows / wall)},"batches":${ps.size},""" +
         s""""state_rows_max":${(0L +: ps.map(_._2)).max},""" +
         s""""state_bytes_max":${(0L +: ps.map(_._3)).max},""" +
-        s""""phase_ms":{$phases},"state_commit_ms":$stateCommitMs}"""
+        s""""phase_ms":{$phases},"state_commit_ms":$stateCommitMs,""" +
+        s""""compiles":$compiles,"compile_ms":$compileMs}"""
       System.err.println(s"[streambench] $name: $json")
       name -> json
     }

@@ -40,7 +40,7 @@ object Events {
       sourceOptions: Map[String, String] = Map.empty): DataFrame = {
     import org.apache.spark.sql.types._
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    useGraftCheckpoints(spark)
+    useStreamPosture(spark)
     // A file stream needs an explicit schema; take it from the files
     // already in the directory (one footer read) instead of hard-coding a
     // layout — the fixture's ts column has shipped both as TIMESTAMP(NANOS)
@@ -95,7 +95,7 @@ object Events {
       brokers: String,
       topic: String,
       valueSchema: org.apache.spark.sql.types.StructType): DataFrame = {
-    useGraftCheckpoints(spark)
+    useStreamPosture(spark)
     spark.readStream
       .format("kafka")
       .option("kafka.bootstrap.servers", brokers)
@@ -106,13 +106,36 @@ object Events {
       .select(col("e.*"))
   }
 
-  /** Every query built on a graft source checkpoints through
-    * [[GraftCheckpointFileManager]], unless the session already names a
-    * manager. */
-  private def useGraftCheckpoints(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (spark.conf.getOption(GraftCheckpointFileManager.ConfKey).isEmpty)
-      spark.conf.set(GraftCheckpointFileManager.ConfKey,
-        classOf[GraftCheckpointFileManager].getName)
+  /** Session confs every query built on a graft source runs with, each
+    * set only when the caller has not set it explicitly (a caller's value,
+    * from the session builder, `--conf` or `spark.conf.set`, always wins):
+    *  - the checkpoint file manager is [[GraftCheckpointFileManager]], so
+    *    checkpoint files on local paths are written without starting a
+    *    process;
+    *  - per-session artifact isolation is off. `writeStream.start()`
+    *    clones the session, and with isolation on each clone sends its
+    *    own artifact state with its jobs, for which an executor keeps a
+    *    class loader of its own. Generated classes are cached per class
+    *    loader, so every query start compiled its whole plan again and
+    *    ran it cold in the JIT. With isolation off, every query's tasks
+    *    share the default class loader and its compiled classes. A caller
+    *    that adds per-session artifacts (Spark Connect, `addArtifact`)
+    *    sets `spark.sql.artifact.isolation.enabled=true`, which is kept.
+    * Both are read when a query starts, so a source sets them while the
+    * query is still being built. */
+  private val StreamPosture = Seq(
+    GraftCheckpointFileManager.ConfKey -> classOf[GraftCheckpointFileManager].getName,
+    "spark.sql.artifact.isolation.enabled" -> "false")
+
+  private def useStreamPosture(spark: org.apache.spark.sql.SparkSession): Unit = {
+    // `getAll` holds only the explicitly set confs; `getOption` would not
+    // tell, since the isolation conf has a default (and `contains` is
+    // private to Spark)
+    val set = spark.conf.getAll
+    StreamPosture.foreach { case (key, value) =>
+      if (!set.contains(key)) spark.conf.set(key, value)
+    }
+  }
 
   /** Whether `dir` exists and holds a file a parquet scan would read:
     * one whose path below `dir` has no component starting with `_` or
@@ -289,6 +312,17 @@ object Events {
     * per active user. */
   case class SessList(sessions: Seq[SessState])
 
+  /** The state encoder of [[sessionizeEventTime]], built and resolved
+    * once. An encoder of a `Seq` field names the loop variables of its
+    * generated code with ids drawn when the encoder is built and again
+    * each time it is resolved, and the state manager of every batch
+    * resolves its state encoder. Built per query, every batch compiled the
+    * state projections again; resolved here, the state manager's own
+    * resolve finds nothing left to do and every batch's projections have
+    * the same source text. */
+  private val sessListEncoder: org.apache.spark.sql.Encoder[SessList] =
+    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[SessList]().resolveAndBind()
+
   /** Event-time sessionization: sessions close when the EVENT-TIME gap
     * between a user's consecutive events exceeds `gapMs`, with closure
     * driven by the watermark (EventTimeTimeout) — so a replay of the same
@@ -309,6 +343,7 @@ object Events {
       gapMs: Long = 60000,
       wmDelay: String = "10 minutes"): Dataset[EvSession] = {
     import events.sparkSession.implicits._
+    implicit val stateEncoder: org.apache.spark.sql.Encoder[SessList] = sessListEncoder
     events
       .withWatermark("ts", wmDelay)
       .groupByKey(_.user_id)

@@ -284,6 +284,85 @@ class StreamRecoverySpec extends SparkSpec {
       "control should emit the straddle session truncated to its post-kill rows")
   }
 
+  // ------------------------------------------------------------------
+  // The file-sink cases above restart into a sink whose metadata log
+  // already lists the re-executed batch, so the sink skips that batch
+  // without running its plan: the stateful operator never runs it again
+  // and its state delta is not rewritten. The two cases below drive the
+  // same crash windows through a foreachBatch sink, which runs the plan
+  // of every batch it is given, so the restart really re-executes the
+  // batch against the restored state and rewrites its delta.
+  // ------------------------------------------------------------------
+
+  /** One AvailableNow pass of `stream` into a foreachBatch sink: each
+    * batch overwrites its own directory `out/batch=<id>`, so a re-executed
+    * batch replaces what its first execution wrote. */
+  private def foreachBatchPass(stream: DataFrame, out: String, ckpt: String): Unit = {
+    val q = stream.writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        batch.write.mode("overwrite").parquet(s"$out/batch=$id")
+      }
+      .trigger(Trigger.AvailableNow()).start()
+    try assert(q.awaitTermination(180000), "foreachBatch pass timed out") finally q.stop()
+  }
+
+  /** Kill after `KillAfter` chunks, open the crash window, restart over
+    * the rest, and check that the re-executed batch rewrote every state
+    * delta it owns (state version = batch id + 1) and that the output
+    * equals an uninterrupted run. `pass(landing, out, ckpt)` runs one
+    * pass; `rows(out)` renders the output without its batch column. */
+  private def checkReexecutedRecovery(mkChunk: Int => DataFrame,
+      pass: (String, String, String) => Unit, rows: String => Seq[String]): Unit = {
+    val work = java.nio.file.Files.createTempDirectory("graft_recovery_fb").toFile
+    def p(n: String) = new java.io.File(work, n).getPath
+
+    stage(new java.io.File(work, "src_full"), 0, NChunks, mkChunk)
+    pass(p("src_full"), p("out_full"), p("ckpt_full"))
+    val fullRows = rows(p("out_full"))
+    assert(fullRows.nonEmpty, "uninterrupted run emitted nothing")
+
+    val srcB = new java.io.File(work, "src_kill")
+    stage(srcB, 0, KillAfter, mkChunk)
+    pass(srcB.getPath, p("out_kill"), p("ckpt_kill"))
+    val reexec = openCrashWindow(p("ckpt_kill"))
+    assert(reexec == KillAfter - 1L,
+      s"the re-delivered batch should be the last DATA batch, got $reexec")
+    // stamp the batch's state deltas far in the past: only a rewrite
+    // makes them new again
+    val deltas = Option(new java.io.File(p("ckpt_kill"), "state/0").listFiles).toSeq.flatten
+      .map(part => new java.io.File(part, s"${reexec + 1}.delta")).filter(_.exists)
+    assert(deltas.nonEmpty, s"batch $reexec wrote no state delta")
+    deltas.foreach(d => assert(d.setLastModified(1000L)))
+    stage(srcB, KillAfter, NChunks, mkChunk)
+    pass(srcB.getPath, p("out_kill"), p("ckpt_kill"))
+    assert(new java.io.File(p("ckpt_kill") + s"/commits/$reexec").exists,
+      s"batch $reexec was not re-executed after the simulated crash")
+    val stale = deltas.filter(_.lastModified == 1000L)
+    assert(stale.isEmpty, s"the re-executed batch did not rewrite ${stale.mkString(", ")}")
+
+    assert(rows(p("out_kill")) == fullRows,
+      "recovered foreachBatch output diverged from the uninterrupted run")
+  }
+
+  test("dedup pipeline through foreachBatch: the restart re-executes the uncommitted batch, rewrites its state delta, and the output equals the uninterrupted run") {
+    checkReexecutedRecovery(chunkDf,
+      (landing, out, ckpt) => foreachBatchPass(Events.dedupDeliveries(
+        Events.readEventStream(recSession, landing, Map("maxFilesPerTrigger" -> "1"))),
+        out, ckpt),
+      outRows)
+  }
+
+  test("sessionize through foreachBatch: the restart re-executes the uncommitted batch, rewrites its state delta, and the output equals the uninterrupted run") {
+    checkReexecutedRecovery(sessChunkDf,
+      (landing, out, ckpt) => foreachBatchPass(Events.sessionizeEventTime(
+        Events.readEventStream(recSession, landing, Map("maxFilesPerTrigger" -> "1"))
+          .select($"user_id", $"ts", $"event_type", $"value").as[Events.Ev],
+        gapMs = SessGapMs).toDF(), out, ckpt),
+      dir => spark.read.parquet(dir)
+        .select($"user_id", $"session_start", $"session_end", $"n_events", $"total_value")
+        .collect().map(_.toString).sorted.toSeq)
+  }
+
   test("upsert sink: kill-and-restart re-delivers the uncommitted batch; the batchId guard makes it a no-op and the target matches the uninterrupted run") {
     val work = java.nio.file.Files.createTempDirectory("graft_recovery_up").toFile
     def p(n: String) = new java.io.File(work, n).getPath

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -167,17 +166,6 @@ object SketchMerge {
   /** Each family's merge reads its parameters from the stored bytes, so
     * the default-parameter value stands for the whole family. */
   private val families: Seq[SketchFamily[_]] = Seq(Bloom(), Cms(), Hll(), Kll(), Theta())
-
-  def kll_merge(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("kll_merge", c)
-  def cms_merge(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("cms_merge", c)
-  def bloom_merge(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("bloom_merge", c)
-  def theta_merge(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("theta_merge", c)
-  def hll_merge(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("hll_merge", c)
 
   private[graft] def builders: Seq[(String, Seq[Expression] => Expression)] =
     families.map { f =>

@@ -6,13 +6,13 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Morton (Z-order) curve value of two long columns — the multi-column
-  * generalization of `Corpus.sortedLayout`'s linear sort key: sorting by
-  * the interleaved value clusters rows that are close in BOTH dimensions
-  * into the same files/row-groups, so parquet min/max stats prune scans
-  * filtered on EITHER column (a linear sort only serves its leading
-  * column). `sortedLayout(df.withColumn("z", z_value(a, b)), Seq("z"), n)`
-  * is the full layout move. Native codegen'd expression; the 31-iteration
-  * interleave loop compiles into the stage.
+  * generalization of a linear sort key: sorting by the interleaved value
+  * clusters rows that are close in BOTH dimensions into the same
+  * files/row-groups, so parquet min/max stats prune scans filtered on
+  * EITHER column (a linear sort only serves its leading column). A
+  * `repartitionByRange` + `sortWithinPartitions` on `z_value(a, b)` before
+  * the write is the full layout move. Native codegen'd expression; the
+  * 31-iteration interleave loop compiles into the stage.
   *
   * Inputs must be non-negative (negative values RAISE — see
   * `ZOrder.interleave`) and < 2^31 (normalize first — day numbers,
@@ -41,7 +41,7 @@ object ZOrder {
     * generated code. Negative inputs raise: folding their low bits in
     * would place the row near the curve's END (a negative long's low
     * bits are mostly ones), silently scattering the layout that
-    * `sortedLayout(z)` exists to create — and datediff-style inputs CAN
+    * a sort on z exists to create — and datediff-style inputs CAN
     * go negative on bad data. */
   def interleave(a: Long, b: Long): Long = {
     if (a < 0 || b < 0)

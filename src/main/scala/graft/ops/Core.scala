@@ -57,12 +57,6 @@ object Core {
       keys: Seq[String], order: Seq[Column]): DataFrame =
     dedupLatest(target.unionByName(updates), keys, order)
 
-  /** F20 — bulk column rename (pandas `.rename(columns=...)` at
-    * _archive/flight_avg_merge.py:59-64,109); missing keys are ignored,
-    * matching pandas semantics. */
-  def renameColumns(df: DataFrame, renames: Map[String, String]): DataFrame =
-    df.withColumnsRenamed(renames)
-
   /** Skew escape hatch (ARCHITECTURE §4): equi-join where the fact side's
     * hot keys are spread over `salt` shuffle sub-keys and the dim side is
     * replicated `salt`×. Result-identical to `fact.join(dim, keys,

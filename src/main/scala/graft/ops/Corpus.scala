@@ -24,73 +24,6 @@ object Corpus {
     conv(substring(md5(concat(key.cast("string"), lit(salt))), 1, 15), 16, 10)
       .cast("double") / lit((1L << 60).toDouble)
 
-  /** Write-side sorted layout: range-partition on `cols` then sort within
-    * partitions, so a parquet write produces GLOBALLY ordered files whose
-    * row-group min/max stats are tight, disjoint ranges — point/range
-    * predicates on `cols` then skip whole row groups (zone-map pruning)
-    * and whole files at the source level, on top of partition-directory
-    * pruning. The pre-write shuffle is a range exchange (sampled
-    * boundaries, skew-resistant) paid once; every later scan on the sort
-    * key reads a fraction of the data. The standard lakehouse layout move
-    * (linear order; Z-order is the multi-column generalization). */
-  def sortedLayout(df: DataFrame, cols: Seq[String], numPartitions: Int): DataFrame =
-    df.repartitionByRange(numPartitions, cols.map(col): _*)
-      .sortWithinPartitions(cols.map(col): _*)
-
-  /** One-pass pipeline quality metrics via `Dataset.observe`: attach
-    * named aggregates (row counts, null counts, length stats, filter pass
-    * rates) to a dataframe so they are computed DURING the next action —
-    * the write you were doing anyway — and read from the returned
-    * [[org.apache.spark.sql.Observation]] afterwards. At the pipeline's
-    * scale target this is the only acceptable shape for monitoring: a
-    * separate `df.count()`/profile query re-reads the corpus, doubling
-    * the scan cost; observe rides the existing pass for free (the
-    * aggregates run as accumulator-style listeners, no extra job, no
-    * plan change). Metrics must be aggregates without distinct — use the
-    * sketch functions (`hll_distinct`, `kll_agg`) for cardinality or
-    * quantile gauges.
-    *
-    * Default metric set profiles a documents-shaped frame; pass custom
-    * `metrics` for anything else. */
-  def observeQuality(
-      docs: DataFrame,
-      name: String = "graft_quality",
-      metrics: Seq[Column] = Nil): (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation(name)
-    val ms =
-      if (metrics.nonEmpty) metrics
-      else Seq(
-        count(lit(1)).as("n_rows"),
-        count(col("text")).as("n_text_nonnull"),
-        avg(length(col("text"))).as("avg_chars"),
-        sum(when(length(col("text")) < 20, 1L).otherwise(0L)).as("n_short"))
-    (docs.observe(obs, ms.head, ms.tail: _*), obs)
-  }
-
-  /** Size-targeted compaction: repartition so the next write produces
-    * files of roughly `targetBytesPerFile`, using Catalyst's logical-plan
-    * size estimate (driver-side metadata — no extra job, no collect).
-    * The small-files problem is the classic lakehouse failure mode this
-    * guards: a streaming sink or an over-parallel job leaves thousands of
-    * KB-sized files whose per-file open/footer cost then dominates every
-    * downstream scan. One round-robin shuffle here buys every later
-    * reader back.
-    *
-    * The estimate is the OPTIMIZED plan's sizeInBytes — for a plain scan
-    * it is the exact source byte size; through filters/projections it is
-    * Catalyst's heuristic, so treat the target as approximate (good to a
-    * small factor, which is all compaction needs). Partition count is
-    * capped so a pathological estimate cannot demand a million-task
-    * shuffle. */
-  def compact(df: DataFrame, targetBytesPerFile: Long,
-      maxPartitions: Int = 1 << 16): DataFrame = {
-    require(targetBytesPerFile > 0, "compact: targetBytesPerFile must be positive")
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val n = ((bytes + targetBytesPerFile - 1) / targetBytesPerFile)
-      .min(BigInt(maxPartitions)).max(BigInt(1)).toInt
-    df.repartition(n)
-  }
-
   /** Context-window chunking: split each document into overlapping
     * token windows of `chunkSize` tokens advancing by `stride` — the
     * standard shape for feeding long documents to a fixed-context model

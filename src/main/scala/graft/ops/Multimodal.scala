@@ -4,16 +4,17 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** North-star multimodal-column plumbing (SURVEY.md §2.11): media payloads
-  * as opaque `binary` columns with typed metadata, decode / feature-extract
-  * / resize / frame-sample as per-partition typed transforms.
+  * as opaque `binary` columns with typed metadata, decode as a
+  * per-partition typed transform, and real PNG / WAV / frame-container
+  * codec round trips.
   *
   * The actual codec step is STUBBED (this container has no image/audio
   * libraries): `decodeStub` produces a deterministic fake "decode" from the
   * payload bytes. Everything around it — the schema, the binary column, the
   * partition-parallel execution shape, the batch signature a real codec UDF
-  * would slot into — is real Spark and tested (MultimodalSpec).
+  * would slot into — is real Spark and tested (MultimodalStreamingSpec).
   *
-  * Scale notes: payloads never hit the driver; decode/feature work is
+  * Scale notes: payloads never leave the executors; decode work is
   * `mapPartitions` (the Scala analog of a batched pandas UDF — one
   * initialization per partition, streaming iterator, no per-row codec
   * setup). Metadata-only queries prune the binary column at the parquet
@@ -33,10 +34,6 @@ object Multimodal {
       height: Int,
       n_frames: Int,
       pixels: Array[Int]) // fake "decoded" byte histogram, 16 bins
-
-  case class MediaFeatures(
-      doc_id: Long,
-      feature: Array[Double]) // normalized 16-dim histogram feature
 
   /** Attach a binary payload column (here: UTF-8 of text — stands in for
     * image/audio bytes) plus typed metadata. */
@@ -70,66 +67,6 @@ object Multimodal {
     }
   }
 
-  /** Feature extraction: L1-normalized histogram as a dense vector. */
-  def features(decoded: Dataset[DecodedMedia]): Dataset[MediaFeatures] = {
-    import decoded.sparkSession.implicits._
-    decoded.map { d =>
-      val total = math.max(1, d.pixels.sum)
-      MediaFeatures(d.doc_id, d.pixels.map(_.toDouble / total))
-    }
-  }
-
-  /** Frame sampling: every `stride`-th byte of the payload ("frames" of the
-    * fake stream) — declarative, stays columnar. */
-  def frameSample(media: DataFrame, stride: Int): DataFrame =
-    media.select(
-      col("doc_id"),
-      transform(
-        sequence(lit(1), (col("n_bytes") / stride).cast("int")),
-        i => col("payload").substr((i - 1) * stride + 1, lit(1))).as("frames"))
-
-  /** End-to-end: documents → payloads → decoded → features (DataFrame out
-    * so downstream joins stay untyped). */
-  def pipeline(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    val media = attachPayload(docs).as[MediaRecord]
-    features(decode(media)).toDF()
-  }
-
-  /** Perceptual hash (aHash-style) over the decoded feature: bit i set
-    * when histogram bin i exceeds the mean bin mass. A LONG hash, so a
-    * real decode's up-to-64-bin feature widens it without the silent
-    * `1 << i` Int wrap-around that would corrupt bits past 31 (features
-    * wider than 64 bins need a multi-word hash — rejected, not folded).
-    * On a real decode the same function runs over downsampled pixel
-    * intensities — only `decodeOne` changes. */
-  def perceptualHash(feats: Dataset[MediaFeatures]): DataFrame = {
-    import feats.sparkSession.implicits._
-    feats.map { f =>
-      // empty features (a failed decode) must FAIL, not hash to 0 and
-      // pair every broken record with every other as an exact dup
-      require(f.feature.nonEmpty && f.feature.length <= 64,
-        s"perceptualHash needs 1..64 feature dims, got ${f.feature.length}")
-      val mean = f.feature.sum / f.feature.length
-      val bits = f.feature.zipWithIndex
-        .foldLeft(0L)((acc, bi) => if (bi._1 > mean) acc | (1L << bi._2) else acc)
-      (f.doc_id, bits, f.feature)
-    }.toDF("doc_id", "phash", "feature")
-  }
-
-  /** Media near-dup — the dedup family applied to the multimodal path,
-    * with the banded shape of Text near-dup: candidates must share ONE
-    * band of the perceptual hash, then exact L1 over the features
-    * verifies (builtin HOF — 16 elements per pair, not a hot loop).
-    *
-    * `bandBits` is the recall/cost dial, exactly like SimHash banding:
-    * a pair survives blocking iff SOME band is bit-identical, so smaller
-    * bands tolerate more hash-bit flips (more recall) at 2^bandBits
-    * buckets per band (worst-case Θ(n²/2^bandBits) candidates — the
-    * reason 4-bit nibbles, 16 buckets, are not offered). With the 16-bin
-    * stub: bandBits=16 is exact-hash blocking, bandBits=8 tolerates
-    * flips confined to one byte. A real decode's 64-bin feature gives 4
-    * bands of 16 bits. */
   // ---------------------------------------------------------------------
   // REAL codec path (round 9): PNG via javax.imageio — pure JVM, no native
   // deps. The stub path above stays for the original q28/q151 rows; this
@@ -258,8 +195,9 @@ object Multimodal {
     val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
       new java.io.ByteArrayInputStream(bytes))
     reader.setInput(iis)
-    // loud failure on a corrupt payload (the perceptualHash rule), with
-    // the record named — reader.read throws rather than returning null
+    // loud failure on a corrupt payload (broken media must fail, never
+    // alias to a valid record), with the record named — reader.read
+    // throws rather than returning null
     try reader.read(0)
     catch {
       case e: java.io.IOException =>
@@ -308,7 +246,7 @@ object Multimodal {
     * shift and the near-dup join gets its banding keys for free. A
     * corrupt/undecodable payload FAILS the task (null from ImageIO.read)
     * rather than emitting zeros that would near-dup-match every other
-    * broken record — the perceptualHash rule. */
+    * broken record. */
   def decodePngStats(pngs: Dataset[PngRecord]): Dataset[PngStats] = {
     import pngs.sparkSession.implicits._
     pngs.mapPartitions { it =>
@@ -437,8 +375,8 @@ object Multimodal {
     * stream; stats are exact integers over the DECODED samples (peak, L1,
     * energy, strict zero crossings). The header is VALIDATED, not assumed
     * — an unexpected format fails the task rather than mis-decoding, and
-    * a corrupt payload throws (the perceptualHash rule: broken media must
-    * fail loudly, never alias to silence). */
+    * a corrupt payload throws (broken media must fail loudly, never alias
+    * to silence). */
   def decodeWavStats(wavs: Dataset[WavRecord]): Dataset[WavStats] = {
     import wavs.sparkSession.implicits._
     wavs.mapPartitions { it =>
@@ -590,29 +528,4 @@ object Multimodal {
   /** documents → synth video container → strided real decode (q230 body). */
   def videoPipeline(spark: SparkSession, docs: DataFrame, stride: Int = 2): DataFrame =
     sampleFrames(encodeVideo(docs), stride).toDF()
-
-  def nearDupPairs(hashed: DataFrame, featureDim: Int = 16, maxL1: Double = 0.1,
-      bandBits: Int = 16): DataFrame = {
-    require(featureDim >= 1 && featureDim <= 64, s"featureDim must be in [1,64], got $featureDim")
-    require(bandBits == 8 || bandBits == 16, s"bandBits must be 8 or 16, got $bandBits")
-    // ceil: a trailing partial band still blocks on its (zero-padded)
-    // bits — floor division would silently exclude them from recall
-    val bands = (featureDim + bandBits - 1) / bandBits
-    def banded(side: String) = hashed
-      .select(col("doc_id").as(s"id_$side"),
-        col("phash").as(s"ph_$side"), col("feature").as(s"f_$side"))
-      .withColumn("band", explode(array((0 until bands).map(lit): _*)))
-      .withColumn("key",
-        call_function("shiftright", col(s"ph_$side"), col("band") * bandBits)
-          .bitwiseAND(lit((1L << bandBits) - 1L)))
-    val l1 = aggregate(
-      zip_with(col("f_a"), col("f_b"), (x, y) => abs(x - y)),
-      lit(0.0), (acc, x) => acc + x)
-    banded("a").join(banded("b"), Seq("band", "key"))
-      .filter(col("id_a") < col("id_b"))
-      .dropDuplicates("id_a", "id_b") // several shared bands, one pair
-      .withColumn("l1", l1)
-      .filter(col("l1") <= maxL1)
-      .select(col("id_a"), col("id_b"), col("l1"))
-  }
 }

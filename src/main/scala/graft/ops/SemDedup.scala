@@ -11,8 +11,7 @@ import org.apache.spark.sql.functions._
   * bounded cells is O(n · cellSize), never corpus², and the cell count is
   * the scale dial (at 100 TB: tens of thousands of cells from a sampled
   * fit, so each cell is a few thousand vectors — exactly the answer to
-  * q32's documented label-blocked quadratic). Composes with
-  * [[Similarity.ivfCosineTopK]]'s cell-splitting skew cap when cells skew.
+  * q32's documented label-blocked quadratic).
   *
   * Cell assignment runs against the FROZEN [[CentroidArtifact]] (train
   * once at index-build, serve forever — `graft.CentroidArtifactGen`), so

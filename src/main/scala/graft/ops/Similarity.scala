@@ -6,14 +6,12 @@ import org.apache.spark.sql.functions._
 /** North-star similarity search over embedding columns (SURVEY.md §2.11).
   *
   * Brute-force cosine is the correctness baseline (exact, O(queries×corpus),
-  * fine when the query set is small or the corpus is pre-filtered). The
-  * scale path is LSH bucketing by random-hyperplane sign bits: at 100 TB the
-  * corpus is bucketed once (narrow shuffle on the bucket key), queries probe
-  * only their bucket (plus optional multi-probe neighbors), so the join is
-  * O(corpus) + O(queries × bucket size) instead of O(queries × corpus);
-  * `ivfCosineTopK` is the centroid-cell alternative. Hot-path dot products
-  * use the native codegen'd `graft.functions.VectorDot`; the pure-builtin
-  * HOF forms remain for registration-free ad-hoc use.
+  * fine when the query set is small or the corpus is pre-filtered); the
+  * catalog carries it as q23. Int8 scalar and product quantization shrink
+  * the stored embedding, and k-means centroids give the cells SemDedup
+  * blocks on. Hot-path dot products use the native codegen'd
+  * `graft.functions.VectorDot`; the pure-builtin HOF forms remain for
+  * registration-free ad-hoc use.
   */
 object Similarity {
 
@@ -85,204 +83,14 @@ object Similarity {
     Core.topKPerGroup(scored, Seq("q_id"), Seq(col("sim").desc, col("vec_id").asc), k)
   }
 
-  /** Deterministic pseudo-random hyperplanes: component j of plane p is a
-    * fixed function of (p, j) — reproducible across sessions with no RNG
-    * state to ship. */
-  private[ops] def planes(numPlanes: Int, dim: Int): Array[Array[Double]] =
-    Array.tabulate(numPlanes, dim) { (p, j) =>
-      val h = scala.util.hashing.MurmurHash3.productHash((p, j, "graft-lsh"))
-      (h % 1000) / 1000.0
-    }
-
-  /** Sign-bit LSH bucket id for a vector: bit p = sign(v · plane_p).
-    * Uses the codegen'd vec_dot (plane components are literals folded into
-    * the generated code) — callers must have installed GraftExtensions;
-    * every DataFrame entry point in this object does. */
-  def lshBucket(v: Column, numPlanes: Int, dim: Int): Column = {
-    val ps = planes(numPlanes, dim)
-    val bits = ps.zipWithIndex.map { case (plane, p) =>
-      val planeCol = array(plane.map(lit).toIndexedSeq: _*)
-      when(fastDot(v, planeCol) > 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
-  /** Johnson–Lindenstrauss random projection to `toDim` dimensions:
-    * deterministic Rademacher planes (±1/√toDim, seedless hash of
-    * (plane, component) — reproducible across sessions like `planes`),
-    * applied as `toDim` codegen'd vec_dot's against literal arrays — no
-    * UDF, no shuffle, pure map-side. Pairwise distance/cosine structure
-    * survives within the JL bound (error ~ √(ln n / toDim)), making
-    * downstream ANN / embedding dedup pay O(toDim) per distance instead
-    * of O(d) — project once at ingest, run every similarity pass on the
-    * short vectors. */
-  def randomProject(v: Column, fromDim: Int, toDim: Int): Column = {
-    val scale = 1.0 / math.sqrt(toDim)
-    array((0 until toDim).map { p =>
-      val comps = Array.tabulate(fromDim) { j =>
-        val h = scala.util.hashing.MurmurHash3.productHash((p, j, "graft-jl"))
-        if (h >= 0) scale else -scale
-      }
-      fastDot(v, array(comps.map(lit).toIndexedSeq: _*))
-    }.toIndexedSeq: _*)
-  }
-
-  /** IVF (inverted-file) ANN: k-means centroids define the cells, the
-    * corpus is assigned to its nearest cell once (one narrow shuffle), and
-    * each query probes its `nProbe` nearest cells. Recall rises with
-    * nProbe; cost is O(corpus/cells × nProbe) per query instead of
-    * O(corpus). Centroid training is spark.ml KMeans with a fixed seed
-    * over a `trainFraction` sample of the corpus — never the full corpus
-    * (at 100 TB the sample is the only extra pass a fit may cost); the
-    * fitted centroids are then applied map-side as broadcast literals.
-    *
-    * Cell balancing (`maxCellSize` > 0): k-means cells are rarely even —
-    * a clustered corpus can put most vectors in a few cells, which makes
-    * those cells hot keys in the probe join (one straggler task per fat
-    * cell). Oversized cells are split into `ceil(size/maxCellSize)`
-    * deterministic sub-cells (hash of the vector id) and queries probe
-    * every sub-cell of a probed cell, so the RESULT IS IDENTICAL (no
-    * recall change — pure partitioning) but no join key exceeds
-    * ~maxCellSize rows. The per-cell size table is O(nCells) and is
-    * broadcast, never collected to the driver. Same skew-capping move as
-    * `Text.bucketPairs`/`Core.saltedJoin`, specialized to the IVF join. */
-  def ivfCosineTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      nCells: Int = 16, nProbe: Int = 4, trainFraction: Double = 0.25,
-      maxCellSize: Int = 0): DataFrame = {
-    graft.plans.GraftExtensions.install(corpus.sparkSession)
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    // (a corpus itself smaller than nCells is a caller error — fewer
-    // points than cells)
-    val train = trainingRows(corpus, trainFraction, 4 * nCells).select(
-      array_to_vector(transform(col("embedding"), x => x.cast("double"))).as("features"))
-    val model = new KMeans().setK(nCells).setSeed(42L).setMaxIter(10).fit(train)
-    val centers = model.clusterCenters.map(_.toArray)
-    // centroid ranks are computed per row from broadcast literals via the
-    // codegen'd vec_dot (no UDF)
-    val c0 = corpus.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("nrm", fastNorm(col("v")))
-      .withColumn("cell", element_at(rankCentroids(col("v"), centers), 1).getField("cell"))
-    val q0 = queries.select(col("vec_id").as("q_id"), asDouble(col("embedding")).as("qv"))
-      .withColumn("qn", fastNorm(col("qv")))
-      .withColumn("cell", explode(transform(
-        slice(rankCentroids(col("qv"), centers), 1, nProbe), s => s.getField("cell"))))
-    val (c, q, joinKeys) =
-      if (maxCellSize <= 0) (c0, q0, Seq("cell"))
-      else {
-        // O(nCells) size table, broadcast both ways; sub-cell = hash of
-        // the id mod the per-cell split count, so re-executed tasks place
-        // rows identically (retry-safe, unlike a rand() salt)
-        val sizes = c0.groupBy(col("cell"))
-          .agg(ceil(count(lit(1)).cast("double") / maxCellSize).cast("int").as("n_sub"))
-        val cS = c0.join(broadcast(sizes), Seq("cell"))
-          .withColumn("sub", pmod(xxhash64(col("vec_id")), col("n_sub").cast("long")).cast("int"))
-          .drop("n_sub")
-        val qS = q0.join(broadcast(sizes), Seq("cell"))
-          .withColumn("sub", explode(sequence(lit(0), col("n_sub") - 1)))
-          .drop("n_sub")
-        (cS, qS, Seq("cell", "sub"))
-      }
-    val scored = q.join(c, joinKeys)
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("sim", fastDot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      .select(col("q_id"), col("vec_id"), col("sim"))
-    Core.topKPerGroup(scored, Seq("q_id"), Seq(col("sim").desc, col("vec_id").asc), k)
-  }
-
-  /** Probe buckets for a query vector: its own sign-bit bucket plus, for
-    * multi-probe, the buckets reached by flipping the `extraProbes`
-    * hyperplane bits with the smallest |margin| — the planes the vector
-    * sits closest to, i.e. the flips most likely to hold true neighbors. */
-  def probeBuckets(v: Column, numPlanes: Int, dim: Int, extraProbes: Int): Column = {
-    val main = lshBucket(v, numPlanes, dim)
-    if (extraProbes <= 0) array(main)
-    else {
-      val ps = planes(numPlanes, dim)
-      val margins = array_sort(array(ps.zipWithIndex.map { case (plane, p) =>
-        struct(abs(fastDot(v, array(plane.map(lit).toIndexedSeq: _*))).as("m"), lit(p).as("p"))
-      }.toIndexedSeq: _*))
-      // shiftleft, not pow(2,p).cast(long): pow is double math, inexact
-      // for p > 52 and wrong at p >= 63, which would silently corrupt
-      // probe buckets if numPlanes is raised toward 64
-      concat(
-        array(main),
-        transform(slice(margins, 1, extraProbes),
-          s => main.bitwiseXOR(call_function("shiftleft", lit(1L), s.getField("p")))))
-    }
-  }
-
-  /** Approximate top-k: corpus and queries are bucketed by hyperplane sign
-    * bits; cosine is computed only within matching buckets. Recall < 1 by
-    * construction; raise `numPlanes` for smaller buckets, and/or
-    * `extraProbes` (multi-probe) for higher recall at 1+extraProbes times
-    * the probe cost — the corpus is still bucketed exactly once. */
-  def lshCosineTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      numPlanes: Int = 8, dim: Int = 64, extraProbes: Int = 0): DataFrame = {
-    graft.plans.GraftExtensions.install(corpus.sparkSession)
-    val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("nrm", fastNorm(col("v")))
-      .withColumn("bucket", lshBucket(col("v"), numPlanes, dim))
-    val q = queries.select(col("vec_id").as("q_id"), asDouble(col("embedding")).as("qv"))
-      .withColumn("qn", fastNorm(col("qv")))
-      .withColumn("bucket",
-        explode(array_distinct(probeBuckets(col("qv"), numPlanes, dim, extraProbes))))
-    val scored = q.join(c, Seq("bucket"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("sim", fastDot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      .select(col("q_id"), col("vec_id"), col("sim"))
-      // multi-probe can reach the same neighbor through several buckets
-      .dropDuplicates("q_id", "vec_id")
-    Core.topKPerGroup(scored, Seq("q_id"), Seq(col("sim").desc, col("vec_id").asc), k)
-  }
-
-  /** Cross-corpus semantic contamination at scale: eval-set vectors whose
-    * cosine against ANY training vector reaches `threshold`, found through
-    * LSH hyperplane buckets instead of the train×eval cross join. Both
-    * sides are bucketed once map-side; cosine runs only inside matching
-    * buckets (multi-probe on the eval side buys recall at 1+extraProbes
-    * probe cost). This is q58's contamination question asked of EMBEDDINGS
-    * rather than exact token spans — the near-duplicate leak that survives
-    * paraphrasing — and the same shape serves semantic dedup between any
-    * two corpora. Returns one row per contaminated eval vector with its
-    * best-matching train vector and similarity.
-    *
-    * Recall < 1 by construction (bucket collisions are necessary, not
-    * sufficient); TextSimilaritySpec pins a numeric recall floor against
-    * the exact join on real embeddings. The exact label-blocked form is
-    * oracle-checked as q77. */
-  def lshContaminated(train: DataFrame, eval: DataFrame, threshold: Double,
-      numPlanes: Int = 8, dim: Int = 64, extraProbes: Int = 2): DataFrame = {
-    graft.plans.GraftExtensions.install(train.sparkSession)
-    val t = train.select(col("vec_id").as("train_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("nrm", fastNorm(col("v")))
-      .withColumn("bucket", lshBucket(col("v"), numPlanes, dim))
-    val e = eval.select(col("vec_id").as("eval_id"), asDouble(col("embedding")).as("qv"))
-      .withColumn("qn", fastNorm(col("qv")))
-      .withColumn("bucket",
-        explode(array_distinct(probeBuckets(col("qv"), numPlanes, dim, extraProbes))))
-    e.join(t, Seq("bucket"))
-      .withColumn("sim", fastDot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      .filter(col("sim") >= threshold)
-      // multi-probe can reach the same pair through several buckets;
-      // dedup before counting so n_hits = distinct contaminating vectors
-      .dropDuplicates("eval_id", "train_id")
-      .groupBy(col("eval_id"))
-      .agg(
-        max_by(col("train_id"), struct(col("sim"), -col("train_id"))).as("train_id"),
-        max(col("sim")).as("cosine"),
-        count(lit(1)).as("n_hits"))
-  }
-
   /** Scalar int8 quantization: per-vector affine codes in 0..255 with the
     * (mn, mx) range carried alongside — `struct(mn, mx, codes)`. The
     * embedding column of a 100 TB corpus is usually the widest thing in
     * the table; int8 codes cut its bytes 4× vs float32 (8× vs float64) at
     * ~0.2% of the value range per half-step of rounding error, which
-    * leaves cosine rankings essentially intact (recall floor pinned in
-    * TextSimilaritySpec). Quantize once at ingest, store the struct, scan
-    * and rank on codes; re-rank survivors on the full-precision column if
-    * exactness matters.
+    * leaves cosine rankings essentially intact. Quantize once at ingest,
+    * store the struct, scan and rank on codes; re-rank survivors on the
+    * full-precision column if exactness matters.
     *
     * Engine-portable by construction: codes use the floor(x+0.5) form
     * (never `round()` — Spark HALF_UP vs C-double disagree on ties) so
@@ -410,20 +218,13 @@ object Similarity {
     * `lut` column, materialized on the query side of the join), then every
     * corpus vector scores as m array lookups + adds — the per-pair cost is
     * O(m), not O(dim), and the corpus side reads only the codes column.
-    * The scan over codes is exhaustive here (correct baseline shape); the
-    * 100 TB form composes this with [[ivfCosineTopK]]'s cells — probe a
-    * cell, ADC-rank inside it — so neither pass ever touches full-width
-    * floats. Recall floor and the ADC/reconstruction identity are pinned
-    * in VectorAggSpec. */
-  def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int, m: Int = 8,
-      kCent: Int = 16, dim: Int = 64, trainFraction: Double = 0.25): DataFrame =
-    pqTopKWithBooks(corpus, queries, k,
-      pqTrainCodebooks(corpus, m, kCent, dim, trainFraction))
-
-  /** [[pqTopK]] against ALREADY-TRAINED codebooks — the production call
-    * shape: codebooks are a build-once artifact (train at index time,
-    * persist, reuse for every query batch); re-fitting per query would be
-    * like rebuilding an index per lookup. */
+    * The scan over codes is exhaustive (correct baseline shape).
+    *
+    * Takes ALREADY-TRAINED codebooks ([[pqTrainCodebooks]]) — the
+    * production call shape: codebooks are a build-once artifact (train at
+    * index time, persist, reuse for every query batch); re-fitting per
+    * query would be like rebuilding an index per lookup. The recall floor
+    * and the ADC/reconstruction identity are pinned in TextSimilaritySpec. */
   def pqTopKWithBooks(corpus: DataFrame, queries: DataFrame, k: Int,
       books: Array[Array[Array[Double]]]): DataFrame = {
     graft.plans.GraftExtensions.install(corpus.sparkSession)
@@ -488,25 +289,5 @@ object Similarity {
       .select(col("subspace"), col("n"),
         (floor(col("su").cast("double") / col("n").cast("double") + lit(0.5)) /
           1000000.0).as("mse"))
-  }
-
-  /** Exact-shape top-k over the QUANTIZED corpus: same join/rank plan as
-    * [[bruteForceTopK]], but the corpus side stores only int8 codes and
-    * dequantizes on the fly inside the scan projection — the memory/IO
-    * shape of a production PQ/SQ index (read 1/4 the bytes, same compute).
-    * Ranking error vs exact brute force is the quantization error only;
-    * the spec pins recall@10. */
-  def quantizedCosineTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    graft.plans.GraftExtensions.install(corpus.sparkSession)
-    val c = corpus
-      .select(col("vec_id"), quantizeInt8(asDouble(col("embedding"))).as("qz"))
-      .select(col("vec_id"), dequantizeInt8(col("qz")).as("v"))
-      .withColumn("nrm", fastNorm(col("v")))
-    val q = queries.select(col("vec_id").as("q_id"), asDouble(col("embedding")).as("qv"))
-      .withColumn("qn", fastNorm(col("qv")))
-    val scored = q.join(c, col("vec_id") =!= col("q_id"))
-      .withColumn("sim", fastDot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      .select(col("q_id"), col("vec_id"), col("sim"))
-    Core.topKPerGroup(scored, Seq("q_id"), Seq(col("sim").desc, col("vec_id").asc), k)
   }
 }

@@ -4,60 +4,15 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** North-star text / dedup operators (SURVEY.md §2.11) — the production
-  * (100 TB) variants. The oracle-checked QueryCatalog twins use md5-derived
-  * hashes so DuckDB can mirror them; these use xxhash64 (codegen'd, no
-  * digest allocation) and are the ones a real pipeline would run.
-  *
-  * Shuffle budget per operator:
-  *  - exactDedup: one shuffle on the digest;
-  *  - minHash LSH: explode to (doc × bands) rows, one shuffle on the band
-  *    bucket, candidate verify joins shuffle only candidate pairs — never
-  *    O(n²);
-  *  - simHash: bit votes aggregated map-side first (partial hash agg).
+/** North-star text / dedup operators (SURVEY.md §2.11): tokenization and
+  * shingles, span-level dedup and contamination, quality signals, and
+  * cluster resolution over candidate pairs. The near-dup pair generators
+  * live in the catalog, each with an md5-derived DuckDB twin: q19 exact
+  * dedup, q21 MinHash+LSH, q22 SimHash.
   */
 object Text {
 
   def tokens(text: Column): Column = filter(split(text, " "), t => t =!= "")
-
-  /** Distinct (doc_a < doc_b) pairs of ids sharing a bucket key — the
-    * LSH candidate generator. One shuffle on the key; pair fan-out happens
-    * inside each bucket.
-    *
-    * Skew guard: a bucket of n ids would otherwise emit C(n,2) pairs — a
-    * boilerplate-heavy corpus where thousands of docs share a band hash
-    * turns one task quadratic. Buckets larger than `maxBucketSize` are
-    * split into deterministic sorted chunks of that size and pairs are
-    * emitted only within a chunk, bounding output at
-    * ceil(n/cap) × C(cap,2) ≈ n×cap/2 — linear in n. The recall
-    * trade-off (cross-chunk pairs inside an over-cap bucket are dropped)
-    * is mitigated in the LSH callers because true near-dups collide on
-    * several independent bands, each giving another chance to pair. */
-  def bucketPairs(df: DataFrame, keys: Seq[String], idCol: String = "doc_id",
-      maxBucketSize: Int = 1000): DataFrame = {
-    def chunkPairs(ids: Column): Column = {
-      val n = size(ids)
-      val nChunks = ceil(n.cast("double") / maxBucketSize).cast("int")
-      val chunks = transform(sequence(lit(0), nChunks - 1),
-        c => slice(ids, c * maxBucketSize + 1, lit(maxBucketSize)))
-      // a trailing chunk of size 1 must be dropped BEFORE sequence(1, n-1)
-      // — sequence(1, 0) counts DOWN in Spark (same trap as `shingles`)
-      flatten(transform(filter(chunks, ch => size(ch) >= 2), chunk =>
-        flatten(transform(
-          sequence(lit(1), size(chunk) - 1),
-          i => transform(
-            sequence(i + 1, size(chunk)),
-            j => struct(
-              element_at(chunk, i).as("doc_a"),
-              element_at(chunk, j).as("doc_b")))))))
-    }
-    df.groupBy(keys.map(col): _*)
-      .agg(sort_array(collect_list(col(idCol))).as("ids"))
-      .filter(size(col("ids")) >= 2)
-      .select(explode(chunkPairs(col("ids"))).as("p"))
-      .select(col("p.doc_a"), col("p.doc_b"))
-      .distinct()
-  }
 
   /** Word n-gram shingles (default 3); empty array for short docs
     * (sequence(1, 0) would count DOWN in Spark, so guard explicitly).
@@ -78,49 +33,6 @@ object Text {
             i => concat_ws(" ", (0 until n).map(j => element_at(ts, i + j)): _*)))
           .otherwise(array().cast("array<string>"))),
       1)
-
-  /** MinHash signature as a column expression: `numHashes` xxhash64-seeded
-    * minima over shingles. Null for docs with no shingles.
-    * NOTE small-data only: nested higher-order lambdas re-evaluate their
-    * inlined argument per outer iteration — for corpora use
-    * `minHashTable` (explode + codegen'd aggregate form). */
-  def minHashSignature(sh: Column, numHashes: Int = 16): Column =
-    transform(
-      sequence(lit(0), lit(numHashes - 1)),
-      seed => array_min(transform(sh, s => xxhash64(seed, s))))
-
-  private val MersennePrime31 = 2147483647L
-
-  /** MinHash signatures at scale: one xxhash64 per shingle (codegen'd,
-    * evaluated once via explode), `numHashes` affine-seeded minima as plain
-    * aggregates, reassembled into (doc_id, sig array<long>). One shuffle. */
-  def minHashTable(docs: DataFrame, numHashes: Int = 16,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val M = MersennePrime31
-    val shingleRows = docs
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
-      .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"), explode(shingles(col("toks"))).as("sh"))
-      .select(col("doc_id"), (pmod(xxhash64(col("sh")), lit(M))).as("h"))
-    val minCols = (0 until numHashes).map(seed =>
-      min((col("h") * (seed * 2 + 1) + seed * 1000003L) % M).as(s"m$seed"))
-    shingleRows
-      .groupBy(col("doc_id"))
-      .agg(minCols.head, minCols.tail: _*)
-      .select(col("doc_id"),
-        array((0 until numHashes).map(i => col(s"m$i")): _*).as("sig"))
-  }
-
-  /** LSH band digests from a signature: `bands` hashes of `rowsPerBand`
-    * consecutive signature slots. */
-  def lshBands(sig: Column, bands: Int = 4, rowsPerBand: Int = 4): Column =
-    transform(
-      sequence(lit(0), lit(bands - 1)),
-      b => struct(
-        b.as("band_id"),
-        xxhash64(b, array_join(transform(
-          slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)),
-          x => x.cast("string")), "|")).as("band_hash")))
 
   /** Incremental (snapshot-over-snapshot) exact dedup: the re-crawl
     * pattern — keep each incoming doc only if (a) it is the min-id
@@ -292,11 +204,6 @@ object Text {
           .as("contaminated_frac"))
   }
 
-  /** Exact-duplicate groups: one row per distinct content, keeper = min id. */
-  def exactDedup(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    docs.groupBy(xxhash64(col(textCol)).as("fingerprint"))
-      .agg(min(col(idCol)).as("keeper_id"), count(lit(1)).as("n_copies"))
-
   /** Canonical text for normalization-robust dedup (the CCNet/RefinedWeb
     * move: normalize BEFORE fingerprinting, so case, punctuation, and
     * whitespace variants of the same content collapse to one hash):
@@ -309,31 +216,6 @@ object Text {
   def canonicalText(text: Column): Column =
     trim(regexp_replace(
       regexp_replace(lower(text), "[^a-z0-9\\s]", " "), "\\s+", " "))
-
-  /** MinHash+LSH near-duplicate pairs with exact Jaccard verification.
-    * Returns (doc_a, doc_b, jaccard >= threshold). */
-  def nearDupPairs(
-      docs: DataFrame,
-      threshold: Double = 0.5,
-      numHashes: Int = 16,
-      bands: Int = 4): DataFrame = {
-    val base = minHashTable(docs, numHashes)
-    val banded = base.select(
-      col("doc_id"),
-      explode(lshBands(col("sig"), bands, numHashes / bands)).as("band"))
-      .select(col("doc_id"), col("band.band_id"), col("band.band_hash"))
-    // bucket-combination form: signatures evaluated once, one groupBy
-    // shuffle on the band key; a self-join would recompute them per side
-    val pairs = bucketPairs(banded, Seq("band_id", "band_hash"))
-    val tokset = docs.select(col("doc_id"), array_distinct(tokens(col("text"))).as("toks"))
-    val jac = size(array_intersect(col("ta.toks"), col("tb.toks"))).cast("double") /
-      size(array_union(col("ta.toks"), col("tb.toks")))
-    pairs
-      .join(tokset.as("ta"), col("doc_a") === col("ta.doc_id"))
-      .join(tokset.as("tb"), col("doc_b") === col("tb.doc_id"))
-      .select(col("doc_a"), col("doc_b"), jac.as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
 
   /** English stopword markers present in the synthetic corpus vocabulary;
     * real deployments swap in per-language stopword lists. */
@@ -612,29 +494,6 @@ object Text {
           .as("lm_score"))
   }
 
-  /** 64-bit SimHash per document (token-level, xxhash64 bit votes). */
-  def simHash64(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val tok = docs
-      .select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("tok"))
-      .withColumn("hv", xxhash64(col("tok")))
-    // round-13: 64 conditional sums in ONE aggregate instead of a 64×
-    // row explode through a two-level aggregate — same ±1 vote totals
-    // per (doc, bit), same reassembled hash, 64× fewer aggregate rows
-    // (the q22 rewrite; measured −30% there at sf0.1).
-    val votes = (0 until 64).map(b =>
-      sum(when(expr(s"(hv >> $b) & 1") === 1, lit(1)).otherwise(lit(-1)))
-        .as(s"s$b"))
-    tok.groupBy(col("doc_id"))
-      .agg(votes.head, votes.tail: _*)
-      .select(col("doc_id"),
-        (0 until 64).map(b =>
-          when(col(s"s$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-          .reduce(_ + _).as("simhash"))
-  }
-
-  /** Hamming distance between two 64-bit simhashes. */
-  def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
   /** Connected components over an undirected edge list: returns
     * (node, component) where `component` is the SMALLEST node id in the
     * node's component — the canonical cluster id for dedup. Only nodes
@@ -703,7 +562,7 @@ object Text {
   }
 
   /** Cluster resolution for a dedup pipeline: candidate pairs (from
-    * `nearDupPairs` / `simHashPairs` / exact fingerprints) → one row per
+    * MinHash/SimHash banding or exact fingerprints) → one row per
     * document with its cluster id (min doc id of the connected
     * component; singletons cluster with themselves), the cluster size,
     * and whether this document is the canonical keeper. Filtering on
@@ -729,29 +588,6 @@ object Text {
       .select(
         col(idCol), col("cluster_id"), col("cluster_size"),
         (col(idCol) === col("cluster_id")).as("is_keeper"))
-  }
-
-  /** SimHash near-dup pairs: band the 64 bits into `bands` chunks, join on
-    * any equal chunk (guarantees recall for hamming <= bands-1), verify by
-    * exact hamming. */
-  def simHashPairs(sim: DataFrame, maxHamming: Int = 3, bands: Int = 4): DataFrame = {
-    val width = 64 / bands
-    val mask = if (width == 64) -1L else (1L << width) - 1
-    val chunks = (0 until bands).map(b => struct(
-      lit(b).as("band_id"),
-      shiftright(col("simhash"), b * width).bitwiseAND(lit(mask)).as("chunk")))
-    val banded = sim.select(
-      col("doc_id"), explode(array(chunks: _*)).as("p"))
-      .select(col("doc_id"), col("p.band_id"), col("p.chunk"))
-    // candidates via bucket combos, then hamming verify by joining the
-    // per-doc simhash back (persist `sim` upstream if it is expensive —
-    // each join branch re-evaluates its input plan)
-    bucketPairs(banded, Seq("band_id", "chunk"))
-      .join(sim.select(col("doc_id").as("doc_a"), col("simhash").as("sim_a")), Seq("doc_a"))
-      .join(sim.select(col("doc_id").as("doc_b"), col("simhash").as("sim_b")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        hamming64(col("sim_a"), col("sim_b")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
   }
 
   /** PPJoin candidate pairs — EXACT-recall prefix filtering for the

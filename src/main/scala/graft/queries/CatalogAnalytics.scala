@@ -328,9 +328,7 @@ private[queries] object CatalogAnalytics {
     * vectors (odd vec_id) whose cosine against any train vector (even
     * vec_id) of the same label reaches 0.4 — with best-match id, max
     * cosine, and hit count. q58 answers this for exact token spans; this
-    * catches the paraphrased leak spans can't. The LSH-bucketed scale
-    * path (Similarity.lshContaminated — no train×eval cross join) is
-    * recall-floor-pinned against this exact form in TextSimilaritySpec. */
+    * catches the paraphrased leak spans can't. */
   private val q77 = Q(
     "q77_semantic_contamination",
     (s, d) => {

@@ -54,8 +54,8 @@ private[queries] object CatalogNorthStar {
     * self-join for candidates → exact Jaccard verification at 0.5.
     * The md5-hex→int64 hash is engine-independent (Spark murmur and DuckDB
     * hash() are not). Production note (100 TB): swap md5 for xxhash64
-    * (graft.ops.Text.minHashSignatures) and the self-join stays on band
-    * buckets — shuffle is O(docs×bands), never O(docs²). */
+    * and the self-join stays on band buckets — shuffle is O(docs×bands),
+    * never O(docs²). */
   private val q21 = Q(
     "q21_minhash_lsh",
     (s, d) => {
@@ -202,7 +202,7 @@ private[queries] object CatalogNorthStar {
       FROM bits GROUP BY doc_id"""))
 
   /** Brute-force cosine top-k over embeddings (the correctness baseline for
-    * ANN; the LSH-bucketed scale path is graft.ops.Similarity.lshCosineTopK).
+    * ANN; `graft.ops.Similarity.bruteForceTopK` is its library form).
     * Dot products in double via zip_with+aggregate — no UDF, stays codegen'd. */
   private val q23 = Q(
     "q23_cosine_topk",
@@ -701,7 +701,7 @@ private[queries] object CatalogNorthStar {
 
   /** Embedding-cosine near-dup pairs, metadata-blocked: candidate pairs
     * share a label (the blocking key — at 100 TB this is an LSH bucket or
-    * IVF cell, see graft.ops.Similarity.lshCosineTopK), then exact cosine
+    * k-means cell, see graft.ops.SemDedup), then exact cosine
     * filters. Threshold 0.45 sits just under this corpus's in-label max. */
   private val q32 = Q(
     "q32_embedding_neardup",

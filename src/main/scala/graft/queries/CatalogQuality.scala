@@ -1020,9 +1020,9 @@ private[queries] object CatalogQuality {
     * points), which pins the whole typed-Dataset pipeline — encode,
     * per-partition decode, histogram, dimension arithmetic — against an
     * engine with none of that machinery. The hash uses the exact integer
-    * rule 16·hist[i] > total (the boundary-safe twin of
-    * `Multimodal.perceptualHash`'s float-mean form, which the spec covers);
-    * the histogram emits as a '|'-joined string (the q107 array rule). */
+    * rule 16·hist[i] > total (bit i set when bin i exceeds the mean bin
+    * mass); the histogram emits as a '|'-joined string (the q107 array
+    * rule). */
   private val q151 = Q(
     "q151_media_decode",
     (s, d) => {

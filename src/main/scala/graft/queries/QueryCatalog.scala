@@ -9,7 +9,7 @@ import graft.sources.Tables
   * SURVEY.md §2 plus the north-star LLM-pipeline operators (§2.11), each
   * paired with ANSI SQL that DuckDB executes over the same parquet tables.
   *
-  * The 220 queries live in eight family files (round-8 split of the
+  * The queries live in eight family files (round-8 split of the
   * former single 7k-line file) — [[CatalogParity]], [[CatalogNorthStar]],
   * [[CatalogPipelines]], [[CatalogAnalytics]], [[CatalogSqlSurface]],
   * [[CatalogQuality]], [[CatalogEval]], [[CatalogGovernance]] — and are

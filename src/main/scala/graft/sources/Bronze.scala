@@ -61,8 +61,6 @@ object Bronze {
     df.write.mode("overwrite").json(path)
   def writeCsv(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").option("header", "true").csv(path)
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
 
   /** K2, ORC variant — same columnar/zone-map properties as parquet
     * (predicate pushdown, column pruning, splittable), built into Spark
@@ -82,26 +80,6 @@ object Bronze {
       df: DataFrame, path: String, partitionBy: Seq[String]): Unit =
     df.write.mode("overwrite").partitionBy(partitionBy: _*).parquet(path)
 
-  /** K2 at scale, join-side layout — bucketed table write: hash-bucket
-    * (and sort) rows by the join/aggregation key at WRITE time, so every
-    * later equi-join or groupBy on that key between same-bucketed tables
-    * runs with NO shuffle exchange at all — the one-off write-side shuffle
-    * is amortized over every downstream read. This is the 100 TB answer
-    * for fact⋈fact joins where neither side broadcasts (customer⋈orders,
-    * orders⋈lineitem): co-locate once, join forever. Requires a table
-    * catalog (`saveAsTable` — bucketing metadata lives in the metastore;
-    * plain `.parquet(path)` cannot carry it). PlanShapeSpec proves the
-    * exchange-free join plan. */
-  def writeBucketed(
-      df: DataFrame, table: String, bucketCols: Seq[String], numBuckets: Int,
-      sortCols: Seq[String] = Nil): Unit = {
-    require(bucketCols.nonEmpty, "writeBucketed needs at least one bucket column")
-    val w = df.write.mode("overwrite")
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
-      .format("parquet").saveAsTable(table)
-  }
-
   /** Gold Delta write — ENVIRONMENT-DEFERRED: the reference's downstream
     * stores gold as Delta in a catalog (README.md:86-87,111). The call
     * shape compiles against plain Spark (format is resolved at runtime),
@@ -113,29 +91,5 @@ object Bronze {
   def writeDelta(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
     val w = df.write.format("delta").mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).save(path)
-  }
-
-  /** Delta MERGE upsert — ENVIRONMENT-DEFERRED (same jar caveat). The W2
-    * "latest crawl wins" gold upsert (Core.dedupLatest's storage twin) as
-    * the SQL MERGE a cluster user runs: `updates` must be a registered
-    * temp view, `target` a Delta table name. Built as SQL text so the
-    * shape ships without the DeltaTable API on the compile classpath.
-    *
-    * PRECONDITION: `updatesView` must carry at most ONE row per key —
-    * Delta MERGE throws on multiple source matches. Apply
-    * `Core.dedupLatest(updates, keyCols, orderCol)` before registering
-    * the view. Column identifiers are backtick-quoted; the target/view
-    * names are caller-controlled table identifiers (possibly
-    * catalog.schema.table) and pass through verbatim. */
-  def mergeLatestWins(
-      spark: SparkSession, target: String, updatesView: String,
-      keyCols: Seq[String], orderCol: String): Unit = {
-    def q(c: String) = "`" + c.replace("`", "``") + "`"
-    val on = keyCols.map(k => s"t.${q(k)} = u.${q(k)}").mkString(" AND ")
-    spark.sql(
-      s"""MERGE INTO $target t USING $updatesView u ON $on
-         |WHEN MATCHED AND u.${q(orderCol)} > t.${q(orderCol)} THEN UPDATE SET *
-         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    ()
   }
 }

@@ -6,8 +6,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured-Streaming surface (SURVEY.md §2.9).
   *
@@ -21,7 +20,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    (at-least-once delivery dedup — drop re-deliveries of the same
   *    event) and `latestPerUser` (true latest-wins state per user via
   *    mapGroupsWithState, robust to out-of-order arrival);
-  *  - beyond-reference: `sessionize` shows the custom-state path
+  *  - beyond-reference: `sessionizeEventTime` shows the custom-state path
   *    (flatMapGroupsWithState) a 100 TB pipeline uses for sessionization.
   *
   * All transforms take a (possibly streaming) DataFrame, so batch tests
@@ -256,49 +255,7 @@ object Events {
       }
   }
 
-  /** Running per-user aggregate state for [[runningUserStats]]. */
-  case class UserStats(user_id: Long, n_events: Long, total_value: Double, last_ms: Long)
-
-  /** Spark 4 `transformWithState` processor: the modern arbitrary-state
-    * API (SPARK-46815) that replaces the `(flat)mapGroupsWithState` pair
-    * used above — typed named state handles (value/list/map) with
-    * per-state TTL, timers decoupled from output mode, and schema
-    * evolution on the state store. Kept alongside the legacy forms so
-    * both API generations are covered; requires the RocksDB state store
-    * provider (the in-memory/HDFS provider rejects it). */
-  private class RunningStatsProcessor
-      extends StatefulProcessor[Long, Ev, UserStats] {
-    @transient private var st: ValueState[UserStats] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[UserStats](
-        "stats", org.apache.spark.sql.Encoders.product[UserStats], TTLConfig.NONE)
-    override def handleInputRows(
-        key: Long, rows: Iterator[Ev], tv: TimerValues): Iterator[UserStats] = {
-      val prev =
-        if (st.exists()) st.get()
-        else UserStats(key, 0L, 0.0, Long.MinValue)
-      val next = rows.foldLeft(prev)((a, e) => UserStats(
-        key, a.n_events + 1, a.total_value + e.value,
-        math.max(a.last_ms, e.ts.getTime)))
-      st.update(next)
-      Iterator.single(next)
-    }
-  }
-
-  /** Running per-user event count / value sum / last-seen through
-    * `transformWithState` — one updated row per user per micro-batch.
-    * State is one fixed-size record per user in RocksDB (bound it with a
-    * `TTLConfig` duration when the user universe is unbounded). Works in
-    * batch mode too (Spark plans it as a regular aggregation pass), which
-    * is what the batch==streaming spec pins. */
-  def runningUserStats(events: Dataset[Ev]): Dataset[UserStats] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new RunningStatsProcessor, TimeMode.None(), OutputMode.Update())
-  }
-
   case class Ev(user_id: Long, ts: Timestamp, event_type: String, value: Double)
-  case class Session(user_id: Long, n_events: Long, total_value: Double, closed: Boolean)
   case class EvSession(
       user_id: Long, session_start: Timestamp, session_end: Timestamp,
       n_events: Long, total_value: Double)
@@ -327,7 +284,7 @@ object Events {
     * between a user's consecutive events exceeds `gapMs`, with closure
     * driven by the watermark (EventTimeTimeout) — so a replay of the same
     * input produces the same sessions regardless of arrival pacing, which
-    * the processing-time variant below cannot promise. Out-of-order rows
+    * a processing-time timeout cannot promise. Out-of-order rows
     * within the watermark merge into the right session (spans extend
     * backward); gap-separated rows split into distinct intervals; and a
     * session is EMITTED only once the watermark passes its end+gap — the
@@ -484,24 +441,6 @@ object Events {
       .drop(s"r_$key")
   }
 
-  /** Stream-static enrichment join — the silver-layer step the reference's
-    * ASA "simple transform" stage performs against reference data
-    * (README.md:66-83): every micro-batch of the stream joins the STATIC
-    * dimension (broadcast when small — the planner sees a bounded batch
-    * relation, so the usual threshold applies). Stateless by contract:
-    * unlike stream-stream joins, no watermark and no join state exist.
-    * Dim-refresh caveat (measured, not assumed): a PLAIN-PARQUET static
-    * side does NOT see files changed after query start — the listing is
-    * frozen at plan time, and an overwrite mid-stream fails the query
-    * with FAILED_READ_FILE. Live dim refresh needs a snapshot-isolated
-    * table format (Delta — environment-deferred here) or a re-read
-    * inside foreachBatch (the `upsertSink` pattern). Left join keeps
-    * unmatched stream rows with null dim columns — fact rows must never
-    * be dropped by incomplete reference data (P7's left-mode rule). */
-  def enrichStream(stream: DataFrame, dim: DataFrame,
-      keys: Seq[String], joinType: String = "left"): DataFrame =
-    stream.join(dim, keys, joinType)
-
   /** K2+ as an executable sink: foreachBatch + latest-wins upsert
     * (`Core.upsert`) into a parquet target, made idempotent against batch
     * replays by recording the last applied batchId beside the data — a
@@ -589,31 +528,5 @@ object Events {
       Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
     }
     curData.filter(_.exists).foreach(rm)
-  }
-
-  /** Custom-state sessionization: per-user running aggregate that emits a
-    * closed session after `gapMs` of processing-time silence. */
-  def sessionize(events: Dataset[Ev], gapMs: Long = 60000): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Session, Session](
-        OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout()) {
-        (userId: Long, rows: Iterator[Ev], state: GroupState[Session]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(s.copy(closed = true))
-          } else {
-            val prev = state.getOption.getOrElse(Session(userId, 0L, 0.0, closed = false))
-            val batch = rows.toSeq
-            val next = prev.copy(
-              n_events = prev.n_events + batch.size,
-              total_value = prev.total_value + batch.map(_.value).sum)
-            state.update(next)
-            state.setTimeoutDuration(gapMs)
-            Iterator.empty
-          }
-      }
   }
 }

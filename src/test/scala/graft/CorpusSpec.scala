@@ -167,53 +167,6 @@ class CorpusSpec extends SparkSpec {
       s"frequent-bigram doc must score higher: $rows")
   }
 
-  test("observeQuality rides an existing action and reports exact one-pass metrics") {
-    val (out, obs) = Corpus.observeQuality(docs)
-    out.collect() // the action the pipeline was running anyway
-    val m = obs.get
-    assert(m("n_rows") == docs.count())
-    assert(m("n_text_nonnull") ==
-      docs.filter(col("text").isNotNull).count())
-    val exactAvg = docs.agg(avg(length(col("text")))).head().getDouble(0)
-    assert(math.abs(m("avg_chars").asInstanceOf[Double] - exactAvg) < 1e-9)
-    assert(m("n_short") ==
-      docs.filter(length(col("text")) < 20).count())
-    // custom metric set replaces the documents-shaped defaults
-    val (out2, obs2) = Corpus.observeQuality(
-      docs, "custom", Seq(max(col("doc_id")).as("max_id")))
-    out2.collect()
-    assert(obs2.get("max_id") == docs.agg(max(col("doc_id"))).head().getLong(0))
-  }
-
-  test("compact sizes the shuffle to the byte target, capped and guarded") {
-    val bytes = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-    // a target far above the corpus size compacts to a single partition
-    assert(Corpus.compact(docs, bytes.toLong * 10).rdd.getNumPartitions == 1)
-    // a quarter-size target asks for ceil(bytes / (bytes/4)) = 4-ish
-    val n = Corpus.compact(docs, (bytes / 4).toLong.max(1L)).rdd.getNumPartitions
-    assert(n >= 4 && n <= 5, s"got $n")
-    // the cap bounds a pathological estimate; bad target raises
-    assert(Corpus.compact(docs, 1L, maxPartitions = 8).rdd.getNumPartitions == 8)
-    intercept[IllegalArgumentException](Corpus.compact(docs, 0L))
-  }
-
-  test("sortedLayout yields globally ordered, disjoint partition ranges") {
-    import org.apache.spark.sql.functions._
-    val docs = graft.sources.Tables.documents(spark, sf())
-    val laid = graft.ops.Corpus.sortedLayout(docs, Seq("doc_id"), 4)
-    assert(laid.queryExecution.toString.contains("rangepartitioning"),
-      laid.queryExecution.toString.take(500))
-    // partition min/max ranges must be disjoint and ordered => global order
-    val ranges = laid
-      .select(spark_partition_id().as("pid"), col("doc_id"))
-      .groupBy("pid").agg(min("doc_id").as("lo"), max("doc_id").as("hi"))
-      .orderBy("pid").collect()
-      .map(r => (r.getAs[Long]("lo"), r.getAs[Long]("hi")))
-    ranges.zip(ranges.drop(1)).foreach { case ((_, hi), (lo2, _)) =>
-      assert(hi <= lo2, ranges.mkString(", "))
-    }
-  }
-
   test("z_value interleaves correctly and clusters aligned quadrants") {
     import org.apache.spark.sql.functions._
     import graft.functions.ZOrder

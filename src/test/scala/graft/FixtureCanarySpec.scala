@@ -38,7 +38,7 @@ class FixtureCanarySpec extends SparkSpec {
   }
 
   test("canary: embeddings are 64-dim — the similarity family's assumed width") {
-    // pqTrainCodebooks/lshBucket/ivfCosineTopK all default to dim=64; a
+    // pqTrainCodebooks and the centroid artifacts assume dim=64; a
     // driver-side regeneration at another width must fail HERE by name,
     // not as 20 cryptic similarity failures
     val dims = graft.sources.Tables.embeddings(spark, sf())

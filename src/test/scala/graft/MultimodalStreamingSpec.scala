@@ -26,85 +26,6 @@ class MultimodalStreamingSpec extends SparkSpec {
     assert(meta.filter($"doc_id" === 0L).head().getAs[Long]("n_bytes") == 11L)
   }
 
-  test("multimodal: stubbed decode + features are deterministic, L1-normalized") {
-    val f1 = Multimodal.pipeline(spark, docs).collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[scala.collection.Seq[Double]]("feature")).toMap
-    val f2 = Multimodal.pipeline(spark, docs).collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[scala.collection.Seq[Double]]("feature")).toMap
-    assert(f1 == f2)
-    assert(f1(0L).size == 16)
-    assert(math.abs(f1(0L).sum - 1.0) < 1e-9)
-  }
-
-  test("enrichStream: stream-static join equals batch, keeps unmatched rows") {
-    implicit val sqlCtx = spark.sqlContext
-    val dim = Seq(("click", "engagement"), ("purchase", "revenue"))
-      .toDF("event_type", "category") // no row for "view": left join must keep it
-    val rows = Seq(
-      (0L, Timestamp.valueOf("2024-01-01 00:00:00"), 1L, "click", 1.0),
-      (1L, Timestamp.valueOf("2024-01-01 00:01:00"), 2L, "view", 2.0),
-      (2L, Timestamp.valueOf("2024-01-01 00:02:00"), 1L, "purchase", 4.0))
-    val batch = Events.enrichStream(
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value"), dim,
-      keys = Seq("event_type"))
-      .select($"event_id", $"category").orderBy($"event_id").collect()
-      .map(r => (r.getLong(0), Option(r.getString(1))))
-    assert(batch.toSeq == Seq(
-      (0L, Some("engagement")), (1L, None), (2L, Some("revenue"))))
-
-    val stream = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    stream.addData(rows: _*)
-    val sdf = stream.toDF().toDF("event_id", "ts", "user_id", "event_type", "value")
-    // stateless: legal in append mode with NO watermark on either side
-    val q = Events.enrichStream(sdf, dim, keys = Seq("event_type"))
-      .select($"event_id", $"category")
-      .writeStream.format("memory").queryName("ss_join").outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    q.stop()
-    val streamGot = spark.sql("SELECT * FROM ss_join").orderBy($"event_id")
-      .collect().map(r => (r.getLong(0), Option(r.getString(1))))
-    assert(streamGot.toSeq == batch.toSeq)
-  }
-
-  test("multimodal: frame sampling batch shape") {
-    val frames = Multimodal.frameSample(Multimodal.attachPayload(docs), stride = 4)
-    val h = frames.filter($"doc_id" === 1L).head().getAs[scala.collection.Seq[Array[Byte]]]("frames")
-    assert(h.size == 38 / 4)
-    assert(h.forall(_.length == 1))
-  }
-
-  test("multimodal: perceptual-hash near-dup finds the duplicate, prunes the rest") {
-    val media = Seq(
-      (100L, "aaaa bbbb cccc dddd eeee"),
-      (101L, "aaaa bbbb cccc dddd eeee!"), // near-identical byte histogram
-      (102L, "zzzzzzzzzzzzzzzzzzzzzzzzz")  // disjoint byte range
-    ).toDF("doc_id", "text")
-    val feats = Multimodal.features(Multimodal.decode(
-      Multimodal.attachPayload(media).as[Multimodal.MediaRecord]))
-    val pairs = Multimodal.nearDupPairs(
-      Multimodal.perceptualHash(feats), featureDim = 16, maxL1 = 0.2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // the 16-bin stub gives one 16-bit band: only the identical-hash pair
-    // is a candidate, and its exact L1 confirms it
-    assert(pairs == Set((100L, 101L)))
-  }
-
-  test("multimodal: 8-bit bands tolerate a hash-bit flip that 16-bit blocking misses") {
-    // hand-built hashed frame: a/b differ in ONE low-byte hash bit with
-    // near-identical features; c is far from both
-    val fa = Array(0.5, 0.5) ++ Array.fill(14)(0.0)
-    val fb = Array(0.52, 0.48) ++ Array.fill(14)(0.0)
-    val fc = Array.fill(14)(0.0) ++ Array(0.5, 0.5)
-    val hashed = Seq(
-      (1L, 0x00FFL, fa.toSeq), (2L, 0x00FEL, fb.toSeq), (3L, 0xFF00L, fc.toSeq)
-    ).toDF("doc_id", "phash", "feature")
-    def run(bb: Int) = Multimodal.nearDupPairs(hashed, featureDim = 16, maxL1 = 0.2, bandBits = bb)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(run(16) == Set.empty) // single 16-bit band: the flip blocks the pair
-    assert(run(8) == Set((1L, 2L))) // shared high byte -> candidate -> L1 verifies
-  }
-
   // ------------------------------------------------------------- streaming
 
   private def ev(id: Long, user: Long, t: String, typ: String, v: Double) =
@@ -170,42 +91,6 @@ class MultimodalStreamingSpec extends SparkSpec {
       .orderBy($"user_id", $"session_start").collect()
       .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2), r.getLong(3), r.getDouble(4)))
     assert(got.toSeq == batch.toSeq, "streaming session merge diverged from batch")
-  }
-
-  test("runningUserStats: transformWithState running totals converge to batch aggregates") {
-    // transformWithState requires the RocksDB state store provider —
-    // isolated SQLConf so the provider swap can't leak into (or be
-    // clobbered by) concurrently-running streaming suites
-    val s = isolated("spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val sqlCtx = s.sqlContext
-    def e(u: Long, t: String, v: Double) =
-      Events.Ev(u, Timestamp.valueOf(t), "click", v)
-    val batch1 = Seq(e(1, "2024-01-01 00:00:00", 1.0), e(2, "2024-01-01 00:01:00", 4.0))
-    val batch2 = Seq(e(1, "2024-01-01 00:05:00", 2.0), e(1, "2024-01-01 00:04:00", 8.0))
-    val stream = MemoryStream[Events.Ev]
-    val q = Events.runningUserStats(stream.toDS()).toDF().writeStream
-      .format("memory").queryName("tws_out").outputMode("update")
-      .start()
-    // stop in a finally: if processAllAvailable throws, a still-running
-    // RocksDB-backed query would leak into subsequent streaming tests
-    try {
-      // two explicit micro-batches so the running (not final-only)
-      // emission is observable
-      stream.addData(batch1: _*)
-      q.processAllAvailable()
-      stream.addData(batch2: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    // update mode emits one row per user per batch; the LAST (max
-    // n_events — monotone) row per user is the converged state
-    val last = s.sql("SELECT * FROM tws_out")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-      .groupBy(_._1).map { case (u, a) => u -> a.maxBy(_._2) }
-    assert(last(1L) == ((1L, 3L, 11.0, Timestamp.valueOf("2024-01-01 00:05:00").getTime)))
-    assert(last(2L) == ((2L, 1L, 4.0, Timestamp.valueOf("2024-01-01 00:01:00").getTime)))
-    // and user 1 was emitted in BOTH batches (running, not final-only)
-    assert(s.sql("SELECT count(*) FROM tws_out WHERE user_id = 1").head().getLong(0) == 2L)
   }
 
   test("T2 file-source stream over the real events fixture matches batch") {
@@ -657,22 +542,5 @@ class MultimodalStreamingSpec extends SparkSpec {
     val got = spark.sql("SELECT event_type FROM bloom_fresh")
       .collect().map(_.getString(0)).toSet
     assert(got == Set("new_x", "new_y"), got.toString)
-  }
-
-  test("sessionize: custom state keeps sessions open until timeout") {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Events.Ev]
-    stream.addData(
-      Events.Ev(1L, Timestamp.valueOf("2024-01-01 00:00:00"), "click", 1.0),
-      Events.Ev(1L, Timestamp.valueOf("2024-01-01 00:00:30"), "click", 2.0))
-    // AvailableNow: drain the queued batch then stop (processAllAvailable
-    // never settles under ProcessingTimeTimeout's continuous batch clock)
-    val q = Events.sessionize(stream.toDS()).writeStream
-      .format("memory").queryName("sessions_out").outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(30000)
-    // sessions still open (no timeout fired) -> append output empty
-    assert(spark.sql("SELECT * FROM sessions_out").count() == 0)
-    q.stop()
   }
 }

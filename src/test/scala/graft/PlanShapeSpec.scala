@@ -108,42 +108,6 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
-  test("bucketed tables join and aggregate with zero shuffle exchanges") {
-    import org.apache.spark.sql.functions._
-    import graft.sources.Tables
-    // isolated SQLConf: forcing SMJ via a -1 broadcast threshold on the
-    // SHARED session races with every concurrently-planning suite
-    val s = isolated("spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    try {
-      val cust = Tables.customer(s, sf()).select("c_custkey", "c_name", "c_nationkey")
-      val ords = Tables.orders(s, sf()).select("o_custkey", "o_orderkey", "o_totalprice")
-      graft.sources.Bronze.writeBucketed(
-        cust, "bk_customer", Seq("c_custkey"), 4, Seq("c_custkey"))
-      graft.sources.Bronze.writeBucketed(
-        ords, "bk_orders", Seq("o_custkey"), 4, Seq("o_custkey"))
-      val joined = s.table("bk_customer").join(
-        s.table("bk_orders"), col("c_custkey") === col("o_custkey"))
-        .groupBy(col("c_custkey")).agg(count(lit(1)).as("n"))
-      // collect() drives THIS Dataset's QueryExecution (count() would
-      // build a different one), so the AQE-finalized plan is inspectable
-      val n = joined.collect().length.toLong
-      val plan = joined.queryExecution.executedPlan.toString
-      // co-located: the join AND the groupBy on the bucket key reuse the
-      // write-time layout — no runtime exchange of ANY kind in the plan.
-      // The shuffle node prints as "Exchange hashpartitioning(...)" (its
-      // nodeName is "Exchange", not "ShuffleExchange") and broadcast is
-      // off via the -1 threshold, so any "Exchange" occurrence is a
-      // regression.
-      assert(!plan.contains("Exchange"), plan)
-      assert(plan.contains("SortMergeJoin"), plan)
-      assert(n == cust.join(ords, col("c_custkey") === col("o_custkey"))
-        .select("c_custkey").distinct().count())
-    } finally {
-      s.sql("DROP TABLE IF EXISTS bk_customer")
-      s.sql("DROP TABLE IF EXISTS bk_orders")
-    }
-  }
-
   test("q52: redaction is pure map work — zero exchanges, one codegen stage") {
     val p = plan("q52_redact_pii")
     assert(!p.contains("Exchange"), p)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{BloomFilter, CountMin, DistinctSketch, QuantileSketch, SketchMerge, ThetaSketch}
+import graft.functions.{BloomFilter, CountMin, DistinctSketch, QuantileSketch, ThetaSketch}
 
 /** Sketch-of-sketches re-aggregation: per-day partial sketches persisted
   * to parquet and merged later must answer like a single pass over the
@@ -25,8 +25,8 @@ class SketchMergeSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("sketches").toString
     perDay.write.mode("overwrite").parquet(dir)
     val merged = spark.read.parquet(dir).agg(
-      SketchMerge.cms_merge(col("cms")).as("cms"),
-      SketchMerge.bloom_merge(col("bloom")).as("bloom")).head()
+      call_function("cms_merge", col("cms")).as("cms"),
+      call_function("bloom_merge", col("bloom")).as("bloom")).head()
     val single = daily.agg(
       CountMin.cms_agg(col("key"), 256, 4).as("cms"),
       BloomFilter.bloom_agg(col("key")).as("bloom")).head()
@@ -40,7 +40,7 @@ class SketchMergeSpec extends SparkSpec {
     graft.plans.GraftExtensions.install(spark)
     val perDay = daily.groupBy("day").agg(
       QuantileSketch.kll_agg(col("v"), 8192).as("sk"))
-    val merged = perDay.agg(SketchMerge.kll_merge(col("sk")).as("sk"))
+    val merged = perDay.agg(call_function("kll_merge", col("sk")).as("sk"))
       .select(
         QuantileSketch.kll_n(col("sk")).as("n"),
         QuantileSketch.kll_quantile(col("sk"), 0.5).as("med")).head()
@@ -55,7 +55,7 @@ class SketchMergeSpec extends SparkSpec {
     val perDay = daily.groupBy("day").agg(
       ThetaSketch.theta_sketch(col("key")).as("sk"))
     val est = perDay.agg(
-      ThetaSketch.theta_estimate(SketchMerge.theta_merge(col("sk"))).as("n")).head()
+      ThetaSketch.theta_estimate(call_function("theta_merge", col("sk"))).as("n")).head()
     assert(est.getDouble(0) == 700.0) // 700 distinct keys across the days
   }
 
@@ -66,12 +66,12 @@ class SketchMergeSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("hllsketches").toString
     perDay.write.mode("overwrite").parquet(dir)
     val est = spark.read.parquet(dir).agg(
-      DistinctSketch.hll_estimate(SketchMerge.hll_merge(col("sk"))).as("n")).head()
+      DistinctSketch.hll_estimate(call_function("hll_merge", col("sk"))).as("n")).head()
     assert(est.getLong(0) == 700L) // sparse regime: exact across days
     // dense path: tiny sparseLimit forces registers; merged estimate ~ exact
     val dense = daily.groupBy("day")
       .agg(DistinctSketch.hll_sketch(col("key"), 14, 8).as("sk"))
-      .agg(DistinctSketch.hll_estimate(SketchMerge.hll_merge(col("sk"))).as("n"))
+      .agg(DistinctSketch.hll_estimate(call_function("hll_merge", col("sk"))).as("n"))
       .head().getLong(0)
     assert(math.abs(dense - 700L) < 0.03 * 700, s"dense merged estimate $dense")
     // precision mismatch refuses rather than corrupting registers
@@ -80,7 +80,7 @@ class SketchMergeSpec extends SparkSpec {
     val b = daily.filter(col("day") === 1)
       .agg(DistinctSketch.hll_sketch(col("key"), 12).as("sk"))
     val e = intercept[Exception] {
-      a.union(b).agg(SketchMerge.hll_merge(col("sk"))).head()
+      a.union(b).agg(call_function("hll_merge", col("sk"))).head()
     }
     assert(msgs(e).exists(_.contains("hll merge precision mismatch")), msgs(e))
   }
@@ -101,16 +101,16 @@ class SketchMergeSpec extends SparkSpec {
         when(col("g") === 0, lit(CountMin.serialize(new CountMin.Buffer(256, 4))))
           .otherwise(lit(CountMin.serialize(new CountMin.Buffer(512, 4)))))
     val e = intercept[Exception] {
-      mixed.agg(SketchMerge.cms_merge(col("cms"))).head()
+      mixed.agg(call_function("cms_merge", col("cms"))).head()
     }
     assert(msgs(e).exists(_.contains("cms merge shape mismatch")), msgs(e))
 
     val empty = daily.filter(col("day") === 99)
       .groupBy("day").agg(CountMin.cms_agg(col("key")).as("cms"))
-    assert(empty.agg(SketchMerge.cms_merge(col("cms"))).head().isNullAt(0))
+    assert(empty.agg(call_function("cms_merge", col("cms"))).head().isNullAt(0))
     // all-null sketch column also yields null
     val allNull = Seq(1, 2).toDF("x")
       .withColumn("cms", lit(null).cast("binary"))
-    assert(allNull.agg(SketchMerge.cms_merge(col("cms"))).head().isNullAt(0))
+    assert(allNull.agg(call_function("cms_merge", col("cms"))).head().isNullAt(0))
   }
 }

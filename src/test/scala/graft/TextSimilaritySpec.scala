@@ -2,79 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Similarity, Text}
+import graft.ops.Similarity
 
-/** North-star dedup/similarity library (the xxhash64 scale-path variants;
-  * the md5 oracle twins are covered by the driver's DuckDB gate). */
+/** North-star similarity library (cosine, brute-force top-k, int8 and
+  * product quantization) and two text-dedup catalog edge cases the
+  * DuckDB oracle comparison does not reach. */
 class TextSimilaritySpec extends SparkSpec {
   import spark.implicits._
-
-  private def docs = Seq(
-    (0L, "the quick brown fox jumps over the lazy dog"),
-    (1L, "the quick brown fox jumps over the lazy cat"), // near-dup of 0
-    (2L, "completely different content about spark engines and shuffles"),
-    (3L, "the quick brown fox jumps over the lazy dog"), // exact dup of 0
-    (4L, "tiny")                                          // < 3 tokens
-  ).toDF("doc_id", "text")
-
-  test("exactDedup: dup group collapses to keeper with count") {
-    val d = Text.exactDedup(docs)
-    assert(d.count() == 4) // 0&3 collapse
-    val grp = d.filter($"n_copies" === 2).head()
-    assert(grp.getAs[Long]("keeper_id") == 0L)
-  }
-
-  test("minhash signature: identical docs identical, near-dups close") {
-    val sig = docs.select($"doc_id",
-      Text.minHashSignature(Text.shingles(Text.tokens($"text"))).as("sig"))
-      .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[scala.collection.Seq[Long]]("sig")).toMap
-    assert(sig(0L) == sig(3L))
-    val agree = sig(0L).zip(sig(1L)).count { case (a, b) => a == b }
-    assert(agree >= 8, s"near-dups should agree on most minhashes, got $agree/16")
-  }
-
-  test("nearDupPairs: finds planted near-dup and exact dup, skips distinct") {
-    // 8 bands x 2 rows: high candidate recall at this tiny scale (banding
-    // is probabilistic; 4x4 happens to miss the 0.75-jaccard pair here)
-    val pairs = Text.nearDupPairs(docs, threshold = 0.5, numHashes = 16, bands = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((0L, 3L)))
-    assert(pairs.contains((0L, 1L)) || pairs.contains((1L, 3L)))
-    assert(!pairs.exists(p => p._1 == 2L || p._2 == 2L))
-  }
-
-  test("bucketPairs: over-cap bucket is chunked — bounded fan-out, no nulls") {
-    // 25 ids in one pathological bucket, cap 10 -> chunks of 10/10/5 ->
-    // 45+45+10 = 100 pairs instead of the quadratic C(25,2) = 300
-    val df = ((0L until 25L).map(i => ("b0", i)) :+ ("b1", 100L))
-      .toDF("bucket", "doc_id")
-    val pairs = Text.bucketPairs(df, Seq("bucket"), maxBucketSize = 10).collect()
-    assert(pairs.length == 100)
-    assert(pairs.forall(r => !r.isNullAt(0) && !r.isNullAt(1) && r.getLong(0) < r.getLong(1)))
-  }
-
-  test("bucketPairs: trailing singleton chunk emits nothing (11 ids, cap 10)") {
-    // guards the sequence(1, 0) counts-DOWN trap on a chunk of size 1
-    val df = (0L until 11L).map(i => ("b", i)).toDF("bucket", "doc_id")
-    val pairs = Text.bucketPairs(df, Seq("bucket"), maxBucketSize = 10).collect()
-    assert(pairs.length == 45)
-    assert(pairs.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
-  }
-
-  test("simHash64: exact dups equal, near-dups within small hamming") {
-    val sim = Text.simHash64(docs)
-    val m = sim.collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("simhash")).toMap
-    assert(m(0L) == m(3L))
-    val h01 = java.lang.Long.bitCount(m(0L) ^ m(1L))
-    val h02 = java.lang.Long.bitCount(m(0L) ^ m(2L))
-    assert(h01 < h02, s"near-dup hamming $h01 should beat distinct $h02")
-  }
-
-  test("simHashPairs: banding surfaces the exact-dup pair") {
-    val pairs = Text.simHashPairs(Text.simHash64(docs), maxHamming = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((0L, 3L)))
-  }
 
   test("cosine: identity is 1, orthogonal is 0") {
     val df = Seq(
@@ -97,136 +31,7 @@ class TextSimilaritySpec extends SparkSpec {
     assert(top.head.getAs[Long]("vec_id") == 1L)
   }
 
-  test("lshCosineTopK: identical vectors land in the same bucket and rank first") {
-    val emb = Seq(
-      (0L, Array.fill(8)(0.5f)),
-      (1L, Array.fill(8)(0.5f)),            // identical direction to 0
-      (2L, Array.tabulate(8)(i => if (i % 2 == 0) 1.0f else -1.0f))
-    ).toDF("vec_id", "embedding")
-    val top = Similarity.lshCosineTopK(emb, emb.filter($"vec_id" === 0L),
-      k = 1, numPlanes = 4, dim = 8).collect()
-    assert(top.nonEmpty && top.head.getAs[Long]("vec_id") == 1L)
-    assert(math.abs(top.head.getAs[Double]("sim") - 1.0) < 1e-12)
-  }
-
-  test("real embeddings: IVF recall beats single-cell probing and finds true neighbors") {
-    val emb = graft.sources.Tables.embeddings(spark, sf())
-    val queries = emb.filter($"vec_id" < 5)
-    val bf = Similarity.bruteForceTopK(emb, queries, 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // centroids fit on a 25% sample (the 100 TB path), recall@5 at nProbe=4
-    val ivf = Similarity.ivfCosineTopK(emb, queries, 5, nCells = 8, nProbe = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = (bf & ivf).size.toDouble / bf.size
-    assert(recall >= 0.4, s"IVF recall vs brute force = $recall")
-    // probing every cell makes IVF exhaustive -> must equal brute force
-    val full = Similarity.ivfCosineTopK(emb, queries, 5, nCells = 8, nProbe = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(full == bf, s"full-probe IVF != brute force: ${(bf diff full).size} missing")
-  }
-
-  test("IVF cell balancing changes no result, only the join partitioning") {
-    val emb = graft.sources.Tables.embeddings(spark, sf())
-    val queries = emb.filter($"vec_id" < 10)
-    def run(cap: Int) = Similarity
-      .ivfCosineTopK(emb, queries, 5, nCells = 4, nProbe = 2, maxCellSize = cap)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val plain = run(0)
-    // nCells=4 over ~500 vectors -> ~125/cell; cap 20 forces ~7-way splits
-    val balanced = run(20)
-    assert(balanced == plain, "sub-cell split must be result-invariant")
-  }
-
-  test("probeBuckets: flips are exact single bits at high plane indices") {
-    graft.plans.GraftExtensions.install(spark)
-    // 64 planes puts plane indices up to 63 in play — the old
-    // pow(2.0, p).cast(long) form saturates at p=63 (double 2^63 casts to
-    // Long.MaxValue, flipping 63 bits at once); shiftleft is exact
-    val df = Seq(Tuple1(Array.fill(8)(0.37f))).toDF("embedding")
-    val got = df.select(Similarity.probeBuckets(
-        Similarity.asDouble($"embedding"), numPlanes = 64, dim = 8,
-        extraProbes = 63).as("b"))
-      .head().getAs[scala.collection.Seq[Long]]("b")
-    val main = got.head
-    assert(got.size == 64)
-    got.tail.foreach { b =>
-      assert(java.lang.Long.bitCount(b ^ main) == 1,
-        s"probe $b differs from main $main in != 1 bit")
-    }
-  }
-
-  test("recall@10 floors at fixed parameters on real embeddings (regression gate)") {
-    // numeric floors pinned at these EXACT parameter settings on the
-    // committed sf0.001 fixture: a refactor that silently degrades either
-    // index (bucket math, probe selection, centroid assignment) fails here
-    // even if the weaker directional tests still pass
-    val emb = graft.sources.Tables.embeddings(spark, sf())
-    val queries = emb.filter($"vec_id" < 20)
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val bf = pairs(Similarity.bruteForceTopK(emb, queries, 10))
-    val lsh = pairs(Similarity.lshCosineTopK(emb, queries, 10, numPlanes = 4, extraProbes = 2))
-    val ivf = pairs(Similarity.ivfCosineTopK(emb, queries, 10, nCells = 8, nProbe = 4))
-    val lshRecall = (bf & lsh).size.toDouble / bf.size
-    val ivfRecall = (bf & ivf).size.toDouble / bf.size
-    info(f"recall@10: lsh=$lshRecall%.3f ivf=$ivfRecall%.3f")
-    // measured 0.355 / 0.815 on the committed fixture (deterministic:
-    // fixed planes, fixed KMeans seed); floors leave regression margin
-    assert(lshRecall >= 0.30, f"LSH recall@10 $lshRecall%.3f under floor")
-    assert(ivfRecall >= 0.70, f"IVF recall@10 $ivfRecall%.3f under floor")
-  }
-
-  test("real embeddings: LSH recall against brute force on sf0.001") {
-    val emb = graft.sources.Tables.embeddings(spark, sf())
-    val queries = emb.filter($"vec_id" < 5)
-    val bf = Similarity.bruteForceTopK(emb, queries, 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = Similarity.lshCosineTopK(emb, queries, 5, numPlanes = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = (bf & lsh).size.toDouble / bf.size
-    // random 64-dim embeddings are the worst case for sign-LSH (neighbors
-    // are barely above chance); this pins the plumbing + the tradeoff's
-    // direction, not production recall. numPlanes=2 -> 4 coarse buckets.
-    assert(recall >= 0.2, s"LSH recall vs brute force = $recall")
-    // multi-probe expands the candidate set -> recall can only improve
-    val mp = Similarity.lshCosineTopK(emb, queries, 5, numPlanes = 2, extraProbes = 1)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val mpRecall = (bf & mp).size.toDouble / bf.size
-    assert(mpRecall >= recall, s"multi-probe recall $mpRecall < single $recall")
-  }
-
-  test("lshContaminated: recall floor vs the exact cross join on real embeddings") {
-    import org.apache.spark.sql.functions._
-    val emb = graft.sources.Tables.embeddings(spark, sf())
-    val train = emb.filter($"vec_id" % 2 === 0)
-    val eval = emb.filter($"vec_id" % 2 === 1)
-    // exact contaminated set: full train×eval cosine at the same threshold
-    // (random 64-dim embeddings: 0.25 yields a usable planted-free set)
-    val t = train.select($"vec_id".as("train_id"),
-      Similarity.asDouble($"embedding").as("tv"))
-    val e = eval.select($"vec_id".as("eval_id"),
-      Similarity.asDouble($"embedding").as("qv"))
-    val exact = e.crossJoin(t)
-      .withColumn("sim",
-        graft.functions.VectorDot.vec_dot($"qv", $"tv") /
-          (sqrt(graft.functions.VectorDot.vec_dot($"qv", $"qv")) *
-           sqrt(graft.functions.VectorDot.vec_dot($"tv", $"tv"))))
-      .filter($"sim" >= 0.25)
-      .select("eval_id").distinct().as[Long].collect().toSet
-    assert(exact.nonEmpty, "threshold too high: exact contaminated set is empty")
-    val approx = Similarity.lshContaminated(train, eval, 0.25,
-      numPlanes = 4, extraProbes = 4)
-      .select("eval_id").as[Long].collect().toSet
-    // approx hits are a subset (bucketing only prunes, never invents)...
-    assert(approx.subsetOf(exact), "LSH path reported a non-contaminated vector")
-    val recall = (approx & exact).size.toDouble / exact.size
-    info(f"lshContaminated recall=$recall%.3f (${exact.size} exact)")
-    // ...and recall is floor-pinned at these exact parameters on the
-    // committed fixture (deterministic planes) so silent degradation fails
-    assert(recall >= 0.5, f"contamination recall $recall%.3f under floor")
-  }
-
-  test("int8 quantization: error bounded by half a step, recall@10 floor on real embeddings") {
+  test("int8 quantization: error bounded by half a step on real embeddings") {
     import org.apache.spark.sql.functions._
     graft.plans.GraftExtensions.install(spark)
     val emb = graft.sources.Tables.embeddings(spark, sf())
@@ -242,38 +47,6 @@ class TextSimilaritySpec extends SparkSpec {
         ((col("qz.mx") - col("qz.mn")) / 510.0 + lit(1e-12)).as("bound"))
       .filter(col("err") > col("bound")).count()
     assert(viol == 0L, s"$viol vectors exceed the half-step error bound")
-    // ranking survives quantization: recall@10 vs exact brute force
-    val queries = emb.filter($"vec_id" < 20)
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val bf = pairs(Similarity.bruteForceTopK(emb, queries, 10))
-    val qz = pairs(Similarity.quantizedCosineTopK(emb, queries, 10))
-    val recall = (bf & qz).size.toDouble / bf.size
-    info(f"int8 quantized recall@10 = $recall%.3f")
-    assert(recall >= 0.90, f"quantized recall@10 $recall%.3f under floor")
-  }
-
-  test("randomProject preserves cosine structure within the JL bound, tighter as dims grow") {
-    import org.apache.spark.sql.functions._
-    graft.plans.GraftExtensions.install(spark)
-    val emb = spark.read.parquet(sf() + "/embeddings.parquet").limit(100)
-      .select(col("vec_id"), Similarity.asDouble(col("embedding")).as("v"))
-    def meanCosErr(toDim: Int): Double = {
-      val proj = emb.withColumn("p", Similarity.randomProject(col("v"), 64, toDim))
-      val a = proj.select(col("vec_id").as("ida"), col("v").as("va"), col("p").as("pa"))
-      val b = proj.select(col("vec_id").as("idb"), col("v").as("vb"), col("p").as("pb"))
-      // deterministic pair sample: consecutive ids
-      a.join(b, col("idb") === col("ida") + 1)
-        .select(
-          (Similarity.cosine(col("va"), col("vb")) -
-            Similarity.cosine(col("pa"), col("pb"))).as("d"))
-        .agg(avg(abs(col("d")))).head().getDouble(0)
-    }
-    val e16 = meanCosErr(16)
-    val e48 = meanCosErr(48)
-    assert(e16 < 0.25, s"mean cosine error at 16 dims: $e16")
-    assert(e48 < 0.12, s"mean cosine error at 48 dims: $e48")
-    assert(e48 < e16, s"error should shrink with dims: $e48 !< $e16")
   }
 
   test("PQ: ADC score is exactly the dot against the reconstructed vector") {
@@ -288,7 +61,8 @@ class TextSimilaritySpec extends SparkSpec {
     val recon = nv.select($"vec_id",
       Similarity.pqReconstruct(Similarity.pqCodes($"nv", books), books).as("rv"))
     val qn = nv.select($"vec_id".as("q_id"), $"nv".as("qv"))
-    val maxErr = Similarity.pqTopK(emb, emb.filter($"vec_id" < 3), 5)
+    val maxErr = Similarity.pqTopKWithBooks(emb, emb.filter($"vec_id" < 3), 5,
+      Similarity.pqTrainCodebooks(emb))
       .join(recon, "vec_id").join(qn, "q_id")
       .select(abs($"sim" - Similarity.dot($"qv", $"rv")).as("err"))
       .agg(max($"err")).head().getDouble(0)
@@ -301,8 +75,10 @@ class TextSimilaritySpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val bf = pairs(Similarity.bruteForceTopK(emb, queries, 10))
-    val pq = pairs(Similarity.pqTopK(emb, queries, 10))
-    val pq16 = pairs(Similarity.pqTopK(emb, queries, 10, m = 16))
+    val pq = pairs(Similarity.pqTopKWithBooks(emb, queries, 10,
+      Similarity.pqTrainCodebooks(emb)))
+    val pq16 = pairs(Similarity.pqTopKWithBooks(emb, queries, 10,
+      Similarity.pqTrainCodebooks(emb, m = 16)))
     val recall = (bf & pq).size.toDouble / bf.size
     val recall16 = (bf & pq16).size.toDouble / bf.size
     info(f"PQ recall@10: m=8 $recall%.3f, m=16 $recall16%.3f")
@@ -313,7 +89,8 @@ class TextSimilaritySpec extends SparkSpec {
     assert(recall16 >= recall, f"m=16 recall $recall16%.3f < m=8 $recall%.3f")
     // fixed seeds end-to-end (sample, kmeans, code assignment): a second
     // run must reproduce the exact result set
-    assert(pairs(Similarity.pqTopK(emb, queries, 10)) == pq, "PQ not deterministic")
+    assert(pairs(Similarity.pqTopKWithBooks(emb, queries, 10,
+      Similarity.pqTrainCodebooks(emb))) == pq, "PQ not deterministic")
   }
 
   test("q189 short-doc edge: 0/1/2/3-token docs never hit a negative slice") {

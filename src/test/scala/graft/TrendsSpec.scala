@@ -106,7 +106,7 @@ class TrendsSpec extends SparkSpec {
 
   test("F20 rename map ignores missing keys (pandas semantics)") {
     val df = Seq((1, "a")).toDF("id", "v")
-    val renamed = graft.ops.Core.renameColumns(df, Map("v" -> "value", "nope" -> "x"))
+    val renamed = df.withColumnsRenamed(Map("v" -> "value", "nope" -> "x"))
     assert(renamed.columns.toSeq == Seq("id", "value"))
   }
 

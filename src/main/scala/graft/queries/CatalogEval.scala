@@ -126,41 +126,35 @@ private[queries] object CatalogEval {
     * term is exactly p·ln2, so absent tokens are handled by the formula,
     * not a fudge constant. Each term is computed from exact integer counts
     * (cross-multiplied rationals), nano-rounded per token, then summed as
-    * BIGINTs — the q150 transcendental rule. Vocab and per-source totals
-    * broadcast; one shuffle for the token counts. */
+    * BIGINTs — the q150 transcendental rule. One corpus shuffle: a
+    * single token aggregate carries each source's count beside the total,
+    * and `sort + limit` cuts it to the 50 vocabulary rows in one
+    * partition at any corpus size. Each vocabulary row fans out to the 10
+    * (sa, sb) source pairs, and the per-source vocabulary totals are sums
+    * over the pair's window — no checkpoint, join or further exchange. */
   private val q156 = Q(
     "q156_jsd_drift",
     (s, d) => {
       val srcs = Seq("src0", "src1", "src2", "src3", "src4")
-      val toks = Tables.documents(s, d).filter(col("source").isin(srcs: _*))
+      val vocab = Tables.documents(s, d).filter(col("source").isin(srcs: _*))
         .select(col("source"), explode(split(col("text"), " ")).as("tok"))
         .filter(col("tok") =!= "")
-      // Round-13: vocab, cnt and nS each re-ran the token explode (6
-      // corpus passes via pruning-forked subtrees). Cut the 50-row
-      // vocab and the ≤5×50-row joint counts once per invocation; nS is
-      // then the row-sum of cnt (identical: it counted the same
-      // vocab-token occurrences per source). Corpus passes: 6 → 2.
-      val dfTok = toks.groupBy(col("tok")).agg(count(lit(1)).as("tot"))
-      val vocab = dfTok.orderBy(col("tot").desc, col("tok").asc).limit(50)
-        .select(col("tok"))
-        .localCheckpoint(true)
-      val cnt = toks.join(broadcast(vocab), "tok")
-        .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("c"))
-        .localCheckpoint(true)
-      val nS = cnt.groupBy(col("source")).agg(sum(col("c")).as("n"))
-      // (pair × vocab) grid with zero back-fill — mirrors the twin row for
-      // row: 10 source pairs × 50 tokens, counts left-joined in, rows where
-      // BOTH sides are zero dropped (they contribute nothing to JSD)
-      val withN = nS.select(col("source").as("sa"), col("n").as("na"))
-        .crossJoin(broadcast(nS.select(col("source").as("sb"), col("n").as("nb"))))
-        .filter(col("sa") < col("sb"))
-        .crossJoin(broadcast(vocab))
-        .join(cnt.select(col("source").as("sa"), col("tok"), col("c").as("ca")),
-          Seq("sa", "tok"), "left")
-        .join(cnt.select(col("source").as("sb"), col("tok"), col("c").as("cb")),
-          Seq("sb", "tok"), "left")
-        .na.fill(0L, Seq("ca", "cb"))
-        .filter(col("ca") + col("cb") > 0)
+        .groupBy(col("tok"))
+        .agg(count(lit(1)).as("tot"),
+          srcs.map(src => count_if(col("source") === src).as(src)): _*)
+        .orderBy(col("tot").desc, col("tok").asc).limit(50)
+      // (pair × vocab) grid — 10 source pairs × 50 tokens; na/nb are the
+      // sources' vocabulary-token totals, and a source with none has no
+      // distribution (the oracle's pairs come from sources that have one).
+      // Rows where BOTH sides are zero contribute nothing to JSD.
+      val pairs = for {
+        (a, i) <- srcs.zipWithIndex; b <- srcs.drop(i + 1)
+      } yield struct(lit(a).as("sa"), lit(b).as("sb"), col(a).as("ca"), col(b).as("cb"))
+      val pair = Window.partitionBy(col("sa"), col("sb"))
+      val withN = vocab.select(explode(array(pairs: _*)).as("p")).select(col("p.*"))
+        .withColumn("na", sum(col("ca")).over(pair))
+        .withColumn("nb", sum(col("cb")).over(pair))
+        .filter(col("na") > 0 && col("nb") > 0 && col("ca") + col("cb") > 0)
       val p = col("ca").cast("double") / col("na").cast("double")
       val q = col("cb").cast("double") / col("nb").cast("double")
       // 0.5[p ln(2p/(p+q)) + q ln(2q/(p+q))], each ln on exact-long ratios

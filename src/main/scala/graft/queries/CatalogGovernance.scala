@@ -1512,9 +1512,12 @@ private[queries] object CatalogGovernance {
     * numerator; one final double division is micro-rounded in identical
     * textual order both engines (q172 discipline) — absent cells are
     * accounted in closed form, no dense class×source expansion exists
-    * anywhere. One (lang,bucket,source) cell aggregate shuffle; class and
-    * source margins re-aggregate from the cells and join back broadcast
-    * (cells ≤ langs×buckets×sources at any corpus size). */
+    * anywhere. One corpus shuffle: the (lang, bucket, source) cell
+    * aggregate, ≤ |langs|×|buckets|×|sources| rows at any corpus size, is
+    * coalesced to one partition. The source and class margins are windows
+    * over it and the 1-row corpus total is its sum, broadcast; the class
+    * aggregate runs on the same partition, so nothing is re-shuffled or
+    * joined back. */
   private val q203 = Q(
     "q203_t_closeness",
     (s, d) => {
@@ -1523,16 +1526,17 @@ private[queries] object CatalogGovernance {
           (col("n_chars") / 100).cast("int").as("len_bucket"),
           col("source"))
         .agg(count(lit(1)).as("n_lbs"))
-      val bySrc = cells.groupBy(col("source")).agg(sum(col("n_lbs")).as("n_s"))
-      val total = bySrc.agg(sum(col("n_s")).as("n"))
-      // The |p−q| terms need n_class, which is only known after the class
-      // aggregate — so aggregate twice: cells → class sizes, then terms.
-      val classes = cells.groupBy(col("lang"), col("len_bucket"))
-        .agg(sum(col("n_lbs")).as("n_class"))
+        .coalesce(1)
+      val total = cells.agg(sum(col("n_lbs")).as("n"))
       cells
-        .join(broadcast(bySrc), Seq("source"))
-        .join(broadcast(classes), Seq("lang", "len_bucket"))
-        .join(broadcast(total))
+        .withColumn("n_s", sum(col("n_lbs")).over(Window.partitionBy(col("source"))))
+        .withColumn("n_class", sum(col("n_lbs"))
+          .over(Window.partitionBy(col("lang"), col("len_bucket"))))
+        // the margins count every cell; a class or source key that is
+        // NULL names no class or source (the oracle's joins drop it)
+        .filter(col("lang").isNotNull && col("len_bucket").isNotNull &&
+          col("source").isNotNull)
+        .crossJoin(broadcast(total))
         .groupBy(col("lang"), col("len_bucket"), col("n_class"), col("n"))
         .agg(
           sum(abs(col("n_lbs") * col("n") - col("n_s") * col("n_class")))

@@ -128,21 +128,23 @@ private[queries] object CatalogQuality {
     * (MAD tolerates the heavy tails that wreck q106's z-scores). Both
     * medians are exact interpolations of values with at-worst quarter
     * fractions (ints, then |int − half| devs), so every intermediate is
-    * exactly representable and NO rounding belt is needed. Group medians
-    * broadcast back; outliers = dev > 3·MAD. */
+    * exactly representable and NO rounding belt is needed. One shuffle:
+    * the documents are partitioned by language once; the median and then
+    * the MAD are windows over that partitioning, and the final
+    * (lang, med_chars, mad) aggregate reuses it, so nothing is joined
+    * back. Outliers = dev > 3·MAD. */
   private val q132 = Q(
     "q132_mad_outliers",
     (s, d) => {
-      val docs = Tables.documents(s, d).select(col("lang"), col("n_chars"))
-      val med = docs.groupBy(col("lang")).agg(median(col("n_chars")).as("med_chars"))
-      val dev = docs.join(broadcast(med), "lang")
+      val byLang = Window.partitionBy(col("lang"))
+      Tables.documents(s, d).select(col("lang"), col("n_chars"))
+        .filter(col("lang").isNotNull) // no language (the oracle's join drops it)
+        .withColumn("med_chars", median(col("n_chars")).over(byLang))
         .withColumn("dev", abs(col("n_chars").cast("double") - col("med_chars")))
-      val mad = dev.groupBy(col("lang"), col("med_chars"))
-        .agg(median(col("dev")).as("mad"), count(lit(1)).as("n"))
-      dev.join(broadcast(mad.select(col("lang"), col("mad"))), "lang")
-        .groupBy(col("lang"))
-        .agg(count_if(col("dev") > lit(3.0) * col("mad")).as("n_outliers"))
-        .join(broadcast(mad), "lang")
+        .withColumn("mad", median(col("dev")).over(byLang))
+        .groupBy(col("lang"), col("med_chars"), col("mad"))
+        .agg(count(lit(1)).as("n"),
+          count_if(col("dev") > lit(3.0) * col("mad")).as("n_outliers"))
         .select(col("lang"), col("n"), col("med_chars"), col("mad"), col("n_outliers"))
     },
     Some("""
@@ -966,21 +968,28 @@ private[queries] object CatalogQuality {
     * to NANO-units per bucket, then summed as BIGINTs — float summation
     * order never enters (q140's pow rule, applied to ln). Zero-count
     * buckets on either side are excluded (the unsmoothed-PSI convention);
-    * emitted as psi_nano BIGINT. */
+    * emitted as psi_nano BIGINT. One corpus shuffle: the (source, bucket)
+    * count, ≤ |sources|×|buckets| rows at any corpus size, is coalesced to
+    * one partition; the bucket and source margins are windows over it and
+    * the 1-row corpus total is its sum, broadcast — no further exchange. */
   private val q150 = Q(
     "q150_psi_drift",
     (s, d) => {
-      val docs = Tables.documents(s, d)
-        .select(col("source"), (col("n_chars") / 100).cast("long").as("bucket"))
-      val bySrc = docs.groupBy(col("source"), col("bucket")).agg(count(lit(1)).as("c_sb"))
-      val byBucket = docs.groupBy(col("bucket")).agg(count(lit(1)).as("c_b"))
-      val nS = docs.groupBy(col("source")).agg(count(lit(1)).as("n_s"))
-      val nAll = docs.agg(count(lit(1)).as("n_all"))
-      val j = bySrc.join(byBucket, "bucket").join(nS, "source")
+      val cells = Tables.documents(s, d)
+        .groupBy(col("source"), (col("n_chars") / 100).cast("long").as("bucket"))
+        .agg(count(lit(1)).as("c_sb"))
+        .coalesce(1)
+      val nAll = cells.agg(sum(col("c_sb")).as("n_all"))
+      val j = cells
+        .withColumn("c_b", sum(col("c_sb")).over(Window.partitionBy(col("bucket"))))
+        .withColumn("n_s", sum(col("c_sb")).over(Window.partitionBy(col("source"))))
         .crossJoin(broadcast(nAll))
         .withColumn("c_rest", col("c_b") - col("c_sb"))
         .withColumn("n_rest", col("n_all") - col("n_s"))
-        .filter(col("c_sb") > 0 && col("c_rest") > 0)
+        // a NULL source or bucket key counts in the margins but names no
+        // term (the oracle's joins drop it)
+        .filter(col("source").isNotNull && col("bucket").isNotNull &&
+          col("c_sb") > 0 && col("c_rest") > 0)
       val p = col("c_sb").cast("double") / col("n_s").cast("double")
       val q = col("c_rest").cast("double") / col("n_rest").cast("double")
       val lnRatio = log((col("c_sb") * col("n_rest")).cast("double") /

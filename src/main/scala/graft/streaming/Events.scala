@@ -7,6 +7,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Structured-Streaming surface (SURVEY.md §2.9).
   *
@@ -463,35 +464,32 @@ object Events {
       }
       .start()
 
-  /** Resolve the upsert target's current state: (lastBatchId, dataDir).
-    * The `_current` pointer file ("<batchId> <dirName>") is the single
-    * source of truth; its update is an atomic same-directory rename, so a
-    * crash at ANY point leaves either the old pointer (old data intact +
-    * batchId unadvanced → the replayed batch re-applies cleanly) or the
-    * new pointer (new data complete) — never a half state. */
-  private[graft] def currentUpsertState(targetDir: String): (Long, Option[java.io.File]) = {
+  /** Resolve the upsert target's current state: the last applied batchId
+    * and, once a batch has been applied, its data dir and the schema the
+    * sink wrote there. The `_current` pointer file
+    * ("<batchId> <dirName> <schema JSON>") is the single source of truth;
+    * its update is an atomic same-directory rename, so a crash at ANY
+    * point leaves either the old pointer (old data intact + batchId
+    * unadvanced → the replayed batch re-applies cleanly) or the new
+    * pointer (new data complete) — never a half state. */
+  private[graft] def currentUpsertState(
+      targetDir: String): (Long, Option[(java.io.File, StructType)]) = {
     val ptr = new java.io.File(targetDir, "_current")
-    if (ptr.exists) {
+    if (!ptr.exists) (-1L, None)
+    else {
       val src = scala.io.Source.fromFile(ptr)
-      val parts = try src.mkString.trim.split(" ", 2) finally src.close()
-      (parts(0).toLong, Some(new java.io.File(targetDir, parts(1))))
-    } else {
-      // legacy layout (_last_batch_id + data/, pre-pointer): honor it
-      // rather than silently treating accumulated state as empty
-      val legacyId = new java.io.File(targetDir, "_last_batch_id")
-      val legacyData = new java.io.File(targetDir, "data")
-      if (legacyId.exists && legacyData.exists) {
-        val src = scala.io.Source.fromFile(legacyId)
-        val id = try src.mkString.trim.toLong finally src.close()
-        (id, Some(legacyData))
-      } else (-1L, None)
+      val parts = try src.mkString.trim.split(" ", 3) finally src.close()
+      require(parts.length == 3, s"$ptr names no schema: rewrite the target")
+      (parts(0).toLong, Some((new java.io.File(targetDir, parts(1)),
+        DataType.fromJson(parts(2)).asInstanceOf[StructType])))
     }
   }
 
-  /** Read the upsert target's current contents (for consumers/tests). */
+  /** Read the upsert target's current contents (for consumers/tests). The
+    * recorded schema goes to the reader, so no footer-inference job runs. */
   def readUpsertTarget(spark: org.apache.spark.sql.SparkSession, targetDir: String): DataFrame =
     currentUpsertState(targetDir) match {
-      case (_, Some(d)) => spark.read.parquet(d.getPath)
+      case (_, Some((d, schema))) => spark.read.schema(schema).parquet(d.getPath)
       case _ => throw new IllegalStateException(s"no upsert state at $targetDir")
     }
 
@@ -501,13 +499,13 @@ object Events {
       keys: Seq[String], order: Seq[String]): Unit = {
     val dir = new java.io.File(targetDir)
     dir.mkdirs()
-    val (last, curData) = currentUpsertState(targetDir)
+    val (last, cur) = currentUpsertState(targetDir)
     if (batchId <= last) return // replayed batch: already applied
     val spark = batch.sparkSession
     val orderCols = order.map(col)
-    val merged = curData match {
-      case Some(d) =>
-        graft.ops.Core.upsert(spark.read.parquet(d.getPath), batch, keys, orderCols)
+    val merged = cur match {
+      case Some((d, schema)) =>
+        graft.ops.Core.upsert(spark.read.schema(schema).parquet(d.getPath), batch, keys, orderCols)
       case None => graft.ops.Core.dedupLatest(batch, keys, orderCols)
     }
     // write the new state beside the old, then flip the pointer atomically
@@ -517,7 +515,7 @@ object Events {
     merged.write.mode("overwrite").parquet(next.getPath)
     val ptrTmp = new java.io.File(dir, "_current.tmp")
     val w = new java.io.PrintWriter(ptrTmp)
-    try w.print(s"$batchId ${next.getName}") finally w.close()
+    try w.print(s"$batchId ${next.getName} ${merged.schema.json}") finally w.close()
     // ATOMIC_MOVE replaces in one step — a delete-then-rename pair would
     // open a crash window with NO pointer at all (state silently reset)
     java.nio.file.Files.move(
@@ -527,6 +525,6 @@ object Events {
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
     }
-    curData.filter(_.exists).foreach(rm)
+    cur.map(_._1).filter(_.exists).foreach(rm)
   }
 }

@@ -518,6 +518,28 @@ class MultimodalStreamingSpec extends SparkSpec {
     assert(state() == after)
   }
 
+  test("upsertSink: a later batch reads the snapshot with the schema the sink wrote, so no inference job runs") {
+    import spark.implicits._
+    val target = java.nio.file.Files.createTempDirectory("graft_upsert_schema")
+      .resolve("target").toString
+    def applyBatch(id: Long, evs: Events.Ev*): Unit =
+      Events.applyUpsertBatch(evs.toDF(), id, target, Seq("user_id"), Seq("ts"))
+    applyBatch(0L, Events.Ev(1L, Timestamp.valueOf("2024-01-01 00:00:00"), "a", 1.0))
+    val (_, jobs) = PlanAudit.jobsOf(spark)(applyBatch(1L,
+      Events.Ev(1L, Timestamp.valueOf("2024-01-01 00:05:00"), "b", 2.0),
+      Events.Ev(2L, Timestamp.valueOf("2024-01-01 00:01:00"), "c", 3.0)))
+    assert(jobs.nonEmpty, "the merge write ran no job")
+    // every merge job runs inside the write's SQL execution; a parquet
+    // footer-inference job runs outside any
+    val outside = jobs.filter(_.getProperty("spark.sql.execution.id") == null)
+    assert(outside.isEmpty, s"${outside.size} job(s) ran outside the merge write")
+    val (snapshot, readJobs) = PlanAudit.jobsOf(spark)(Events.readUpsertTarget(spark, target))
+    assert(readJobs.isEmpty, s"reading the snapshot ran ${readJobs.size} job(s)")
+    val state = snapshot.collect()
+      .map(r => r.getAs[Long]("user_id") -> r.getAs[String]("event_type")).toMap
+    assert(state == Map(1L -> "b", 2L -> "c"), state.toString)
+  }
+
   test("streaming incremental dedup: a stream filters map-side against a broadcast Bloom of prior content") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._

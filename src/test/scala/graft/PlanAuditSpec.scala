@@ -3,11 +3,12 @@ package graft
 /** Catalog-wide scale-bug tripwire — the plan analog of FixtureCanarySpec:
   * sweeps every query's static physical plan at sf0.001 and FAILS BY NAME
   * when a regression introduces a cartesian product, a broadcast
-  * nested-loop join, or a new partition-less WindowExec (all rows to one
-  * partition — the shape that cannot exist at 100 TB unless the input was
-  * provably bounded first). The allowlist below is the frozen set of
-  * bounded-input exceptions; growing it is a reviewed decision, not an
-  * accident. */
+  * nested-loop join, a new partition-less WindowExec or a new
+  * `coalesce(1)` (all rows to one partition — the shape that cannot exist
+  * at 100 TB unless the input was provably bounded first), or when a
+  * query's Exchange count or build-job count rises above its frozen
+  * budget. The allowlists below are the frozen sets of bounded-input
+  * exceptions; growing them is a reviewed decision, not an accident. */
 class PlanAuditSpec extends SparkSpec {
 
   test("no cartesian products, no BNLJ, global windows frozen to allowlist") {
@@ -72,7 +73,7 @@ class PlanAuditSpec extends SparkSpec {
     // "stream the big table past a tiny broadcast" shape that DOES hold at
     // 100 TB. Every entry here is that shape: ANN query sets (q23/
     // q137b), 1-row stats broadcasts (q38/q57/q63/q69/q74/q82/q88/q140/
-    // q150/q159), bounded histogram/frontier sides (q117/q125/q149/q156),
+    // q150/q159), bounded histogram/frontier sides (q117/q125/q149),
     // pair/range predicates over bounded sides (q44/q51/q108/q146),
     // q172's 1-row contingency-total broadcast, and q176's per-round
     // 1-row BPE winner broadcasts (3 since round-13's per-round
@@ -84,7 +85,7 @@ class PlanAuditSpec extends SparkSpec {
       "q108_pmi_cooccur" -> 1, "q117_bm25" -> 2, "q125_rrf_fusion" -> 3,
       "q137b_pq_serve" -> 1,
       "q140_mixture_weights" -> 1, "q146_triangle_count" -> 2,
-      "q149_ks_drift" -> 3, "q150_psi_drift" -> 1, "q156_jsd_drift" -> 2,
+      "q149_ks_drift" -> 3, "q150_psi_drift" -> 1,
       "q159_dataset_card" -> 1,
       // (q164b left the list in round 10: the vec_argmin_cell kernel
       // replaced the broadcast-dim crossJoin fan-out, so no BNLJ remains
@@ -153,6 +154,22 @@ class PlanAuditSpec extends SparkSpec {
       "q74_vocab_coverage" -> 1, "q82_rolling_dau" -> 1,
       "q88_calendar_spine" -> 1)
 
+    // coalesce(1) allowlist: a CoalesceExec to one partition sends every
+    // row to one task, like a partition-less window, so each entry states
+    // the bound of its input — it must sit right after an aggregate whose
+    // size does not grow with the corpus. Counts are plan nodes: a
+    // coalesced frame used by two branches appears twice.
+    val allowedSingleCoalesces = Map(
+      // q150: the (source, bucket) count — ≤ |sources|×|buckets| rows;
+      // the margin windows read it and so does the 1-row total broadcast
+      "q150_psi_drift" -> 2,
+      // q203: the (lang, bucket, source) cell aggregate — ≤ |langs|×
+      // |buckets|×|sources| rows; margin windows + the 1-row total
+      "q203_t_closeness" -> 2,
+      // q224: the ≤|types|²+|types|-row transition matrix (two plan
+      // nodes) and the ≤|types|-row π₀ of the π ← πP iteration
+      "q224_markov_stationary" -> 3)
+
     // Isolated-SQLConf session: the sweep must see the DEFAULT broadcast
     // threshold and static (AQE-off) plans regardless of what any
     // concurrently-running suite sets on the shared session — a sibling's
@@ -197,6 +214,19 @@ class PlanAuditSpec extends SparkSpec {
       assert(stale.isEmpty,
         s"stale global-window allowlist entries: ${stale.mkString(", ")}")
 
+      val badCoalesces = results.collect {
+        case (n, c) if c.singleCoalesces > allowedSingleCoalesces.getOrElse(n, 0) =>
+          s"$n (${c.singleCoalesces} > ${allowedSingleCoalesces.getOrElse(n, 0)})"
+      }
+      assert(badCoalesces.isEmpty,
+        "NEW coalesce(1) (all rows -> one partition). Apply it only right " +
+          "after an aggregate whose size does not grow with the corpus, " +
+          s"and extend the allowlist with that bound: ${badCoalesces.mkString(", ")}")
+      val staleCoalesces = allowedSingleCoalesces.keys.filterNot(n =>
+        results.exists { case (qn, c) => qn == n && c.singleCoalesces > 0 })
+      assert(staleCoalesces.isEmpty,
+        s"stale coalesce(1) allowlist entries: ${staleCoalesces.mkString(", ")}")
+
       // frozen Exchange budget (PlanAudit): a refactor that
       // silently ADDS a shuffle or broadcast to any catalog query fails
       // here by name — invisible to correctness gates and sub-second
@@ -219,6 +249,21 @@ class PlanAuditSpec extends SparkSpec {
       }
       assert(overBudget.isEmpty,
         s"Exchange count rose above the frozen budget: ${overBudget.mkString("; ")}")
+
+      // frozen build-job budget (PlanAudit writes JobBudget beside
+      // ShuffleBudget): every job a query launches while its DataFrame is
+      // built is driver and scheduling latency before the action starts
+      val noJobBudget = results.collect {
+        case (n, c) if c.error.isEmpty && !JobBudget.budget.contains(n) => n
+      }
+      assert(noJobBudget.isEmpty,
+        s"queries missing from the frozen job budget: ${noJobBudget.mkString(", ")}")
+      val overJobs = results.collect {
+        case (n, c) if c.error.isEmpty && JobBudget.budget.get(n).exists(c.buildJobs > _) =>
+          s"$n (${c.buildJobs} build jobs vs ${JobBudget.budget(n)})"
+      }
+      assert(overJobs.isEmpty,
+        s"build-job count rose above the frozen budget: ${overJobs.mkString("; ")}")
     }
   }
 }

@@ -1,11 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.concurrent.ConcurrentLinkedQueue
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.TimestampType
 
@@ -25,33 +21,11 @@ class TablesSpec extends SparkSpec {
     Files.copy(Paths.get(sf(), s"$table.parquet"), to.resolve(s"$as.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
 
-  /** Jobs `body` launches from this thread. Suites share the session and
-    * run in parallel, so only jobs in this thread's own job group count.
-    * The listener bus is asynchronous but ordered: once a sentinel job
-    * run after `body` has been seen, so has every job `body` ran. */
+  /** Jobs `body` launches from this thread (suites share the session
+    * and run in parallel, so only this thread's own job group counts). */
   private def jobsOf[T](s: SparkSession)(body: => T): (T, Int) = {
-    val sc = s.sparkContext
-    val group = "tables-spec-" + java.util.UUID.randomUUID()
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).filter(_.getProperty("spark.jobGroup.id") == group)
-          .foreach(p => seen.add(Option(p.getProperty("spark.job.description")).getOrElse("")))
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "body")
-    try {
-      val out = body
-      sc.setJobDescription("sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!seen.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(seen.contains("sentinel"), "listener never saw the sentinel job")
-      (out, seen.asScala.count(_ != "sentinel"))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val (out, jobs) = PlanAudit.jobsOf(s)(body)
+    (out, jobs.size)
   }
 
   test("a second read of the same table version launches no job") {

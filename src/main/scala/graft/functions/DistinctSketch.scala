@@ -299,16 +299,6 @@ object DistinctSketch {
   }
 
   /** Column API — requires `GraftExtensions.install(spark)` first. */
-  def hll_sketch(c: Column, precision: Int = 14, sparseLimit: Int = 4096): Column =
-    org.apache.spark.sql.functions.call_function(
-      "hll_sketch", c,
-      org.apache.spark.sql.functions.lit(precision),
-      org.apache.spark.sql.functions.lit(sparseLimit))
-
-  def hll_estimate(sketch: Column): Column =
-    org.apache.spark.sql.functions.call_function("hll_estimate", sketch)
-
-  /** Column API — requires `GraftExtensions.install(spark)` first. */
   def hll_distinct(c: Column, precision: Int = 14, sparseLimit: Int = 4096): Column =
     org.apache.spark.sql.functions.call_function(
       "hll_distinct", c,

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
@@ -61,11 +60,4 @@ object RollingHash {
 
   private[graft] def build(exprs: Seq[Expression]): Expression =
     RollingHash(toStringExpr(exprs.head))
-
-  /** Column API — requires `GraftExtensions.install(spark)` once per
-    * session (the classic Column↔Expression bridge is private[sql] in
-    * Spark 4, so the public path is the function registry +
-    * call_function). */
-  def rolling_hash(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("rolling_hash", c)
 }

@@ -5,22 +5,26 @@ import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, XxHash64Func
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
 
-/** One mergeable sketch family (Bloom, Count-Min, KLL, Theta, HLL) as a
-  * plain value: its parameters, how a row value enters a buffer, how two
-  * buffers merge, and its byte format. Every family is a case class, so
-  * two identical SQL calls build equal aggregates and the planner gives
-  * them one shared buffer. [[SketchAgg]] builds any family's sketch and
-  * [[SketchMergeAgg]] re-aggregates any family's stored sketches; a new
-  * family plugs in as one more value, not one more aggregate class. */
+/** One mergeable sketch family (Bloom, KLL, Theta, HLL) as a plain
+  * value: its parameters, how a row value enters a buffer, how two
+  * buffers merge (the partial/final merge of [[SketchAgg]]), and its
+  * byte format. Every family is a case class, so two identical SQL calls
+  * build equal aggregates and the planner gives them one shared buffer.
+  * [[SketchAgg]] builds any family's sketch and [[SketchMergeAgg]]
+  * re-aggregates stored sketches; a new family plugs in as one more
+  * value, not one more aggregate class. */
 trait SketchFamily[B] extends Product with Serializable {
-  /** Prefix of the merge aggregate's SQL name, `<kind>_merge`. */
+  /** Prefix of the merge aggregate's SQL name, `<kind>_merge` (only
+    * `hll_merge` is registered). */
   def kind: String
   /** SQL name of the aggregate that builds this family's sketch. */
   def name: String
   def empty: B
   def add(buf: B, value: Any, dataType: DataType): Unit
   def mergeIn(buf: B, other: B): Unit
-  /** The stored, self-describing byte format every `*_merge` reads. */
+  /** The stored, self-describing byte format the family's readers
+    * (`*_estimate`, `kll_quantile`, `bloom_might_contain`, `hll_merge`)
+    * take. */
   def toBytes(buf: B): Array[Byte]
   def fromBytes(bytes: Array[Byte]): B
   def resultType: DataType = BinaryType
@@ -33,7 +37,7 @@ trait SketchFamily[B] extends Product with Serializable {
 
 object SketchFamily {
   /** The row hash the hashed families insert: xxhash64, seed 42 — the
-    * same hash `bloom_might_contain` and `cms_estimate` probe with. */
+    * same hash `bloom_might_contain` probes with. */
   def hash(value: Any, dataType: DataType): Long =
     XxHash64Function.hash(value, dataType, 42L)
 
@@ -53,7 +57,7 @@ object SketchFamily {
   }
 }
 
-/** `bloom_agg`, `cms_agg`, `kll_agg`, `theta_sketch`, `hll_sketch` and
+/** `bloom_agg`, `kll_agg`, `theta_sketch`, `hll_sketch` and
   * `hll_distinct`: builds one family's sketch over a column, skipping
   * nulls. */
 case class SketchAgg[B](
@@ -141,38 +145,22 @@ case class SketchMergeAgg[B](
     copy(childExpr = newChildren.head)
 }
 
-/** Sketch-of-sketches re-aggregation: `kll_merge` / `cms_merge` /
-  * `bloom_merge` / `theta_merge` / `hll_merge` are aggregate functions
-  * over a column of STORED serialized sketches, returning the merged
-  * sketch in the same binary format. This closes the loop on the "store
-  * per partition/day, re-aggregate later" contract every binary sketch in
-  * graft advertises: build per-day sketches once at ingest (one pass over
-  * the raw data), persist the bytes next to the partition, then answer
-  * any rollup — week, month, arbitrary cohort union — by merging a
-  * handful of stored sketches instead of rescanning the corpus. At the
-  * 100 TB target that is the difference between a metadata-sized query
-  * and a full-table pass.
-  *
-  * Merge semantics are each family's own: CMS elementwise-add and Bloom
-  * OR are lossless and order-independent (merged bytes == single-pass
-  * bytes, PropertySpec-style pinned); KLL and Theta merges are the same
-  * compaction/downsampling the direct aggregates perform, so a merged
-  * sketch is exactly as good as one built in a single pass over the
-  * union. Shape mismatches (different width/depth/k) raise rather than
-  * silently corrupt. Empty input (or all-null) yields null.
+/** Sketch-of-sketches re-aggregation: `hll_merge` is an aggregate over
+  * a column of STORED serialized HLL sketches (`hll_sketch`), returning
+  * the merged sketch in the same binary format. Per-day sketches built
+  * once at ingest answer any later rollup — a trailing window (q154),
+  * a week, a cohort union — by merging a handful of stored sketches
+  * instead of rescanning the raw events. The merge is the one the direct
+  * aggregate's partial/final path performs, so a merged sketch is
+  * exactly as good as one built in a single pass over the union. A
+  * precision mismatch raises rather than silently corrupting registers;
+  * empty (or all-null) input yields null.
   */
 object SketchMerge {
-
-  /** Each family's merge reads its parameters from the stored bytes, so
-    * the default-parameter value stands for the whole family. */
-  private val families: Seq[SketchFamily[_]] = Seq(Bloom(), Cms(), Hll(), Kll(), Theta())
-
-  private[graft] def builders: Seq[(String, Seq[Expression] => Expression)] =
-    families.map { f =>
-      val fn = s"${f.kind}_merge"
-      fn -> { (exprs: Seq[Expression]) =>
-        DistinctSketch.arity(exprs, fn, 1, 1)
-        SketchMergeAgg(SketchFamily.storedArg(exprs, 0, fn), f).toAggregateExpression()
-      }
-    }
+  private[graft] def build(exprs: Seq[Expression]): Expression = {
+    DistinctSketch.arity(exprs, "hll_merge", 1, 1)
+    // the merge reads precision and sparse limit from the stored bytes,
+    // so the default-parameter value stands for every stored HLL
+    SketchMergeAgg(SketchFamily.storedArg(exprs, 0, "hll_merge"), Hll()).toAggregateExpression()
+  }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
-/** Element-wise vector sum/mean over an embedding column
+/** Element-wise vector mean over an embedding column
   * (`array<float>`/`array<double>`) as a mergeable
   * `TypedImperativeAggregate` — the centroid primitive an embedding
   * pipeline needs (cluster centroids for SemDeDup-style semantic dedup,
@@ -21,8 +21,8 @@ import org.apache.spark.sql.types._
   * Null rows are skipped; a dimension mismatch inside a group is a hard
   * error (silent zip-truncation would corrupt centroids).
   *
-  * Usage: `GraftExtensions.install(spark)` then `SELECT vec_avg(embedding)` /
-  * `vec_sum(embedding)`, or the Column API below.
+  * Usage: `GraftExtensions.install(spark)` then `SELECT vec_avg(embedding)`,
+  * or the Column API below.
   */
 final class VecBuffer {
   var sum: Array[Double] = _
@@ -31,7 +31,7 @@ final class VecBuffer {
   def add(v: Array[Double]): Unit = {
     if (sum == null) sum = new Array[Double](v.length)
     require(sum.length == v.length,
-      s"vec_avg/vec_sum: dimension mismatch ${sum.length} vs ${v.length}")
+      s"vec_avg: dimension mismatch ${sum.length} vs ${v.length}")
     var i = 0
     while (i < v.length) { sum(i) += v(i); i += 1 }
     count += 1L
@@ -42,7 +42,7 @@ final class VecBuffer {
       if (sum == null) { sum = other.sum.clone(); count = other.count }
       else {
         require(sum.length == other.sum.length,
-          s"vec_avg/vec_sum: dimension mismatch ${sum.length} vs ${other.sum.length}")
+          s"vec_avg: dimension mismatch ${sum.length} vs ${other.sum.length}")
         var i = 0
         while (i < sum.length) { sum(i) += other.sum(i); i += 1 }
         count += other.count
@@ -50,9 +50,8 @@ final class VecBuffer {
     }
 }
 
-case class VecSumAvgAgg(
+case class VecAvgAgg(
     child: Expression,
-    isAvg: Boolean,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[VecBuffer] {
@@ -60,7 +59,7 @@ case class VecSumAvgAgg(
   override def children: Seq[Expression] = Seq(child)
   override def nullable: Boolean = true
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = if (isAvg) "vec_avg" else "vec_sum"
+  override def prettyName: String = "vec_avg"
 
   private lazy val elementType: DataType = child.dataType match {
     case ArrayType(et @ (FloatType | DoubleType), _) => et
@@ -100,12 +99,12 @@ case class VecSumAvgAgg(
 
   override def eval(buf: VecBuffer): Any =
     if (buf.sum == null) null
-    else if (isAvg) {
+    else {
       val out = new Array[Double](buf.sum.length)
       var i = 0
       while (i < out.length) { out(i) = buf.sum(i) / buf.count; i += 1 }
       new GenericArrayData(out)
-    } else new GenericArrayData(buf.sum.clone())
+    }
 
   override def serialize(buf: VecBuffer): Array[Byte] = {
     val n = if (buf.sum == null) 0 else buf.sum.length
@@ -130,12 +129,12 @@ case class VecSumAvgAgg(
     buf
   }
 
-  override def withNewMutableAggBufferOffset(newOffset: Int): VecSumAvgAgg =
+  override def withNewMutableAggBufferOffset(newOffset: Int): VecAvgAgg =
     copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): VecSumAvgAgg =
+  override def withNewInputAggBufferOffset(newOffset: Int): VecAvgAgg =
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): VecSumAvgAgg =
+      newChildren: IndexedSeq[Expression]): VecAvgAgg =
     copy(child = newChildren.head)
 }
 
@@ -143,11 +142,9 @@ object VectorAgg {
   /** Column API — requires `GraftExtensions.install(spark)` first. */
   def vec_avg(c: Column): Column =
     org.apache.spark.sql.functions.call_function("vec_avg", c)
-  def vec_sum(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("vec_sum", c)
 
-  private[graft] def build(exprs: Seq[Expression], isAvg: Boolean): Expression = {
-    DistinctSketch.arity(exprs, if (isAvg) "vec_avg" else "vec_sum", 1, 1)
-    VecSumAvgAgg(exprs.head, isAvg).toAggregateExpression()
+  private[graft] def build(exprs: Seq[Expression]): Expression = {
+    DistinctSketch.arity(exprs, "vec_avg", 1, 1)
+    VecAvgAgg(exprs.head).toAggregateExpression()
   }
 }

@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   * fine when the query set is small or the corpus is pre-filtered); the
   * catalog carries it as q23. Int8 scalar and product quantization shrink
   * the stored embedding, and k-means centroids give the cells SemDedup
-  * blocks on. Hot-path dot products use the native codegen'd
-  * `graft.functions.VectorDot`; the pure-builtin HOF forms remain for
-  * registration-free ad-hoc use.
+  * blocks on. Dot products and norms use the native codegen'd
+  * `graft.functions.VectorDot`/`VectorNorm`; the pure-builtin [[dot]]
+  * stays as the independent reference the PQ identity is checked
+  * against.
   */
 object Similarity {
 
@@ -20,7 +21,8 @@ object Similarity {
 
   /** Pure-builtin dot product (usable without function registration);
     * interpreted (HOFs sit outside codegen). The DataFrame entry points
-    * below use the native codegen'd `VectorDot` instead. */
+    * below use the native codegen'd `VectorDot` instead; TextSimilaritySpec
+    * checks the PQ score identity against this form. */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
@@ -29,15 +31,11 @@ object Similarity {
   private[ops] def fastDot(a: Column, b: Column): Column =
     graft.functions.VectorDot.vec_dot(a, b)
 
-  def l2norm(v: Column): Column = sqrt(dot(v, v))
-
-  /** Codegen'd L2 norm (graft.functions.VectorNorm) — bit-identical to
-    * `l2norm` (same left-to-right sum of squares); used by the DataFrame
-    * entry points, which install GraftExtensions first. */
+  /** Codegen'd L2 norm (graft.functions.VectorNorm): the square root of
+    * the left-to-right sum of squares; used by the DataFrame entry points,
+    * which install GraftExtensions first. */
   private def fastNorm(v: Column): Column =
     graft.functions.VectorNorm.vec_norm(v)
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
 
   /** Centroids ranked nearest-first for the vector `v`: a sorted array of
     * struct(d, cell) with d = ||c||² − 2·v·c. The ||v||² term of the true

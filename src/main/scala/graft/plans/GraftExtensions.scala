@@ -37,24 +37,21 @@ object GraftExtensions {
       fn("hll_distinct", classOf[SketchAgg[_]])(DistinctSketch.build(stored = false)),
       fn("hll_sketch", classOf[SketchAgg[_]])(DistinctSketch.build(stored = true)),
       fn("hll_estimate", classOf[HllEstimate])(DistinctSketch.buildEstimate),
+      fn("hll_merge", classOf[SketchMergeAgg[_]])(SketchMerge.build),
       fn("theta_sketch", classOf[SketchAgg[_]])(ThetaSketch.buildAgg),
       fn("theta_estimate", ThetaSketch.getClass)(ThetaSketch.buildEstimate),
       fn("theta_intersect_estimate", ThetaSketch.getClass)(
         ThetaSketch.buildSetEstimate(_, intersect = true)),
       fn("theta_union_estimate", ThetaSketch.getClass)(
         ThetaSketch.buildSetEstimate(_, intersect = false)),
-      fn("vec_avg", classOf[VecSumAvgAgg])(VectorAgg.build(_, isAvg = true)),
-      fn("vec_sum", classOf[VecSumAvgAgg])(VectorAgg.build(_, isAvg = false)),
+      fn("vec_avg", classOf[VecAvgAgg])(VectorAgg.build),
       fn("bloom_agg", classOf[SketchAgg[_]])(BloomFilter.buildAgg),
       fn("bloom_might_contain", classOf[BloomMightContain])(BloomFilter.buildContains),
-      fn("cms_agg", classOf[SketchAgg[_]])(CountMin.buildAgg),
-      fn("cms_estimate", classOf[CountMinEstimate])(CountMin.buildEstimate),
       fn("kll_agg", classOf[SketchAgg[_]])(QuantileSketch.buildAgg),
       fn("kll_quantile", classOf[KllQuantile])(QuantileSketch.buildQuantile),
       fn("kll_n", classOf[KllN])(QuantileSketch.buildN),
       fn("z_value", classOf[ZValue])(ZOrder.build),
-      fn("topk_by", classOf[TopKAgg])(TopK.build)
-    ) ++ SketchMerge.builders.map { case (name, b) => fn(name, classOf[SketchMergeAgg[_]])(b) }
+      fn("topk_by", classOf[TopKAgg])(TopK.build))
   }
 
   /** Register everything on a live session. Idempotent, and registers

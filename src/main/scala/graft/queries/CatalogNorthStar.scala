@@ -1134,15 +1134,20 @@ private[queries] object CatalogNorthStar {
         val mat = cells.join(rows, Seq("i")).unionByName(loops)
           .localCheckpoint(true)
         val nStates = marg.agg(count(lit(1)).as("k"))
-        // The 8 π ← πP steps run over ≤|types|²-row tables, but as
+        // The 8 π ← πP steps run over ≤|types|²-row tables. As
         // broadcast-join + groupBy rounds each step cost a broadcast
-        // job AND a shuffle stage — ~16 sequential micro-stages of pure
-        // scheduling latency (round-13; q211 does the identical corpus
-        // work in 0.33 s vs 2.24 s here). Coalescing both sides to ONE
-        // partition and forcing merge joins makes every step
-        // exchange-free (SinglePartition satisfies every distribution
-        // requirement), so the whole iteration chain plans as one
-        // stage. Sums are exact BIGINT micro-units — order-free.
+        // job AND a shuffle stage (round-13). Here both sides are
+        // coalesced to ONE partition and the joins forced to merge
+        // joins, which makes only the FIRST step exchange-free
+        // (SinglePartition satisfies its join and its groupBy). The
+        // planner still hash-partitions the matrix on i once (reused by
+        // steps 2-8), step 1's π on t, and each of steps 2-8 on j for
+        // its groupBy: 9 of the plan's 11 shuffles (the other two feed
+        // nStates and tot). AQE removes none of them at runtime: a
+        // traced run at sf0.001 and sf0.01 ran 11 shuffle-writing
+        // stages, AQE only coalescing each read to one partition, so
+        // every later step is its own one-task stage. Sums are exact
+        // BIGINT micro-units — order-free.
         val matS = mat.coalesce(1)
         // π₀ uniform on the micro grid
         var pi = marg.join(broadcast(nStates))

@@ -4,21 +4,11 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
 
-/** North-star similarity library (cosine, brute-force top-k, int8 and
+/** North-star similarity library (brute-force cosine top-k, int8 and
   * product quantization) and two text-dedup catalog edge cases the
   * DuckDB oracle comparison does not reach. */
 class TextSimilaritySpec extends SparkSpec {
   import spark.implicits._
-
-  test("cosine: identity is 1, orthogonal is 0") {
-    val df = Seq(
-      (Array(1.0f, 0.0f), Array(1.0f, 0.0f)),
-      (Array(1.0f, 0.0f), Array(0.0f, 1.0f))
-    ).toDF("a", "b")
-    val got = df.select(Similarity.cosine(
-      Similarity.asDouble($"a"), Similarity.asDouble($"b"))).as[Double].collect()
-    assert(math.abs(got(0) - 1.0) < 1e-12 && math.abs(got(1)) < 1e-12)
-  }
 
   test("bruteForceTopK: nearest neighbor is the planted duplicate vector") {
     val emb = Seq(

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.VectorAgg
 import graft.sources.Tables
 
-/** Functional coverage for the vec_avg/vec_sum native aggregates on the
+/** Functional coverage for the vec_avg native aggregate on the
   * real float embeddings: agreement with the explode-based formulation,
   * SQL registration, null handling, and the dimension-mismatch guard. */
 class VectorAggSpec extends SparkSpec {
@@ -34,7 +34,7 @@ class VectorAggSpec extends SparkSpec {
 
   test("registered SQL form works; empty group of nulls yields null") {
     Tables.embeddings(spark, sf()).createOrReplaceTempView("emb_va")
-    val n = spark.sql("SELECT size(vec_sum(embedding)) FROM emb_va")
+    val n = spark.sql("SELECT size(vec_avg(embedding)) FROM emb_va")
       .as[Int].head()
     assert(n == 64)
     val allNull = Seq.empty[Array[Double]].map(Tuple1(_)).toDF("v")
@@ -46,22 +46,8 @@ class VectorAggSpec extends SparkSpec {
   test("dimension mismatch inside a group fails loudly") {
     val bad = Seq(Array(1.0, 2.0), Array(1.0, 2.0, 3.0)).map(Tuple1(_)).toDF("v")
     val ex = intercept[Exception] {
-      bad.agg(VectorAgg.vec_sum(col("v"))).collect()
+      bad.agg(VectorAgg.vec_avg(col("v"))).collect()
     }
     assert(ex.getMessage != null)
-  }
-
-  test("vec_sum == vec_avg * count on a single group") {
-    val e = Tables.embeddings(spark, sf()).limit(100)
-    val row = e.agg(
-      VectorAgg.vec_sum(col("embedding")).as("s"),
-      VectorAgg.vec_avg(col("embedding")).as("a"),
-      count(lit(1)).as("n")).collect().head
-    val s = row.getSeq[Double](0)
-    val a = row.getSeq[Double](1)
-    val n = row.getLong(2)
-    s.zip(a).foreach { case (sv, av) =>
-      assert(math.abs(sv - av * n) < 1e-9, s"$sv vs ${av * n}")
-    }
   }
 }

@@ -102,11 +102,9 @@ object PlanAudit {
     * AQE disabled — adaptive wrapping hides the pre-runtime shape),
     * writing each counted plan's formatted explain into `planDir` if
     * given. Every table's schema is read first, so the one-off inference
-    * job of `Tables`' process-wide memo lands on no query (`events` goes
-    * first: it sets the session's nanosAsLong, part of the memo key). */
+    * job of `Tables`' process-wide memo lands on no query. */
   def sweep(spark: SparkSession, sfDir: String,
       planDir: Option[Path] = None): Seq[(String, Counts)] = {
-    graft.sources.Tables.events(spark, sfDir)
     new java.io.File(sfDir).list().toSeq.filter(_.endsWith(".parquet"))
       .foreach(f => graft.sources.Tables.table(spark, sfDir, f.stripSuffix(".parquet")))
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>

@@ -1911,17 +1911,22 @@ private[queries] object CatalogAnalytics {
     * observation window are CENSORED at the corpus horizon, not dropped.
     * Time arithmetic is wall-clock epoch-hour integers built from the
     * q204-proven cast-to-date form (day·24 + hour — no epoch/zone
-    * conversion, immune to the ns/µs parquet vintage). Shape: one
-    * per-user aggregate (first event, first purchase) is the only
-    * corpus-sized shuffle; the horizon rides a 1-row broadcast (q206's
-    * anchor move); everything after operates on the duration GRID —
-    * bounded by the observation span in hours at any corpus size — where
-    * the at-risk counts are a reverse cumulative window and the survival
-    * curve a forward one (bounded-input global windows, q195's spine
-    * discipline). The curve itself is the cumulative sum of per-time
-    * micro-rounded −ln((n−d)/n) terms — exact BIGINT after one rounding
-    * per grid row, monotone, and exp-free (no cross-engine pow). A
-    * survival-zero row (d = n at the last death time) would be −ln 0:
+    * conversion, immune to the ns/µs parquet vintage). Shape: one scan
+    * feeds one per-user aggregate (first event, first purchase, last
+    * event), the only corpus-sized shuffle. Users are then counted by
+    * (death, key) — the duration for a death, the start hour for a
+    * censored user — carrying the latest event hour: ≤ 2 × the
+    * observation span in hours rows at any corpus size (its exchange
+    * carries map-side partial counts, at most that many per partition),
+    * coalesced to one partition. On it, with no further exchange, the
+    * horizon is a window maximum over the whole frame, a censored
+    * duration is horizon − start, and the regroup by duration gives the
+    * GRID, where the at-risk counts are a reverse cumulative window and
+    * the survival curve a forward one (bounded-input global windows,
+    * q195's spine discipline). The curve itself is the cumulative sum of
+    * per-time micro-rounded −ln((n−d)/n) terms — exact BIGINT after one
+    * rounding per grid row, monotone, and exp-free (no cross-engine pow).
+    * A survival-zero row (d = n at the last death time) would be −ln 0:
     * capped at 13,815,511 micro ≡ −ln 1e-6, documented, ANSI-safe
     * (q158's floor(Inf) lesson). Output: one row per death time. */
   private val q212 = Q(
@@ -1933,16 +1938,23 @@ private[queries] object CatalogAnalytics {
           .cast("long") * 24 + hour(col("ts")).cast("long")).as("h"))
       val perUser = ev.groupBy(col("user_id")).agg(
         min(col("h")).as("h0"),
-        min(when(col("event_type") === "purchase", col("h"))).as("hp"))
-      val horizon = ev.agg(max(col("h")).as("hmax"))
-      val obs = perUser.join(broadcast(horizon))
-        .select(
-          when(col("hp").isNotNull, col("hp") - col("h0"))
-            .otherwise(col("hmax") - col("h0")).as("t"),
-          col("hp").isNotNull.as("death"))
-      val byT = obs.groupBy(col("t")).agg(
-        sum(when(col("death"), 1L).otherwise(0L)).as("d"),
-        sum(when(!col("death"), 1L).otherwise(0L)).as("c"))
+        min(when(col("event_type") === "purchase", col("h"))).as("hp"),
+        max(col("h")).as("hm"))
+      // a censored user's duration needs the horizon, so it is keyed by
+      // its start hour until the horizon is known
+      val death = col("hp").isNotNull
+      val byKey = perUser
+        .groupBy(death.as("death"),
+          when(death, col("hp") - col("h0")).otherwise(col("h0")).as("key"))
+        .agg(count(lit(1)).as("n"), max(col("hm")).as("hm"))
+        .coalesce(1)
+      val byT = byKey
+        .withColumn("hmax", max(col("hm")).over(Window.partitionBy()))
+        .groupBy(when(col("death"), col("key"))
+          .otherwise(col("hmax") - col("key")).as("t"))
+        .agg(
+          sum(when(col("death"), col("n")).otherwise(0L)).as("d"),
+          sum(when(!col("death"), col("n")).otherwise(0L)).as("c"))
       val wRev = Window.orderBy(col("t").desc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val wFwd = Window.orderBy(col("t"))

@@ -1227,13 +1227,21 @@ private[queries] object CatalogEval {
     * downstream is exact integers. The scale move is the quantile: the
     * ⌈(n+1)(1−α)⌉-th order statistic is read from a COUNTING-SORT
     * histogram — nonconformity lives on the bounded [0, 1e6] micro grid,
-    * so a groupBy on the value plus one cumulative window over the
-    * ≤1e6-row (domain-bounded, corpus-independent) histogram replaces
-    * any global sort of n calibration scores. k uses exact integer
-    * ceiling division ((9(n+1)+9) div 10); an undersized calibration set
-    * (k > n) degrades to the full-set threshold via coalesce. The test
-    * half then audits: marginal coverage and average prediction-set
-    * size, both micro divisions of exact counts, 1-row output. */
+    * so a count per value plus one cumulative window over that
+    * domain-bounded histogram replaces any global sort of n calibration
+    * scores. k uses exact integer ceiling division ((9(n+1)+9) div 10);
+    * an undersized calibration set (k > n) degrades to the full-set
+    * threshold via coalesce. The test half then audits: marginal
+    * coverage and average prediction-set size, both micro divisions of
+    * exact counts, 1-row output. One corpus shuffle: a single scan scores
+    * every vector once and counts it by (half, label, micro-score),
+    * ≤ 4×(10⁶+1) rows at any corpus size, coalesced to one partition.
+    * The rest runs on that partition with no further exchange: n_cal
+    * and k from a window total of the calibration counts, their
+    * cumulative over a_micro (a range frame, so tied values share one
+    * cumulative), q̂ as a window minimum over the whole frame, and the
+    * test-half counts as conditional sums against q̂. An empty
+    * calibration half leaves n_cal and k NULL and q̂ = 10⁶. */
   private val q216 = {
     val w = Array.tabulate(64) { j =>
       (scala.util.hashing.MurmurHash3.productHash((j, "graft-linear")) % 1000) / 1000.0
@@ -1247,38 +1255,42 @@ private[queries] object CatalogEval {
           transform(col("embedding"), x => x.cast("double")),
           array(w.map(lit).toIndexedSeq: _*)) + lit(bias)
         val p = lit(1.0) / (lit(1.0) + exp(-z))
-        val scored = Tables.embeddings(s, d)
-          .select((col("label") % 2).cast("long").as("y"),
-            floor(p * 1000000 + 0.5).cast("long").as("p_micro"),
+        val cells = Tables.embeddings(s, d)
+          .groupBy(
             (conv(substring(md5(concat(col("vec_id").cast("string"),
               lit("graft-conf-split"))), 1, 15), 16, 10).cast("long")
-              % 2 === 0L).as("calib"))
+              % 2 === 0L).as("calib"),
+            (col("label") % 2).cast("long").as("y"),
+            floor(p * 1000000 + 0.5).cast("long").as("p_micro"))
+          .agg(count(lit(1)).as("cnt"))
+          .coalesce(1)
           .withColumn("a_micro",
             when(col("y") === 1L, lit(1000000L) - col("p_micro"))
               .otherwise(col("p_micro")))
-        val calib = scored.filter(col("calib"))
-        val kdf = calib.agg(count(lit(1)).as("n_cal"))
+        val calCnt = when(col("calib"), col("cnt"))
+        def onTest(c: Column): Column = when(!col("calib"), c)
+        val byA = Window.orderBy(col("a_micro"))
+        cells
+          .select(col("*"),
+            sum(calCnt).over(byA.rangeBetween(
+              Window.unboundedPreceding, Window.unboundedFollowing)).as("n_cal"),
+            sum(calCnt).over(byA.rangeBetween(
+              Window.unboundedPreceding, Window.currentRow)).as("cum"))
           .withColumn("k", expr("(9 * (n_cal + 1) + 9) div 10"))
-        val hist = calib.groupBy(col("a_micro")).agg(count(lit(1)).as("cnt"))
-        val wCum = Window.orderBy(col("a_micro"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val thr = hist
-          .withColumn("cum", sum(col("cnt")).over(wCum))
-          .join(broadcast(kdf))
-          .agg(max(col("n_cal")).as("n_cal"), max(col("k")).as("k"),
-            coalesce(min(when(col("cum") >= col("k"), col("a_micro"))),
-              lit(1000000L)).as("q_hat_micro"))
-        scored.filter(!col("calib"))
-          .join(broadcast(thr))
+          .withColumn("q_hat_micro", coalesce(
+            min(when(col("calib") && col("cum") >= col("k"), col("a_micro")))
+              .over(Window.partitionBy()),
+            lit(1000000L)))
           .agg(
-            max(col("n_cal")).as("n_cal"), max(col("k")).as("k"),
-            max(col("q_hat_micro")).as("q_hat_micro"),
-            count(lit(1)).as("n_test"),
-            sum(when(col("a_micro") <= col("q_hat_micro"), 1L).otherwise(0L))
-              .as("n_covered"),
-            sum(when(lit(1000000L) - col("p_micro") <= col("q_hat_micro"),
-              1L).otherwise(0L)
-              + when(col("p_micro") <= col("q_hat_micro"), 1L).otherwise(0L))
+            max(onTest(col("n_cal"))).as("n_cal"), max(onTest(col("k"))).as("k"),
+            max(onTest(col("q_hat_micro"))).as("q_hat_micro"),
+            coalesce(sum(onTest(col("cnt"))), lit(0L)).as("n_test"),
+            sum(onTest(when(col("a_micro") <= col("q_hat_micro"), col("cnt"))
+              .otherwise(0L))).as("n_covered"),
+            sum(onTest(col("cnt") * (
+              when(lit(1000000L) - col("p_micro") <= col("q_hat_micro"), 1L)
+                .otherwise(0L)
+              + when(col("p_micro") <= col("q_hat_micro"), 1L).otherwise(0L))))
               .as("set_cells"))
           .select(col("n_cal"), col("k"), col("q_hat_micro"), col("n_test"),
             col("n_covered"),

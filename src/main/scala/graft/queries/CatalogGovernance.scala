@@ -1514,10 +1514,10 @@ private[queries] object CatalogGovernance {
     * accounted in closed form, no dense class×source expansion exists
     * anywhere. One corpus shuffle: the (lang, bucket, source) cell
     * aggregate, ≤ |langs|×|buckets|×|sources| rows at any corpus size, is
-    * coalesced to one partition. The source and class margins are windows
-    * over it and the 1-row corpus total is its sum, broadcast; the class
-    * aggregate runs on the same partition, so nothing is re-shuffled or
-    * joined back. */
+    * coalesced to one partition. The source and class margins and the
+    * corpus total are windows over it (the total over the whole frame);
+    * the class aggregate runs on the same partition, so nothing is
+    * re-shuffled or joined back. */
   private val q203 = Q(
     "q203_t_closeness",
     (s, d) => {
@@ -1527,16 +1527,15 @@ private[queries] object CatalogGovernance {
           col("source"))
         .agg(count(lit(1)).as("n_lbs"))
         .coalesce(1)
-      val total = cells.agg(sum(col("n_lbs")).as("n"))
       cells
         .withColumn("n_s", sum(col("n_lbs")).over(Window.partitionBy(col("source"))))
         .withColumn("n_class", sum(col("n_lbs"))
           .over(Window.partitionBy(col("lang"), col("len_bucket"))))
+        .withColumn("n", sum(col("n_lbs")).over(Window.partitionBy()))
         // the margins count every cell; a class or source key that is
         // NULL names no class or source (the oracle's joins drop it)
         .filter(col("lang").isNotNull && col("len_bucket").isNotNull &&
           col("source").isNotNull)
-        .crossJoin(broadcast(total))
         .groupBy(col("lang"), col("len_bucket"), col("n_class"), col("n"))
         .agg(
           sum(abs(col("n_lbs") * col("n") - col("n_s") * col("n_class")))

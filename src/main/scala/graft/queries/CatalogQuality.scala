@@ -971,7 +971,8 @@ private[queries] object CatalogQuality {
     * emitted as psi_nano BIGINT. One corpus shuffle: the (source, bucket)
     * count, ≤ |sources|×|buckets| rows at any corpus size, is coalesced to
     * one partition; the bucket and source margins are windows over it and
-    * the 1-row corpus total is its sum, broadcast — no further exchange. */
+    * the corpus total is a window over the whole coalesced frame — no
+    * further exchange. */
   private val q150 = Q(
     "q150_psi_drift",
     (s, d) => {
@@ -979,11 +980,10 @@ private[queries] object CatalogQuality {
         .groupBy(col("source"), (col("n_chars") / 100).cast("long").as("bucket"))
         .agg(count(lit(1)).as("c_sb"))
         .coalesce(1)
-      val nAll = cells.agg(sum(col("c_sb")).as("n_all"))
       val j = cells
         .withColumn("c_b", sum(col("c_sb")).over(Window.partitionBy(col("bucket"))))
         .withColumn("n_s", sum(col("c_sb")).over(Window.partitionBy(col("source"))))
-        .crossJoin(broadcast(nAll))
+        .withColumn("n_all", sum(col("c_sb")).over(Window.partitionBy()))
         .withColumn("c_rest", col("c_b") - col("c_sb"))
         .withColumn("n_rest", col("n_all") - col("n_s"))
         // a NULL source or bucket key counts in the margins but names no

@@ -15,9 +15,15 @@ import org.apache.spark.sql.types.StructType
   * the scan (verified by plan-shape tests in `PlanShapeSpec`).
   */
 object Tables {
+  /** Every table is read with TIMESTAMP(NANOS) columns as longs of nanos
+    * (Spark 4 rejects them otherwise; see [[events]]), so one session keys
+    * all its reads under one posture whichever table it reads first. A
+    * caller's explicit setting is kept. */
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
   /** Session confs that change what a parquet footer infers to. */
   private val InferenceConfs = Seq(
-    "spark.sql.legacy.parquet.nanosAsLong",
+    NanosAsLong,
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled")
@@ -35,6 +41,9 @@ object Tables {
   private val schemas = new ConcurrentHashMap[SchemaKey, StructType]()
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    // `getAll` holds only the explicitly set confs (`getOption` would
+    // also return the default)
+    if (!spark.conf.getAll.contains(NanosAsLong)) spark.conf.set(NanosAsLong, "true")
     val file = s"$dir/$name.parquet"
     val path = new Path(file)
     val status =
@@ -73,7 +82,6 @@ object Tables {
     * sees identical values either way. Hard-coding one layout cost round 5
     * twenty queries and the whole bench — keep this dispatch. */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -10,7 +10,8 @@ package graft
 class BoundedTailInvarianceSpec extends SparkSpec {
 
   private val queries = Seq(
-    "q132_mad_outliers", "q150_psi_drift", "q156_jsd_drift", "q203_t_closeness")
+    "q132_mad_outliers", "q150_psi_drift", "q156_jsd_drift", "q203_t_closeness",
+    "q212_survival_km", "q216_conformal_threshold")
 
   private def rows(s: org.apache.spark.sql.SparkSession, name: String): Seq[String] =
     SparkEntry.queries(name)(s, sf("sf0.01")).collect().map(_.toString).toSeq.sorted

@@ -255,4 +255,36 @@ class LinkageEstimatorSpec extends SparkSpec {
     // the threshold must actually bind: some test rows outside the set
     assert(covered < test.length, "q_hat covers everything — nothing pinned")
   }
+
+  test("q216: an empty calibration or test half still returns its one row") {
+    val calib = conv(substring(md5(concat(col("vec_id").cast("string"),
+      lit("graft-conf-split"))), 1, 15), 16, 10).cast("long") % 2 === 0L
+    def run(keep: org.apache.spark.sql.Column) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-q216").toString
+      graft.sources.Tables.embeddings(spark, sf()).filter(keep)
+        .write.parquet(s"$dir/embeddings.parquet")
+      graft.queries.QueryCatalog.queries("q216_conformal_threshold")(spark, dir)
+        .collect().toSeq
+    }
+    val nTest = graft.sources.Tables.embeddings(spark, sf()).filter(!calib).count()
+    assert(nTest > 0)
+    // no calibration scores: no n_cal or k, and q̂ falls back to 10⁶,
+    // which covers every test row with both labels
+    val Seq(noCal) = run(!calib)
+    assert(noCal.isNullAt(noCal.fieldIndex("n_cal")) && noCal.isNullAt(noCal.fieldIndex("k")))
+    assert(noCal.getAs[Long]("q_hat_micro") == 1000000L)
+    assert(noCal.getAs[Long]("n_test") == nTest && noCal.getAs[Long]("n_covered") == nTest)
+    assert(noCal.getAs[Long]("coverage_micro") == 1000000L)
+    assert(noCal.getAs[Long]("avg_set_micro") == 2000000L)
+    // no test rows (or no rows at all): only the zero counts are set
+    Seq(calib, lit(false)).foreach { keep =>
+      val Seq(noTest) = run(keep)
+      Seq("n_cal", "k", "q_hat_micro", "n_covered").foreach { c =>
+        assert(noTest.isNullAt(noTest.fieldIndex(c)), s"$c with no test rows")
+      }
+      assert(noTest.getAs[Long]("n_test") == 0L)
+      assert(noTest.getAs[Long]("coverage_micro") == 0L)
+      assert(noTest.getAs[Long]("avg_set_micro") == 0L)
+    }
+  }
 }

@@ -38,17 +38,26 @@ class PlanAuditSpec extends SparkSpec {
       // q193: per-language offset window over the ≤|languages|-row
       // count aggregate (q89b's shape)
       "q193_perplexity_buckets" -> 1,
-      // q212: the reverse (at-risk) and forward (survival-curve)
-      // cumulative sums run over the duration GRID — bounded by the
-      // observation span in hours at any corpus size (q195's spine shape)
-      "q212_survival_km" -> 2,
+      // q150: the corpus total over the coalesced ≤|sources|×|buckets|-row
+      // (source, bucket) count
+      "q150_psi_drift" -> 1,
+      // q203: the corpus total over the coalesced ≤|langs|×|buckets|×
+      // |sources|-row cell aggregate
+      "q203_t_closeness" -> 1,
+      // q212: the horizon maximum over the coalesced ≤2×span-row
+      // (death, key) count, then the reverse (at-risk) and forward
+      // (survival-curve) cumulative sums over the duration GRID — all
+      // bounded by the observation span in hours at any corpus size
+      // (q195's spine shape)
+      "q212_survival_km" -> 3,
       // q214: allocation totals over the ≤|sources|-row sufficient-
       // statistics aggregate (q192's shape)
       "q214_neyman_allocation" -> 1,
-      // q216: the counting-sort quantile's cumulative count runs over the
-      // micro-value histogram — bounded by the [0, 1e6] value DOMAIN, not
-      // the corpus
-      "q216_conformal_threshold" -> 1,
+      // q216: the calibration total and cumulative count (one frame
+      // order, one WindowExec), then the threshold minimum, all over the
+      // coalesced ≤4×(1e6+1)-row (half, label, micro-score) count —
+      // bounded by the [0, 1e6] value DOMAIN, not the corpus
+      "q216_conformal_threshold" -> 2,
       // q217: the rank cumulative runs over the n_chars value-domain
       // histogram (q216's counting-sort move) — domain-bounded, never
       // corpus rows
@@ -73,7 +82,7 @@ class PlanAuditSpec extends SparkSpec {
     // "stream the big table past a tiny broadcast" shape that DOES hold at
     // 100 TB. Every entry here is that shape: ANN query sets (q23/
     // q137b), 1-row stats broadcasts (q38/q57/q63/q69/q74/q82/q88/q140/
-    // q150/q159), bounded histogram/frontier sides (q117/q125/q149),
+    // q159), bounded histogram/frontier sides (q117/q125/q149),
     // pair/range predicates over bounded sides (q44/q51/q108/q146),
     // q172's 1-row contingency-total broadcast, and q176's per-round
     // 1-row BPE winner broadcasts (3 since round-13's per-round
@@ -85,7 +94,7 @@ class PlanAuditSpec extends SparkSpec {
       "q108_pmi_cooccur" -> 1, "q117_bm25" -> 2, "q125_rrf_fusion" -> 3,
       "q137b_pq_serve" -> 1,
       "q140_mixture_weights" -> 1, "q146_triangle_count" -> 2,
-      "q149_ks_drift" -> 3, "q150_psi_drift" -> 1,
+      "q149_ks_drift" -> 3,
       "q159_dataset_card" -> 1,
       // (q164b left the list in round 10: the vec_argmin_cell kernel
       // replaced the broadcast-dim crossJoin fan-out, so no BNLJ remains
@@ -112,20 +121,11 @@ class PlanAuditSpec extends SparkSpec {
       // be exact there); 7 = that join + the 1-row corpus-count
       // broadcast replicated across the sample's lineage branches
       "q179_lsh_quality" -> 7,
-      // q203: the 1-row corpus-total broadcast crossJoins the bounded
-      // (lang, bucket, source) cell table
-      "q203_t_closeness" -> 1,
       // q205: the 9-row Benford literal table LEFT-joins digit counts
       // with no equi-key surviving the 1-row total crossJoin
       "q205_benford_audit" -> 1,
       // q206: the 1-row anchor-date broadcast against per-customer rows
       "q206_rfm_segments" -> 1,
-      // q212: the 1-row censoring-horizon broadcast against per-user rows
-      // (q206's anchor move)
-      "q212_survival_km" -> 1,
-      // q216: two 1-row broadcasts — k against the bounded histogram,
-      // then the threshold row against the test stream
-      "q216_conformal_threshold" -> 2,
       // q219: the power-iteration chain re-broadcasts each 1-row iterate
       // (v1, v2 twice, then λ and trace rows) against the corpus or
       // against another 1-row frame — q176's iterate shape
@@ -142,7 +142,7 @@ class PlanAuditSpec extends SparkSpec {
       // state set
       "q224_markov_stationary" -> 2,
       // q225: the 1-row per-class threshold frame broadcast against the
-      // scored stream (q216's shape)
+      // scored stream
       "q225_label_noise" -> 1,
       // q226: the 1-row vocabulary-size broadcast against the pair
       // stream (q69's LM-normalizer shape)
@@ -160,12 +160,17 @@ class PlanAuditSpec extends SparkSpec {
     // size does not grow with the corpus. Counts are plan nodes: a
     // coalesced frame used by two branches appears twice.
     val allowedSingleCoalesces = Map(
-      // q150: the (source, bucket) count — ≤ |sources|×|buckets| rows;
-      // the margin windows read it and so does the 1-row total broadcast
-      "q150_psi_drift" -> 2,
+      // q150: the (source, bucket) count — ≤ |sources|×|buckets| rows
+      "q150_psi_drift" -> 1,
       // q203: the (lang, bucket, source) cell aggregate — ≤ |langs|×
-      // |buckets|×|sources| rows; margin windows + the 1-row total
-      "q203_t_closeness" -> 2,
+      // |buckets|×|sources| rows
+      "q203_t_closeness" -> 1,
+      // q212: the (death, key) user count — ≤ 2 × the observation span
+      // in hours rows (key: a death's duration or a censored start hour)
+      "q212_survival_km" -> 1,
+      // q216: the (half, label, micro-score) count — ≤ 4×(1e6+1) rows,
+      // bounded by the micro-value domain
+      "q216_conformal_threshold" -> 1,
       // q224: the ≤|types|²+|types|-row transition matrix (two plan
       // nodes) and the ≤|types|-row π₀ of the π ← πP iteration
       "q224_markov_stationary" -> 3)

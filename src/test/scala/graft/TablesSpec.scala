@@ -39,6 +39,17 @@ class TablesSpec extends SparkSpec {
     assert(second.count() == Tables.documents(spark, sf()).count())
   }
 
+  test("a table read again after events is served from the memo") {
+    val dir = tempDir()
+    copy("documents", dir, "documents")
+    copy("events", dir, "events")
+    val s = isolated()
+    Tables.documents(s, dir.toString)
+    Tables.events(s, dir.toString)
+    val (_, jobs) = jobsOf(s)(Tables.documents(s, dir.toString))
+    assert(jobs == 0, s"documents after events launched $jobs job(s)")
+  }
+
   test("a table rewritten in place is read back with its new schema") {
     val dir = tempDir()
     copy("documents", dir, "t")

@@ -5,34 +5,17 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** North-star text / dedup operators (SURVEY.md §2.11): tokenization and
-  * shingles, span-level dedup and contamination, quality signals, and
+  * token statistics, span-level dedup and contamination, quality signals, and
   * cluster resolution over candidate pairs. The near-dup pair generators
   * live in the catalog, each with an md5-derived DuckDB twin: q19 exact
   * dedup, q21 MinHash+LSH, q22 SimHash.
   */
 object Text {
 
-  def tokens(text: Column): Column = filter(split(text, " "), t => t =!= "")
-
-  /** Word n-gram shingles (default 3); empty array for short docs
-    * (sequence(1, 0) would count DOWN in Spark, so guard explicitly).
-    *
-    * `toks` is LET-BOUND via single-element array + transform before the
-    * shingle lambda touches it: a lambda variable is a bound value, so a
-    * complex argument (e.g. `tokens(text)`) is evaluated once per row.
-    * Without the binding, CollapseProject inlines the argument into the
-    * lambda body and it re-evaluates per element_at — n re-tokenizations
-    * PER SHINGLE, observed as 20 s bench blowups (q55/q56/q58 at sf0.1)
-    * before this guard. */
-  def shingles(toks: Column, n: Int = 3): Column =
-    element_at(
-      transform(array(toks), ts =>
-        when(size(ts) >= n,
-          transform(
-            sequence(lit(1), size(ts) - (n - 1)),
-            i => concat_ws(" ", (0 until n).map(j => element_at(ts, i + j)): _*)))
-          .otherwise(array().cast("array<string>"))),
-      1)
+  /** The non-empty space-separated tokens: `split` never yields a NULL
+    * element, so removing "" gives the same array as the lambda form
+    * `filter(…, t -> t != '')`, in a codegen'd builtin. */
+  def tokens(text: Column): Column = array_remove(split(text, " "), "")
 
   /** Incremental (snapshot-over-snapshot) exact dedup: the re-crawl
     * pattern — keep each incoming doc only if (a) it is the min-id
@@ -377,66 +360,61 @@ object Text {
         EmailPattern, "<EMAIL>"),
       PhonePattern, "<PHONE>")
 
-  /** Gopher-style repetition signal: fraction of word n-grams that are
-    * duplicates of an earlier n-gram in the same document
-    * (1 - distinct/total; 0.0 for docs too short to have any). Boilerplate
-    * and degenerate generations score high. Pure per-row array work — the
-    * single `shingles` HOF is used once, so CollapseProject cannot
-    * re-evaluate it (the q21 inlining trap needs nested lambdas). */
-  def dupNgramFraction(text: Column, n: Int = 3): Column = {
-    // Let-binding via single-element array + transform: a lambda variable
-    // is a BOUND VALUE, so the shingle array is evaluated exactly once
-    // per row despite its three uses below (the naive form rebuilt it per
-    // use and re-tokenized per element — a 13 s bench outlier at sf0.1;
-    // `shingles` itself binds the token array, see its doc).
-    element_at(
-      transform(array(shingles(tokens(text), n)), sh =>
-        when(size(sh) > 0,
-          lit(1.0) - size(array_distinct(sh)).cast("double") / size(sh))
-          .otherwise(lit(0.0))),
-      1)
+  /** `doc_id` (from `idCol`, a key: one row per document) and the
+    * `token_stats(text, n)` struct as `st` ([[graft.functions.TokenStats]]),
+    * for the documents that have a token; a NULL or all-space text has
+    * none. The test is `ltrim(text) != ''` (ltrim strips only 0x20, the
+    * token separator) rather than `st.n_tokens > 0`: Spark pushes a filter
+    * through the projection by inlining the aliased struct, which would
+    * run the kernel twice per row. One scan and projection, no exchange. */
+  def tokenStats(docs: DataFrame, n: Int,
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    graft.plans.GraftExtensions.install(docs.sparkSession)
+    docs
+      .filter(ltrim(col(textCol)) =!= "")
+      .select(col(idCol).as("doc_id"),
+        graft.functions.TokenStats.token_stats(col(textCol), n).as("st"))
   }
 
-  /** Gopher-style top-token concentration: per doc, the fraction of tokens
-    * taken by the single most frequent token (plus the total). Exploded
-    * two-level aggregate — both groupBys hash-partition by doc_id, so the
-    * second reuses the first's clustering; skew follows document length,
-    * which the explode already spreads across partitions. */
-  def topTokenStats(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    docs
-      .select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("tok"))
-      .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c"))
-      .groupBy(col("doc_id"))
-      .agg(
-        (max(col("c")).cast("double") / sum(col("c"))).as("top_tok_frac"),
-        sum(col("c")).as("n_toks"))
+  /** Gopher-style repetition signal: fraction of word n-grams that are
+    * duplicates of an earlier n-gram in the same document
+    * (1 - distinct/total; 0.0 for docs too short to have any), read off a
+    * `token_stats(text, n)` struct ([[graft.functions.TokenStats]]).
+    * Boilerplate and degenerate generations score high. The same IEEE
+    * operations on the same integers as `1 - size(array_distinct(grams)) /
+    * size(grams)`, so the double is bit-exact. */
+  def dupNgramFraction(stats: Column): Column =
+    when(stats.getField("n_grams") > 0,
+      lit(1.0) - stats.getField("n_distinct").cast("double") /
+        stats.getField("n_grams").cast("double"))
+      .otherwise(lit(0.0))
 
   /** Quality GATE: compose the corpus-filter signals into a keep/drop
     * decision with the FIRST FAILING RULE named per document — the
     * filter-chain-with-reasons shape curation pipelines report on (how
     * much data each rule costs, what to re-tune). Rules in check order:
     * `too_short`, `too_long` (token count), `repetitive_ngrams`
-    * ([[dupNgramFraction]]), `token_concentration` ([[topTokenStats]]).
-    * `reason` is null ⟺ `keep`.
+    * ([[dupNgramFraction]] over 3-grams), `token_concentration` (the most
+    * frequent token's share of the document). `reason` is null ⟺ `keep`.
     *
     * All thresholds compare single-division doubles (the q53 trick), so
     * the booleans — and therefore the kept corpus — are engine-stable.
-    * One doc_id shuffle (the token-stats aggregate); the n-gram signal
-    * and the verdict are map-side. */
+    * Documents without a token are dropped; `idCol` is a key. One
+    * [[tokenStats]] pass over 3-grams: a single scan and projection, no
+    * exchange. */
   def qualityGate(docs: DataFrame,
       minTokens: Long = 5L, maxTokens: Long = 100000L,
       maxDupFrac: Double = 0.05, maxTopFrac: Double = 0.125,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val dup = docs.select(
-      col(idCol).as("doc_id"), dupNgramFraction(col(textCol), 3).as("dup_frac"))
-    topTokenStats(docs, idCol, textCol)
-      .join(dup, "doc_id")
-      .withColumn("reason", coalesce(
-        when(col("n_toks") < minTokens, "too_short"),
-        when(col("n_toks") > maxTokens, "too_long"),
-        when(col("dup_frac") > maxDupFrac, "repetitive_ngrams"),
-        when(col("top_tok_frac") > maxTopFrac, "token_concentration")))
+    tokenStats(docs, 3, idCol, textCol)
+      .select(
+        col("doc_id"), col("st.n_tokens").as("n_toks"),
+        coalesce(
+          when(col("st.n_tokens") < minTokens, "too_short"),
+          when(col("st.n_tokens") > maxTokens, "too_long"),
+          when(dupNgramFraction(col("st")) > maxDupFrac, "repetitive_ngrams"),
+          when(col("st.top_count").cast("double") / col("st.n_tokens") > maxTopFrac,
+            "token_concentration")).as("reason"))
       .select(
         col("doc_id"), col("n_toks"),
         col("reason").isNull.as("keep"), col("reason"))

@@ -31,6 +31,7 @@ object GraftExtensions {
     Seq(
       fn("rolling_hash", classOf[RollingHash])(RollingHash.build),
       fn("char_ngrams", classOf[CharNgrams])(CharNgrams.build),
+      fn("token_stats", classOf[TokenStats])(TokenStats.build),
       fn("vec_dot", classOf[VectorDot])(es => VectorDot(es.head, es(1))),
       fn("vec_norm", classOf[VectorNorm])(es => VectorNorm(es.head)),
       fn("frequent_items", classOf[FrequentItemsAgg])(FrequentItems.build),

@@ -43,7 +43,8 @@ private[queries] object CatalogAnalytics {
     * filter-chain report a curation pipeline publishes. Thresholds
     * compare bit-exact single-division doubles, so keep/reason are
     * engine-stable; minTokens=60 actually trips too_short on this corpus
-    * and the concentration rule fires on the rest of the drops. */
+    * and the concentration rule fires on the rest of the drops. One
+    * `documents` scan and projection (`token_stats`), no exchange. */
   private val q68 = Q(
     "q68_quality_gate",
     (s, d) => graft.ops.Text.qualityGate(

@@ -768,19 +768,21 @@ private[queries] object CatalogPipelines {
       FROM t"""))
 
   /** Gopher-style repetition quality filters under the oracle: duplicate
-    * word-3-gram fraction (per-row array work, NO shuffle) + top-token
-    * concentration (exploded two-level aggregate, both keyed on doc_id so
-    * the second groupBy and the final join reuse one clustering). The
-    * keep-flag thresholds are applied to bit-exact single-division
-    * doubles, so the boolean is engine-stable. */
+    * word-3-gram fraction + top-token concentration, both read off one
+    * `token_stats(text, 3)` struct per row (`functions/TokenStats`): one
+    * `documents` scan and projection (`Text.tokenStats`), no exchange.
+    * Documents without a token are dropped, as the twin's token join drops
+    * them; `doc_id` is a key. The keep-flag thresholds are applied to
+    * bit-exact single-division doubles, so the boolean is engine-stable. */
   private val q53 = Q(
     "q53_repetition",
     (s, d) => {
-      val docs = Tables.documents(s, d)
-      val dup = docs.select(
-        col("doc_id"),
-        graft.ops.Text.dupNgramFraction(col("text"), 3).as("dup_frac"))
-      dup.join(graft.ops.Text.topTokenStats(docs), "doc_id")
+      graft.ops.Text.tokenStats(Tables.documents(s, d), 3)
+        .select(
+          col("doc_id"),
+          graft.ops.Text.dupNgramFraction(col("st")).as("dup_frac"),
+          (col("st.top_count").cast("double") / col("st.n_tokens")).as("top_tok_frac"),
+          col("st.n_tokens").as("n_toks"))
         .select(
           col("doc_id"),
           r(col("dup_frac"), 6).as("dup_ngram_frac"),

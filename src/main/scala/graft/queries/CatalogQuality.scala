@@ -503,47 +503,27 @@ private[queries] object CatalogQuality {
 
   /** Intra-document repetition ratio over 5-gram shingles — the
     * boilerplate/spam signal (Gopher-style repetition filters): share of
-    * 5-grams that are duplicates of an earlier one in the SAME doc. Pure
-    * map-side HOF algebra (no explode, no shuffle): the gram array and its
-    * distinct form are built per row; all emitted values are exact
-    * integers. Docs under 5 tokens emit zero grams and ratio 0. */
+    * 5-grams that are duplicates of an earlier one in the SAME doc. One
+    * `token_stats(text, 5)` per row (`functions/TokenStats`): the kernel
+    * interns tokens to ids and counts distinct id windows, so no gram
+    * string or array is built and no lambda runs; no explode, no shuffle.
+    * All emitted values are exact integers. Docs under 5 tokens emit zero
+    * grams and ratio 0. The struct is a real attribute of the first
+    * projection, so the second reads its fields without re-running the
+    * kernel per reference. */
   private val q141 = Q(
     "q141_repetition_ratio",
     (s, d) => {
-      val toks = filter(split(col("text"), " "), x => x =!= "")
-      // Round 14: the round-13 form let-bound toks INSIDE one struct
-      // expression, but the projection referenced that struct SEVEN times
-      // (ng ×5, nd ×2) and each reference inlined the whole
-      // tokenize+gram-build tree with FRESH lambda ids — non-identical
-      // trees, so neither codegen nor interpreted subexpression
-      // elimination could share them (plan-verified: 7 copies of the
-      // transform in the before dump). Two fixes: (1) n_grams is
-      // size(toks)−4 in closed form — counting the grams never needed to
-      // BUILD them (the transform existed only to be sized); (2) the
-      // struct is let-bound into a real attribute via a two-step select,
-      // so tokenize + gram-build + array_distinct run ONCE per row and
-      // the second projection reads struct fields. Same lazy CASE guards
-      // (grams are never built for docs under 5 tokens).
-      val stats = element_at(
-        transform(array(toks), t => struct(
-          when(size(t) >= 5, (size(t) - 4).cast("long"))
-            .otherwise(lit(0L)).as("ng"),
-          when(size(t) >= 5,
-            size(array_distinct(transform(sequence(lit(1), size(t) - 4), i =>
-              concat_ws(" ", element_at(t, i), element_at(t, i + 1),
-                element_at(t, i + 2), element_at(t, i + 3), element_at(t, i + 4)))))
-              .cast("long"))
-            .otherwise(lit(0L)).as("nd"))),
-        1)
+      graft.plans.GraftExtensions.install(s)
       Tables.documents(s, d)
-        .select(col("doc_id"), stats.as("__st"))
+        .select(col("doc_id"), graft.functions.TokenStats.token_stats(col("text"), 5).as("st"))
         .select(
           col("doc_id"),
-          col("__st.ng").as("n_grams"),
-          col("__st.nd").as("n_distinct"),
-          when(col("__st.ng") > 0,
-            floor((col("__st.ng") - col("__st.nd")).cast("double") /
-              col("__st.ng").cast("double") * 1000000 + 0.5).cast("long"))
+          col("st.n_grams").as("n_grams"),
+          col("st.n_distinct").as("n_distinct"),
+          when(col("st.n_grams") > 0,
+            floor((col("st.n_grams") - col("st.n_distinct")).cast("double") /
+              col("st.n_grams").cast("double") * 1000000 + 0.5).cast("long"))
             .otherwise(lit(0L)).as("rep_micro"))
     },
     Some("""

@@ -516,21 +516,23 @@ class CorpusSpec extends SparkSpec {
     assert(e.getMessage.contains("input columns __hit_0 collide with the referential marker"))
   }
 
-  test("dupNgramFraction and topTokenStats on known documents") {
+  test("dupNgramFraction and the token_stats top-token share on known documents") {
     import org.apache.spark.sql.functions.col
     val docs = Seq(
       (1L, "a b c a b c a b c"),   // 7 trigrams, 3 distinct -> 4/7 dup
       (2L, "one two"),             // too short for trigrams -> 0.0
       (3L, "w x y z w")            // 3 distinct trigrams -> 0.0
     ).toDF("doc_id", "text")
-    val dup = docs.select(col("doc_id"),
-      graft.ops.Text.dupNgramFraction(col("text"), 3).as("f"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val got = graft.ops.Text.tokenStats(docs, 3)
+      .select(col("doc_id"), graft.ops.Text.dupNgramFraction(col("st")),
+        col("st.top_count").cast("double") / col("st.n_tokens"), col("st.n_tokens"))
+      .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2), r.getLong(3)))).toMap
+    val dup = got.map { case (k, v) => k -> v._1 }
     assert(math.abs(dup(1L) - 4.0 / 7) < 1e-12 && dup(2L) == 0.0 && dup(3L) == 0.0)
-    val top = graft.ops.Text.topTokenStats(docs)
-      .collect().map(r => (r.getLong(0), (r.getDouble(1), r.getLong(2)))).toMap
+    val top = got.map { case (k, v) => k -> ((v._2, v._3)) }
     assert(top(1L) == ((3.0 / 9, 9L))) // 'a' (or b/c) 3 of 9
     assert(top(2L) == ((0.5, 2L)))
     assert(top(3L) == ((0.4, 5L)))     // 'w' 2 of 5
   }
+
 }

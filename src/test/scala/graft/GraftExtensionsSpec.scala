@@ -17,6 +17,7 @@ class GraftExtensionsSpec extends SparkSpec {
   test("the function table names every function once, char_ngrams included") {
     assert(tableNames.size == GraftExtensions.functions.size)
     assert(tableNames.contains("char_ngrams"))
+    assert(tableNames.contains("token_stats"))
   }
 
   test("install and spark.sql.extensions register the same names") {
@@ -29,6 +30,7 @@ class GraftExtensionsSpec extends SparkSpec {
     val injected = lines.collect { case l if l.startsWith("fn ") => l.drop(3) }.toSet
     assert(injected == installed, s"extensions path: $injected")
     assert(lines.contains("char_ngrams abc,bcd"), lines.takeRight(20).mkString("\n"))
+    assert(lines.contains("token_stats [4,2,2,2]"), lines.takeRight(20).mkString("\n"))
   }
 }
 
@@ -51,6 +53,7 @@ object GraftExtensionsSpec {
       graftNames(spark).toSeq.sorted.foreach(n => println(s"fn $n"))
       val grams = spark.sql("SELECT char_ngrams('abcd', 3)").head().getSeq[String](0)
       println("char_ngrams " + grams.mkString(","))
+      println("token_stats " + spark.sql("SELECT token_stats(' a b  a b ', 3)").head().getStruct(0))
     } finally spark.stop()
   }
 }

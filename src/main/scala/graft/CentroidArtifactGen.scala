@@ -12,9 +12,9 @@ package graft
   * k is the SCALE DIAL: in production cells grow ∝ corpus size so that
   * within-cell pair counts stay flat (SemDeDup's quadratic is bounded by
   * cell size). The checked-in k=8 `CentroidArtifact` is the sf0.01-sized
-  * instance; regenerating with a larger k from a larger fixture (e.g.
-  * `k=64` from tools/sf1) produces the artifact SemDedupScaleSpec measures
-  * the flat-per-cell invariant with.
+  * instance (q164); `CentroidArtifact64`, regenerated with `k=64` from
+  * tools/sf1, is the one q164b and SemDedupScaleSpec run. Any k takes the
+  * same assignment path, the `vec_argmin_cell` kernel.
   *
   * Usage: sbt "runMain graft.CentroidArtifactGen /root/testdata/sf0.01 \
   *   src/main/scala/graft/ops/CentroidArtifact.scala [k] [objectName]"

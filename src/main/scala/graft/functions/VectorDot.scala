@@ -1,10 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression, GenericInternalRow, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.functions.{call_function, typedLit}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StructField, StructType}
 
 /** Dot product of two array<double> columns as a native codegen'd
   * expression — the hot-path primitive for cosine similarity
@@ -94,32 +96,35 @@ object VectorNorm {
     org.apache.spark.sql.functions.call_function("vec_norm", v)
 }
 
-/** Nearest-centroid cell id over a FROZEN centroid matrix, as one fused
-  * codegen'd kernel: cell = argmin_i (‖c_i‖² − 2·nv·c_i), ties to the
-  * lowest index — bit-identical to the `min(struct(d, cell))` broadcast-
-  * join argmin and to the unrolled-expression `SemDedup.cellOf` (same
-  * ‖c‖² host-side left-fold, same left-to-right dot, same strict-less
-  * first-wins tie rule; SemDedupScaleSpec pins the three-way identity).
+/** Nearest row of a FROZEN centroid matrix, as one fused codegen'd
+  * kernel: `vec_argmin_cell(v, centroids)` returns
+  * `struct<cell: int, d: double>`, the lowest-index row c minimizing
+  * d = ‖c‖² − 2·v·c. The ‖v‖² term of the squared distance is constant
+  * per row, so dropping it changes no ranking; add `vec_dot(v, v)` to `d`
+  * for the distance itself. The same op sequence as the DuckDB twins
+  * (`SemDedup.oracleSql`, `PqServe`): ‖c‖² is a host-side left fold
+  * emitted once, the dot runs left to right, and a strict `<` against the
+  * running best keeps the first index of the min. NaN distances never
+  * win over a number.
   *
-  * Why it exists (round 10): at k=640 the broadcast-join argmin fans
-  * every vector out to k scored rows before a corpus-sized aggregate —
-  * measured 31 s for 60 k vectors at sf3, with the fan-out re-executed
-  * per consumer of the assignment. This kernel is a plain per-row
-  * expression: the k·dim matrix rides the plan as ONE reference object
-  * (k=640·dim=64 ≈ 330 KB — broadcast-literal territory), the loop
-  * stays inside whole-stage codegen, and no shuffle or fan-out exists
-  * at all. At index-serving k (tens of thousands of cells) the matrix
-  * is a few tens of MB — still a per-executor constant, the same cost
-  * class as a broadcast dimension table.
-  *
-  * Null semantics: null in → null out (UnaryExpression default). NaN
-  * distances never win (strict `<` against a running best), matching
-  * the struct-min rule on the fixture domain where NaN cannot occur. */
-case class VectorArgminCell(child: Expression,
-    cents: Array[Array[Double]], c2: Array[Double]) extends UnaryExpression {
+  * `centroids` must be a constant `array<array<double>>` (a literal, or
+  * `array(array(…), …)` in SQL): `build` evaluates it once at
+  * analysis and fails with a named message if it is not constant, is
+  * empty, is ragged or holds a NULL. The k·dim matrix then rides the
+  * plan as one reference object and the loop stays inside whole-stage
+  * codegen — no unrolled expression per centroid, no fan-out join, no
+  * shuffle. Null vector in, NULL struct out; a vector and a centroid of
+  * different lengths are dotted over the shorter prefix, as `vec_dot`
+  * does. */
+case class VectorArgminCell(child: Expression, centroids: Literal) extends UnaryExpression {
 
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
+  @transient private lazy val cents = VectorArgminCell.rows(centroids)
+  @transient private lazy val c2 = cents.map(_.map(x => x * x).sum)
+
+  override def dataType: DataType = VectorArgminCell.ResultType
   override def prettyName: String = "vec_argmin_cell"
+  override def toString: String =
+    s"$prettyName($child, ${cents.length}x${cents(0).length} centroids)"
 
   override protected def nullSafeEval(a: Any): Any =
     VectorArgminCell.argmin(a.asInstanceOf[ArrayData], cents, c2)
@@ -136,10 +141,15 @@ case class VectorArgminCell(child: Expression,
 }
 
 object VectorArgminCell {
+  private val MatrixType = ArrayType(ArrayType(DoubleType))
+  private val ResultType = StructType(Seq(
+    StructField("cell", IntegerType, nullable = false),
+    StructField("d", DoubleType, nullable = false)))
+
   /** Shared by interpreted eval and generated code. */
-  def argmin(a: ArrayData, cents: Array[Array[Double]], c2: Array[Double]): Int = {
-    var best = 0
-    var bestD = Double.PositiveInfinity
+  def argmin(a: ArrayData, cents: Array[Array[Double]], c2: Array[Double]): InternalRow = {
+    var best = -1
+    var bestD = Double.NaN
     var i = 0
     while (i < cents.length) {
       val c = cents(i)
@@ -148,28 +158,54 @@ object VectorArgminCell {
       var j = 0
       while (j < n) { dot += a.getDouble(j) * c(j); j += 1 }
       val d = c2(i) - 2.0 * dot
-      if (d < bestD) { bestD = d; best = i }
+      if (d < bestD || best < 0 && !d.isNaN) { bestD = d; best = i }
       i += 1
     }
-    best
+    if (best < 0) best = 0 // every distance NaN: bestD is row 0's
+    new GenericInternalRow(Array[Any](best, bestD))
   }
 
-  /** Column API. The centroid matrix is expression STATE, not a child
-    * column, so the registry entry is created per matrix (named by k +
-    * content hash; the builder closure captures the arrays), registered
-    * only when absent like every other graft function. ‖c‖² is
-    * folded HERE, host-side, left-to-right — the single shared fold
-    * every argmin form uses. */
-  def vec_argmin_cell(spark: SparkSession, nv: Column,
-      cents: Array[Array[Double]]): Column = {
-    val c2 = cents.map(_.map(x => x * x).sum)
-    val name = "vec_argmin_cell_" + cents.length + "_" +
-      java.lang.Integer.toHexString(
-        java.util.Arrays.deepHashCode(cents.asInstanceOf[Array[AnyRef]]))
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-      registry.createOrReplaceTempFunction(name,
-        exprs => VectorArgminCell(exprs.head, cents, c2), "built-in")
-    org.apache.spark.sql.functions.call_function(name, nv)
+  /** The matrix of a `MatrixType` literal; fails by name on an empty,
+    * ragged or NULL-holding one. */
+  private def rows(m: Literal): Array[Array[Double]] = {
+    def holdsNull() = throw new IllegalArgumentException(
+      "vec_argmin_cell: the centroid matrix holds a NULL")
+    val outer = m.value.asInstanceOf[ArrayData]
+    if (outer == null) holdsNull()
+    val cs = Array.tabulate(outer.numElements()) { i =>
+      if (outer.isNullAt(i)) holdsNull()
+      val row = outer.getArray(i)
+      Array.tabulate(row.numElements()) { j =>
+        if (row.isNullAt(j)) holdsNull()
+        row.getDouble(j)
+      }
+    }
+    if (cs.isEmpty || cs(0).isEmpty)
+      throw new IllegalArgumentException("vec_argmin_cell: the centroid matrix is empty")
+    cs.indexWhere(_.length != cs(0).length) match {
+      case -1 => cs
+      case i => throw new IllegalArgumentException(
+        s"vec_argmin_cell: the centroid matrix is ragged: row $i has ${cs(i).length} " +
+          s"values, row 0 has ${cs(0).length}")
+    }
   }
+
+  private[graft] def build(exprs: Seq[Expression]): Expression = {
+    DistinctSketch.arity(exprs, "vec_argmin_cell", 2, 2)
+    val m = exprs(1)
+    if (!m.foldable || !Cast.canCast(m.dataType, MatrixType))
+      throw new IllegalArgumentException(
+        s"vec_argmin_cell: argument 2 must be a constant array<array<double>>, got ${m.sql}")
+    val matrix = Literal(Cast(m, MatrixType).eval(), MatrixType)
+    rows(matrix) // a malformed matrix fails here, at analysis
+    val v = exprs.head.dataType match {
+      case ArrayType(DoubleType, _) => exprs.head
+      case _ => Cast(exprs.head, ArrayType(DoubleType))
+    }
+    VectorArgminCell(v, matrix)
+  }
+
+  /** Column API — requires `GraftExtensions.install(spark)` first. */
+  def vec_argmin_cell(v: Column, cents: Array[Array[Double]]): Column =
+    call_function("vec_argmin_cell", v, typedLit(cents))
 }

@@ -18,10 +18,10 @@ package graft.ops
   *  - ADC sums per-subspace dots left-associatively in both engines
   *    (NOT as one 64-wide dot: ((d0+d1)+d2)… groups differently and can
   *    round differently);
-  *  - encode argmin: Spark takes the head of `array_sort(struct(d, c))`
-  *    (min d, tie → lowest c); the twin uses
-  *    `list_position(d, list_min(d)) - 1` (first index of the min —
-  *    the same tie rule, and exact because the min IS an element).
+  *  - encode argmin: Spark's `vec_argmin_cell` scans the centroids with a
+  *    strict `<` against the running best (min d, tie → lowest c); the
+  *    twin uses `list_position(d, list_min(d)) - 1` (first index of the
+  *    min — the same tie rule, and exact because the min IS an element).
   */
 object PqServe {
   import PqCodebookArtifact.{books, m}

@@ -3,14 +3,17 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorArgminCell.vec_argmin_cell
+
 /** North-star similarity search over embedding columns (SURVEY.md §2.11).
   *
   * Brute-force cosine is the correctness baseline (exact, O(queries×corpus),
   * fine when the query set is small or the corpus is pre-filtered); the
   * catalog carries it as q23. Int8 scalar and product quantization shrink
   * the stored embedding, and k-means centroids give the cells SemDedup
-  * blocks on. Dot products and norms use the native codegen'd
-  * `graft.functions.VectorDot`/`VectorNorm`; the pure-builtin [[dot]]
+  * blocks on. Dot products, norms and nearest centroids use the native
+  * codegen'd `graft.functions.VectorDot`/`VectorNorm`/`VectorArgminCell`;
+  * the pure-builtin [[dot]]
   * stays as the independent reference the PQ identity is checked
   * against.
   */
@@ -36,21 +39,6 @@ object Similarity {
     * which install GraftExtensions first. */
   private def fastNorm(v: Column): Column =
     graft.functions.VectorNorm.vec_norm(v)
-
-  /** Centroids ranked nearest-first for the vector `v`: a sorted array of
-    * struct(d, cell) with d = ||c||² − 2·v·c. The ||v||² term of the true
-    * squared distance is constant per row, so dropping it changes no
-    * ordering and saves a dot per centroid. Ties break to the lowest cell
-    * index via the struct sort — the first-index-of-min rule of the
-    * DuckDB twins. Each ||c||² is summed here (Scala left fold) and
-    * emitted as one literal, never recomputed per row or per engine. */
-  private[ops] def rankCentroids(v: Column, cents: Array[Array[Double]]): Column =
-    array_sort(array(cents.zipWithIndex.map { case (c, i) =>
-      struct(
-        (lit(c.map(x => x * x).sum) -
-          lit(2.0) * fastDot(v, array(c.map(lit).toIndexedSeq: _*))).as("d"),
-        lit(i).as("cell"))
-    }.toIndexedSeq: _*))
 
   /** k-means training rows: a seeded `trainFraction` sample of `rows`, or
     * all of `rows` when the sample holds fewer than `minTrain`. sample()
@@ -184,20 +172,17 @@ object Similarity {
   }
 
   /** PQ encoding: per subspace, the index of the nearest codebook centroid
-    * by squared distance (the ||v||² term is constant per subvector, so the
-    * ranking key is ||c||² - 2 v·c — one dot per centroid). `nv` must be
-    * unit-normalized ([[unitNorm]]). Output is array<int> of length m —
+    * by squared distance (`vec_argmin_cell`: the ||v||² term is constant
+    * per subvector, so the ranking key is ||c||² - 2 v·c — one dot per
+    * centroid, in one fused loop). `nv` must be unit-normalized
+    * ([[unitNorm]]). Output is array<int> of length m —
     * at kCent ≤ 256 that is m bytes of information per vector, a 32×
     * compression of a 64-float embedding; encode once at ingest, store the
     * codes column, and scan codes instead of floats. */
   def pqCodes(nv: Column, books: Array[Array[Array[Double]]]): Column = {
     val subLen = books(0)(0).length
     array(books.zipWithIndex.map { case (book, j) =>
-      element_at(
-        // let-bind the subvector so the K centroid dots share one slice
-        transform(array(slice(nv, j * subLen + 1, subLen)), sub =>
-          element_at(rankCentroids(sub, book), 1).getField("cell")),
-        1)
+      vec_argmin_cell(slice(nv, j * subLen + 1, subLen), book).getField("cell")
     }.toIndexedSeq: _*)
   }
 
@@ -238,19 +223,7 @@ object Similarity {
             array(cArr.map(lit).toIndexedSeq: _*))).toIndexedSeq: _*)
       }.toIndexedSeq: _*))
       .select(col("q_id"), col("lut"))
-    // Stage boundary between ENCODE and ADC (round-9 sf10 find-and-fix):
-    // the unrolled m×256-centroid encoder expression exceeds the JVM
-    // method-size limit, so its stage falls back to interpreted
-    // execution — and without a boundary the BNLJ join lives in the SAME
-    // stage, where every joined row materializes an interpreted copy of
-    // the broadcast side's m×256-double LUT (~16 KB/row): measured 236 s
-    // at sf10 vs 10 s for the encode itself (q137). One exchange of the
-    // thin (vec_id, codes) rows (m bytes each) ends the encoder's stage;
-    // the join+ADC stage then whole-stage-codegens with in-place reads of
-    // the broadcast LUT. Identical IEEE ops, identical results — measured
-    // 236 → ~13 s at sf10.
-    val cThin = c.repartition(col("vec_id"))
-    val scored = q.join(cThin, col("vec_id") =!= col("q_id"))
+    val scored = q.join(c, col("vec_id") =!= col("q_id"))
       .withColumn("sim", (0 until m).map(j =>
         element_at(element_at(col("lut"), j + 1),
           element_at(col("codes"), j + 1) + 1)).reduce[Column](_ + _))
@@ -275,11 +248,8 @@ object Similarity {
     val subLen = books(0)(0).length
     val errs = corpus.select(unitNorm(asDouble(col("embedding"))).as("nv"))
       .select(posexplode(array((0 until m).map { j =>
-        val minD = element_at(
-          // let-bind the subvector so the K centroid dots share one slice
-          transform(array(slice(col("nv"), j * subLen + 1, subLen)), sub =>
-            element_at(rankCentroids(sub, books(j)), 1).getField("d") + fastDot(sub, sub)),
-          1)
+        val sub = slice(col("nv"), j * subLen + 1, subLen)
+        val minD = vec_argmin_cell(sub, books(j)).getField("d") + fastDot(sub, sub)
         floor(minD * 1000000 + lit(0.5))
       }.toIndexedSeq: _*)).as(Seq("subspace", "erru")))
     errs.groupBy(col("subspace"))

@@ -34,6 +34,7 @@ object GraftExtensions {
       fn("token_stats", classOf[TokenStats])(TokenStats.build),
       fn("vec_dot", classOf[VectorDot])(es => VectorDot(es.head, es(1))),
       fn("vec_norm", classOf[VectorNorm])(es => VectorNorm(es.head)),
+      fn("vec_argmin_cell", classOf[VectorArgminCell])(VectorArgminCell.build),
       fn("frequent_items", classOf[FrequentItemsAgg])(FrequentItems.build),
       fn("hll_distinct", classOf[SketchAgg[_]])(DistinctSketch.build(stored = false)),
       fn("hll_sketch", classOf[SketchAgg[_]])(DistinctSketch.build(stored = true)),

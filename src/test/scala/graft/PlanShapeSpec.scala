@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.Row
+
 import graft.queries.QueryCatalog
 
 /** Plan-shape guards (SURVEY.md §5.5): dims broadcast, filters pushed to
@@ -159,7 +161,9 @@ class PlanShapeSpec extends SparkSpec {
         kll_n(kll_agg(n_chars)) AS kn,
         rolling_hash('abc') AS rh,
         vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS dot,
-        vec_norm(array(3.0d, 4.0d)) AS nrm
+        vec_norm(array(3.0d, 4.0d)) AS nrm,
+        vec_argmin_cell(array(1, 0),
+          array(array(0.0d, 1.0d), array(1.0d, 0.0d))) AS near
       FROM sql_docs""").head()
     val docs = graft.sources.Tables.documents(spark, sf())
     assert(row.getAs[Long]("n_docs") == docs.count())
@@ -171,6 +175,9 @@ class PlanShapeSpec extends SparkSpec {
     assert(row.getAs[Double]("med") ==
       sortedChars(math.max(1, math.ceil(0.5 * sortedChars.length).toInt) - 1).toDouble)
     assert(row.getAs[Double]("dot") == 11.0 && row.getAs[Double]("nrm") == 5.0)
+    // the int vector is cast to array<double>; ‖c‖² − 2·v·c is 1.0 for
+    // cell 0 and −1.0 for cell 1
+    assert(row.getAs[Row]("near") == Row(1, -1.0))
   }
 
   test("q152: bounded-heap topk runs partial+final with NO sort node") {

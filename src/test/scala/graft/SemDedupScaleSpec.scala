@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorArgminCell
 import graft.ops.{CentroidArtifact, CentroidArtifact64, SemDedup, Similarity}
 
 /** The SemDeDup scale dial, measured in code (round-8 ask): within-cell
@@ -22,14 +23,13 @@ class SemDedupScaleSpec extends SparkSpec {
 
   /** Per-cell histogram → (n, maxCell, pairsPerDoc): pair work is
     * Σ c·(c−1)/2 over cells, the exact number of cosine evaluations the
-    * within-cell join performs. Goes through `assignCells` (the shipping
-    * strategy switch), so the cells counted are the cells the dedup runs
-    * with at any k — including k=640, where only the fused kernel form
-    * exists. */
+    * within-cell join performs. Cells come from `vec_argmin_cell(…).cell`
+    * over the unit-normalized embeddings, the assignment `semDedup` runs. */
   private def cellStats(sfDir: String, cents: Array[Array[Double]]): (Long, Long, Double) = {
     graft.plans.GraftExtensions.install(spark)
-    val sizes = SemDedup.assignCells(
-        graft.sources.Tables.embeddings(spark, sfDir), cents)
+    val sizes = graft.sources.Tables.embeddings(spark, sfDir)
+      .select(VectorArgminCell.vec_argmin_cell(Similarity.unitNorm(
+        Similarity.asDouble(col("embedding"))), cents).getField("cell").as("cell"))
       .groupBy(col("cell")).agg(count(lit(1)).as("c"))
       .select(col("c")).collect().map(_.getLong(0))
     val n = sizes.sum
@@ -70,62 +70,6 @@ class SemDedupScaleSpec extends SparkSpec {
     // (measured 148.8 → 15.8, a 9.4× cut)
     assert(ppdBigK64 <= ppdBigK8 / 3.0,
       f"k=64 should cut per-doc work vs k=8, got $ppdBigK64%.1f vs $ppdBigK8%.1f")
-  }
-
-  test("all three argmin forms (unrolled expr, broadcast join, fused kernel) are bit-identical") {
-    // cellOf (k unrolled into one expression, argmin via struct-sort
-    // head) vs assignByJoin (k as broadcast data, argmin via min(struct))
-    // vs the round-10 VectorArgminCell kernel (k as one plan reference
-    // object, argmin as a generated loop): same ‖c‖² host fold, same
-    // left-to-right dot, same lowest-index tie rule → same IEEE doubles
-    // → same cells. This is what licenses the strategy switches without
-    // touching the oracle twin.
-    graft.plans.GraftExtensions.install(spark)
-    val emb = graft.sources.Tables.embeddings(spark, sf())
-    val viaExpr = emb.select(col("vec_id"),
-        SemDedup.cellOf(Similarity.unitNorm(
-          Similarity.asDouble(col("embedding"))), CentroidArtifact64.centers)
-          .as("cell"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val viaJoin = SemDedup.assignByJoin(emb, CentroidArtifact64.centers)
-      .select(col("vec_id"), col("cell"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val viaKernel = SemDedup.semDedup(emb, tau = 0.40, CentroidArtifact64.centers)
-      .select(col("vec_id"), col("cell"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(viaJoin == viaExpr, "join form diverged from the unrolled expression")
-    assert(viaKernel == viaExpr, "kernel form diverged from the unrolled expression")
-  }
-
-  test("kernel ≡ join at the decade artifact's k=640 (where unrolling no longer compiles)") {
-    graft.plans.GraftExtensions.install(spark)
-    val emb = graft.sources.Tables.embeddings(spark, sf("sf0.1"))
-    val cents = graft.ops.CentroidArtifact640.centers
-    val viaKernel = SemDedup.assignCells(emb, cents)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val viaJoin = SemDedup.assignByJoin(emb, cents)
-      .select(col("vec_id"), col("cell"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(viaKernel == viaJoin)
-  }
-
-  test("decade third point: k∝n holds at n×10 (tools/sf1, k=640)") {
-    // The spec's first test pins (n=2 000, k=64) ppd ≈ 15.8. The decade
-    // artifact grows BOTH tenfold: (n=20 000, k=640) must keep per-doc
-    // pair work flat (measured 15.9 — the k∝n invariant at its third
-    // point). tools/sf1 is a regenerated-per-container fixture
-    // (tools/make_sf.py), so the test cancels rather than fails when it
-    // is absent.
-    assume(new java.io.File("tools/sf1/embeddings.parquet").exists(),
-      "tools/sf1 fixture not generated in this container")
-    val (nBase, _, ppdBase) = cellStats(sf("sf0.1"), CentroidArtifact64.centers)
-    val (n10, max10, ppd10) = cellStats("tools/sf1",
-      graft.ops.CentroidArtifact640.centers)
-    info(f"sf0.1 k=64:      n=$nBase%d ppd=$ppdBase%.1f")
-    info(f"tools/sf1 k=640: n=$n10%d maxCell=$max10%d ppd=$ppd10%.1f")
-    assert(n10 >= 10 * nBase, "fixture step is not 10× — spec premise broken")
-    assert(ppd10 <= 2.0 * ppdBase,
-      f"per-doc pair work grew ${ppd10 / ppdBase}%.1f× under k∝n — dial broken")
   }
 
   test("scaled-k dedup output is consistent: every dup_of points into the same cell") {

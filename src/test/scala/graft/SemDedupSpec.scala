@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{CentroidArtifact, SemDedup, Similarity}
+import graft.ops.{CentroidArtifact, CentroidArtifact64, SemDedup, Similarity}
 
 /** SemDeDup (q164): frozen-centroid cell assignment + within-cell cosine
   * dedup. The oracle row proves cross-engine agreement; this spec proves
@@ -46,15 +46,16 @@ class SemDedupSpec extends SparkSpec {
 
   test("cell assignment is the argmin over the frozen centroids") {
     val nv = normalized
-    val cents = CentroidArtifact.centers
-    val cells = SemDedup.semDedup(emb, tau = 0.40).collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    for ((id, v) <- nv) {
-      val dists = cents.map { c =>
-        c.map(x => x * x).sum -
-          2.0 * c.zip(v).foldLeft(0.0) { case (acc, (x, y)) => acc + x * y }
+    Seq(CentroidArtifact.centers, CentroidArtifact64.centers).foreach { cents =>
+      val cells = SemDedup.semDedup(emb, tau = 0.40, cents).collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap
+      for ((id, v) <- nv) {
+        val dists = cents.map { c =>
+          c.map(x => x * x).sum -
+            2.0 * c.zip(v).foldLeft(0.0) { case (acc, (x, y)) => acc + x * y }
+        }
+        assert(cells(id) == dists.indexOf(dists.min), s"k=${cents.length}: vec $id cell mismatch")
       }
-      assert(cells(id) == dists.indexOf(dists.min), s"vec $id cell mismatch")
     }
   }
 

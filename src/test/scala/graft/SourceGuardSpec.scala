@@ -89,7 +89,6 @@ class SourceGuardSpec extends AnyFunSuite {
     "Schemas.asTrendGold" -> "gold records (SchemasSpec)",
     "SparkEntry.entry" -> "smoke entry point (FixtureCanarySpec)",
     "RollingHash.hashString" -> "RollingHashSpec, PropertySpec",
-    "SemDedup.assignCells" -> "SemDedupScaleSpec",
     "Similarity.bruteForceTopK" -> "PqArtifactSpec, TextSimilaritySpec",
     "Similarity.dot" -> "PQ score identity (TextSimilaritySpec)",
     "Similarity.pqReconstruct" -> "PqArtifactSpec, TextSimilaritySpec")

@@ -1,26 +1,16 @@
 #!/bin/bash
-# Round-13 iteration aid: time a comma-list of queries in-JVM without sbt
-# startup, under the driver bench's own JVM posture (8 GB heap, full
-# JDK-17 --add-opens set, local[$SPARK_GRAFT_CPUS]).
+# Time a comma-list of queries in-JVM without sbt startup, through
+# tools/run_fork.sh (the JVM posture and --add-opens set of the fork
+# bench) with an 8 GB heap, local[32] and the sf0.1 fixture by default.
 #
 #   tools/bench_only.sh q193_perplexity_buckets[,q128_pagerank...]
 #
 # Env passthrough: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-# SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_PASSES (default 3).
+# SPARK_GRAFT_CPUS (default 32), SPARK_DRIVER_MEM (default 8g),
+# SPARK_GRAFT_PASSES (default 3).
 set -euo pipefail
-cd "$(dirname "$0")/.."
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 SPARK_GRAFT_ONLY="$1" \
 SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
-exec java -Xmx"${SPARK_DRIVER_MEM:-8g}" $ADD_OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CP" graft.Bench
+SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-8g}" \
+exec "$(dirname "$0")/run_fork.sh"

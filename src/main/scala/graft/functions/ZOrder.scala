@@ -60,9 +60,8 @@ object ZOrder {
   def z_value(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("z_value", a, b)
 
-  /** Builder-level int->long widening (the RollingHash toStringExpr
-    * pattern — ExpectsInputTypes isn't implementable outside the sql
-    * package): without it, IntegerType inputs like datediff() work under
+  /** Builder-level int->long widening (ExpectsInputTypes isn't
+    * implementable outside the sql package): without it, IntegerType inputs like datediff() work under
     * codegen (Java widens) but throw ClassCastException on the
     * interpreted path, e.g. during constant folding. */
   private[graft] def toLongExpr(e: Expression): Expression =

@@ -38,13 +38,12 @@ object Corpus {
     * `sequence`, slice per start, posexplode. No shuffle at all: the
     * operator is map-side, so it composes with any downstream
     * partitioning for free. */
-  def chunkDocuments(docs: DataFrame, chunkSize: Int, stride: Int,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def chunkDocuments(docs: DataFrame, chunkSize: Int, stride: Int): DataFrame = {
     require(chunkSize > 0, s"chunkDocuments: chunkSize must be positive, got $chunkSize")
     require(stride > 0 && stride <= chunkSize,
       s"chunkDocuments: stride must be in [1, chunkSize], got $stride")
     val chunks = element_at(
-      transform(array(graft.ops.Text.tokens(col(textCol))), ts =>
+      transform(array(graft.ops.Text.tokens(col("text"))), ts =>
         when(size(ts) === 0, array().cast("array<struct<chunk_text:string,n_tokens:bigint>>"))
           .otherwise(transform(
             sequence(
@@ -57,7 +56,7 @@ object Corpus {
               least(lit(chunkSize), size(ts) - i * stride).cast("long").as("n_tokens"))))),
       1)
     docs
-      .select(col(idCol).as("doc_id"), posexplode(chunks))
+      .select(col("doc_id"), posexplode(chunks))
       .select(
         col("doc_id"), col("pos").as("chunk_id"),
         col("col.chunk_text").as("chunk_text"),
@@ -345,19 +344,18 @@ object Corpus {
     * shard, no single-partition bottleneck. Size nShards so a shard's
     * docs fit one task comfortably (tokens are a long; overflow is not a
     * concern below ~9e18 tokens per shard). Returns one row per doc:
-    * (idCol, shard, n_tok, bin). */
+    * (doc_id, shard, n_tok, bin). */
   def packSequences(
       docs: DataFrame,
       tokCol: Column,
       budget: Long,
-      nShards: Int,
-      idCol: String = "doc_id"): DataFrame = {
+      nShards: Int): DataFrame = {
     require(budget > 0, s"budget must be positive: $budget")
     require(nShards > 0, s"nShards must be positive: $nShards")
-    val w = Window.partitionBy(col("shard")).orderBy(col(idCol))
+    val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     docs
-      .select(col(idCol), pmod(col(idCol), lit(nShards)).as("shard"), tokCol.as("n_tok"))
+      .select(col("doc_id"), pmod(col("doc_id"), lit(nShards)).as("shard"), tokCol.as("n_tok"))
       .withColumn("cum", sum(col("n_tok")).over(w))
       .withColumn("bin", floor((col("cum") - col("n_tok")) / budget))
       .drop("cum")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -30,10 +30,9 @@ object Text {
     * shuffle at all, at the cost of a documented false-positive drop
     * rate. */
   def incrementalDedup(
-      incoming: DataFrame, prior: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+      incoming: DataFrame, prior: DataFrame, textCol: String = "text"): DataFrame = {
     val priorFps = prior.select(xxhash64(col(textCol)).as("__fp")).distinct()
-    val w = Window.partitionBy(col("__fp")).orderBy(col(idCol))
+    val w = Window.partitionBy(col("__fp")).orderBy(col("doc_id"))
     incoming
       .withColumn("__fp", xxhash64(col(textCol)))
       .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
@@ -49,9 +48,8 @@ object Text {
     * allocated ~spanBytes garbage per position, 2× the token bytes at
     * n=8, and GC-bound the span queries), and no checked arithmetic
     * (ANSI mode rejects wrapping `*`). Map-side codegen throughout. */
-  def spanHashes(docs: DataFrame, n: Int,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val tokenHashes = transform(tokens(col(textCol)), t => xxhash64(t))
+  def spanHashes(docs: DataFrame, n: Int): DataFrame = {
+    val tokenHashes = transform(tokens(col("text")), t => xxhash64(t))
     val spans = element_at(
       transform(array(tokenHashes), th =>
         when(size(th) >= n,
@@ -61,7 +59,7 @@ object Text {
           .otherwise(array().cast("array<long>"))),
       1)
     docs
-      .select(col(idCol).as("doc_id"), posexplode(spans))
+      .select(col("doc_id"), posexplode(spans))
       .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("gh"))
   }
 
@@ -80,10 +78,9 @@ object Text {
     * shuffle on different keys) and cost three shuffles; this is one
     * evaluation, one shuffle, O(total tokens), never pairwise, keyed on
     * the 64-bit hash rather than span text. */
-  def repeatedSpans(docs: DataFrame, n: Int = 8, minDocs: Int = 2,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def repeatedSpans(docs: DataFrame, n: Int = 8, minDocs: Int = 2): DataFrame = {
     val byGh = Window.partitionBy(col("gh"))
-    spanHashes(docs, n, idCol, textCol)
+    spanHashes(docs, n)
       .withColumn("__dr", dense_rank().over(byGh.orderBy(col("doc_id"))))
       // dense_rank is IntegerType; n_docs keeps the old count() LongType
       .withColumn("n_docs", max(col("__dr")).over(byGh).cast("long"))
@@ -136,8 +133,7 @@ object Text {
     *
     * Positions are 1-based token indexes, `[cut_start, cut_end)` —
     * exactly [[spanCutList]]'s output contract. */
-  def applyCutList(docs: DataFrame, cuts: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def applyCutList(docs: DataFrame, cuts: DataFrame): DataFrame = {
     val cutArr = cuts.groupBy(col("doc_id"))
       .agg(collect_list(struct(col("cut_start"), col("cut_end"))).as("__cuts"))
     // exists(null) is null -> coalesce keeps everything for cut-less docs
@@ -145,11 +141,11 @@ object Text {
       !exists(col("__cuts"),
         c => (i + 1) >= c.getField("cut_start") && (i + 1) < c.getField("cut_end")),
       lit(true))
-    val kept = filter(tokens(col(textCol)), keep)
+    val kept = filter(tokens(col("text")), keep)
     docs
-      .join(cutArr, docs(idCol) === cutArr("doc_id"), "left")
+      .join(cutArr, Seq("doc_id"), "left")
       // let-bind the filtered array so join/count don't re-run the filter
-      .select(docs(idCol).as("doc_id"),
+      .select(col("doc_id"),
         element_at(transform(array(kept), k => struct(
           array_join(k, " ").as("clean_text"),
           size(k).cast("long").as("n_tokens_kept"))), 1).as("__r"))
@@ -167,10 +163,9 @@ object Text {
     * text is; the train side stays O(total tokens). A nonzero
     * `contaminated_frac` is the standard decontamination trigger. */
   def crossCorpusContamination(
-      corpus: DataFrame, reference: DataFrame, n: Int = 8,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val a = spanHashes(corpus, n, idCol, textCol)
-    val refSet = spanHashes(reference, n, idCol, textCol).select("gh").distinct()
+      corpus: DataFrame, reference: DataFrame, n: Int = 8): DataFrame = {
+    val a = spanHashes(corpus, n)
+    val refSet = spanHashes(reference, n).select("gh").distinct()
     // ONE pass over the train grams: mark hits with a left join against
     // the (unique-keyed, so cardinality-preserving) reference set, then
     // count total and marked in a single doc-keyed aggregate. Two
@@ -282,12 +277,11 @@ object Text {
     * md5-derived int60s, so the DuckDB twin (q78) reproduces every
     * fingerprint bit-for-bit. Documents shorter than k tokens emit
     * nothing; shorter than k+w-1 emit the single global minimum. */
-  def winnowFingerprints(docs: DataFrame, k: Int, w: Int,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def winnowFingerprints(docs: DataFrame, k: Int, w: Int): DataFrame = {
     require(k > 0 && w > 0, s"winnowFingerprints: k and w must be positive, got k=$k w=$w")
     def gramHash(ts: Column, i: Column): Column =
       conv(substring(md5(concat_ws(" ", slice(ts, i, lit(k)))), 1, 15), 16, 10).cast("long")
-    val fps = element_at(transform(array(tokens(col(textCol))), ts =>
+    val fps = element_at(transform(array(tokens(col("text"))), ts =>
       element_at(transform(array(
         when(size(ts) - (k - 1) >= 1,
           transform(sequence(lit(1), size(ts) - (k - 1)), i => gramHash(ts, i)))
@@ -297,7 +291,7 @@ object Text {
           .otherwise(array_distinct(
             transform(sequence(lit(1), size(hs) - (w - 1)),
               j => array_min(slice(hs, j, lit(w))))))), 1)), 1)
-    docs.select(col(idCol), explode(fps).as("fp"))
+    docs.select(col("doc_id"), explode(fps).as("fp"))
   }
 
   /** Cross-corpus plagiarism/copy detection on winnowing fingerprints:
@@ -310,10 +304,9 @@ object Text {
     * and a reference small enough to broadcast stays off the shuffle
     * path entirely. The winnowing guarantee bounds the miss: any shared
     * run of w+k-1 tokens surfaces at least one shared fingerprint. */
-  def winnowMatch(corpus: DataFrame, reference: DataFrame, k: Int = 5, w: Int = 4,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val c = winnowFingerprints(corpus, k, w, idCol, textCol)
-    val refFps = winnowFingerprints(reference, k, w, idCol, textCol)
+  def winnowMatch(corpus: DataFrame, reference: DataFrame, k: Int = 5, w: Int = 4): DataFrame = {
+    val c = winnowFingerprints(corpus, k, w)
+    val refFps = winnowFingerprints(reference, k, w)
       .select(col("fp")).distinct()
     // ONE pass over the corpus fingerprints (round-13): the former
     // per-doc-count aggregate + semi-join-count pair evaluated the
@@ -322,10 +315,10 @@ object Text {
     // distinct, so the join never duplicates), and n_fps / n_matched
     // fall out of a single aggregate: count(1) vs count(non-null tag).
     c.join(refFps.withColumn("__hit", lit(1)), Seq("fp"), "left")
-      .groupBy(col(idCol))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_fps"), count(col("__hit")).as("n_matched"))
       .select(
-        col(idCol), col("n_fps"), col("n_matched"),
+        col("doc_id"), col("n_fps"), col("n_matched"),
         (col("n_matched").cast("double") /
           col("n_fps").cast("double")).as("matched_frac"))
   }
@@ -360,20 +353,19 @@ object Text {
         EmailPattern, "<EMAIL>"),
       PhonePattern, "<PHONE>")
 
-  /** `doc_id` (from `idCol`, a key: one row per document) and the
+  /** `doc_id` (a key: one row per document) and the
     * `token_stats(text, n)` struct as `st` ([[graft.functions.TokenStats]]),
     * for the documents that have a token; a NULL or all-space text has
     * none. The test is `ltrim(text) != ''` (ltrim strips only 0x20, the
     * token separator) rather than `st.n_tokens > 0`: Spark pushes a filter
     * through the projection by inlining the aliased struct, which would
     * run the kernel twice per row. One scan and projection, no exchange. */
-  def tokenStats(docs: DataFrame, n: Int,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def tokenStats(docs: DataFrame, n: Int): DataFrame = {
     graft.plans.GraftExtensions.install(docs.sparkSession)
     docs
-      .filter(ltrim(col(textCol)) =!= "")
-      .select(col(idCol).as("doc_id"),
-        graft.functions.TokenStats.token_stats(col(textCol), n).as("st"))
+      .filter(ltrim(col("text")) =!= "")
+      .select(col("doc_id"),
+        graft.functions.TokenStats.token_stats(col("text"), n).as("st"))
   }
 
   /** Gopher-style repetition signal: fraction of word n-grams that are
@@ -399,14 +391,13 @@ object Text {
     *
     * All thresholds compare single-division doubles (the q53 trick), so
     * the booleans — and therefore the kept corpus — are engine-stable.
-    * Documents without a token are dropped; `idCol` is a key. One
+    * Documents without a token are dropped; `doc_id` is a key. One
     * [[tokenStats]] pass over 3-grams: a single scan and projection, no
     * exchange. */
   def qualityGate(docs: DataFrame,
       minTokens: Long = 5L, maxTokens: Long = 100000L,
-      maxDupFrac: Double = 0.05, maxTopFrac: Double = 0.125,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    tokenStats(docs, 3, idCol, textCol)
+      maxDupFrac: Double = 0.05, maxTopFrac: Double = 0.125): DataFrame = {
+    tokenStats(docs, 3)
       .select(
         col("doc_id"), col("st.n_tokens").as("n_toks"),
         coalesce(
@@ -439,11 +430,10 @@ object Text {
     * other engine's) cannot perturb the result; the only cross-engine
     * surface is ln() itself on identical doubles, guarded by the final
     * r6 rounding of a division by n. */
-  def bigramLmScore(docs: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def bigramLmScore(docs: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val pairs = docs
-      .select(col(idCol).as("doc_id"), posexplode(tokens(col(textCol))))
+      .select(col("doc_id"), posexplode(tokens(col("text"))))
       .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("w2"))
       .withColumn("w1", lag(col("w2"), 1).over(w))
       .filter(col("w1").isNotNull)
@@ -495,12 +485,8 @@ object Text {
     * This is the standard MapReduce CC; Kiveris et al., "Connected
     * Components in MapReduce and Beyond" (SOCC'14) is the published
     * large-star/small-star variant with the same O(log n) round bound. */
-  def connectedComponents(
-      edges: DataFrame,
-      srcCol: String = "doc_a",
-      dstCol: String = "doc_b",
-      maxIter: Int = 20): DataFrame = {
-    val e = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+  def connectedComponents(edges: DataFrame): DataFrame = {
+    val e = edges.select(col("doc_a").as("a"), col("doc_b").as("b"))
     // (round-13 note: an explode-both-orientations rewrite that reads
     // the edge subtree once measured ~70% SLOWER here at sf0.1 than
     // this two-branch union — the concurrent branches win; kept as-is.)
@@ -511,33 +497,40 @@ object Text {
     var labels = sym.select(col("a").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
       .localCheckpoint(true)
-    var iter = 0
-    var converged = labels.isEmpty
-    while (!converged && iter < maxIter) {
+    var rounds = 0
+    var changed = -1L
+    while (changed != 0L && rounds < CcMaxRounds) {
       val nbrMin = sym
         .join(labels.withColumnRenamed("node", "b"), Seq("b"))
         .groupBy(col("a")).agg(min(col("label")).as("nbr_min"))
         .withColumnRenamed("a", "node")
-      // carry the pre-step label through so the convergence check is a
-      // filter on the (already checkpointed) frame — not a per-iteration
-      // shuffle join back against the previous labels
+      // carry the pre-step label through so the convergence count is an
+      // aggregate of the round's own checkpoint job — not a per-round
+      // shuffle join back against the previous labels, nor a job of its
+      // own: the Observation fills when the eager checkpoint runs
       val stepped = labels.join(nbrMin, Seq("node"), "left")
         .select(col("node"), col("label").as("__prev"),
           least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-      val jumped = stepped.as("x")
+      val moved = Observation()
+      labels = stepped.as("x")
         .join(
           stepped.select(col("node").as("jn"), col("label").as("jl")).as("j"),
           col("x.label") === col("j.jn"), "left")
         .select(col("x.node").as("node"), col("x.__prev").as("__prev"),
           coalesce(col("j.jl"), col("x.label")).as("label"))
+        .observe(moved, count(when(col("label") =!= col("__prev"), 1)).as("n"))
         .localCheckpoint(true)
-      converged = jumped.filter(col("label") =!= col("__prev")).limit(1).count() == 0L
-      labels = jumped.drop("__prev")
-      iter += 1
+        .drop("__prev")
+      changed = moved.get("n").asInstanceOf[Long]
+      rounds += 1
     }
-    require(converged, s"connectedComponents did not converge in $maxIter rounds")
+    require(changed == 0L, s"connectedComponents did not converge in $CcMaxRounds rounds")
     labels.withColumnRenamed("label", "component")
   }
+
+  /** The round limit of [[connectedComponents]], far above the
+    * O(log diameter) rounds a near-dup cluster takes. */
+  private final val CcMaxRounds = 20
 
   /** Cluster resolution for a dedup pipeline: candidate pairs (from
     * MinHash/SimHash banding or exact fingerprints) → one row per
@@ -545,15 +538,12 @@ object Text {
     * component; singletons cluster with themselves), the cluster size,
     * and whether this document is the canonical keeper. Filtering on
     * `is_keeper` yields the deduplicated corpus. */
-  def dedupClusters(
-      docs: DataFrame,
-      pairs: DataFrame,
-      idCol: String = "doc_id"): DataFrame = {
+  def dedupClusters(docs: DataFrame, pairs: DataFrame): DataFrame = {
     val cc = connectedComponents(pairs)
-      .withColumnRenamed("node", idCol)
-    val labeled = docs.select(col(idCol))
-      .join(cc, Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("component"), col(idCol)).as("cluster_id"))
+      .withColumnRenamed("node", "doc_id")
+    val labeled = docs.select(col("doc_id"))
+      .join(cc, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("component"), col("doc_id")).as("cluster_id"))
     // cluster_size as a count window over the SAME key (round-13): the
     // former groupBy+self-join evaluated `labeled` twice (two docs
     // scans + an extra exchange); one cluster_id exchange now serves
@@ -564,8 +554,8 @@ object Text {
       .withColumn("cluster_size", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("cluster_id"))))
       .select(
-        col(idCol), col("cluster_id"), col("cluster_size"),
-        (col(idCol) === col("cluster_id")).as("is_keeper"))
+        col("doc_id"), col("cluster_id"), col("cluster_size"),
+        (col("doc_id") === col("cluster_id")).as("is_keeper"))
   }
 
   /** PPJoin candidate pairs — EXACT-recall prefix filtering for the
@@ -577,7 +567,7 @@ object Text {
     * keys the LEAST skewed tokens — the candidate blow-up a raw
     * token-join would hit on stopwords cannot happen here.
     *
-    * Input: (idCol, toksCol) with toksCol an array of DISTINCT tokens.
+    * Input: (doc_id, toks) with toks an array of DISTINCT tokens.
     * Output: distinct (doc_a < doc_b) candidate id pairs. Three bounded
     * shuffles: token df, per-doc rank window, candidate distinct.
     *
@@ -593,10 +583,9 @@ object Text {
     * monotone) ⟹ any pair the verify keeps (rnd(x) ≥ t) passes here
     * (rnd(r) ≥ t). PpJoinSpec pins recall vs the naive quadratic join;
     * the degenerate-size pruning case is pinned there too. */
-  def ppJoinCandidates(docs: DataFrame, threshold: Double,
-      idCol: String = "doc_id", toksCol: String = "toks"): DataFrame = {
-    val tokRows = docs.select(col(idCol).as("__id"),
-      size(col(toksCol)).as("__n"), explode(col(toksCol)).as("__tok"))
+  def ppJoinCandidates(docs: DataFrame, threshold: Double): DataFrame = {
+    val tokRows = docs.select(col("doc_id").as("__id"),
+      size(col("toks")).as("__n"), explode(col("toks")).as("__tok"))
     val dfTok = tokRows.groupBy(col("__tok")).agg(count(lit(1)).as("__df"))
     val prefixLen =
       (col("__n") - ceil(col("__n") * threshold) + 1).cast("int")
@@ -619,14 +608,13 @@ object Text {
     * naive O(n²) all-pairs join at ANY threshold (prefix filtering is
     * lossless), but the verify join touches candidates, not n²/2 pairs.
     * Output: (doc_a, doc_b, jac) with raw double Jaccard ≥ threshold. */
-  def ppJoin(docs: DataFrame, threshold: Double,
-      idCol: String = "doc_id", toksCol: String = "toks"): DataFrame = {
-    val a = docs.select(col(idCol).as("doc_a"), col(toksCol).as("__toks_a"))
-    val b = docs.select(col(idCol).as("doc_b"), col(toksCol).as("__toks_b"))
+  def ppJoin(docs: DataFrame, threshold: Double): DataFrame = {
+    val a = docs.select(col("doc_id").as("doc_a"), col("toks").as("__toks_a"))
+    val b = docs.select(col("doc_id").as("doc_b"), col("toks").as("__toks_b"))
     val jac =
       size(array_intersect(col("__toks_a"), col("__toks_b"))).cast("double") /
         size(array_union(col("__toks_a"), col("__toks_b")))
-    ppJoinCandidates(docs, threshold, idCol, toksCol)
+    ppJoinCandidates(docs, threshold)
       .join(a, "doc_a").join(b, "doc_b")
       .withColumn("jac", jac)
       .filter(col("jac") >= threshold)

@@ -29,7 +29,6 @@ object GraftExtensions {
   val functions: Seq[Descriptor] = {
     import graft.functions._
     Seq(
-      fn("rolling_hash", classOf[RollingHash])(RollingHash.build),
       fn("char_ngrams", classOf[CharNgrams])(CharNgrams.build),
       fn("token_stats", classOf[TokenStats])(TokenStats.build),
       fn("vec_dot", classOf[VectorDot])(es => VectorDot(es.head, es(1))),

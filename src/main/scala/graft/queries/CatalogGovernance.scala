@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Core, RefFunctions => F}
+import graft.ops.{Bpe, BpeMergesArtifact, Core, RefFunctions => F}
 import graft.sources.Tables
 
 import Shared._
@@ -209,60 +209,24 @@ private[queries] object CatalogGovernance {
     * strings, so one literal `replace('|a||b|' → '|a+b|')` IS the greedy
     * non-overlapping left-to-right merge — both engines' replace has
     * exactly those semantics (validated against an imperative reference).
-    * Per round: one pair-count shuffle + a 1-row winner broadcast; fully
-    * declarative here (3 unrolled rounds, bounded recompute), per-round
-    * `localCheckpoint` at production depth like connectedComponents.
-    * Output: the 3 learned merges with pair counts and the corpus token
-    * count after each round. */
+    * [[graft.ops.Bpe.train]] checkpoints the encoded corpus once and runs
+    * one pair-count aggregate and 1-row collect per round over the merge
+    * chain so far; the `tokens_after` of every round then comes from one
+    * aggregate over that checkpoint. Output: the learned merges (3 unless
+    * the corpus runs out of pairs first) with pair counts and the corpus
+    * token count after each round. */
   private val q176 = Q(
     "q176_bpe_merges",
     (s, d) => {
-      def toks(sc: Column) = split(regexp_replace(sc, "^\\||\\|$", ""), "\\|\\|")
-      def pairCounts(corpus: DataFrame) = corpus
-        .select(toks(col("s")).as("t"))
-        .select(explode(transform(sequence(lit(1), size(col("t")) - 1), i =>
-          struct(element_at(col("t"), i).as("a"),
-            element_at(col("t"), i + 1).as("b")))).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(count(lit(1)).as("n"))
-      def winner(corpus: DataFrame) =
-        pairCounts(corpus).orderBy(col("n").desc, col("a").asc, col("b").asc).limit(1)
-      def applyMerge(corpus: DataFrame, w: DataFrame) =
-        corpus.crossJoin(broadcast(w)).select(col("doc_id"), expr(
-          "replace(s, '|' || a || '||' || b || '|', '|' || a || '+' || b || '|')").as("s"))
-      def tokensAfter(corpus: DataFrame) = corpus
-        .select(size(toks(col("s"))).cast("long").as("k"))
-        .agg(sum(col("k")).as("tokens_after"))
-      // Tokens that are empty (leading/trailing/double spaces) or contain
-      // the '|'/'+' delimiter chars would corrupt the delimited encoding
-      // (and make Spark's strip-one-pipe vs the twin's trim-all-pipes
-      // diverge) — filter them out BEFORE encoding, identically on both
-      // sides. With no empty boundary tokens, s always carries exactly
-      // one leading and one trailing '|', so trim(s,'|') == strip-one.
-      // Round-13: the fully-declarative unroll re-derived the encoded
-      // corpus (split+filter+array_join, then an O(r) replace chain) for
-      // every winner pass, every merge, and every tokensAfter — ~6
-      // string-heavy corpus recomputes for 3 rounds. This is exactly the
-      // "per-round localCheckpoint at production depth" shape named
-      // above, applied at depth 3 too: encode once, cut each round's
-      // corpus and 1-row winner, so each round costs one pair-count pass
-      // and one merge pass over materialized strings. Identical rows.
-      var corpus = Tables.documents(s, d).select(
-        col("doc_id"),
-        concat(lit("|"), array_join(filter(split(col("text"), " "), x =>
-          x =!= "" && !x.contains("|") && !x.contains("+")), "||"),
-          lit("|")).as("s"))
-        .localCheckpoint(true)
-      val rounds = (1 to 3).map { r =>
-        val w = winner(corpus).localCheckpoint(true)
-        val next = applyMerge(corpus, w).localCheckpoint(true)
-        val row = w.crossJoin(broadcast(tokensAfter(next))).select(
-          lit(r).as("round"), col("a").as("left_tok"), col("b").as("right_tok"),
-          col("n").as("pair_count"), col("tokens_after"))
-        corpus = next
-        row
+      val (corpus, merges) = Bpe.train(Bpe.encode(Tables.documents(s, d)), 3)
+      require(merges.nonEmpty, "q176: the corpus has no adjacent token pair")
+      val rounds = merges.zipWithIndex.map { case ((a, b, n), r) =>
+        struct(lit(r + 1).as("round"), lit(a).as("left_tok"), lit(b).as("right_tok"),
+          lit(n).as("pair_count"),
+          sum(size(Bpe.tokens(Bpe.merged(col("s"), merges.take(r + 1)))).cast("long"))
+            .as("tokens_after"))
       }
-      rounds.reduce(_.unionAll(_))
+      corpus.agg(array(rounds: _*).as("r")).select(inline(col("r")))
     },
     Some {
       def round(src: String, i: Int) = s"""p$i AS (
@@ -696,31 +660,27 @@ private[queries] object CatalogGovernance {
   /** BPE tokenize SERVING over the frozen merge-table artifact — the
     * missing half of q176's train/serve split and the shape every ingest
     * job at 100 TB actually runs: the tokenizer trains ONCE
-    * (`graft.BpeArtifactGen`, 16 rounds of the q176 loop on the sf0.01
+    * (`graft.BpeArtifactGen`, 16 rounds of [[graft.ops.Bpe.train]] on the sf0.01
     * corpus → `BpeMergesArtifact`), then the persisted merge table is
     * applied corpus-wide as a pure map — 16 chained literal `replace`
     * calls over the delimited encoding, zero shuffle, output is per-doc
     * token accounting (raw tokens, BPE tokens, merges fired). The q137b/
     * q164 frozen-artifact discipline applied to the tokenizer; the twin
-    * ([[graft.ops.BpeServe.oracleSql]]) evaluates the same literal chain.
+    * ([[graft.ops.Bpe.oracleSql]]) evaluates the same literal chain.
     * Production note: at real merge depths (30k+) the chain becomes a
     * specialized per-partition tokenizer over the SAME artifact —
     * semantics pinned here and in BpeMergeSpec stay the contract. */
   private val q182 = Q(
     "q182_bpe_tokenize",
     (s, d) => {
-      def toks(sc: Column) = split(regexp_replace(sc, "^\\||\\|$", ""), "\\|\\|")
-      val enc = graft.BpeArtifactGen.encode(Tables.documents(s, d))
-      val merged = graft.ops.BpeMergesArtifact.merges
-        .foldLeft(col("s")) { case (c, (a, b, _)) =>
-          call_function("replace", c, lit(s"|$a||$b|"), lit(s"|$a+$b|"))
-        }
-      enc.select(col("doc_id"),
-          size(toks(col("s"))).cast("long").as("n_tok_raw"),
-          size(toks(merged)).cast("long").as("n_tok_bpe"))
+      Bpe.encode(Tables.documents(s, d))
+        .select(col("doc_id"),
+          size(Bpe.tokens(col("s"))).cast("long").as("n_tok_raw"),
+          size(Bpe.tokens(Bpe.merged(col("s"), BpeMergesArtifact.merges)))
+            .cast("long").as("n_tok_bpe"))
         .withColumn("n_merged", col("n_tok_raw") - col("n_tok_bpe"))
     },
-    Some(graft.ops.BpeServe.oracleSql))
+    Some(Bpe.oracleSql))
 
   /** Distinct l-diversity audit beside q175's k-anonymity: a release can
     * be k-anonymous yet leak — if every doc in a quasi-identifier group
@@ -811,16 +771,12 @@ private[queries] object CatalogGovernance {
   private val q190 = Q(
     "q190_tokenizer_fertility",
     (s, d) => {
-      def toks(sc: Column) = split(regexp_replace(sc, "^\\||\\|$", ""), "\\|\\|")
-      val enc = graft.BpeArtifactGen.encode(Tables.documents(s, d), Seq("lang"))
-      val merged = graft.ops.BpeMergesArtifact.merges
-        .foldLeft(col("s")) { case (c, (a, b, _)) =>
-          call_function("replace", c, lit(s"|$a||$b|"), lit(s"|$a+$b|"))
-        }
-      val t = toks(col("s"))
-      enc.select(col("lang"),
+      val t = Bpe.tokens(col("s"))
+      Bpe.encode(Tables.documents(s, d), Seq("lang"))
+        .select(col("lang"),
           size(t).cast("long").as("raw"),
-          size(toks(merged)).cast("long").as("bpe"),
+          size(Bpe.tokens(Bpe.merged(col("s"), BpeMergesArtifact.merges)))
+            .cast("long").as("bpe"),
           aggregate(t, lit(0L), (acc, x) => acc + length(x)).as("chars"))
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
@@ -830,7 +786,7 @@ private[queries] object CatalogGovernance {
         .withColumn("chars_per_bpe_token",
           r(col("token_chars").cast("double") / col("bpe_tokens"), 6))
     },
-    Some(graft.ops.BpeServe.fertilitySql))
+    Some(Bpe.fertilitySql))
 
   /** Token-budget-constrained corpus selection: take documents in
     * quality order (per-doc distinct-token ratio, micro-rounded to a

@@ -307,9 +307,7 @@ private[queries] object CatalogNorthStar {
       FROM documents GROUP BY lang"""))
 
   /** Document fingerprinting: full md5 digest + a 60-bit integer prefix
-    * fingerprint. (The Rabin-Karp rolling-hash variant is the custom
-    * Catalyst expression graft.functions.rolling_hash, codegen'd; it has no
-    * DuckDB twin so it is exercised by RollingHashSpec instead.) */
+    * fingerprint. */
   private val q27 = Q(
     "q27_fingerprint",
     (s, d) =>

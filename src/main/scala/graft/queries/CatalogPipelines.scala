@@ -831,7 +831,7 @@ private[queries] object CatalogPipelines {
         col("doc_id"), col("source"), substring(col("text"), 1, 15).as("content"))
       val prior = docs.filter(col("doc_id") % 2 === 0)
       val incoming = docs.filter(col("doc_id") % 2 === 1)
-      graft.ops.Text.incrementalDedup(incoming, prior, "doc_id", "content")
+      graft.ops.Text.incrementalDedup(incoming, prior, "content")
         .select(col("doc_id"), col("source"))
     },
     Some("""

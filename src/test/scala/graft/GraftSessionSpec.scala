@@ -19,7 +19,7 @@ class GraftSessionSpec extends AnyFunSuite {
   test("GraftSession registers native functions") {
     assert(child("functions") ==
       GraftExtensions.functions.map(_._1.funcName).sorted.mkString(","))
-    assert(child("rolling_hash") == graft.functions.RollingHash.hashString("abc").toString)
+    assert(child("char_ngrams") == "abc,bcd")
     assert(child("vec_dot") == "11.0")
   }
 
@@ -45,7 +45,8 @@ object GraftSessionSpec {
     val spark = GraftSession.local(3)
     try {
       out("functions", GraftExtensionsSpec.graftNames(spark).toSeq.sorted.mkString(","))
-      out("rolling_hash", spark.sql("SELECT rolling_hash('abc')").head().getLong(0))
+      out("char_ngrams",
+        spark.sql("SELECT char_ngrams('abcd', 3)").head().getSeq[String](0).mkString(","))
       out("vec_dot", spark.sql(
         "SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))").head().getDouble(0))
       out("timeZone", spark.conf.get("spark.sql.session.timeZone"))

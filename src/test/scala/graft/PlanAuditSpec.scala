@@ -84,12 +84,12 @@ class PlanAuditSpec extends SparkSpec {
     // q137b), 1-row stats broadcasts (q38/q57/q63/q69/q74/q82/q88/q140/
     // q159), bounded histogram/frontier sides (q117/q125/q149),
     // pair/range predicates over bounded sides (q44/q51/q108/q146),
-    // q172's 1-row contingency-total broadcast, and q176's per-round
-    // 1-row BPE winner broadcasts (3 since round-13's per-round
-    // localCheckpoint cut the lineage duplication; q128's entry left
-    // the list the same round — its node-spine crossJoin now lives
-    // inside the checkpointed model-table lineage). A NEW BNLJ — or a
-    // count regression on an existing one — fails by name.
+    // and q172's 1-row contingency-total broadcast. (q128's entry left
+    // the list in round 13 — its node-spine crossJoin now lives inside
+    // the checkpointed model-table lineage — and q176's per-round 1-row
+    // BPE winner broadcasts went when its merges became literals
+    // collected by `Bpe.train`.) A NEW BNLJ — or a count regression on
+    // an existing one — fails by name.
     val allowedBnlj = Map(
       "q108_pmi_cooccur" -> 1, "q117_bm25" -> 2, "q125_rrf_fusion" -> 3,
       "q137b_pq_serve" -> 1,
@@ -110,7 +110,6 @@ class PlanAuditSpec extends SparkSpec {
       // round 14 — its crossJoin and BNLJ are gone)
       // q191: the 1-row token-budget broadcast against the doc stream
       "q191_token_budget_select" -> 1,
-      "q176_bpe_merges" -> 3,
       // q194: NB training scalars ride 1-row broadcasts — the scal1 × v
       // 1-row×1-row join, the vocab-stream × scalars crossJoin, and the
       // per-doc-stream × dscal crossJoin (4 = those three + the scalar
@@ -128,7 +127,7 @@ class PlanAuditSpec extends SparkSpec {
       "q206_rfm_segments" -> 1,
       // q219: the power-iteration chain re-broadcasts each 1-row iterate
       // (v1, v2 twice, then λ and trace rows) against the corpus or
-      // against another 1-row frame — q176's iterate shape
+      // against another 1-row frame
       "q219_top_pc_power" -> 5,
       // q221: the inverse-CDF range join of two DOMAIN-BOUNDED histograms
       // (per-source ≤ sources×|n_chars domain| rows vs global ≤|domain|

@@ -159,7 +159,7 @@ class PlanShapeSpec extends SparkSpec {
         z_value(42, 7) AS z,
         kll_quantile(kll_agg(n_chars), 0.5d) AS med,
         kll_n(kll_agg(n_chars)) AS kn,
-        rolling_hash('abc') AS rh,
+        char_ngrams('abcd', 3) AS ng,
         vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS dot,
         vec_norm(array(3.0d, 4.0d)) AS nrm,
         vec_argmin_cell(array(1, 0),
@@ -174,6 +174,7 @@ class PlanShapeSpec extends SparkSpec {
     val sortedChars = docs.select("n_chars").collect().map(_.getLong(0)).sorted
     assert(row.getAs[Double]("med") ==
       sortedChars(math.max(1, math.ceil(0.5 * sortedChars.length).toInt) - 1).toDouble)
+    assert(row.getSeq[String](row.fieldIndex("ng")) == Seq("abc", "bcd"))
     assert(row.getAs[Double]("dot") == 11.0 && row.getAs[Double]("nrm") == 5.0)
     // the int vector is cast to array<double>; ‖c‖² − 2·v·c is 1.0 for
     // cell 0 and −1.0 for cell 1

@@ -158,7 +158,7 @@ class PropertySpec extends SparkSpec {
     // whatever order or partitioning the 32-way shuffle imposes
     val noise = sample(Gen.chooseNum(0, 5000), 4000).map(i => s"t$i")
     val data = (noise ++ List.fill(500)("heavy"))
-      .sortBy(s => graft.functions.RollingHash.hashString(s)) // deterministic interleave
+      .sortBy(s => scala.util.hashing.MurmurHash3.stringHash(s)) // deterministic interleave
     val items = data.toDF("t").repartition(32)
       .agg(graft.functions.FrequentItems.frequent_items(col("t"), 64).as("fi"))
       .select(explode(col("fi")).as("e")).select(col("e.item"))

@@ -88,7 +88,6 @@ class SourceGuardSpec extends AnyFunSuite {
     "Schemas.asExchangeGold" -> "gold records (SchemasSpec)",
     "Schemas.asTrendGold" -> "gold records (SchemasSpec)",
     "SparkEntry.entry" -> "smoke entry point (FixtureCanarySpec)",
-    "RollingHash.hashString" -> "RollingHashSpec, PropertySpec",
     "Similarity.bruteForceTopK" -> "PqArtifactSpec, TextSimilaritySpec",
     "Similarity.dot" -> "PQ score identity (TextSimilaritySpec)",
     "Similarity.pqReconstruct" -> "PqArtifactSpec, TextSimilaritySpec")
@@ -305,8 +304,7 @@ class SourceGuardSpec extends AnyFunSuite {
     * pipeline, main or perfbench workload calls, kept for a reference
     * feature (its COVERAGE.md id) or a spec that compares a kept path
     * against them. */
-  private val SqlReachedOnlyFromSpecs: Map[String, String] = Map(
-    "rolling_hash" -> "extensions hook registry probe (GraftSessionSpec, RollingHashSpec)")
+  private val SqlReachedOnlyFromSpecs: Map[String, String] = Map.empty
 
   test("every registered SQL function is called outside its own specs, or allow-listed with its reason") {
     val registered = graft.plans.GraftExtensions.functions.map(_._1.funcName).toSet

@@ -17,7 +17,8 @@ import graft.ops.{CentroidArtifact, CentroidArtifact64, PqCodebookArtifact, Simi
   * its distance must equal a Scala brute force — ‖c‖² left-folded, the
   * dot left to right, the first index of the min — bit for bit, through
   * the interpreted `eval`, a generated projection, and whole-stage
-  * codegen. */
+  * codegen. Beside it, `vec_dot`, the dot product both the kernel's
+  * callers and q177/q216 score with, against its HOF formulation. */
 class VectorArgminCellSpec extends SparkSpec {
   import spark.implicits._
 
@@ -117,5 +118,19 @@ class VectorArgminCellSpec extends SparkSpec {
       VectorArgminCell.vec_argmin_cell(col("v"), a).getField("cell"),
       VectorArgminCell.vec_argmin_cell(col("v"), b).getField("cell")).head()
     assert(row == Row(0, 1))
+  }
+
+  test("vec_dot matches the HOF formulation bit-for-bit and handles nulls") {
+    graft.plans.GraftExtensions.install(spark)
+    val df = Seq(
+      (Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0)),
+      (Array(0.1, -0.2), Array(0.3, 0.7))
+    ).toDF("a", "b")
+    val got = df.select(
+      graft.functions.VectorDot.vec_dot($"a", $"b").as("fast"),
+      Similarity.dot($"a", $"b").as("hof")).collect()
+    got.foreach(r => assert(r.getDouble(0) == r.getDouble(1)))
+    val withNull = spark.sql("SELECT vec_dot(CAST(NULL AS ARRAY<DOUBLE>), array(1.0d))")
+    assert(withNull.head().isNullAt(0))
   }
 }

@@ -61,9 +61,10 @@ object ZOrder {
     org.apache.spark.sql.functions.call_function("z_value", a, b)
 
   /** Builder-level int->long widening (ExpectsInputTypes isn't
-    * implementable outside the sql package): without it, IntegerType inputs like datediff() work under
-    * codegen (Java widens) but throw ClassCastException on the
-    * interpreted path, e.g. during constant folding. */
+    * implementable outside the sql package): without it, IntegerType
+    * inputs like datediff() work under codegen (Java widens) but throw
+    * ClassCastException on the interpreted path, e.g. during constant
+    * folding. */
   private[graft] def toLongExpr(e: Expression): Expression =
     if (e.dataType == LongType) e else Cast(e, LongType)
 

@@ -62,11 +62,11 @@ object Bpe {
       val t = col("t")
       corpus
         .select(tokens(merged(col("s"), done)).as("t"))
-        // adjacent pairs as two offset slices: a one-token row has none
-        // (element_at over sequence(1, size - 1) fails on it)
-        .select(explode(zip_with(slice(t, lit(1), size(t) - 1), slice(t, lit(2), size(t)),
-          (a, b) => struct(a.as("a"), b.as("b")))).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+        // adjacent pairs as two offset slices, zipped without a lambda
+        // (codegen'd); a one-token row has none
+        .select(inline(arrays_zip(
+          slice(t, lit(1), size(t) - 1).as("a"), slice(t, lit(2), size(t)).as("b"))))
+        .groupBy(col("a"), col("b"))
         .agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("a").asc, col("b").asc)
         .limit(1).collect().headOption

@@ -86,10 +86,8 @@ class PlanAuditSpec extends SparkSpec {
     // pair/range predicates over bounded sides (q44/q51/q108/q146),
     // and q172's 1-row contingency-total broadcast. (q128's entry left
     // the list in round 13 — its node-spine crossJoin now lives inside
-    // the checkpointed model-table lineage — and q176's per-round 1-row
-    // BPE winner broadcasts went when its merges became literals
-    // collected by `Bpe.train`.) A NEW BNLJ — or a count regression on
-    // an existing one — fails by name.
+    // the checkpointed model-table lineage.) A NEW BNLJ — or a count
+    // regression on an existing one — fails by name.
     val allowedBnlj = Map(
       "q108_pmi_cooccur" -> 1, "q117_bm25" -> 2, "q125_rrf_fusion" -> 3,
       "q137b_pq_serve" -> 1,
